@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Emits a compact schema-stable JSON summary line to
   * stdout after EVERY pass (cold, steady1, final) — the downstream
@@ -37,31 +36,8 @@ object Bench {
     def elapsedS: Double = (System.nanoTime() - wallT0) / 1e9
     val budgetS = sys.env.getOrElse("SPARK_GRAFT_BUDGET_S", "2400").toDouble
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    // local A/B hook: extra confs as "k=v;k=v" (unset in driver runs —
-    // the driver's bench numbers always come from the defaults above).
-    // Malformed segments are skipped, and every APPLIED conf is echoed to
-    // stdout so a recorded bench output self-documents its config (a
-    // leaked env var can't silently skew recorded numbers).
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach(_.split(';').foreach { kv =>
-      kv.split("=", 2) match {
-        case Array(k, v) if k.trim.nonEmpty =>
-          println(s"bench: EXTRA_CONF applied ${k.trim}=${v.trim}")
-          builder.config(k.trim, v.trim)
-        case _ if kv.trim.isEmpty => // tolerate empty segments / trailing ';'
-        case _ => System.err.println(s"bench: EXTRA_CONF segment skipped (no '='): '$kv'")
-      }
-    })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // JVM/codegen warmup so classloading isn't attributed to the first
-    // query; queries then run in sorted order for stable per-round deltas
-    spark.range(100000).selectExpr("sum(id)").collect()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1).count()
+    val spark = Session()
+    Session.warm(spark, sfDir)
     // optional args: restrict to the named queries (local timing aid;
     // the driver always runs argless → full suite)
     val only = args.toSet
@@ -75,6 +51,10 @@ object Bench {
     // sample ~minutes later makes the min a genuine two-window estimate,
     // like every regular query's min(cold, steady).
     val instrMin = scala.collection.mutable.Map[String, Double]()
+    // queries that threw in any pass; their (short) times still count in
+    // the totals, so every summary line carries n_failed and the sidecar
+    // names them
+    val failed = scala.collection.mutable.SortedSet[String]()
     // mode: "all" (cold), "engine" (steady — instruments excluded),
     // "instruments" (the spaced second instrument sample).
     // Budget is checked INSIDE the pass every `checkEvery` queries (the
@@ -83,6 +63,7 @@ object Bench {
     // truncated=true so the caller can stamp "<pass>_partial".
     val checkEvery = 50
     def runAll(dir: String, mode: String): (Seq[(String, Double)], Boolean) = {
+      // sorted order for stable per-round deltas
       val items = SparkEntry.queries.toSeq.sortBy(_._1)
         .filter { case (name, _) => only.isEmpty || only.contains(name) }
         .filter { case (name, _) => mode match {
@@ -96,17 +77,16 @@ object Bench {
       val it = items.iterator
       while (it.hasNext && !truncated) {
         val (name, fn) = it.next()
-        val t0 = System.nanoTime()
-        try { fn(spark, dir).count() } catch {
-          case t: Throwable =>
-            System.err.println(s"bench: $name FAILED: ${t.getClass.getName}: ${t.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        // release anything a query cached: over 3 passes × 500+
-        // queries in one JVM, leaked cache entries pile into storage
-        // memory and drift every later query's time (the r5→r6
+        // Measure.run clears the cache after the timed action: over 3
+        // passes × 500+ queries in one JVM, leaked cache entries pile into
+        // storage memory and drift every later query's time (the r5→r6
         // +0.05-0.3 s smear)
-        spark.catalog.clearCache()
+        val m = Measure.run(spark, fn, dir)
+        m.failure.foreach { t =>
+          failed += name
+          System.err.println(s"bench: $name FAILED: ${t.getClass.getName}: ${t.getMessage}")
+        }
+        val dt = m.seconds
         if (isInstrument(name))
           instrMin(name) = math.min(dt, instrMin.getOrElse(name, Double.MaxValue))
         out += name -> dt
@@ -156,7 +136,7 @@ object Bench {
     // value baked into the master), not availableProcessors: the r11
     // 8-core driver run printed "cpus":32 and looked like an ignored env
     val hostCpus = Runtime.getRuntime.availableProcessors
-    val ncpu = scala.util.Try(cpus.trim.toInt).getOrElse(hostCpus)
+    val ncpu = Session.cpus
     // one compact schema-stable summary line per pass; every field is
     // present in every line (best estimate available at that point) so
     // the driver's parse works whichever line is last in the tail
@@ -169,7 +149,7 @@ object Bench {
         .mkString("{", ",", "}")
       println(s"""{"metric":"total","value":${fmt(cold.map(_._2).sum)},"unit":"sec","sf":"$sfDir",""" +
         s""""pass":"$pass","wall_s":${fmt(elapsedS)},"budget_s":${fmt(budgetS)},""" +
-        s""""n_queries":${cold.size},"cold_min_total":${fmt(coldMin.map(_._2).sum)},""" +
+        s""""n_queries":${cold.size},"n_failed":${failed.size},"cold_min_total":${fmt(coldMin.map(_._2).sum)},""" +
         s""""steady_total":${fmt(steady.map(_._2).sum)},""" +
         s""""instrument_steady_s":${fmt(instrumentS)},""" +
         s""""store_build_s":${fmt(storeBuildS)},""" +
@@ -247,13 +227,6 @@ object Bench {
     } else System.err.println(f"bench: over budget " +
       f"(${elapsedS}%.0f s > ${budgetS}%.0f s) — skipping steady pass 2")
 
-    // local tuning aid: per-query steady times to stderr (the driver only
-    // parses the stdout JSON tail, which must stay compact)
-    if (sys.env.contains("SPARK_GRAFT_STEADY_DETAIL"))
-      steady.sortBy(-_._2).foreach { case (n, t) =>
-        System.err.println(f"steady $n%-28s $t%8.3f s")
-      }
-
     // leak audit BEFORE the final line so its verdict rides in it:
     // after clearCache + GC (ContextCleaner drains localCheckpoint
     // blocks), the only pinned RDDs left must be the REGISTERED standing
@@ -307,7 +280,7 @@ object Bench {
       val sidecar = s"""{"metric":"bench_queries","sf":"$sfDir","cpus":$ncpu,""" +
         s""""pass":"$finalPass","n_queries":${cold.size},""" +
         s""""queries":${qmap(cold)},"cold_min_queries":${qmap(coldMin)},""" +
-        s""""steady_queries":${qmap(steady)}}"""
+        s""""steady_queries":${qmap(steady)},"failed":${jstr(failed.toSeq)}}"""
       for (p <- Seq("bench_queries.json", qFile)) {
         val w = new java.io.PrintWriter(p, "UTF-8")
         try w.println(sidecar) finally w.close()

@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Measure.seconds
 
 /** Incremental-merge scale probe: proves AnnStore.merge and
   * IndexStore.merge cost O(touched cells), not O(store), by sweeping
@@ -26,19 +26,11 @@ object MergeProbe {
         c.listFiles().map(f => (f.getName, f.length())).toSet).toMap
   }
 
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val maxRep = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
+    Session.warm(spark, sfDir)
     val reps = Iterator.iterate(1)(_ * 2).takeWhile(_ <= maxRep).toSeq
     import spark.implicits._
 
@@ -62,14 +54,14 @@ object MergeProbe {
           e, "embedding", "vec_id", centroids, "cid", "cv")
         .select(col("vec_id"), col("embedding"), col("centroid_id"))
       val annPath = s"${tmp.getAbsolutePath}/ann"
-      val (_, annBuild) = time { graft.store.AnnStore.write(assigned, annPath) }
+      val (_, annBuild) = seconds { graft.store.AnnStore.write(assigned, annPath) }
       val storeRows = spark.read.parquet(annPath).count()
       // batch: 100 copies of ONE vector — lands in exactly one cell
       val batch = e0.filter(col("vec_id") === 5)
         .crossJoin(spark.range(100).select((col("id") + 900000000L).as("nid")))
         .select(col("nid").as("vec_id"), col("embedding"))
       val before = cellListing(annPath)
-      val (_, annMerge) = time { graft.store.AnnStore.merge(spark, annPath,
+      val (_, annMerge) = seconds { graft.store.AnnStore.merge(spark, annPath,
         batch, centroids, "cid", "cv", "embedding", "vec_id") }
       val after = cellListing(annPath)
       val annTouched = after.keySet.filter(k => before.get(k) != after.get(k))
@@ -88,13 +80,13 @@ object MergeProbe {
         .reduce(_ union _)
       val idxPath = s"${tmp.getAbsolutePath}/idx"
       val idx = graft.operators.Retrieval.invertedIndex(d, "doc_id", "text")
-      val (_, idxBuild) = time { graft.store.IndexStore.write(idx, idxPath, 64) }
+      val (_, idxBuild) = seconds { graft.store.IndexStore.write(idx, idxPath, 64) }
       val terms = spark.read.parquet(idxPath).count()
       // batch: 100 new docs sharing a tiny fixed vocabulary — few buckets
       val nb = (0 until 100).map(i =>
         (900000000L + i, "quorum lattice kestrel")).toDF("doc_id", "text")
       val ib = cellListing(idxPath)
-      val (_, idxMerge) = time { graft.store.IndexStore.merge(spark, idxPath,
+      val (_, idxMerge) = seconds { graft.store.IndexStore.merge(spark, idxPath,
         graft.operators.Retrieval.invertedIndex(nb, "doc_id", "text"), 64) }
       val ia = cellListing(idxPath)
       val idxTouched = ia.keySet.filter(k => ib.get(k) != ia.get(k))
@@ -126,7 +118,7 @@ object MergeProbe {
       val graph = graft.operators.Similarity.knnGraph(
         gAssigned, "embedding", "vec_id", 3)
       val gPath = s"${tmp.getAbsolutePath}/graph"
-      val (_, gBuild) = time {
+      val (_, gBuild) = seconds {
         graft.store.AnnStore.write(gAssigned, gAnnPath)
         graft.store.GraphStore.write(graph, gPath, 16)
       }
@@ -136,7 +128,7 @@ object MergeProbe {
           .select((col("id") * 16 + 900000000L).as("nid")))
         .select(col("nid").as("vec_id"), col("embedding"))
       val gb = cellListing(gPath)
-      val (_, gMerge) = time { graft.store.GraphStore.mergeScoped(spark,
+      val (_, gMerge) = seconds { graft.store.GraphStore.mergeScoped(spark,
         gPath, 16, spark.read.parquet(gAnnPath), centroids8, "cid", "cv",
         nProbe = 2, gBatch, "embedding", "vec_id", k = 3) }
       val ga = cellListing(gPath)
@@ -167,7 +159,7 @@ object MergeProbe {
           (col("dst") + i * 1024L).as("dst")))
         .reduce(_ union _).localCheckpoint()
       val nSccEdges = sccEdges.count()
-      val (sccState, sccBuild) = time {
+      val (sccState, sccBuild) = seconds {
         val lbl = graft.operators.GraphAnalytics
           .sccLabelsFwBw(sccEdges, "src", "dst").localCheckpoint()
         val cnd = graft.operators.GraphAnalytics
@@ -179,7 +171,7 @@ object MergeProbe {
       val (lbl, cnd, cw) = sccState
       val sccBatch = flow0.orderBy("src", "dst").limit(20)
         .select(col("dst").as("src"), col("src").as("dst"))
-      val (nScc, sccMerge) = time {
+      val (nScc, sccMerge) = seconds {
         graft.operators.GraphAnalytics.incrementalScc(lbl, cnd, sccBatch,
             "src", "dst", oldCondWcc = Some(cw))
           .select("scc").distinct().count()

@@ -1,0 +1,62 @@
+package graft
+
+import org.apache.spark.sql.execution.ExplainMode
+
+/** Local probe over Bench's own session and measurement core:
+  *
+  *   - `time`: runs each query `reps` times (default 3) through
+  *     [[Measure.run]] and prints first and min seconds, the layers of the
+  *     fastest run (build, analysis, optimization+planning, jobs, stages,
+  *     tasks, task-seconds) and every run's seconds;
+  *   - `plan`: prints the formatted plan Bench would time, unexecuted;
+  *   - `final`: runs the query (`reps` times, default 1) and prints the
+  *     executed plan of that same QueryExecution (the final AQE plan).
+  *
+  * With no query names it covers the whole registry.
+  * {{{ sbt 'runMain graft.Probe time /root/testdata/sf0.1 3 q213_frequent_itemsets' }}} */
+object Probe {
+  def main(args: Array[String]): Unit = {
+    val modes = Set("time", "plan", "final")
+    require(args.length >= 2 && modes(args(0)),
+      "usage: graft.Probe <time|plan|final> <sfDir> [reps] [query...]")
+    val Array(mode, sfDir) = args.take(2)
+    val (reps, named) = args.drop(2).toSeq match {
+      case r +: rest if r.nonEmpty && r.forall(_.isDigit) => (r.toInt, rest)
+      case rest => (if (mode == "time") 3 else 1, rest)
+    }
+    val names = if (named.nonEmpty) named else SparkEntry.queries.keys.toSeq.sorted
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = Session()
+    Session.warm(spark, sfDir)
+    if (mode == "time")
+      println(f"${"query"}%-30s ${"first"}%7s ${"min"}%7s ${"build"}%7s " +
+        f"${"analyze"}%7s ${"plan"}%7s ${"jobs"}%5s ${"stages"}%6s " +
+        f"${"tasks"}%6s ${"task_s"}%8s  runs")
+    for (name <- names) {
+      val fn = SparkEntry.queries(name)
+      if (mode == "plan") {
+        println(s"\n========== $name (plan) ==========")
+        try println(Measure.timed(fn(spark, sfDir)).queryExecution
+          .explainString(ExplainMode.fromString("formatted")))
+        catch { case t: Throwable => println(s"(failed: $t)") }
+        spark.catalog.clearCache()
+      } else {
+        val runs = (1 to reps).map(_ => Measure.run(spark, fn, sfDir))
+        val best = runs.minBy(_.seconds)
+        runs.flatMap(_.failure).headOption.foreach(t =>
+          System.err.println(s"probe: $name FAILED: $t"))
+        if (mode == "time")
+          println(f"$name%-30s ${runs.head.seconds}%7.3f ${best.seconds}%7.3f " +
+            f"${best.buildS}%7.3f ${best.analysisS}%7.3f ${best.planS}%7.3f " +
+            f"${best.jobs}%5d ${best.stages}%6d ${best.tasks}%6d " +
+            f"${best.taskS}%8.3f  " + runs.map(r => f"${r.seconds}%.3f").mkString(" "))
+        else {
+          println(f"\n========== $name (final plan, ${runs.last.seconds}%.3f s) ==========")
+          println(runs.last.plan)
+        }
+      }
+    }
+    spark.stop()
+  }
+}

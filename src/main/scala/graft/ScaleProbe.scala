@@ -1,7 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Measure.seconds
 
 /** Heavy-tail scale probe (the MergeProbe discipline applied to the
   * slowest steady bench queries): replicate the inputs ×{1,2,4,8} and
@@ -27,20 +27,11 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
 
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val maxRep = args.lift(1).map(_.toInt).getOrElse(8)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session()
+    Session.warm(spark, sfDir)
     val reps = Iterator.iterate(1)(_ * 2).takeWhile(_ <= maxRep).toSeq
 
     // ---- q428 core: Brandes sweeps on a replicated kNN edge list -------
@@ -58,7 +49,7 @@ object ScaleProbe {
           (col("dst") + i * 10000000L).as("dst")))
         .reduce(_ union _).localCheckpoint()
       val nEdges = edges.count()
-      val (_, t) = time {
+      val (_, t) = seconds {
         operators.GraphAnalytics.sampledBetweenness(edges, "src", "dst",
           sources = Seq(0L, 7L, 13L), maxDepth = 6, topK = 20).count()
       }
@@ -71,7 +62,7 @@ object ScaleProbe {
       val corpus = (0 until r).map(i => d0.select(
           (col("doc_id") + i * 1000000L).as("doc_id"), col("text")))
         .reduce(_ union _)
-      val (pairs, t) = time {
+      val (pairs, t) = seconds {
         val d = corpus.filter(col("doc_id") < 600)
         val toks = d.select(col("doc_id").as("id"),
           explode(operators.Dedup.shingleExpr("text", 5)).as("tok"))
@@ -92,7 +83,7 @@ object ScaleProbe {
           (col("user_id") + i * 10000000L).as("user_id"), col("cents")))
         .reduce(_ union _)
       val nRows = ev.count()
-      val ((groups, _), t) = time {
+      val ((groups, _), t) = seconds {
         val out = operators.Stats.hampelGateScalable(ev, "user_id",
           "cents", k = 3)
         (out.count(), ())
@@ -117,7 +108,7 @@ object ScaleProbe {
           (col("dst") + i * 10000000L).as("dst"), col("w")))
         .reduce(_ union _).localCheckpoint()
       val nEdges = edges.count()
-      val ((tree, rounds), t) = time {
+      val ((tree, rounds), t) = seconds {
         val mst = operators.GraphAnalytics
           .boruvkaMst(edges, "src", "dst", "w").localCheckpoint()
         (mst.count(), mst.agg(max("round")).head().getInt(0))
@@ -139,7 +130,7 @@ object ScaleProbe {
           (col("dst") + i * 10000000L).as("dst")))
         .reduce(_ union _).localCheckpoint()
       val nEdges = edges.count()
-      val ((surviving, _), t) = time {
+      val ((surviving, _), t) = seconds {
         (operators.GraphAnalytics.kTruss(edges, "src", "dst", k = 4,
           rounds = 6).count(), ())
       }
@@ -164,7 +155,7 @@ object ScaleProbe {
         .reduce(_ union _).localCheckpoint()
       val nEdges = edges.count()
       val st = new operators.GraphAnalytics.FwBwStats
-      val ((nScc, _), t) = time {
+      val ((nScc, _), t) = seconds {
         (operators.GraphAnalytics.sccLabelsFwBw(edges, "src", "dst",
             stats = Some(st))
           .select("scc").distinct().count(), ())
@@ -185,7 +176,7 @@ object ScaleProbe {
           col("l_orderkey") + i * 100000000L))
         .reduce(_ union _)
       val nRows = li.count()
-      val (_, t) = time {
+      val (_, t) = seconds {
         operators.Profiling.tableChecksum(li,
           Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey",
             "l_returnflag", "l_linestatus"), buckets = 16).count()
@@ -220,7 +211,7 @@ object ScaleProbe {
         val pairWork = assigned.groupBy("centroid_id")
           .agg(count(lit(1)).as("m"))
           .agg(sum(col("m") * col("m"))).head().getLong(0)
-        val (edges, t) = time {
+        val (edges, t) = seconds {
           operators.Similarity.knnGraph(assigned, "embedding", "vec_id", 3)
             .count()
         }

@@ -110,4 +110,31 @@ class RegistrySpec extends AnyFunSuite {
     assert(stale.isEmpty,
       s"machinery gates with no inline builder call (stale tag): $stale")
   }
+
+  // --- one session factory, one measurement core ------------------------
+  //
+  // Probe mains used to grow one per experiment, each with its own session
+  // and timing loop, and drifted apart from what Bench measures. Every
+  // session now comes from Session and every probe mode lives in Probe.
+
+  private lazy val mainSources: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val w = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
+    finally w.close()
+  }
+
+  test("only Session.scala builds a SparkSession in src/main") {
+    val builders = mainSources.collect {
+      case (f, text) if text.contains("SparkSession.builder") => f }
+    assert(builders == Seq("Session.scala"), builders)
+  }
+
+  test("the mains in src/main are exactly Bench, Verify, Probe and the two scale probes") {
+    val mains = mainSources.flatMap { case (f, text) =>
+      "def main\\(".r.findAllIn(text).map(_ => f.stripSuffix(".scala")) }
+    assert(mains.sorted ==
+      Seq("Bench", "MergeProbe", "Probe", "ScaleProbe", "Verify"), mains)
+  }
 }
