@@ -18,7 +18,7 @@ import graft.Measure.seconds
   */
 object MergeProbe {
 
-  private def cellListing(root: String): Map[String, Set[(String, Long)]] = {
+  private[graft] def cellListing(root: String): Map[String, Set[(String, Long)]] = {
     val d = new java.io.File(root)
     if (!d.exists()) Map.empty
     else d.listFiles().filter(f => f.isDirectory && f.getName.contains("="))

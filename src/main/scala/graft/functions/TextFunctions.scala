@@ -39,12 +39,6 @@ object TextFunctions {
       (length(text) - length(regexp_replace(text, "[0-9]", ""))).cast("double")
         / length(text))
 
-  /** Fraction of characters that are uppercase A-Z. */
-  def upperRatio(text: Column): Column =
-    when(length(text) === 0, 0.0).otherwise(
-      (length(text) - length(regexp_replace(text, "[A-Z]", ""))).cast("double")
-        / length(text))
-
   private val enStopwords = Seq("the", "and", "of", "to", "in", "is", "that",
     "for", "with", "are", "was", "this", "it", "on", "be", "as", "by", "at")
 

@@ -47,10 +47,6 @@ object Profiling {
         max(col("v")).as("max_str"))
   }
 
-  /** One declared invariant: a label plus a violation-count column
-    * evaluated against the fact frame. */
-  final case class Check(label: String, violations: Column)
-
   /** Key-uniqueness check: rows whose `keyCols` tuple occurs more than
     * once, counted over the duplicate groups (a key seen 3× contributes
     * 3). One aggregate on the key — the natural partial-agg shape. */

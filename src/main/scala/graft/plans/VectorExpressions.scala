@@ -25,8 +25,6 @@ import org.apache.spark.sql.SparkSessionExtensions
   */
 object VectorExpressions {
 
-  private def floatArrayType = ArrayType(FloatType, containsNull = false)
-
   abstract class FloatVecBinary extends BinaryExpression {
     override def dataType: DataType = DoubleType
     override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {

@@ -12,8 +12,7 @@ import graft.operators.Similarity
   * made concrete. At 100 TB with nlist=4096 cells, a nProbe=8 query reads
   * ~0.2% of the corpus directories and never touches the rest; the scan's
   * `PartitionFilters` prove the pruning (pinned by IndexStoreSpec's ANN
-  * twin). Same store pattern as the term-bucketed [[IndexStore]] and the
-  * filename-bucketed [[VectorStore]] — one layout, three stores.
+  * twin). Files are published through [[StoreFiles]].
   *
   * Mirrors the reference's IVF index build-after-merge
   * (reference: src/server/app/embed/vector_store.py:266-271, index types
@@ -22,57 +21,27 @@ import graft.operators.Similarity
 object AnnStore {
 
   /** Persist an assigned corpus (must carry `centroid_id`) partitioned by
-    * cell. `repartition` by the partition column first so each cell is
-    * written by one task — without it every task writes a sliver of every
-    * cell and the store fragments into nTasks × nCells small files. */
+    * cell. */
   def write(assigned: DataFrame, path: String): Unit =
-    assigned
-      .repartition(col("centroid_id"))
-      .write.partitionBy("centroid_id").mode("overwrite").parquet(path)
+    StoreFiles.writePartitioned(assigned, "centroid_id", path)
 
   /** Merge a NEW vector batch into a persisted IVF store WITHOUT touching
     * unaffected cells: the batch is assigned map-side to the SAME fixed
-    * centroids, only the cell directories it lands in are read back,
-    * unioned, and swapped via the staging + atomic-rename protocol of
-    * [[IndexStore.merge]] — vector ingest cost scales with the batch, not
-    * the corpus, which is how a 100 TB vector store grows daily without a
-    * rebuild. Preconditions match IndexStore.merge: batch ids are new
-    * (delete-then-merge for replacement), and the codebook is the store's
-    * (centroid drift is a rebuild, not a merge). Empty batch is a no-op. */
+    * centroids and only the cells it lands in are rewritten
+    * ([[StoreFiles.mergeTouched]]) — vector ingest cost scales with the
+    * batch, not the corpus, which is how a 100 TB vector store grows daily
+    * without a rebuild. Preconditions match IndexStore.merge: batch ids
+    * are new (delete-then-merge for replacement), and the codebook is the
+    * store's (centroid drift is a rebuild, not a merge). Empty batch is a
+    * no-op. */
   def merge(spark: SparkSession, path: String, batch: DataFrame,
             centroids: DataFrame, cidCol: String, cvCol: String,
             vecCol: String, idCol: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
+    val cols = Seq(col(idCol), col(vecCol), col("centroid_id"))
     val assigned = Similarity.assignNearestCentroid(batch, vecCol, idCol,
-        centroids, cidCol, cvCol)
-      .select(col(idCol), col(vecCol), col("centroid_id")).cache()
-    val cells = assigned.select("centroid_id").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (cells.isEmpty) { assigned.unpersist(); return }
-    // partition-pruned read: only the touched cells are scanned
-    val existing = spark.read.parquet(path)
-      .filter(col("centroid_id").isin(cells.map(Integer.valueOf).toSeq: _*))
-      .select(col(idCol), col(vecCol), col("centroid_id"))
-    val merged = existing.unionByName(assigned)
-    val staging = path + "_staging"
-    merged.repartition(col("centroid_id"))
-      .write.mode("overwrite").partitionBy("centroid_id").parquet(staging)
-    // same guarantee as IndexStore.merge: each swap is atomic, the group
-    // is not — a crash leaves at most one cell absent until re-merged;
-    // stale _old dirs from a crashed cleanup are deleted up front
-    cells.foreach { cell =>
-      val src = Paths.get(staging, s"centroid_id=$cell")
-      val dst = Paths.get(path, s"centroid_id=$cell")
-      val old = Paths.get(s"${path}_old_c$cell")
-      if (Files.exists(old))
-        org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
-      if (Files.exists(dst)) Files.move(dst, old, StandardCopyOption.ATOMIC_MOVE)
-      if (Files.exists(src)) Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-      if (Files.exists(old))
-        org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(staging).toFile)
-    assigned.unpersist()
+        centroids, cidCol, cvCol).select(cols: _*)
+    StoreFiles.mergeTouched(spark, path, "centroid_id", assigned) {
+      (existing, added) => existing.select(cols: _*).unionByName(added) }
   }
 
   /** Top-k over ONLY the `nProbe` cells nearest the query: the

@@ -16,24 +16,19 @@ import org.apache.spark.sql.functions._
   * O(N·k·degree) graph build every session; with it a session pays
   * `iters` pruned lookups of ≤ beam·k edge rows.
   *
-  * Same layout discipline as the cell-partitioned [[AnnStore]] and the
-  * term-bucketed [[IndexStore]] — one store pattern, three indexes. At
-  * 100 TB the adjacency store is ~N·k rows of (long, int, long, double):
-  * three orders smaller than the corpus, and the probe path reads
-  * O(beam) directories of it.
+  * Files are published through [[StoreFiles]]. At 100 TB the adjacency
+  * store is ~N·k rows of (long, int, long, double): three orders smaller
+  * than the corpus, and the probe path reads O(beam) directories of it.
   */
 object GraphStore {
 
-  /** Persist a (id, rank, nbr_id, distance) graph bucketed by source id.
-    * `repartition` by the partition column first so each bucket is
-    * written by one task (the AnnStore.write lesson — without it every
-    * task writes a sliver of every bucket and the store fragments into
-    * nTasks × nBuckets files). */
+  /** Persist a (id, rank, nbr_id, distance) graph bucketed by source id. */
   def write(graph: DataFrame, path: String, nBuckets: Int = 64): Unit =
-    graph
-      .withColumn("bucket", pmod(col("id"), lit(nBuckets.toLong)).cast("int"))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
+    StoreFiles.writePartitioned(graph.withColumn("bucket", bucket(nBuckets)),
+      "bucket", path)
+
+  private def bucket(nBuckets: Int) =
+    pmod(col("id"), lit(nBuckets.toLong)).cast("int")
 
   /** Full adjacency read — the serving path for whole-graph ANALYTICS
     * (centrality, diameter, shortest paths), where the entire edge set is
@@ -261,7 +256,7 @@ object GraphStore {
     * node (bounded batch → map-side heap scan, no corpus shuffle), the
     * reverse edges, then ONLY the ≤ (k+1)·|batch| touched buckets are
     * read back, re-ranked per node under the same (distance, id) order,
-    * and atomically swapped (the IndexStore/AnnStore protocol). The
+    * and swapped in ([[StoreFiles.mergeTouched]]). The
     * REWRITE is O(touched buckets), but the exact forward-edge search is
     * a map-side scan of the old corpus — one linear-in-corpus term per
     * ingest. [[mergeScoped]] is the scale path that removes it (IVF
@@ -340,46 +335,25 @@ object GraphStore {
   }
 
   /** Shared landing half of [[merge]]/[[mergeScoped]]: reverse links,
-    * touched-bucket read-back, per-node re-rank to k under the
-    * (distance, id) order, atomic bucket swap (the IndexStore/AnnStore
-    * protocol). Cost is O(touched buckets), never O(store). */
+    * then a touched-bucket merge ([[StoreFiles.mergeTouched]]) that
+    * re-ranks each node to k under the (distance, id) order. Cost is
+    * O(touched buckets), never O(store). */
   private def landForwardEdges(spark: SparkSession, path: String,
                                nBuckets: Int, fwd: DataFrame,
                                k: Int): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val rev = fwd.select(col("nbr_id").as("id"), col("id").as("nbr_id"),
       col("distance"))
-    val newEdges = fwd.unionByName(rev)
-      .withColumn("bucket", pmod(col("id"), lit(nBuckets.toLong)).cast("int"))
-      .cache()
-    val buckets = newEdges.select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (buckets.isEmpty) { newEdges.unpersist(); return }
-    val existing = spark.read.parquet(path)
-      .filter(col("bucket").isin(buckets.map(Integer.valueOf).toSeq: _*))
-      .select(col("id"), col("nbr_id"), col("distance"), col("bucket"))
     val w = Window.partitionBy("id")
       .orderBy(col("distance").asc, col("nbr_id").asc)
-    val merged = existing.unionByName(newEdges)
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= k)
-      .select(col("id"), col("rank"), col("nbr_id"), col("distance"),
-        col("bucket"))
-    val staging = path + "_staging"
-    merged.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    buckets.foreach { b =>
-      val src = Paths.get(staging, s"bucket=$b")
-      val dst = Paths.get(path, s"bucket=$b")
-      val old = Paths.get(s"${path}_old_b$b")
-      if (Files.exists(old))
-        org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
-      if (Files.exists(dst)) Files.move(dst, old, StandardCopyOption.ATOMIC_MOVE)
-      if (Files.exists(src)) Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-      if (Files.exists(old))
-        org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
+    StoreFiles.mergeTouched(spark, path, "bucket",
+        fwd.unionByName(rev).withColumn("bucket", bucket(nBuckets))) {
+      (existing, added) => existing
+        .select(col("id"), col("nbr_id"), col("distance"), col("bucket"))
+        .unionByName(added)
+        .withColumn("rank", row_number().over(w).cast("int"))
+        .filter(col("rank") <= k)
+        .select(col("id"), col("rank"), col("nbr_id"), col("distance"),
+          col("bucket"))
     }
-    org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(staging).toFile)
-    newEdges.unpersist()
   }
 }

@@ -10,9 +10,8 @@ import org.apache.spark.sql.functions._
   * scrambleHash(term-polyhash) mod nBuckets, so a term lookup is a
   * PARTITION-PRUNED scan of one bucket directory — at 100 TB the index
   * shards into nBuckets independent directories and a query touches
-  * |query terms| of them, never the full index. The same layout serves the
-  * vector side in [[VectorStore]] (filename-hash buckets) — one pattern,
-  * two stores.
+  * |query terms| of them, never the full index. Files are published
+  * through [[StoreFiles]].
   *
   * The bucket function is the oracle-replayable hash family
   * ([[graft.plans.HashExpressions]]): tokenPoly 62-bit term hash →
@@ -37,59 +36,30 @@ object IndexStore {
     * hash. Overwrites the store path. */
   def write(index: DataFrame, path: String, nBuckets: Int): Unit = {
     implicit val spark: SparkSession = index.sparkSession
-    index.withColumn("bucket", termBucket("term", nBuckets))
-      .repartition(col("bucket"))
-      .write.partitionBy("bucket").mode("overwrite").parquet(path)
+    StoreFiles.writePartitioned(
+      index.withColumn("bucket", termBucket("term", nBuckets)), "bucket", path)
   }
 
   /** Merge a NEW batch's inverted index into a persisted store WITHOUT
     * rebuilding untouched buckets: only the buckets the batch's terms hash
     * into are read, re-aggregated (df/cf sum, posting lists concatenated
-    * and re-sorted) and swapped back via the staging-dir + atomic-rename
-    * protocol [[VectorStore.upsertPartitioned]] uses — the incremental
-    * ingest path, so index maintenance cost scales with the batch, not
-    * the corpus. Precondition (standard append ingest): the batch's doc
-    * ids are NEW — re-ingesting an existing doc would double-count its
-    * postings; delete-then-merge for replacement. An empty batch is a
-    * no-op. */
+    * and re-sorted) and swapped back ([[StoreFiles.mergeTouched]]) — the
+    * incremental ingest path, so index maintenance cost scales with the
+    * batch, not the corpus. Precondition (standard append ingest): the
+    * batch's doc ids are NEW — re-ingesting an existing doc would
+    * double-count its postings; delete-then-merge for replacement. An
+    * empty batch is a no-op. */
   def merge(spark: SparkSession, path: String, newIndex: DataFrame,
             nBuckets: Int): Unit = {
     implicit val s: SparkSession = spark
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val bucketed = newIndex.withColumn("bucket", termBucket("term", nBuckets))
-      .cache()
-    val buckets = bucketed.select("bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    if (buckets.isEmpty) { bucketed.unpersist(); return }
-    // partition-pruned read: only the touched buckets are scanned
-    val existing = spark.read.parquet(path)
-      .filter(col("bucket").isin(buckets.map(Integer.valueOf).toSeq: _*))
-    val merged = existing.unionByName(bucketed)
-      .groupBy("bucket", "term")
-      .agg(sum("df").as("df"), sum("cf").as("cf"),
-        sort_array(flatten(collect_list(col("postings")))).as("postings"))
-      .select("term", "df", "cf", "postings", "bucket")
-    val staging = path + "_staging"
-    merged.repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    // Bucket swaps are individually atomic (rename), not transactional as
-    // a group — a crash between the two moves can leave ONE bucket absent
-    // until re-merged (same guarantee as VectorStore.upsertPartitioned).
-    // A leftover _old dir from a crashed cleanup is garbage: delete it
-    // up front so a previous crash can never wedge future merges.
-    buckets.foreach { b =>
-      val src = Paths.get(staging, s"bucket=$b")
-      val dst = Paths.get(path, s"bucket=$b")
-      val old = Paths.get(s"${path}_old_b$b")
-      if (Files.exists(old))
-        org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
-      if (Files.exists(dst)) Files.move(dst, old, StandardCopyOption.ATOMIC_MOVE)
-      if (Files.exists(src)) Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-      if (Files.exists(old))
-        org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
+    StoreFiles.mergeTouched(spark, path, "bucket",
+        newIndex.withColumn("bucket", termBucket("term", nBuckets))) {
+      (existing, added) => existing.unionByName(added)
+        .groupBy("bucket", "term")
+        .agg(sum("df").as("df"), sum("cf").as("cf"),
+          sort_array(flatten(collect_list(col("postings")))).as("postings"))
+        .select("term", "df", "cf", "postings", "bucket")
     }
-    org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(staging).toFile)
-    bucketed.unpersist()
   }
 
   /** Look up posting lists for `terms`: computes their buckets and reads

@@ -1,6 +1,8 @@
 package graft.store
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
+
+import org.apache.commons.io.FileUtils
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -14,8 +16,7 @@ import graft.operators.GraphAnalytics
   * verdict's Missing #3: the incremental machinery existed but the
   * state itself was an in-memory frame rebuilt every session).
   *
-  * Layout (the AnnStore/IndexStore/VectorStore protocol — one layout,
-  * four stores):
+  * Layout (files published through [[StoreFiles]]):
   *
   *   <root>/labels/lbucket=K/  (node, scc, scc_size), K = scc mod 64
   *   <root>/condensation/      (src_scc, dst_scc)    contracted space
@@ -37,10 +38,9 @@ import graft.operators.GraphAnalytics
   * a node-keyed probe cannot partition-prune; a node-bucketed
   * secondary layout, GraphStore's id-bucket shape, would cut that scan
   * to O(batch) and is the natural next step). Writes land in a staging
-  * dir and swap in via atomic renames; a crash leaves either the old
-  * or the new store. Adding
-  * edges only ever MERGES SCCs; deletion can split them and is a
-  * rebuild, as for every monotone standing store here.
+  * dir and swap in dir by dir ([[StoreFiles.swap]]). Adding edges only
+  * ever MERGES SCCs; deletion can split them and is a rebuild, as for
+  * every monotone standing store here.
   */
 object SccStore {
 
@@ -183,19 +183,15 @@ object SccStore {
         GraphAnalytics.condensationWcc(newCond)
           .select("id", "cluster_rep")
           .write.mode("overwrite").parquet(s"$staging/condwcc")
-        // swap: touched buckets individually (AnnStore cell protocol),
-        // then the contracted frames as whole dirs
-        tb.foreach { b =>
-          swapDir(Paths.get(staging, s"labels/lbucket=$b"),
-            Paths.get(root, s"labels/lbucket=$b"),
-            Paths.get(s"${root}_old_b$b"))
-        }
-        swapDir(Paths.get(staging, "condensation"),
-          Paths.get(root, "condensation"), Paths.get(s"${root}_old_cond"))
-        swapDir(Paths.get(staging, "condwcc"),
-          Paths.get(root, "condwcc"), Paths.get(s"${root}_old_cw"))
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          Paths.get(staging).toFile)
+        // swap: touched buckets individually, then the contracted
+        // frames as whole dirs
+        tb.foreach(b => StoreFiles.swap(s"$staging/labels/lbucket=$b",
+          s"$root/labels/lbucket=$b", s"${root}_old_b$b"))
+        StoreFiles.swap(s"$staging/condensation", s"$root/condensation",
+          s"${root}_old_cond")
+        StoreFiles.swap(s"$staging/condwcc", s"$root/condwcc",
+          s"${root}_old_cw")
+        FileUtils.deleteDirectory(new java.io.File(staging))
         // writing into root/labels invalidates Spark's cached file
         // listing for the path (recacheByPath fires on write, not on
         // manual renames) — refresh explicitly
@@ -204,47 +200,25 @@ object SccStore {
   }
 
   private def writeLabelBuckets(sized: DataFrame, path: String): Unit =
-    sized
-      .withColumn("lbucket",
-        pmod(col("scc"), lit(NBuckets.toLong)).cast("int"))
-      .repartition(col("lbucket"))
-      .write.mode("overwrite").partitionBy("lbucket").parquet(path)
+    StoreFiles.writePartitioned(sized.withColumn("lbucket",
+      pmod(col("scc"), lit(NBuckets.toLong)).cast("int")), "lbucket", path)
 
   private def stagingDir(root: String): String =
     s"${root}_staging-" + java.util.UUID.randomUUID().toString.take(8)
-
-  /** src → dst with dst backed up to `old` first; each rename atomic,
-    * stale `old` dirs cleared up front (the VectorStore promote rule). */
-  private def swapDir(src: java.nio.file.Path, dst: java.nio.file.Path,
-                      old: java.nio.file.Path): Unit = {
-    if (Files.exists(old))
-      org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
-    if (Files.exists(dst)) Files.move(dst, old, StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(src)) Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-    if (Files.exists(old))
-      org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
-  }
 
   /** First-build swap of the WHOLE store: root (if any) → `_old`,
     * staging → root. Concurrent first-builders race benignly — the
     * loser keeps the winner's store and discards its own staging. */
   private def swapWholeStore(root: String, staging: String): Unit = {
-    val dst = Paths.get(root)
-    val old = Paths.get(s"${root}_old")
-    if (Files.exists(old))
-      org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
+    val old = s"${root}_old"
     this.synchronized {
-      if (Files.exists(dst))
-        Files.move(dst, old, StandardCopyOption.ATOMIC_MOVE)
-      try Files.move(Paths.get(staging), dst, StandardCopyOption.ATOMIC_MOVE)
+      try StoreFiles.swap(staging, root, old)
       catch {
         case _: java.nio.file.FileAlreadyExistsException |
              _: java.nio.file.AccessDeniedException =>
-          org.apache.commons.io.FileUtils.deleteDirectory(
-            Paths.get(staging).toFile)
+          FileUtils.deleteDirectory(new java.io.File(staging))
+          FileUtils.deleteDirectory(new java.io.File(old))
       }
     }
-    if (Files.exists(old))
-      org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
   }
 }

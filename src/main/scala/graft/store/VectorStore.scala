@@ -15,12 +15,12 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * Store schema: (id STRING, text STRING, metadata MAP<STRING,STRING>,
   * embedding ARRAY<FLOAT>).
   *
-  * Scale: writes go to a staging directory and are promoted with an atomic
-  * rename (Spark's commit protocol makes the staging write itself
-  * all-or-nothing). Merge is a left-anti join on `id` — the existing store
-  * is only read, the delta only written; at 100 TB the store would be
-  * partitioned by a filename hash bucket so stale-delete rewrites touch only
-  * affected partitions instead of the full table.
+  * Publishing: [[write]] and [[writePartitioned]] overwrite in place and
+  * [[merge]] appends in place. The two rewrites, [[upsertPartitioned]] and
+  * [[deleteStale]], stage their output and promote it with
+  * [[StoreFiles.swap]] (Spark's commit protocol makes the staging write
+  * itself all-or-nothing). Merge is a left-anti join on `id` — the
+  * existing store is only read, the delta only written.
   */
 object VectorStore {
 
@@ -134,8 +134,9 @@ object VectorStore {
     * (the reference's upsert is delete-children-then-reinsert,
     * testbed/database.py:83-121; its merge is staged `_TMP` + anti-join,
     * vector_store.py:250-257 — this is both, bounded to affected buckets).
-    * Bucket swaps are individually atomic (rename), not transactional as a
-    * group — same guarantee as the reference's executemany delete loop.
+    * Each bucket swap is atomic ([[StoreFiles.swap]]), the group is not —
+    * the reference's executemany delete loop gives the same guarantee. The
+    * write is not repartitioned, unlike [[StoreFiles.writePartitioned]].
     * Returns (updated, inserted). */
   def upsertPartitioned(spark: SparkSession, root: String, name: String,
                         incoming: DataFrame, numBuckets: Int = 64): (Long, Long) = {
@@ -143,64 +144,55 @@ object VectorStore {
     val bucketed = incoming.withColumn("file_bucket",
       pmod(xxhash64(element_at(col("metadata"), "filename")), lit(numBuckets)).cast("int"))
       .cache()
-    // Fail fast on a null filename: it would hash to a null bucket, NPE
-    // below, and (worse) land rows no bucket-pruned read could find.
-    val nullFn = bucketed.filter(col("file_bucket").isNull).count()
-    if (nullFn > 0)
-      throw new IllegalArgumentException(
-        s"upsertPartitioned: $nullFn incoming row(s) have a null " +
-          "metadata.filename; every row must carry a non-null filename")
-    val buckets = bucketed.select("file_bucket").distinct()
-      .collect().map(_.getInt(0)).sorted
-    // An id's filename is IMMUTABLE under this layout: the merge prunes to
-    // the buckets of incoming filenames, so an id re-appearing under a NEW
-    // filename would leave its old row stranded in an untouched bucket —
-    // a duplicate id after the merge. Guard with an id-column-only scan
-    // (column-pruned) of the unaffected buckets.
-    val strayIds = spark.read.parquet(path)
-      .filter(!col("file_bucket").isin(buckets.map(Integer.valueOf).toSeq: _*))
-      .select("id")
-      .join(bucketed.select("id"), Seq("id"), "left_semi").count()
-    if (strayIds > 0)
-      throw new IllegalArgumentException(
-        s"upsertPartitioned: $strayIds incoming id(s) already exist under a " +
-          "different filename bucket; an id's filename is immutable — " +
-          "delete the old rows (deleteStale) before re-ingesting under a " +
-          "new filename")
-    // partition-pruned read: only the affected buckets are scanned
-    val existing = spark.read.parquet(path)
-      .filter(col("file_bucket").isin(buckets.map(Integer.valueOf).toSeq: _*))
-    val updated = bucketed.join(existing.select("id"), Seq("id"), "left_semi").count()
-    val inserted = bucketed.count() - updated
-    val staging = s"$root/_staging_$name"
-    existing.join(bucketed.select("id"), Seq("id"), "left_anti")
-      .unionByName(bucketed)
-      .write.mode(SaveMode.Overwrite).partitionBy("file_bucket").parquet(staging)
-    buckets.foreach { b =>
-      val src = Paths.get(staging, s"file_bucket=$b")
-      val dst = Paths.get(path, s"file_bucket=$b")
-      val old = Paths.get(s"$root/_old_${name}_b$b")
-      // a leftover _old dir from a crashed cleanup would make the next
-      // dst→old move throw; it is garbage — clear it before swapping
-      if (Files.exists(old))
-        org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
-      if (Files.exists(dst)) Files.move(dst, old, StandardCopyOption.ATOMIC_MOVE)
-      Files.move(src, dst, StandardCopyOption.ATOMIC_MOVE)
-      if (Files.exists(old))
-        org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(staging).toFile)
-    bucketed.unpersist()
-    (updated, inserted)
+    try {
+      // Fail fast on a null filename: xxhash64 skips nulls, so such rows
+      // would land in the seed's bucket where no filename probe finds them.
+      val nullFn = bucketed
+        .filter(element_at(col("metadata"), "filename").isNull).count()
+      if (nullFn > 0)
+        throw new IllegalArgumentException(
+          s"upsertPartitioned: $nullFn incoming row(s) have a null " +
+            "metadata.filename; every row must carry a non-null filename")
+      val buckets = bucketed.select("file_bucket").distinct()
+        .collect().map(_.getInt(0)).sorted
+      // An id's filename is IMMUTABLE under this layout: the merge prunes to
+      // the buckets of incoming filenames, so an id re-appearing under a NEW
+      // filename would leave its old row stranded in an untouched bucket —
+      // a duplicate id after the merge. Guard with an id-column-only scan
+      // (column-pruned) of the unaffected buckets.
+      val strayIds = spark.read.parquet(path)
+        .filter(!col("file_bucket").isin(buckets.map(Integer.valueOf).toSeq: _*))
+        .select("id")
+        .join(bucketed.select("id"), Seq("id"), "left_semi").count()
+      if (strayIds > 0)
+        throw new IllegalArgumentException(
+          s"upsertPartitioned: $strayIds incoming id(s) already exist under a " +
+            "different filename bucket; an id's filename is immutable — " +
+            "delete the old rows (deleteStale) before re-ingesting under a " +
+            "new filename")
+      // partition-pruned read: only the affected buckets are scanned
+      val existing = spark.read.parquet(path)
+        .filter(col("file_bucket").isin(buckets.map(Integer.valueOf).toSeq: _*))
+      val updated = bucketed.join(existing.select("id"), Seq("id"), "left_semi").count()
+      val inserted = bucketed.count() - updated
+      val staging = s"$root/_staging_$name"
+      existing.join(bucketed.select("id"), Seq("id"), "left_anti")
+        .unionByName(bucketed)
+        .write.mode(SaveMode.Overwrite).partitionBy("file_bucket").parquet(staging)
+      buckets.foreach(b => StoreFiles.swap(s"$staging/file_bucket=$b",
+        s"$path/file_bucket=$b", s"$root/_old_${name}_b$b"))
+      org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(staging).toFile)
+      (updated, inserted)
+    } finally bucketed.unpersist()
   }
 
   /** Delete all chunks belonging to `filenames` (stale-file delete before
     * re-embed — reference J2, vector_store.py:239-245: DELETE WHERE
     * JSON_VALUE(metadata,'$.filename') = :fname). Plain Parquet has no
     * row-level delete, so this is a filtered rewrite through a staging dir
-    * with atomic swap — the analog of the reference's `_TMP` + `PURGE`
-    * protocol. Partitioning the store by filename bucket bounds the rewrite
-    * at scale. */
+    * promoted by [[StoreFiles.swap]] — the analog of the reference's
+    * `_TMP` + `PURGE` protocol. Partitioning the store by filename bucket
+    * bounds the rewrite at scale. */
   def deleteStale(spark: SparkSession, root: String, name: String,
                   filenames: Seq[String]): Unit = {
     val path = s"$root/$name"
@@ -209,11 +201,7 @@ object VectorStore {
       .filter(!element_at(col("metadata"), "filename").isin(filenames: _*) ||
               element_at(col("metadata"), "filename").isNull)
       .write.mode(SaveMode.Overwrite).parquet(staging)
-    val dir = Paths.get(path)
-    val tmpOld = Paths.get(s"$root/_old_$name")
-    Files.move(dir, tmpOld, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(staging), dir, StandardCopyOption.ATOMIC_MOVE)
-    org.apache.commons.io.FileUtils.deleteDirectory(tmpOld.toFile)
+    StoreFiles.swap(staging, path, s"$root/_old_$name")
   }
 
   /** Per-file rollup of processed-chunk metadata — the change-detection

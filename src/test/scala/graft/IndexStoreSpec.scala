@@ -70,6 +70,18 @@ class IndexStoreSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
+  test("a merge into a missing store fails and releases its cached batch") {
+    val idx = Retrieval.invertedIndex(Seq((1L, "a b")).toDF("doc_id", "text"),
+      "doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_idxmiss").toFile
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[org.apache.spark.sql.AnalysisException] {
+      IndexStore.merge(spark, s"${dir.getAbsolutePath}/missing", idx, 4)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
   test("ANN store: probe partition-prunes to the nProbe cell directories") {
     import graft.operators.Similarity
     import graft.store.AnnStore

@@ -137,4 +137,22 @@ class RegistrySpec extends AnyFunSuite {
     assert(mains.sorted ==
       Seq("Bench", "MergeProbe", "Probe", "ScaleProbe", "Verify"), mains)
   }
+
+  // --- one store-publish protocol ---------------------------------------
+  //
+  // The staged dir swap was once written out by hand in every store and
+  // the copies drifted (one lost its leftover-`_old` cleanup). Only
+  // StoreFiles moves dirs; the catalog replace is the one file move.
+
+  test("only StoreFiles and the catalog replace move files atomically in src/main") {
+    val movers = mainSources.flatMap { case (f, text) =>
+      "ATOMIC_MOVE".r.findAllMatchIn(text).map { m =>
+        val owner = "def (\\w+)".r.findAllMatchIn(text.take(m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("")
+        s"$f:$owner"
+      }
+    }
+    assert(movers.filterNot(_.startsWith("StoreFiles.scala:")) ==
+      Seq("VectorStore.scala:updateCatalog"), movers)
+  }
 }

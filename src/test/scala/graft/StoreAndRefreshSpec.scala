@@ -109,6 +109,40 @@ class StoreAndRefreshSpec extends SparkSpec {
     assert(left.toSeq == Seq("b_0"))
   }
 
+  test("stale delete succeeds over a leftover _old dir from a crashed delete") {
+    val root = freshRoot()
+    val df = Seq(chunkRow("a_0", "alpha", "a"), chunkRow("b_0", "beta", "b"))
+      .toDF("id", "text", "metadata", "embedding")
+    VectorStore.write(df, root, "T4", """{"alias": "t4"}""")
+    val leftover = java.nio.file.Paths.get(root, "_old_T4")
+    Files.createDirectories(leftover)
+    Files.writeString(leftover.resolve("part-0.parquet"), "garbage")
+    VectorStore.deleteStale(spark, root, "T4", Seq("a"))
+    val left = VectorStore.read(spark, root, "T4").select("id").as[String].collect()
+    assert(left.toSeq == Seq("b_0"))
+    val dirs = new java.io.File(root).list().toSeq
+    assert(!dirs.exists(d => d.startsWith("_old_") || d.startsWith("_staging_")), dirs)
+  }
+
+  test("a rejected upsert releases its cached batch") {
+    val root = freshRoot()
+    val df = Seq(chunkRow("a_0", "alpha", "a"), chunkRow("b_0", "beta", "b"))
+      .toDF("id", "text", "metadata", "embedding")
+    VectorStore.writePartitioned(df, root, "U3", """{"alias": "u3"}""", numBuckets = 8)
+    val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val nullFilename = Seq(("a_1", "x", Map("etag" -> "e"), Seq(1.0f, 0.0f)))
+      .toDF("id", "text", "metadata", "embedding")
+    // b_0 re-ingested under filename "c": its old row would be stranded
+    val strayId = Seq(chunkRow("b_0", "beta", "c"))
+      .toDF("id", "text", "metadata", "embedding")
+    for (incoming <- Seq(nullFilename, strayId)) {
+      intercept[IllegalArgumentException] {
+        VectorStore.upsertPartitioned(spark, root, "U3", incoming, 8)
+      }
+      assert(spark.sparkContext.getPersistentRDDs.keySet == cachedBefore)
+    }
+  }
+
   test("catalog lists stores after write") {
     val root = freshRoot()
     val df = Seq(chunkRow("x", "x", "x")).toDF("id", "text", "metadata", "embedding")
