@@ -51,9 +51,10 @@ object Bench {
     // sample ~minutes later makes the min a genuine two-window estimate,
     // like every regular query's min(cold, steady).
     val instrMin = scala.collection.mutable.Map[String, Double]()
-    // queries that threw in any pass; their (short) times still count in
-    // the totals, so every summary line carries n_failed and the sidecar
-    // names them
+    // queries that threw in any pass: left out of every total and top
+    // list (a throw's short time is not a query time); each summary line
+    // carries n_failed and failed_s (their cold-pass seconds), and the
+    // sidecar names them
     val failed = scala.collection.mutable.SortedSet[String]()
     // mode: "all" (cold), "engine" (steady — instruments excluded),
     // "instruments" (the spaced second instrument sample).
@@ -128,6 +129,9 @@ object Bench {
 
     def fmt(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     def short(name: String): String = name.takeWhile(_ != '_')
+    // totals and top lists count only the queries that never threw
+    def ok(m: Seq[(String, Double)]) = m.filterNot { case (n, _) => failed(n) }
+    def total(m: Seq[(String, Double)]): String = fmt(ok(m).map(_._2).sum)
     def top20(vals: Seq[(String, Double)]): String = vals.sortBy(-_._2).take(20)
       .map { case (k, v) => "\"" + short(k) + "\":" + fmt(v) }.mkString("{", ",", "}")
     def jstr(ss: Seq[String]): String =
@@ -143,19 +147,21 @@ object Bench {
     def emitSummary(pass: String, cold: Seq[(String, Double)],
                     coldMin: Seq[(String, Double)], steady: Seq[(String, Double)],
                     extra: String = ""): Unit = {
-      val instrumentS = steady
+      val instrumentS = ok(steady)
         .filter { case (n, _) => isInstrument(n) }.map(_._2).sum
+      val failedS = cold.filter { case (n, _) => failed(n) }.map(_._2).sum
       val loadJson = loads.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
-      println(s"""{"metric":"total","value":${fmt(cold.map(_._2).sum)},"unit":"sec","sf":"$sfDir",""" +
+      println(s"""{"metric":"total","value":${total(cold)},"unit":"sec","sf":"$sfDir",""" +
         s""""pass":"$pass","wall_s":${fmt(elapsedS)},"budget_s":${fmt(budgetS)},""" +
-        s""""n_queries":${cold.size},"n_failed":${failed.size},"cold_min_total":${fmt(coldMin.map(_._2).sum)},""" +
-        s""""steady_total":${fmt(steady.map(_._2).sum)},""" +
+        s""""n_queries":${cold.size},"n_failed":${failed.size},"failed_s":${fmt(failedS)},""" +
+        s""""cold_min_total":${total(coldMin)},""" +
+        s""""steady_total":${total(steady)},""" +
         s""""instrument_steady_s":${fmt(instrumentS)},""" +
         s""""store_build_s":${fmt(storeBuildS)},""" +
         s""""pass_loads":$loadJson,"cpus":$ncpu,"host_cpus":$hostCpus,$extra""" +
-        s""""top":${top20(cold)},"cold_min_top":${top20(coldMin)},""" +
-        s""""steady_top":${top20(steady)}}""")
+        s""""top":${top20(ok(cold))},"cold_min_top":${top20(ok(coldMin))},""" +
+        s""""steady_top":${top20(ok(steady))}}""")
     }
 
     // first pass (if any) that hit the intra-pass budget stop — stamped
@@ -259,8 +265,8 @@ object Bench {
       qkeys.zip(vals.map(_._2))
         .map { case (k, v) => "\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     }
-    println(s"""{"metric":"total","value":${fmt(cold.map(_._2).sum)},"unit":"sec","queries":${qmap(cold)},""" +
-      s""""steady_total":${fmt(steady.map(_._2).sum)},"steady_queries":${qmap(steady)},""" +
+    println(s"""{"metric":"total","value":${total(cold)},"unit":"sec","queries":${qmap(cold)},""" +
+      s""""steady_total":${total(steady)},"steady_queries":${qmap(steady)},""" +
       s""""cold_min_queries":${qmap(coldMin)},"sf":"$sfDir"}""")
     // FINAL line: the compact summary again (same schema as the per-pass
     // lines) so it is the last line of the bounded tail; a mid-pass

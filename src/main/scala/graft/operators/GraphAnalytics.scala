@@ -12,11 +12,13 @@ import org.apache.spark.sql.functions._
   * (`src/server/app/embed/vector_store.py`); centrality extends the same
   * kNN machinery (q101) from per-query ranking to corpus-level structure.
   *
-  * Superstep materialization: each iterative op here ends every round
-  * with an EAGER `localCheckpoint` — the round's state is referenced
-  * more than once by the next round, so without truncation the logical
-  * plan (and even its description string) grows exponentially in the
-  * round count; caching dedups execution but not the plan tree.
+  * Superstep materialization: an iterative op whose next round reads
+  * the round's state more than once ends every round with an EAGER
+  * `localCheckpoint` — without truncation the logical plan (and even its
+  * description string) grows exponentially in the round count; caching
+  * dedups execution but not the plan tree. The Markov value iterations
+  * ([[valueIteration]]) read the previous value vector once per round,
+  * so their lineage grows linearly and they do not checkpoint.
   * Trade-off, on purpose: localCheckpoint blocks are unreplicated
   * executor state, so an executor lost mid-iteration fails the job
   * instead of recomputing (use reliable `checkpoint()` to durable
@@ -50,6 +52,55 @@ object GraphAnalytics {
     graft.SessionConf.withShufflePartitions(input.sparkSession,
       graft.SessionConf.sizedPartitions(input))(body)
 
+  /** The symmetrized, de-duplicated (a, b) edge set of a directed edge
+    * list, localCheckpointed: every round of the BFS, Brandes and WL
+    * loops below re-reads it. */
+  private def undirected(edges: DataFrame, srcCol: String,
+                         dstCol: String): DataFrame = {
+    val e0 = edges.select(col(srcCol).cast("long").as("a"),
+      col(dstCol).cast("long").as("b"))
+    e0.union(e0.select(col("b").as("a"), col("a").as("b")))
+      .distinct().localCheckpoint()
+  }
+
+  /** Canonical undirected edges (a < b), self-loops dropped,
+    * de-duplicated (one shuffle) — not materialized: each caller picks
+    * its own checkpoint form. */
+  private def canonical(edges: DataFrame, srcCol: String,
+                        dstCol: String): DataFrame =
+    edges.select(
+        least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
+        greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+
+  /** Level-synchronous BFS over `und` (an [[undirected]] edge set) from
+    * every seed row at once, capped at `maxHops`: per hop one join of
+    * the (shrinking) frontier against the edges and an anti-join on the
+    * visited set, the frontier localCheckpoint'd. The visited set is the
+    * union of those checkpointed frontiers and is read once per hop, so
+    * it is never re-materialized. `seeds` is (node) for one BFS or
+    * (source, node) for one BFS per source, each source's rows exactly
+    * its own single-source BFS. (A single BFS stays keyed by node alone:
+    * a constant source key would cost hop 1 its reuse of the frontier's
+    * exchange by the anti-join, one job per BFS.) Returns the seed
+    * columns plus d, the hop distance. */
+  private def bfs(und: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
+    val keys = seeds.columns.toSeq
+    val carried = keys.filter(_ != "node").map(col)
+    var dist = seeds.withColumn("d", lit(0)).localCheckpoint()
+    var frontier = dist
+    for (h <- 1 to maxHops) {
+      frontier = frontier.join(und, frontier("node") === und("a"))
+        .select(carried :+ col("b").as("node"): _*).distinct()
+        .join(dist.select(keys.map(col): _*), keys, "left_anti")
+        .withColumn("d", lit(h))
+        .localCheckpoint()
+      dist = dist.union(frontier)
+    }
+    dist
+  }
+
   /** Fixed-point PageRank (Page et al. 1999, damping d = 0.85) over an
     * edge list, `iters` synchronous power iterations from a uniform
     * start.
@@ -72,44 +123,11 @@ object GraphAnalytics {
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iters: Int = 3, scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && scale >= 1L, "need iters >= 1 and scale >= 1")
-    sized(edges) {
-    // every iteration re-joins the edge list; cache the projection so an
-    // expensive upstream build (e.g. the q101 kNN pair join) runs once,
-    // not once per round (the q56 pairs.cache() precedent)
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).cache()
-    // the final ranks frame is localCheckpoint-truncated, so releasing
-    // the edge cache on exit is safe — a long-lived session calling the
-    // iterative operators repeatedly must not accumulate storage memory
-    try {
-      val nodes = e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct()
-      val nRow = nodes.agg(count(lit(1)).as("n"))
-      val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-      val ewd = e.join(deg, "src") // static across iterations
-      var ranks = nodes.crossJoin(broadcast(nRow))
-        .select(col("id"), expr(s"${scale}L div n").as("base"))
-        .withColumn("pr", col("base"))
-      (1 to iters).foreach { _ =>
-        val sums = ewd
-          .join(ranks.select(col("id").as("src"), col("pr")), "src")
-          .select(col("dst"), expr("pr div deg").as("c"))
-          .groupBy("dst").agg(sum("c").as("insum"))
-        // the next round reads `ranks` TWICE (mass send + teleport mix), so
-        // lineage doubles per iteration; an eager localCheckpoint both
-        // materializes the superstep (Pregel barrier) and TRUNCATES the
-        // plan to depth 1 — caching alone dedups execution but leaves the
-        // 2^iters plan tree (even its description string is exponential)
-        ranks = ranks.select("id", "base")
-          .join(sums, col("id") === col("dst"), "left")
-          .select(col("id"), col("base"),
-            (expr("(15L * base) div 100L") +
-              expr("(85L * coalesce(insum, 0L)) div 100L")).as("pr"))
-          .localCheckpoint()
-      }
-      ranks
-    } finally e.unpersist()
-    }
+    rankIteration(edges, srcCol, dstCol, iters,
+      start = nodes => nodes
+        .crossJoin(broadcast(nodes.agg(count(lit(1)).as("n"))))
+        .select(col("id"), expr(s"${scale}L div n").as("base")),
+      teleport = expr("(15L * base) div 100L"))
   }
 
   /** [[pageRank]] with teleport restricted to `seedPred` nodes —
@@ -126,41 +144,59 @@ object GraphAnalytics {
                            iters: Int = 3,
                            scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && scale >= 1L, "need iters >= 1 and scale >= 1")
-    sized(edges) {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).cache()
-    try {
-      val nodes = e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct()
-      val seedIds = seeds.select(col(seedIdCol).cast("long").as("id")).distinct()
-      val nSeedRow = seedIds.agg(count(lit(1)).as("ns"))
-      val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-      val ewd = e.join(deg, "src")
-      // teleport share: seeds split (15% of scale) equally; start = share
-      var ranks = nodes
-        .join(seedIds.withColumn("_s", lit(1)), Seq("id"), "left")
-        .crossJoin(broadcast(nSeedRow))
+    val seedIds = seeds.select(col(seedIdCol).cast("long").as("id")).distinct()
+    // teleport share: seeds split (15% of scale) equally; start = share
+    rankIteration(edges, srcCol, dstCol, iters,
+      start = _.join(seedIds.withColumn("_s", lit(1)), Seq("id"), "left")
+        .crossJoin(broadcast(seedIds.agg(count(lit(1)).as("ns"))))
         .select(col("id"),
           when(col("_s").isNotNull,
             expr(s"((15L * ${scale}L) div 100L) div ns")).otherwise(lit(0L))
-            .as("base"))
-        .withColumn("pr", col("base"))
+            .as("base")),
+      teleport = col("base"))
+  }
+
+  /** The fixed-point power iteration shared by [[pageRank]] and
+    * [[personalizedPageRank]]: `start` maps the node table (id) to each
+    * node's (id, base) teleport mass, which is also the round-0 rank;
+    * every round sends `pr div deg` along each out-edge, sums it per
+    * `dst`, and sets pr = `teleport` + (85·insum) div 100. Returns
+    * (id, base, pr). */
+  private def rankIteration(edges: DataFrame, srcCol: String, dstCol: String,
+                            iters: Int, start: DataFrame => DataFrame,
+                            teleport: Column): DataFrame = sized(edges) {
+    // every iteration re-joins the edge list; cache the projection so an
+    // expensive upstream build (e.g. the q101 kNN pair join) runs once,
+    // not once per round (the q56 pairs.cache() precedent)
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst")).cache()
+    // the final ranks frame is localCheckpoint-truncated, so releasing
+    // the edge cache on exit is safe — a long-lived session calling the
+    // iterative operators repeatedly must not accumulate storage memory
+    try {
+      val nodes = e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id"))).distinct()
+      val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+      val ewd = e.join(deg, "src") // static across iterations
+      var ranks = start(nodes).withColumn("pr", col("base"))
       (1 to iters).foreach { _ =>
         val sums = ewd
           .join(ranks.select(col("id").as("src"), col("pr")), "src")
           .select(col("dst"), expr("pr div deg").as("c"))
           .groupBy("dst").agg(sum("c").as("insum"))
-        // superstep barrier + lineage truncation — see [[pageRank]]
+        // the next round reads `ranks` TWICE (mass send + teleport mix), so
+        // lineage doubles per iteration; an eager localCheckpoint both
+        // materializes the superstep (Pregel barrier) and TRUNCATES the
+        // plan to depth 1 — caching alone dedups execution but leaves the
+        // 2^iters plan tree (even its description string is exponential)
         ranks = ranks.select("id", "base")
           .join(sums, col("id") === col("dst"), "left")
           .select(col("id"), col("base"),
-            (col("base") + expr("(85L * coalesce(insum, 0L)) div 100L"))
-              .as("pr"))
+            (teleport + expr("(85L * coalesce(insum, 0L)) div 100L")).as("pr"))
           .localCheckpoint()
       }
       ranks
     } finally e.unpersist()
-    }
   }
 
   /** Rank rows of a [[pageRank]] result: (id, pr, rk) ordered by
@@ -189,11 +225,7 @@ object GraphAnalytics {
     * is even). Returns one row (n_nodes, n_edges, n_wedges,
     * n_triangles, transitivity). */
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
-    val und = edges.select(
-        least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
-        greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
+    val und = canonical(edges, srcCol, dstCol)
       // referenced three times by the triangle join — localCheckpoint
       // (not cache) so the materialized blocks free with the RDD via
       // ContextCleaner instead of pinning CacheManager storage forever
@@ -267,12 +299,7 @@ object GraphAnalytics {
                 k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "need k >= 1 and rounds >= 1")
     sized(edges) {
-    var und = edges.select(
-        least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
-        greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .localCheckpoint()
+    var und = canonical(edges, srcCol, dstCol).localCheckpoint()
     var keep: DataFrame = null
     (1 to rounds).foreach { r =>
       val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
@@ -330,7 +357,7 @@ object GraphAnalytics {
           .groupBy(col("dst"))
           .agg(min_by(col("label"),
             struct((-col("_n")).as("n"), col("label").as("l"))).as("_vote"))
-        // superstep barrier + lineage truncation — see [[pageRank]]
+        // superstep barrier + lineage truncation — see [[rankIteration]]
         labels = labels.select("id", "_seed", "label")
           .join(votes, col("id") === col("dst"), "left")
           .select(col("id"), col("_seed"),
@@ -451,24 +478,9 @@ object GraphAnalytics {
     * never occur as a `from` state keep v = v₀ (they cannot move). */
   def absorbingReach(trans: DataFrame, fromCol: String, toCol: String,
                      nCol: String, target: String, rounds: Int): DataFrame = {
-    val m = trans.select(col(fromCol).as("s"), col(toCol).as("t"),
-        col(nCol).cast("long").as("n"))
-      .withColumn("tot", sum("n").over(Window.partitionBy("s")))
-    val states = m.select(col("s")).union(m.select(col("t").as("s"))).distinct()
-    var v = states.withColumn("v",
-      when(col("s") === target, lit(1.0)).otherwise(lit(0.0)))
-    for (_ <- 1 to rounds) {
-      val folded = m
-        .join(v.select(col("s").as("t"), col("v")), Seq("t"))
-        .groupBy("s")
-        .agg(sum(((col("n").cast("double") / col("tot")) * col("v"))
-          .cast("decimal(27,15)")).cast("double").as("v_next"))
-      v = states.join(folded, Seq("s"), "left")
-        .withColumn("v", when(col("s") === target, lit(1.0))
-          .otherwise(coalesce(col("v_next"), lit(0.0))))
-        .select("s", "v")
-    }
-    v.select(col("s").as("state"), round(col("v"), 6).as("p_reach"))
+    val m = transitions(trans, fromCol, toCol, nCol)
+    valueIteration(m, states(m), target, rounds, 1.0)(identity)
+      .select(col("s").as("state"), round(col("v"), 6).as("p_reach"))
   }
 
   /** Expected steps to reach `target` from each state under the
@@ -481,11 +493,34 @@ object GraphAnalytics {
     * likely". Same per-round shape: one broadcast-sized join + fold. */
   def absorbingSteps(trans: DataFrame, fromCol: String, toCol: String,
                      nCol: String, target: String, rounds: Int): DataFrame = {
-    val m = trans.select(col(fromCol).as("s"), col(toCol).as("t"),
+    val m = transitions(trans, fromCol, toCol, nCol)
+    valueIteration(m, states(m), target, rounds, 0.0)(lit(1.0) + _)
+      .select(col("s").as("state"), round(col("v"), 6).as("exp_steps"))
+  }
+
+  /** The empirical Markov chain of transition counts: (s, t, n, tot),
+    * tot = Σ n over the row's `from` state. */
+  private def transitions(trans: DataFrame, fromCol: String, toCol: String,
+                          nCol: String): DataFrame =
+    trans.select(col(fromCol).as("s"), col(toCol).as("t"),
         col(nCol).cast("long").as("n"))
       .withColumn("tot", sum("n").over(Window.partitionBy("s")))
-    val states = m.select(col("s")).union(m.select(col("t").as("s"))).distinct()
-    var v = states.withColumn("v", lit(0.0))
+
+  /** Every state of a [[transitions]] chain, as (s). */
+  private def states(m: DataFrame): DataFrame =
+    m.select(col("s")).union(m.select(col("t").as("s"))).distinct()
+
+  /** `rounds` synchronous value-iteration rounds over the chain `m`:
+    * v₀ = `targetV` at `target`, 0 elsewhere; each round
+    * v(s) = `targetV` at `target`, else `next`(Σ_t p(s,t)·v(t)), where
+    * the sum is 0 for a state with no outgoing transition. Each per-edge
+    * term is one double division times v, accumulated in exact decimal,
+    * so every round replays bit-for-bit. Returns (s, v). */
+  private def valueIteration(m: DataFrame, states: DataFrame, target: String,
+                             rounds: Int, targetV: Double)
+                            (next: Column => Column): DataFrame = {
+    var v = states.withColumn("v",
+      when(col("s") === target, lit(targetV)).otherwise(lit(0.0)))
     for (_ <- 1 to rounds) {
       val folded = m
         .join(v.select(col("s").as("t"), col("v")), Seq("t"))
@@ -493,11 +528,11 @@ object GraphAnalytics {
         .agg(sum(((col("n").cast("double") / col("tot")) * col("v"))
           .cast("decimal(27,15)")).cast("double").as("v_next"))
       v = states.join(folded, Seq("s"), "left")
-        .withColumn("v", when(col("s") === target, lit(0.0))
-          .otherwise(lit(1.0) + coalesce(col("v_next"), lit(0.0))))
+        .withColumn("v", when(col("s") === target, lit(targetV))
+          .otherwise(next(coalesce(col("v_next"), lit(0.0)))))
         .select("s", "v")
     }
-    v.select(col("s").as("state"), round(col("v"), 6).as("exp_steps"))
+    v
   }
 
   /** Mutual (reciprocated) edges of a directed graph: (a, b) with a < b
@@ -591,8 +626,9 @@ object GraphAnalytics {
     * correctly-rounded double op — the PageRank discipline, so the
     * oracle replays every intermediate bit-for-bit. Scale shape per
     * round: two equi-join + hash-aggregate passes over the edge set plus
-    * two one-row norm broadcasts — no iteration-growing lineage concern
-    * at 2 rounds (checkpoint like q136 if you raise `iters`).
+    * two one-row norm broadcasts; the raw authority and hub sums are
+    * localCheckpoint'd every round, so lineage stays flat at any
+    * `iters`.
     * Returns (kind 'hub'|'authority', id, score). */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int = 2): DataFrame = {
@@ -656,10 +692,7 @@ object GraphAnalytics {
   def brandesDependency(edges: DataFrame, srcCol: String, dstCol: String,
                         sourceId: Long, maxDepth: Int,
                         topK: Int): DataFrame = sized(edges) {
-    val e0 = edges.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b"))
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    val und = undirected(edges, srcCol, dstCol)
     brandesFrom(und, sourceId, maxDepth)
       .withColumn("_rk", row_number().over(org.apache.spark.sql
         .expressions.Window.orderBy(col("delta").desc, col("node"))))
@@ -679,10 +712,7 @@ object GraphAnalytics {
                          sources: Seq[Long], maxDepth: Int,
                          topK: Int): DataFrame = sized(edges) {
     val d18 = (c: Column) => c.cast("decimal(38,18)")
-    val e0 = edges.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b"))
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    val und = undirected(edges, srcCol, dstCol)
     // ALL pivots ride one columnar pass (src keys every frontier/level
     // frame): 2·maxDepth rounds total instead of 2·maxDepth·|pivots| —
     // the landmark-batching form that makes K=64 pivots at 100 TB cost
@@ -727,12 +757,10 @@ object GraphAnalytics {
     // level's frontier is ALREADY an eagerly-checkpointed frame, so keep
     // the per-level handles: the backward pass reads level h directly
     // instead of filtering a consolidated info frame three times per
-    // level — which also lets `info` go back to the cheap union of
+    // level — which also lets `info` stay the cheap union of
     // checkpointed leaves (read once per round, by the anti-join), the
-    // same read-pattern rule that keeps eccentricity/harmonic's
-    // accumulators uncheckpointed (r11 lesson: checkpoint policy must
-    // follow the READ pattern — info's per-round re-checkpoint existed
-    // only to serve the backward pass's 3 reads per level, all gone now)
+    // same read-pattern rule that keeps [[bfs]]'s visited set
+    // uncheckpointed: checkpoint policy follows the READ pattern
     val level0 = und.select(col("a").as("node")).distinct()
       .join(sources.toDF("src"), col("node") === col("src"))
       .select(col("src"), col("node"), lit(0).as("dist"),
@@ -806,10 +834,7 @@ object GraphAnalytics {
     val p = 2147483647L
     val b1 = graft.plans.HashExpressions.PolyBase1
     sized(edges) {
-    val e0 = edges.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b"))
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+    val und = undirected(edges, srcCol, dstCol)
     var colors = und.groupBy(col("a").as("id"))
       .agg(count(lit(1)).as("color")).localCheckpoint()
     def summary(r: Int, c: DataFrame): DataFrame =
@@ -845,52 +870,30 @@ object GraphAnalytics {
     * graph whose diameter might exceed the horizon). Returns one row
     * per sweep: source, farthest, ecc, n_reached.
     *
-    * Scale shape: frontier-expansion BFS — per hop one join of the
-    * (shrinking) frontier against the edge list plus an anti-join on
-    * the visited set, each localCheckpoint'd (the Pregel lineage
-    * discipline); nothing exponential (the oracle's bounded-walk
-    * UNION recursion dedups (node, depth) pairs, so it is n·maxHops
-    * rows, and min-depth == BFS distance). */
+    * Scale shape: two frontier-expansion [[bfs]] runs; nothing
+    * exponential (the oracle's bounded-walk UNION recursion dedups
+    * (node, depth) pairs, so it is n·maxHops rows, and min-depth == BFS
+    * distance). */
   def eccentricitySweep(edges: DataFrame, srcCol: String, dstCol: String,
                         startId: Long, maxHops: Int): DataFrame = sized(edges) {
-    val e0 = edges.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b"))
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
-    def bfs(seed: DataFrame): DataFrame = { // seed: (node LONG)
-      var dist = seed.select(col("node"), lit(0).as("d")).localCheckpoint()
-      var frontier = dist
-      for (h <- 1 to maxHops) {
-        frontier = frontier.join(und, frontier("node") === und("a"))
-          .select(col("b").as("node")).distinct()
-          .join(dist.select("node"), Seq("node"), "left_anti")
-          .withColumn("d", lit(h))
-          .localCheckpoint()
-        // frontier leaves are checkpointed — the accumulated union needs
-        // no second eager materialization per round (r11 job diet)
-        dist = dist.union(frontier)
-      }
-      dist
-    }
+    val und = undirected(edges, srcCol, dstCol)
+    // `source` is evaluated inside the aggregate: sweep 1 names startId
+    // even when it is not in the graph; sweep 2's source is its seed,
+    // the one d = 0 row, so sweep 1's farthest is never collected or
+    // broadcast
     def summarize(dist: DataFrame, sweep: Int, source: Column): DataFrame =
       dist.agg(count(lit(1)).as("n_reached"), max("d").as("ecc"),
-        max(struct(col("d").as("d"), (-col("node")).as("nn"))).as("_f"))
-        .select(lit(sweep).as("sweep"), source.as("source"),
+        max(struct(col("d").as("d"), (-col("node")).as("nn"))).as("_f"),
+        source.as("source"))
+        .select(lit(sweep).as("sweep"), col("source"),
           (-col("_f").getField("nn")).as("farthest"), col("ecc"),
           col("n_reached"))
-    val d1 = bfs(und.select(col("a").as("node"))
-      .filter(col("node") === startId).distinct())
+    val d1 = bfs(und, und.select(col("a").as("node"))
+      .filter(col("node") === startId).distinct(), maxHops)
     val s1 = summarize(d1, 1, lit(startId)).localCheckpoint()
-    val d2 = bfs(s1.select(col("farthest").as("node")))
-    // sweep 2's source is sweep 1's farthest — carried via crossJoin,
-    // not a driver collect
-    val s2c = d2.agg(count(lit(1)).as("n_reached"), max("d").as("ecc"),
-        max(struct(col("d").as("d"), (-col("node")).as("nn"))).as("_f"))
-      .crossJoin(broadcast(s1.select(col("farthest").as("_src"))))
-      .select(lit(2).as("sweep"), col("_src").as("source"),
-        (-col("_f").getField("nn")).as("farthest"), col("ecc"),
-        col("n_reached"))
-    s1.unionByName(s2c).orderBy("sweep")
+    val d2 = bfs(und, s1.select(col("farthest").as("node")), maxHops)
+    s1.unionByName(summarize(d2, 2, max(when(col("d") === 0, col("node")))))
+      .orderBy("sweep")
   }
 
   /** Markov-chain removal-effect attribution (Anderl et al. 2016 — the
@@ -919,30 +922,13 @@ object GraphAnalytics {
     // probability n/tot — the lost mass is exactly the point (a
     // renormalized chain would route journeys around the channel for
     // free and report near-zero effects). Hence tot is frozen on the
-    // UNFILTERED chain and the iteration is inlined rather than
-    // delegated to absorbingReach (which re-derives tot).
-    val m0 = trans.select(col(fromCol).as("s"), col(toCol).as("t"),
-        col(nCol).cast("long").as("n"))
-      .withColumn("tot", sum("n").over(Window.partitionBy("s")))
-      .localCheckpoint()
-    val states = m0.select(col("s")).union(m0.select(col("t").as("s")))
-      .distinct().localCheckpoint()
-    def reach(m: DataFrame): DataFrame = {
-      var v = states.withColumn("v",
-        when(col("s") === target, lit(1.0)).otherwise(lit(0.0)))
-      for (_ <- 1 to rounds) {
-        val folded = m
-          .join(v.select(col("s").as("t"), col("v")), Seq("t"))
-          .groupBy("s")
-          .agg(sum(((col("n").cast("double") / col("tot")) * col("v"))
-            .cast("decimal(27,15)")).cast("double").as("v_next"))
-        v = states.join(folded, Seq("s"), "left")
-          .withColumn("v", when(col("s") === target, lit(1.0))
-            .otherwise(coalesce(col("v_next"), lit(0.0))))
-          .select("s", "v")
-      }
-      v.select(col("s").as("state"), round(col("v"), 6).as("p_reach"))
-    }
+    // UNFILTERED chain: each channel filters m0 after `transitions`
+    // computed it, and every chain iterates over the full state set.
+    val m0 = transitions(trans, fromCol, toCol, nCol).localCheckpoint()
+    val st = states(m0).localCheckpoint()
+    def reach(m: DataFrame): DataFrame =
+      valueIteration(m, st, target, rounds, 1.0)(identity)
+        .select(col("s").as("state"), round(col("v"), 6).as("p_reach"))
     def conv(m: DataFrame): DataFrame =
       firsts.select(col(firstTypeCol).as("ftype"),
           col(firstNCol).cast("long").as("fn"))
@@ -1010,37 +996,20 @@ object GraphAnalytics {
     * Faust form). The honest per-node centrality at scale: all-pairs is
     * off the table at 100 TB, but a handful of exact pivot rows (hubs,
     * suspected outliers, random probes) reads connectivity the degree
-    * distribution can't. Same frontier-expansion/localCheckpoint
-    * discipline as [[eccentricitySweep]]; cost is |pivots| BFS runs,
-    * each ≤ maxHops joins of a shrinking frontier. */
+    * distribution can't. One source-keyed [[bfs]] carries every pivot:
+    * ≤ maxHops joins of a shrinking frontier in all. */
   def harmonicCentrality(edges: DataFrame, srcCol: String, dstCol: String,
                          seeds: Seq[Long], maxHops: Int): DataFrame = sized(edges) {
     val d18 = (c: Column) => c.cast("decimal(38,18)")
-    val e0 = edges.select(col(srcCol).cast("long").as("a"),
-      col(dstCol).cast("long").as("b"))
-    val und = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
-    // all seeds ride one src-keyed BFS (the q428 landmark-batching
-    // form): maxHops rounds total instead of maxHops·|seeds|, with each
-    // (src, node) stream identical to the per-seed pass
+    val und = undirected(edges, srcCol, dstCol)
+    // all seeds ride one source-keyed BFS (the q428 landmark-batching
+    // form): maxHops rounds total instead of maxHops·|seeds|
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = und.select(col("a").as("node")).distinct()
-      .join(seeds.toDF("source"), col("node") === col("source"))
-      .select(col("source"), col("node"), lit(0).as("d"))
-      .localCheckpoint()
-    var frontier = dist
-    for (h <- 1 to maxHops) {
-      frontier = frontier.join(und, frontier("node") === und("a"))
-        .select(col("source"), col("b").as("node")).distinct()
-        .join(dist.select("source", "node"), Seq("source", "node"),
-          "left_anti")
-        .withColumn("d", lit(h))
-        .localCheckpoint()
-      // checkpointed leaves; union re-materialization dropped (r11)
-      dist = dist.union(frontier)
-    }
-    dist.filter(col("d") > 0)
+    bfs(und, und.select(col("a").as("node")).distinct()
+        .join(seeds.toDF("source"), col("node") === col("source"))
+        .select(col("source"), col("node")), maxHops)
+      .filter(col("d") > 0)
       .groupBy("source")
       .agg(count(lit(1)).as("n_reached"), max("d").as("ecc"),
         sum(col("d").cast("long")).as("sum_d"),
@@ -1124,6 +1093,39 @@ object GraphAnalytics {
   private def checkpointDropStats(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint()
     ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+  }
+
+  /** Semi-naive closure to fixpoint from `seed`: each step `expand`s the
+    * last delta, anti-joins it against everything reached on `keys` and
+    * checkpoints it with stats dropped; an empty delta is the fixpoint.
+    * A closure still moving after `maxSteps` steps RAISES (`what` names
+    * it) — never a silently truncated reach. Returns (reached, steps).
+    *
+    * `reached` stays a UNION TREE of checkpointed deltas, never
+    * re-materialized per step (that would rewrite O(reached) rows every
+    * step): plan width grows one LogicalRDD per step, bounded by
+    * `maxSteps`, and the default-constant leaf stats SUM across a union
+    * (the squaring hazard needs self-composition). Measured, do not
+    * redo: folding the fixpoint probe into a manual Row-rdd
+    * persist+count saved one tiny job per step but paid Row↔InternalRow
+    * conversion on every later step's scan of the delta blocks — net
+    * SLOWER than localCheckpoint + isEmpty. */
+  private def closure(seed: DataFrame, keys: Seq[String], maxSteps: Int,
+                      what: String)
+                     (expand: DataFrame => DataFrame): (DataFrame, Int) = {
+    var reached = seed
+    var frontier = seed
+    var settled = false
+    var steps = 0
+    while (!settled && steps < maxSteps) {
+      steps += 1
+      val delta = expand(frontier).join(reached, keys, "left_anti")
+        .transform(checkpointDropStats)
+      if (delta.isEmpty) settled = true
+      else { reached = reached.unionByName(delta); frontier = delta }
+    }
+    require(settled, s"$what not settled within $maxSteps steps")
+    (reached, steps)
   }
 
   /** Borůvka minimum spanning tree — the MST algorithm that is actually
@@ -1338,39 +1340,13 @@ object GraphAnalytics {
     // multiplies in/out degrees of every mid node — ~10⁸ intermediate
     // rows per round against the frontier form's |frontier|·outdeg.
     // Fewer barriers only wins when the per-round work stays bounded.
-    var reach = e
-    var frontier = e
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIters) {
-      val step = frontier.select(col("src"), col("dst").as("mid"))
+    val (reach, _) = closure(e, Seq("src", "dst"), maxIters,
+        "sccLabels: closure") { frontier =>
+      frontier.select(col("src"), col("dst").as("mid"))
         .join(e.select(col("src").as("mid"), col("dst")), Seq("mid"))
         .select("src", "dst").filter(col("src") =!= col("dst"))
         .distinct()
-      // (measured do-not-redo: folding the fixpoint probe into a manual
-      // Row-rdd persist+count saved one tiny job per round but paid
-      // Row↔InternalRow conversion on every later round's scan of the
-      // delta blocks — net SLOWER than localCheckpoint + isEmpty)
-      val delta = step.join(reach, Seq("src", "dst"), "left_anti")
-        .transform(checkpointDropStats)
-      if (delta.isEmpty) converged = true
-      else {
-        // reach stays a UNION TREE of checkpointed deltas — never
-        // re-materialized per round: the old per-round checkpoint of
-        // the whole closure rewrote O(reach) rows every iteration
-        // (O(rounds·reach) total), while the union's cached delta
-        // blocks are the same bytes read either way. Plan width grows
-        // one LogicalRDD per round, bounded by maxIters; stats are
-        // default-constant leaves that SUM across a union (the
-        // squaring hazard needs self-composition, which only the final
-        // mutual join does — once)
-        reach = reach.unionByName(delta)
-        frontier = delta
-      }
-      it += 1
     }
-    require(converged,
-      s"sccLabels: closure did not converge within $maxIters iterations")
     val mutual = reach.as("a")
       .join(reach.select(col("src").as("dst"), col("dst").as("src")),
         Seq("src", "dst"))
@@ -1528,32 +1504,20 @@ object GraphAnalytics {
         // BFS closure from every pivot at once, restricted to each
         // pivot's own partition; one frontier⋈static-edges join +
         // one membership semi-join + one anti-join per step
-        def bfs(dir: DataFrame): DataFrame = {
-          var reached = piv.select(col("pivot").as("node"), col("part"))
-            .transform(checkpointDropStats)
-          var frontier = reached
-          var moving = true
-          var d = 0
-          while (moving && d < maxDepth) {
-            d += 1
-            bfsSteps += 1
-            val step = frontier
-              .join(dir.select(col("src").as("node"), col("dst")),
-                Seq("node"))
+        def fromPivots(dir: DataFrame): DataFrame = {
+          val (reached, steps) = closure(
+              piv.select(col("pivot").as("node"), col("part"))
+                .transform(checkpointDropStats),
+              Seq("node", "part"), maxDepth, "sccLabelsFwBw: BFS") {
+            _.join(dir.select(col("src").as("node"), col("dst")), Seq("node"))
               .select(col("dst").as("node"), col("part")).distinct()
               .join(parts, Seq("node", "part"), "left_semi")
-            val delta = step.join(reached, Seq("node", "part"), "left_anti")
-              .transform(checkpointDropStats)
-            if (delta.isEmpty) moving = false
-            else { reached = reached.unionByName(delta); frontier = delta }
           }
-          require(!moving,
-            s"sccLabelsFwBw: BFS not settled in $maxDepth steps")
-          reached
+          bfsSteps += steps
+          reached.transform(checkpointDropStats)
         }
-        val fw = bfs(e).transform(checkpointDropStats)
-        val bw = bfs(e.select(col("dst").as("src"), col("src").as("dst")))
-          .transform(checkpointDropStats)
+        val fw = fromPivots(e)
+        val bw = fromPivots(e.select(col("dst").as("src"), col("src").as("dst")))
         val scc = fw.join(bw, Seq("node", "part"), "left_semi")
           .transform(checkpointDropStats)
         append(scc.join(piv, Seq("part"))
@@ -1961,11 +1925,7 @@ object GraphAnalytics {
              k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1, "need k >= 3 and rounds >= 1")
     sized(edges) {
-    var und = edges.select(
-        least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
-        greatest(col(srcCol).cast("long"), col(dstCol).cast("long"))
-          .as("b"))
-      .filter(col("a") =!= col("b")).distinct().transform(checkpointDropStats)
+    var und = canonical(edges, srcCol, dstCol).transform(checkpointDropStats)
     var out: DataFrame = null
     (1 to rounds).foreach { r =>
       // oriented triangles a<b<c, each counted once

@@ -753,21 +753,24 @@ private[graft] object Queries273to319 extends QueryModule {
       // ONE pass per CHILD table (r12, the mid-band fold): each FK edge
       // was an anti-join count + a separate row count = 2 aggregates and
       // a child re-scan per edge (12 aggregates, lineitem scanned 6×).
-      // Parent keys are primary keys (unique by construction), so
-      // left-join + count-nulls produces the IDENTICAL orphan count as
-      // the anti-join; lineitem's 3 edges now ride one scan and one
-      // aggregate, and every edge's n_rows folds into the same pass.
+      // Left-join + count-nulls counts each child row once (and equals
+      // the anti-join's orphan count) only if every parent key occurs
+      // once, so the parent key projections are de-duplicated. lineitem's
+      // 3 edges ride one scan and one aggregate, and every edge's n_rows
+      // folds into the same pass.
       val li = tbl(s, dir, "lineitem"); val o = tbl(s, dir, "orders")
       val c = tbl(s, dir, "customer"); val su = tbl(s, dir, "supplier")
       val p = tbl(s, dir, "part"); val na = tbl(s, dir, "nation")
       def orph(pk: String) =
         sum(when(col(pk).isNull, 1L).otherwise(0L)).cast("long")
+      def keys(parent: DataFrame, pk: String) =
+        parent.select(col(pk)).distinct()
       val liRows = li.select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"))
-        .join(o.select(col("o_orderkey")),
+        .join(keys(o, "o_orderkey"),
           col("l_orderkey") === col("o_orderkey"), "left")
-        .join(p.select(col("p_partkey")),
+        .join(keys(p, "p_partkey"),
           col("l_partkey") === col("p_partkey"), "left")
-        .join(su.select(col("s_suppkey")),
+        .join(keys(su, "s_suppkey"),
           col("l_suppkey") === col("s_suppkey"), "left")
         .agg(count(lit(1)).as("n_rows"), orph("o_orderkey").as("_o"),
           orph("p_partkey").as("_p"), orph("s_suppkey").as("_s"))
@@ -778,7 +781,7 @@ private[graft] object Queries273to319 extends QueryModule {
       def edge1(name: String, child: DataFrame, ck: String,
                 parent: DataFrame, pk: String) =
         child.select(col(ck))
-          .join(parent.select(col(pk)), col(ck) === col(pk), "left")
+          .join(keys(parent, pk), col(ck) === col(pk), "left")
           .agg(count(lit(1)).as("n_rows"), orph(pk).as("n_orphans"))
           .select(lit(name).as("fk_edge"), col("n_rows"), col("n_orphans"))
       liRows.unionByName(

@@ -191,7 +191,17 @@ class GraphAnalyticsSpec extends SparkSpec {
     // v4: a = .5·.625 + .5·.375 = .5, b = .5 + .5·.375 = .6875
     assert(out("purchase") == 1.0)
     assert(out("a") == 0.5 && out("b") == 0.6875)
+    // x is a dead end (no out-transition), the c ↔ d loop never reaches
+    // the target: both stay at 0; a splits evenly between b and x
+    val dead = GraphAnalytics.absorbingReach(deadEndChain, "f", "t", "n",
+        "done", 4)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(dead == Map("a" -> 0.5, "b" -> 1.0, "x" -> 0.0, "c" -> 0.0,
+      "d" -> 0.0, "done" -> 1.0))
   }
+
+  private def deadEndChain = Seq(("a", "b", 1L), ("a", "x", 1L),
+    ("b", "done", 1L), ("c", "d", 1L), ("d", "c", 1L)).toDF("f", "t", "n")
 
   test("mutualEdges: only reciprocated pairs survive, canonical order") {
     import spark.implicits._
@@ -237,6 +247,13 @@ class GraphAnalyticsSpec extends SparkSpec {
     val out = GraphAnalytics.absorbingSteps(trans, "f", "t", "n", "done", 4)
       .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
     assert(out == Map("a" -> 2.0, "b" -> 1.0, "done" -> 0.0))
+    // the dead end x costs its one step and stops; the c ↔ d loop never
+    // reaches the target and reports the capped partial sum (= rounds)
+    val dead = GraphAnalytics.absorbingSteps(deadEndChain, "f", "t", "n",
+        "done", 4)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(dead == Map("a" -> 2.0, "b" -> 1.0, "x" -> 1.0, "c" -> 4.0,
+      "d" -> 4.0, "done" -> 0.0))
   }
 
   test("hits: star graph — the shared authority dominates, hubs tie") {
@@ -385,6 +402,27 @@ class GraphAnalyticsSpec extends SparkSpec {
       capped.getAs[Double]("harmonic") == 1.0)
   }
 
+  test("harmonicCentrality with one seed matches eccentricitySweep sweep 1: " +
+      "path, ring with a pendant") {
+    // both run the same BFS; harmonic counts reached nodes other than the
+    // seed, eccentricity counts the seed too
+    val path = (0L to 4L).map(i => (i, i + 1)).toDF("s", "d")
+    val ring = ((0L to 5L).map(i => (i, (i + 1) % 6)) :+ ((3L, 6L)))
+      .toDF("s", "d")
+    for ((edges, seeds) <- Seq(path -> Seq(0L, 2L), ring -> Seq(0L, 3L, 6L));
+         seed <- seeds) {
+      val h = GraphAnalytics.harmonicCentrality(edges, "s", "d", Seq(seed),
+        maxHops = 8).head()
+      val e = GraphAnalytics.eccentricitySweep(edges, "s", "d", seed, 8)
+        .filter(col("sweep") === 1).head()
+      assert(h.getAs[Int]("ecc") == e.getAs[Int]("ecc"))
+      assert(h.getAs[Long]("n_reached") + 1 == e.getAs[Long]("n_reached"))
+    }
+    // ring with pendant from 0: 1,5 at 1; 2,4 at 2; 3 at 3; 6 at 4
+    assert(GraphAnalytics.eccentricitySweep(ring, "s", "d", 0L, 8)
+      .filter(col("sweep") === 1).head().getAs[Int]("ecc") == 4)
+  }
+
   test("bellmanFord: weighted paths beat hop-shortest; rounds bound hops") {
     // 0→1 costs 5 direct but 2 via 0→2→1; 3 is cheapest via 3 hops
     val e = Seq((0L, 1L, 5L), (0L, 2L, 1L), (2L, 1L, 1L), (1L, 3L, 1L),
@@ -459,6 +497,13 @@ class GraphAnalyticsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       GraphAnalytics.sccLabels(chain, "src", "dst", maxIters = 2).collect()
     }
+    // a 3-cycle's closure needs a second (empty) step to settle
+    val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    intercept[IllegalArgumentException] {
+      GraphAnalytics.sccLabels(cycle, "src", "dst", maxIters = 1).collect()
+    }
+    assert(GraphAnalytics.sccLabels(cycle, "src", "dst", maxIters = 2)
+      .collect().map(_.getAs[Long]("scc")).toSet == Set(1L))
   }
 
   test("sccLabelsFwBw: equals sccLabels — hand graph, pseudo-random graph, " +
@@ -492,6 +537,24 @@ class GraphAnalyticsSpec extends SparkSpec {
       GraphAnalytics.sccLabelsFwBw(chain, "src", "dst", maxDepth = 2)
         .collect()
     }
+    val path = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
+    intercept[IllegalArgumentException] {
+      GraphAnalytics.sccLabelsFwBw(path, "src", "dst", maxDepth = 1)
+        .collect()
+    }
+    // a 3-cycle trims nothing; each BFS from pivot 1 takes 2 steps to
+    // reach the other two nodes and a third (empty) one to settle
+    val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    intercept[IllegalArgumentException] {
+      GraphAnalytics.sccLabelsFwBw(cycle, "src", "dst", maxDepth = 1)
+        .collect()
+    }
+    val cycleStats = new GraphAnalytics.FwBwStats
+    assert(toMapOf(GraphAnalytics.sccLabelsFwBw(cycle, "src", "dst",
+      maxDepth = 3, stats = Some(cycleStats))) ==
+      Map(1L -> (1L, 3L), 2L -> (1L, 3L), 3L -> (1L, 3L)))
+    assert(cycleStats.lastRounds.get() == 1)
+    assert(cycleStats.lastBfsSteps.get() == 6) // forward 3 + backward 3
   }
 
   test("incrementalScc: merged ≡ rebuilt — SCC merge, new-node merge, " +

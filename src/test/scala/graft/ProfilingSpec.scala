@@ -48,6 +48,30 @@ class ProfilingSpec extends SparkSpec {
     assert(n === 2L) // 9 and 8; the NULL fk is not a violation
   }
 
+  test("q304 fk integrity map: a duplicated parent key inflates no count") {
+    // orders carries key 1 twice; lineitem has 3 rows, one (key 9) an
+    // orphan of orders. Each edge must report its child's row count and
+    // its true orphans, as the oracle's count(*) / anti-join does.
+    val dir = java.nio.file.Files.createTempDirectory("graft-q304").toString
+    def write(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.parquet(s"$dir/$name.parquet")
+    write("lineitem", Seq((1L, 1L, 1L), (2L, 1L, 1L), (9L, 1L, 1L))
+      .toDF("l_orderkey", "l_partkey", "l_suppkey"))
+    write("orders", Seq((1L, 1L), (1L, 1L), (2L, 1L))
+      .toDF("o_orderkey", "o_custkey"))
+    write("customer", Seq((1L, 0L)).toDF("c_custkey", "c_nationkey"))
+    write("supplier", Seq((1L, 0L)).toDF("s_suppkey", "s_nationkey"))
+    write("part", Seq(1L).toDF("p_partkey"))
+    write("nation", Seq(0L).toDF("n_nationkey"))
+    val out = SparkEntry.queries("q304_fk_integrity_map")(spark, dir)
+      .collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2))))
+      .toMap
+    assert(out == Map(
+      "lineitem->orders" -> ((3L, 1L)), "lineitem->part" -> ((3L, 0L)),
+      "lineitem->supplier" -> ((3L, 0L)), "orders->customer" -> ((3L, 0L)),
+      "customer->nation" -> ((1L, 0L)), "supplier->nation" -> ((1L, 0L))))
+  }
+
   test("auditReport: one row per check, passed ⇔ zero violations") {
     val rpt = Profiling.auditReport(Seq(
       "dups" -> Profiling.duplicateKeys(df, Seq("id"))

@@ -155,4 +155,20 @@ class RegistrySpec extends AnyFunSuite {
     assert(movers.filterNot(_.startsWith("StoreFiles.scala:")) ==
       Seq("VectorStore.scala:updateCatalog"), movers)
   }
+
+  // --- one traversal core for GraphAnalytics ----------------------------
+  //
+  // The edge symmetrization, the PageRank round and the value-iteration
+  // fold were each written out by hand in several operators. Each now
+  // lives in one private helper; a second copy shows up here.
+
+  test("GraphAnalytics writes each traversal idiom once") {
+    val text = mainSources.collectFirst {
+      case ("GraphAnalytics.scala", t) => t }.get
+    for (idiom <- Seq("""e0.union(e0.select(col("b").as("a")""",
+        "\"pr div deg\"", "decimal(27,15)"))
+      assert(java.util.regex.Pattern.quote(idiom).r
+        .findAllMatchIn(text).size == 1,
+        s"$idiom should appear exactly once in GraphAnalytics.scala")
+  }
 }
