@@ -6,8 +6,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *
   *   - `time`: runs each query `reps` times (default 3) through
   *     [[Measure.run]] and prints first and min seconds, the layers of the
-  *     fastest run (build, analysis, optimization+planning, jobs, stages,
-  *     tasks, task-seconds) and every run's seconds;
+  *     fastest run (build, analysis, optimization+planning, task-seconds),
+  *     jobs, stages and tasks as `min-max` over the runs when they differ,
+  *     and every run's seconds;
   *   - `plan`: prints the formatted plan Bench would time, unexecuted;
   *   - `final`: runs the query (`reps` times, default 1) and prints the
   *     executed plan of that same QueryExecution (the final AQE plan).
@@ -31,8 +32,8 @@ object Probe {
     Session.warm(spark, sfDir)
     if (mode == "time")
       println(f"${"query"}%-30s ${"first"}%7s ${"min"}%7s ${"build"}%7s " +
-        f"${"analyze"}%7s ${"plan"}%7s ${"jobs"}%5s ${"stages"}%6s " +
-        f"${"tasks"}%6s ${"task_s"}%8s  runs")
+        f"${"analyze"}%7s ${"plan"}%7s ${"jobs"}%7s ${"stages"}%7s " +
+        f"${"tasks"}%7s ${"task_s"}%8s  runs")
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       if (mode == "plan") {
@@ -46,10 +47,14 @@ object Probe {
         val best = runs.minBy(_.seconds)
         runs.flatMap(_.failure).headOption.foreach(t =>
           System.err.println(s"probe: $name FAILED: $t"))
+        def spread(count: Measurement => Long): String = {
+          val (lo, hi) = (runs.map(count).min, runs.map(count).max)
+          if (lo == hi) s"$lo" else s"$lo-$hi"
+        }
         if (mode == "time")
           println(f"$name%-30s ${runs.head.seconds}%7.3f ${best.seconds}%7.3f " +
             f"${best.buildS}%7.3f ${best.analysisS}%7.3f ${best.planS}%7.3f " +
-            f"${best.jobs}%5d ${best.stages}%6d ${best.tasks}%6d " +
+            f"${spread(_.jobs)}%7s ${spread(_.stages)}%7s ${spread(_.tasks)}%7s " +
             f"${best.taskS}%8.3f  " + runs.map(r => f"${r.seconds}%.3f").mkString(" "))
         else {
           println(f"\n========== $name (final plan, ${runs.last.seconds}%.3f s) ==========")

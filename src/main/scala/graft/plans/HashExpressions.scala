@@ -421,18 +421,21 @@ object HashExpressions {
     * `bands` equal slices and each slice folds with the same polynomial
     * the SQL form used — acc·1000003 + v mod 2³¹−1 — so the band keys
     * are bit-identical to
-    * `aggregate(slice(sig, b·rows+1, rows), 0L, (acc, v) -> …)`. */
+    * `aggregate(slice(sig, b·rows+1, rows), 0L, (acc, v) -> …)`; a null
+    * element nulls its band, as it nulls that fold. */
   def bandHashesEval(sig: ArrayData, bands: Int): ArrayData = {
     val n = sig.numElements()
     val rows = n / bands
-    val out = new Array[Long](bands)
+    val out = new Array[Any](bands)
     var b = 0
     while (b < bands) {
       var acc = 0L
       var i = b * rows
       val end = i + rows
-      while (i < end) { acc = (acc * 1000003L + sig.getLong(i)) % 2147483647L; i += 1 }
-      out(b) = acc
+      while (i < end && !sig.isNullAt(i)) {
+        acc = (acc * 1000003L + sig.getLong(i)) % 2147483647L; i += 1
+      }
+      out(b) = if (i < end) null else acc
       b += 1
     }
     new GenericArrayData(out)
@@ -441,12 +444,16 @@ object HashExpressions {
   /** Positions where two equal-length ARRAY<BIGINT> signatures agree —
     * native twin of `size(filter(zip_with(a, b, (p, q) -> p = q), v -> v))`
     * (unequal lengths: the zip_with tail compares against null, which the
-    * filter drops — identical to stopping at the shorter length). */
+    * filter drops — identical to stopping at the shorter length; a null
+    * element compares to null and is dropped the same way). */
   def sigAgreeEval(a: ArrayData, b: ArrayData): Int = {
     val n = math.min(a.numElements(), b.numElements())
     var c = 0
     var i = 0
-    while (i < n) { if (a.getLong(i) == b.getLong(i)) c += 1; i += 1 }
+    while (i < n) {
+      if (!a.isNullAt(i) && !b.isNullAt(i) && a.getLong(i) == b.getLong(i)) c += 1
+      i += 1
+    }
     c
   }
 
@@ -459,14 +466,20 @@ object HashExpressions {
     * adjusts to DECIMAL(38,17) — so every intermediate sum rounds
     * HALF_UP to 17 fraction digits before the lambda's CAST back to
     * (38,18). Bit-identical to the `aggregate(zip_with(...))` fold it
-    * replaces (spec-pinned, including that per-step rounding). */
+    * replaces (spec-pinned, including that per-step rounding), nulls
+    * too: a null element nulls the fold, and so does an empty history
+    * (`sequence(1, 0)` is [1, 0], so the fold adds two null terms), and
+    * so does a NaN or infinite element (its CAST to decimal is null). */
   def ewmaWsumEval(hist: ArrayData): Decimal = {
     val L = hist.numElements()
+    if (L == 0) return null
     var acc = java.math.BigDecimal.ZERO
     var i = 1
     while (i <= L) {
-      val term = java.math.BigDecimal
-        .valueOf(hist.getDouble(i - 1) / (1L << (L - i + 1)).toDouble)
+      if (hist.isNullAt(i - 1)) return null
+      val v = hist.getDouble(i - 1) / (1L << (L - i + 1)).toDouble
+      if (!java.lang.Double.isFinite(v)) return null
+      val term = java.math.BigDecimal.valueOf(v)
         .setScale(18, java.math.RoundingMode.HALF_UP)
       acc = acc.add(term)
         .setScale(17, java.math.RoundingMode.HALF_UP)
@@ -664,10 +677,12 @@ object HashExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  /** EWMA decimal weighted sum (see [[ewmaWsumEval]]). */
+  /** EWMA decimal weighted sum (see [[ewmaWsumEval]]); null for an
+    * empty history or a null, NaN or infinite element. */
   case class EwmaWsumExpr(child: Expression) extends UnaryExpression {
     override def prettyName: String = "graft_ewma_wsum"
     override def dataType: DataType = DecimalType(38, 18)
+    override def nullable: Boolean = true
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
       case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
       case t => TypeCheckResult.TypeCheckFailure(s"expected ARRAY<DOUBLE>, got ${t.simpleString}")
@@ -675,7 +690,8 @@ object HashExpressions {
     override protected def nullSafeEval(input: Any): Any =
       ewmaWsumEval(input.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, c => s"${ev.value} = $helper.ewmaWsumEval($c);")
+      nullSafeCodeGen(ctx, ev, c =>
+        s"${ev.value} = $helper.ewmaWsumEval($c); ${ev.isNull} = ${ev.value} == null;")
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
@@ -683,7 +699,10 @@ object HashExpressions {
   case class BandHashesExpr(child: Expression, bands: Int) extends UnaryExpression {
     require(bands >= 1, "graft_band_hashes: need bands >= 1")
     override def prettyName: String = "graft_band_hashes"
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def dataType: DataType = ArrayType(LongType, child.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => true
+    })
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
       case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
       case t => TypeCheckResult.TypeCheckFailure(s"expected ARRAY<BIGINT>, got ${t.simpleString}")

@@ -379,8 +379,7 @@ private[graft] object Queries001to090 extends QueryModule {
     // ---- IVF-style ANN assignment (scale path for similarity search) ----
     "q35_ivf_assign" -> ((s, dir) => {
       val e = tbl(s, dir, "embeddings")
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       Similarity.assignNearestCentroid(e, "embedding", "vec_id", centroids, "cid", "cv")
         .select(col("vec_id"), col("centroid_id"),
           round(col("centroid_dist"), 6).as("centroid_dist"))
@@ -454,8 +453,7 @@ private[graft] object Queries001to090 extends QueryModule {
     // ---- File-corpus ingest (S1-S6; rows-only — reads a generated corpus)
     "q41_file_ingest" -> ((s, dir) => {
       import java.nio.file.{Files, Paths}
-      val corpusDir = Files.createDirectories(
-        Paths.get(sys.props("java.io.tmpdir"), s"graft-ingest-corpus-$tmpToken")).toString
+      val corpusDir = Files.createDirectories(Paths.get(scratch("ingest-corpus"))).toString
       val docs = tbl(s, dir, "documents").filter(col("doc_id") < 20)
         .select("doc_id", "text").collect()
       docs.foreach { r =>

@@ -177,8 +177,7 @@ private[graft] object Queries091to155 extends QueryModule {
       // each cell — the self-join shuffles only on centroid_id (free when
       // the corpus is stored partitionBy(centroid_id))
       val e = tbl(s, dir, "embeddings")
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       val assigned = Similarity.assignNearestCentroid(e, "embedding", "vec_id",
           centroids, "cid", "cv")
         .select(col("vec_id"), col("embedding"), col("centroid_id"))
@@ -227,7 +226,7 @@ private[graft] object Queries091to155 extends QueryModule {
       // a partition-pruned scan of |terms| bucket directories, not the
       // full index (IndexStoreSpec pins the PartitionFilters)
       val idx = Retrieval.invertedIndex(tbl(s, dir, "documents"), "doc_id", "text")
-      val root = sys.props("java.io.tmpdir") + s"/graft-index-store-$tmpToken"
+      val root = scratch("index-store")
       store.IndexStore.write(idx, root, nBuckets = 8)
       store.IndexStore.lookup(s, root, Seq("spark", "join", "vector"), 8)
         .select(col("term"), col("df"), col("cf"),
@@ -263,7 +262,7 @@ private[graft] object Queries091to155 extends QueryModule {
       // side never shuffles. Arithmetic-identical to q98 (same oracle)
       val d = tbl(s, dir, "documents")
       val idx = Retrieval.invertedIndex(d, "doc_id", "text")
-      val root = sys.props("java.io.tmpdir") + s"/graft-index-store-bm25-$tmpToken"
+      val root = scratch("index-store-bm25")
       store.IndexStore.write(idx, root, nBuckets = 8)
       val dl = d.select(col("doc_id").cast("long").as("id"),
         size(Retrieval.analyze(col("text"))).cast("long").as("dl"))
@@ -475,8 +474,7 @@ private[graft] object Queries091to155 extends QueryModule {
       // recall@3 gate shows base vs refined side by side — refined can
       // only match or beat base (superset re-rank)
       val e = tbl(s, dir, "embeddings")
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       val assigned = Similarity.assignNearestCentroid(e, "embedding", "vec_id",
           centroids, "cid", "cv")
         .select(col("vec_id"), col("embedding"), col("centroid_id"))
@@ -520,12 +518,11 @@ private[graft] object Queries091to155 extends QueryModule {
       // PartitionFilters (IndexStoreSpec's ANN twin pins it), not a
       // post-scan filter
       val e = tbl(s, dir, "embeddings")
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       val assigned = Similarity.assignNearestCentroid(e, "embedding", "vec_id",
           centroids, "cid", "cv")
         .select(col("vec_id"), col("embedding"), col("centroid_id"))
-      val root = sys.props("java.io.tmpdir") + s"/graft-ann-store-$tmpToken"
+      val root = scratch("ann-store")
       store.AnnStore.write(assigned, root)
       val cents = centroids.collect()
         .map(r => (r.getInt(0), r.getSeq[Float](1))).toSeq
@@ -543,7 +540,7 @@ private[graft] object Queries091to155 extends QueryModule {
       // indistinguishable from a full rebuild (the oracle computes over
       // ALL documents)
       val d = tbl(s, dir, "documents")
-      val root = sys.props("java.io.tmpdir") + s"/graft-index-merge-$tmpToken"
+      val root = scratch("index-merge")
       val base = Retrieval.invertedIndex(
         d.filter(col("doc_id") < 400), "doc_id", "text")
       store.IndexStore.write(base, root, nBuckets = 8)
@@ -704,8 +701,7 @@ private[graft] object Queries091to155 extends QueryModule {
       // corpus is touched only via equi-joins on candidate ids
       // (O(beam·degree) scorings per round, never a scan)
       val e = tbl(s, dir, "embeddings")
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       val assigned = Similarity.assignNearestCentroid(e, "embedding", "vec_id",
           centroids, "cid", "cv")
         .select(col("vec_id"), col("embedding"), col("centroid_id"))
@@ -754,13 +750,12 @@ private[graft] object Queries091to155 extends QueryModule {
       // must be indistinguishable from a full rebuild, so the oracle
       // computes over ALL embeddings
       val e = tbl(s, dir, "embeddings")
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       val base = Similarity.assignNearestCentroid(
           e.filter(col("vec_id") % 2 === 0), "embedding", "vec_id",
           centroids, "cid", "cv")
         .select(col("vec_id"), col("embedding"), col("centroid_id"))
-      val root = sys.props("java.io.tmpdir") + s"/graft-ann-merge-$tmpToken"
+      val root = scratch("ann-merge")
       store.AnnStore.write(base, root)
       store.AnnStore.merge(s, root, e.filter(col("vec_id") % 2 === 1),
         centroids, "cid", "cv", "embedding", "vec_id")
@@ -812,8 +807,7 @@ private[graft] object Queries091to155 extends QueryModule {
       // outliers — cluster-level semantic dedup over the same centroids
       // as q35, single equi-shuffle on the cell id
       val e = tbl(s, dir, "embeddings")
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       Dedup.semanticDedup(e, "vec_id", "embedding", centroids, "cid", "cv",
           minCosine = 0.35)
         .select(col("id").as("vec_id"), col("centroid_id"),
@@ -857,8 +851,7 @@ private[graft] object Queries091to155 extends QueryModule {
       // max cosine, and the witness eval id; cell-scoped train×eval with
       // the eval side broadcast — the train corpus is never shuffled
       val e = tbl(s, dir, "embeddings")
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       val train = e.filter(col("vec_id") % 17 =!= 3)
       val evalDf = e.filter(col("vec_id") % 17 === 3)
       Dedup.semanticContamination(train, "vec_id", "embedding",

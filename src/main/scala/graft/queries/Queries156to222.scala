@@ -570,7 +570,7 @@ private[graft] object Queries156to222 extends QueryModule {
       // second columnar format in the source/sink matrix), read back with
       // a pushed filter and aggregated — hash-matching the parquet-fed
       // oracle proves the engine is format-agnostic end to end
-      val out = sys.props("java.io.tmpdir") + s"/graft-orc-$tmpToken/lineitem"
+      val out = scratch("orc") + "/lineitem"
       tbl(s, dir, "lineitem").filter(col("l_orderkey") % 7 === 0)
         .write.mode("overwrite").orc(out)
       s.read.orc(out)
@@ -588,7 +588,7 @@ private[graft] object Queries156to222 extends QueryModule {
       // aggregate. Doubles survive via shortest-round-trip formatting;
       // the oracle aggregates the same slice straight from parquet
       val src = tbl(s, dir, "orders")
-      val out = sys.props("java.io.tmpdir") + s"/graft-csv-$tmpToken/orders"
+      val out = scratch("csv") + "/orders"
       val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
       src.filter(col("o_orderkey") % 5 === 0)
         .write.mode("overwrite").option("header", "true")
@@ -609,7 +609,7 @@ private[graft] object Queries156to222 extends QueryModule {
       // polynomial content fingerprint SUM proves the text survived the
       // escape/unescape byte-for-byte, not just the row counts
       val src = tbl(s, dir, "documents")
-      val out = sys.props("java.io.tmpdir") + s"/graft-json-$tmpToken/documents"
+      val out = scratch("json") + "/documents"
       src.filter(col("doc_id") % 3 === 0)
         .write.mode("overwrite").json(out)
       s.read.schema(src.schema).json(out)

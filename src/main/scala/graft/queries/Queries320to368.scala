@@ -601,8 +601,7 @@ private[graft] object Queries320to368 extends QueryModule {
       // distance per point — the quadratic-free silhouette that still
       // separates interior points from boundary points, per cell
       val e = tbl(s, dir, "embeddings")
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       Clustering.simplifiedSilhouette(e, "embedding", "vec_id",
           centroids, "cid", "cv")
         .orderBy("cid")

@@ -197,8 +197,7 @@ private[graft] object Queries369to421 extends QueryModule {
       // O(N·k·deg) build once and every session probe reads O(beam)
       // directories of a store three orders smaller than the corpus
       val e = tbl(s, dir, "embeddings")
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       val assigned = Similarity.assignNearestCentroid(e, "embedding", "vec_id",
           centroids, "cid", "cv")
         .select(col("vec_id"), col("embedding"), col("centroid_id"))
@@ -212,7 +211,7 @@ private[graft] object Queries369to421 extends QueryModule {
       val seed = base.select(col("id"), col("nbr_id"), col("distance"))
         .unionByName(ring)
       val refined = Similarity.nnDescentRefine(seed, e, "embedding", "vec_id", 3)
-      val root = sys.props("java.io.tmpdir") + s"/graft-graph-store-$tmpToken"
+      val root = scratch("graph-store")
       store.GraphStore.write(refined, root, nBuckets = 16)
       store.GraphStore.beamSearch(s, root, nBuckets = 16, e, "embedding",
           "vec_id", queryId = 5L, entryIds = Seq(0L, 1L, 2L, 3L),
@@ -257,7 +256,7 @@ private[graft] object Queries369to421 extends QueryModule {
       // are generated from the documents table, so every output column is
       // a pure SQL function of (doc_id, text) the oracle restates
       import java.util.zip.{ZipEntry, ZipOutputStream}
-      val root = new java.io.File(sys.props("java.io.tmpdir"), s"graft-ops-$tmpToken")
+      val root = new java.io.File(scratch("ops"))
       val zipDir = new java.io.File(root, "zips"); zipDir.mkdirs()
       val docs = tbl(s, dir, "documents").filter(col("doc_id") < 40)
         .select(col("doc_id"), col("text")).collect()
@@ -404,13 +403,12 @@ private[graft] object Queries369to421 extends QueryModule {
       // the store merge adds no semantics beyond the stated insert rule
       val e = tbl(s, dir, "embeddings")
       val old = e.filter(col("vec_id") % 2 === 0)
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       val assigned = Similarity.assignNearestCentroid(old, "embedding",
           "vec_id", centroids, "cid", "cv")
         .select(col("vec_id"), col("embedding"), col("centroid_id"))
       val graph = Similarity.knnGraph(assigned, "embedding", "vec_id", 3)
-      val root = sys.props("java.io.tmpdir") + s"/graft-graph-merge-$tmpToken"
+      val root = scratch("graph-merge")
       store.GraphStore.write(graph, root, nBuckets = 16)
       val batch = e.filter(col("vec_id") % 2 === 1 && col("vec_id") < 100)
       store.GraphStore.merge(s, root, nBuckets = 16, old, batch,
@@ -459,8 +457,7 @@ private[graft] object Queries369to421 extends QueryModule {
       // (identity on these single-line lowercase docs), PNGs through the
       // fixed-font OCR; every text length is a pure SQL function of the
       // source document
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft-deep-$tmpToken/corpus")
+      val root = new java.io.File(scratch("deep"), "corpus")
       root.mkdirs()
       tbl(s, dir, "documents").filter(col("doc_id") < 15)
         .select(col("doc_id"), col("text")).collect().foreach { r =>

@@ -32,14 +32,12 @@ private[graft] object Queries556to565 extends QueryModule {
       // measures the flat line at ×8)
       val e = tbl(s, dir, "embeddings")
       val old = e.filter(col("vec_id") % 2 === 0)
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       val assigned = Similarity.assignNearestCentroid(old, "embedding",
           "vec_id", centroids, "cid", "cv")
         .select(col("vec_id"), col("embedding"), col("centroid_id"))
       val graph = Similarity.knnGraph(assigned, "embedding", "vec_id", 3)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-graph-merge-scoped-$tmpToken"
+      val root = scratch("graph-merge-scoped")
       store.GraphStore.write(graph, root, nBuckets = 16)
       val batch = e.filter(col("vec_id") % 2 === 1 && col("vec_id") < 100)
       store.GraphStore.mergeScoped(s, root, 16, assigned, centroids,
@@ -91,15 +89,13 @@ private[graft] object Queries556to565 extends QueryModule {
       val isBatch = col("vec_id") % 2 === 1 && col("vec_id") < 60
       val batch = e.filter(isBatch)
       val union = e.filter(col("vec_id") % 2 === 0 || isBatch)
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
+      val centroids = codebook(s, dir)
       def assign(df: DataFrame) = Similarity.assignNearestCentroid(df,
           "embedding", "vec_id", centroids, "cid", "cv")
         .select(col("vec_id"), col("embedding"), col("centroid_id"))
       val assignedOld = assign(old)
       val g0 = Similarity.knnGraph(assignedOld, "embedding", "vec_id", 3)
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-graph-merge-recall-$tmpToken"
+      val root = scratch("graph-merge-recall")
       store.GraphStore.write(g0, root, nBuckets = 16)
       store.GraphStore.mergeScoped(s, root, 16, assignedOld, centroids,
         "cid", "cv", nProbe = 2, batch, "embedding", "vec_id", k = 3)

@@ -5,35 +5,102 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.pipeline.Embedder
+import java.nio.file.{Files, NoSuchFileException, Path, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import scala.jdk.CollectionConverters._
 
 /** Shared builder-side helpers for the query modules (split verbatim from
   * SparkEntry): table readers, the events timestamp shim, decimal-exact
-  * sums, the per-JVM scratch token, and the memoized persisted kNN-graph
-  * store every graph-analytics query serves from. */
+  * sums, the scratch-path helper, and the standing state every query
+  * reuses (memoized relations, frames and on-disk stores). */
 private[graft] object QueryHelpers {
 
-  /** Analyzed base-table relation, memoized per (session, dir, table) —
-    * the catalog-cache move (guide §6 file-listing): a bare
-    * `read.parquet` builds a fresh InMemoryFileIndex (driver file
-    * listing) and re-reads the footer schema on EVERY call, and the
-    * suite calls `tbl` thousands of times per bench pass. The memo
-    * shares one analyzed LogicalRelation per table — zero data is
-    * cached (execution still scans parquet; the driver's correctness
-    * gate reruns compute from the files every time), exactly what a
-    * catalog/metastore would hand out. Keyed by session identity so
-    * tests' sessions never see each other's relations; the test data
-    * dirs are immutable per JVM (stores write to scratch paths). */
-  private val tblCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String), DataFrame]()
+  /** The one registry of standing state: analyzed relations (`tbl`,
+    * `events`), pinned frames (`docLengths`) and the on-disk stores (kNN
+    * graph, ANN, index, SCC). Every entry is keyed by (kind, dir) plus,
+    * for session-bound frames, the session that built them:
+    *
+    *   - frames are per session: a relation or checkpoint is bound to the
+    *     context that built it, and tests' sessions never see each
+    *     other's frames;
+    *   - store paths are per JVM (the path carries [[tmpToken]]), because
+    *     parquet outlives the session; SCC roots carry no token and are
+    *     shared by every JVM on the machine;
+    *   - `dir` is the string as given, never normalized, so `d` and
+    *     `d + "/."` build distinct stores.
+    *
+    * Input directories are immutable, and that is asserted here: a miss
+    * records the [[fingerprint]] of the one input table the entry derives
+    * from, and every hit re-stats it and throws IllegalStateException
+    * naming the file if it changed (a regenerated dataset would otherwise
+    * be served a stale file listing or store).
+    *
+    * One re-entrant lock covers lookup and build: store builds read `tbl`
+    * from inside their own build (a nested compute-if-absent on one JDK
+    * concurrent map throws "Recursive update"), and two threads must
+    * never build the same store path at once. A miss first drops the
+    * entries of sessions whose SparkContext is stopped, so a stopped
+    * session and its frames are not pinned for the life of the JVM. */
+  private final case class Key(kind: String, dir: String, session: Option[SparkSession])
+  private final case class Entry(value: Any, input: Path, fingerprint: Long)
+  private val memo = new java.util.HashMap[Key, Entry]()
+
+  /** Memoized `build`, derived from `$dir/$table.parquet`; `build` gets
+    * that input's fingerprint. */
+  private def memoized[T](kind: String, dir: String, table: String,
+                          session: Option[SparkSession])(build: Long => T): T =
+    memo.synchronized {
+      val key = Key(kind, dir, session)
+      memo.get(key) match {
+        case null =>
+          memo.keySet.removeIf(_.session.exists(_.sparkContext.isStopped))
+          val input = Paths.get(dir, s"$table.parquet")
+          val fp = fingerprint(input)
+          val value = build(fp)
+          memo.put(key, Entry(value, input, fp))
+          value
+        case hit =>
+          if (fingerprint(hit.input) != hit.fingerprint)
+            throw new IllegalStateException(s"${hit.input} changed after " +
+              s"$kind was derived from it: input directories must not " +
+              "change while their standing state is in use")
+          hit.value.asInstanceOf[T]
+      }
+    }
+
+  /** Size and mtime of every regular file under `input` (one stat for a
+    * single-file table), folded into one Long; 0 if it does not exist (the
+    * build then fails on its own read). */
+  private def fingerprint(input: Path): Long = {
+    def stamp(a: BasicFileAttributes) =
+      a.size * 1000003L ^ a.lastModifiedTime.toMillis
+    def attrs(p: Path) = Files.readAttributes(p, classOf[BasicFileAttributes])
+    val top = try attrs(input) catch { case _: NoSuchFileException => return 0L }
+    if (!top.isDirectory) stamp(top)
+    else {
+      val w = Files.walk(input)
+      try w.sorted.iterator.asScala.map(attrs).filter(_.isRegularFile)
+        .foldLeft(0L)((h, a) => h * 1000003L + stamp(a))
+      finally w.close()
+    }
+  }
+
+  /** Analyzed base-table relation, one per (session, dir, table) — the
+    * catalog-cache move (guide §6 file-listing): a bare `read.parquet`
+    * builds a fresh InMemoryFileIndex (driver file listing) and re-reads
+    * the footer schema on EVERY call, and the suite calls `tbl` thousands
+    * of times per bench pass. Zero data is cached (execution still scans
+    * parquet), exactly what a catalog would hand out. The input is
+    * asserted unchanged on every call (see [[memo]]). */
   def tbl(s: SparkSession, dir: String, name: String): DataFrame =
-    tblCache.computeIfAbsent((s, dir, name),
+    memoized(s"table $name", dir, name, Some(s))(
       _ => s.read.parquet(s"$dir/$name.parquet"))
 
   /** Per-JVM token for the store-writing queries' scratch directories:
     * repeat runs inside one process reuse (and overwrite) the same dirs,
     * while two processes on the same host can never race each other's
     * half-swapped buckets. */
-  lazy val tmpToken: String =
+  private lazy val tmpToken: String =
     java.util.UUID.randomUUID().toString.take(8)
 
   /** Collision-proof path fragment for an sf-dir: a readable sanitized
@@ -41,14 +108,27 @@ private[graft] object QueryHelpers {
     * never map to one scratch path (Int hashCode, the previous scheme,
     * could collide and silently serve one dataset's store for the
     * other). */
-  def dirSlug(d: String): String = {
+  private def dirSlug(d: String): String = {
     val md = java.security.MessageDigest.getInstance("MD5")
       .digest(d.getBytes("UTF-8"))
     d.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(40) + "-" +
       md.map("%02x".format(_)).mkString.take(24)
   }
-  private def scratchPath(kind: String, d: String): String =
-    sys.props("java.io.tmpdir") + s"/graft-$kind-$tmpToken-${dirSlug(d)}"
+  private def tmpPath(name: String): String =
+    sys.props("java.io.tmpdir") + "/graft-" + name
+  /** Scratch dir `graft-<kind>-<tmpToken>` under java.io.tmpdir, the root
+    * of every store or file a query writes. */
+  def scratch(kind: String): String = tmpPath(s"$kind-$tmpToken")
+
+  /** Per-JVM standing store `<scratch(kind)>-<dirSlug(dir)>`, written
+    * once by `write` from `$dir/$table.parquet`. */
+  private def storePath(kind: String, dir: String, table: String)(
+      write: String => Unit): String =
+    memoized(kind, dir, table, None) { _ =>
+      val p = s"${scratch(kind)}-${dirSlug(dir)}"
+      write(p)
+      p
+    }
 
   /** Labels of every INTENTIONAL standing frame pinned in this JVM (the
     * memoized localCheckpoints backing the serve-many stores). Bench's
@@ -57,7 +137,7 @@ private[graft] object QueryHelpers {
     * and a leak are indistinguishable by count alone (the r7 "0 vs 2"
     * discrepancy). */
   val standingFrames: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
 
   /** localCheckpoint + register: names the checkpoint RDD so the leak
     * audit can tell it from an accidental pin. Synchronized: the
@@ -87,21 +167,14 @@ private[graft] object QueryHelpers {
     * edge set is BYTE-IDENTICAL to the inline build (parquet doubles are
     * lossless), so every DuckDB oracle that replays the kNN derivation
     * from embeddings.parquet stays exact. */
-  val knnGraphStorePaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def storedKnnGraphPath(s: SparkSession, dir: String): String =
-    knnGraphStorePaths.computeIfAbsent(dir, d => {
-      val e = tbl(s, d, "embeddings")
-      val centroids = e.filter(col("vec_id") < 8)
-        .select(col("vec_id").cast("int").as("cid"),
-          col("embedding").as("cv"))
+    storePath("knn-graph", dir, "embeddings") { p =>
+      val e = tbl(s, dir, "embeddings")
       val g = Similarity.knnGraph(
         Similarity.assignNearestCentroid(e, "embedding", "vec_id",
-          centroids, "cid", "cv"), "embedding", "vec_id", 3)
-      val p = scratchPath("knn-graph", d)
+          codebook(s, dir), "cid", "cv"), "embedding", "vec_id", 3)
       store.GraphStore.write(g, p, nBuckets = 16)
-      p
-    })
+    }
   def storedKnnGraph(s: SparkSession, dir: String): DataFrame =
     store.GraphStore.readEdges(s, storedKnnGraphPath(s, dir))
 
@@ -135,17 +208,12 @@ private[graft] object QueryHelpers {
     * from embeddings.parquet stays exact. q35/q120/q123/q132 keep inline
     * builds BY DESIGN — they gate the assignment/store machinery
     * itself. */
-  private val annStorePaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def storedAnnPath(s: SparkSession, dir: String): String =
-    annStorePaths.computeIfAbsent(dir, d => {
-      val assigned = Similarity.assignNearestCentroid(
-        tbl(s, d, "embeddings"), "embedding", "vec_id",
-        codebook(s, d), "cid", "cv")
-      val p = scratchPath("ann-store", d)
-      store.AnnStore.write(assigned, p)
-      p
-    })
+    storePath("ann-store", dir, "embeddings") { p =>
+      store.AnnStore.write(Similarity.assignNearestCentroid(
+        tbl(s, dir, "embeddings"), "embedding", "vec_id",
+        codebook(s, dir), "cid", "cv"), p)
+    }
   /** The assigned corpus served from the standing AnnStore, in the
     * inline assignment's column order: (vec_id, embedding, label,
     * centroid_id, centroid_dist). */
@@ -154,54 +222,41 @@ private[graft] object QueryHelpers {
       .select(col("vec_id"), col("embedding"), col("label"),
         col("centroid_id"), col("centroid_dist"))
 
-  /** The part→supplier flow graph (the q538/q546/q557-family input). */
-  private def flowEdges(s: SparkSession, dir: String): DataFrame =
-    tbl(s, dir, "lineitem").filter(col("l_quantity") <= 1)
+  /** The part→supplier flow graph (the q538/q546/q557-family input) of
+    * the lineitem rows `keep` admits. */
+  private def flowEdges(s: SparkSession, dir: String, keep: Column): DataFrame =
+    tbl(s, dir, "lineitem").filter(keep)
       .select((col("l_partkey") % 512).as("src"),
         (col("l_suppkey") % 512).as("dst"))
-
-  /** Content stamp for a dataset dir: size + mtime of its lineitem
-    * parquet, folded into the store path, so a REGENERATED dataset at
-    * the same path can never be served a stale cross-session store —
-    * the staleness hazard that keeping on-disk state across JVMs
-    * introduces (an in-memory frame dies with its session; a parquet
-    * store does not). */
-  private def contentStamp(dir: String): String = {
-    val p = java.nio.file.Paths.get(dir, "lineitem.parquet")
-    val sz = java.nio.file.Files.size(p)
-    val mt = java.nio.file.Files.getLastModifiedTime(p).toMillis
-    java.lang.Long.toHexString(sz * 1000003L ^ mt)
-  }
 
   /** Standing SCC state of the flow graph as an ON-DISK store
     * ([[graft.store.SccStore]]: labels + condensation + condensation-WCC
     * with atomic swap) — CLUSTER STATE operationalized the way the
     * knn/index/ann stores are (the r10 verdict's Missing #3: the
     * incremental machinery existed, but the state was an in-memory
-    * frame rebuilt every session at ~17 s). The store is keyed by
-    * (dir slug, content stamp) WITHOUT the per-JVM token: the one
-    * corpus-scale SCC run is paid once per dataset per machine, and
-    * every later session — including the bench JVM after a verify run —
-    * opens it read-only. q538/q546 keep inline runs BY DESIGN (they
-    * gate the two SCC algorithms); q557/q559/q561 merge INTO the
+    * frame rebuilt every session at ~17 s). The store is named by
+    * (dir slug, lineitem fingerprint) WITHOUT the per-JVM token: the one
+    * corpus-scale SCC run is paid once per dataset per machine, every
+    * later session — including the bench JVM after a verify run — opens
+    * it read-only, and a REGENERATED dataset at the same path gets a new
+    * name instead of a stale store. q538/q546 keep inline runs BY DESIGN
+    * (they gate the two SCC algorithms); q557/q559/q561 merge INTO the
     * standing 7/8 store (see [[flowSccOldStorePath]]). */
-  private val sccStoreRoots =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def sccStorePath(s: SparkSession, dir: String, variant: String,
                            edges: => DataFrame): String =
-    sccStoreRoots.computeIfAbsent(s"$variant:$dir", _ => {
-      val root = sys.props("java.io.tmpdir") +
-        s"/graft-sccstore-$variant-${dirSlug(dir)}-${contentStamp(dir)}"
+    memoized(s"sccstore-$variant", dir, "lineitem", None) { fp =>
+      val root = tmpPath(s"sccstore-$variant-${dirSlug(dir)}-" +
+        java.lang.Long.toHexString(fp))
       if (!graft.store.SccStore.exists(root))
         graft.store.SccStore.build(s, root, edges,
           "src", "dst", shufflePartitions = Some(8))
       root
-    })
+    }
 
   /** Full-flow-graph standing store (q549's condensation serves from
     * its labels). */
   def flowSccStorePath(s: SparkSession, dir: String): String =
-    sccStorePath(s, dir, "full", flowEdges(s, dir))
+    sccStorePath(s, dir, "full", flowEdges(s, dir, col("l_quantity") <= 1))
 
   /** The standing OLD (7/8 of the flow graph by order-key residue)
     * store the incremental-SCC gates q557/q559/q561 merge the 1/8
@@ -209,11 +264,8 @@ private[graft] object QueryHelpers {
     * built once per dataset instead of per query (its per-query
     * rebuild was ~3.5 s × 3 queries of pure gate overhead in r10). */
   def flowSccOldStorePath(s: SparkSession, dir: String): String =
-    sccStorePath(s, dir, "old78",
-      tbl(s, dir, "lineitem")
-        .filter(col("l_quantity") <= 1 && col("l_orderkey") % 8 =!= 0)
-        .select((col("l_partkey") % 512).as("src"),
-          (col("l_suppkey") % 512).as("dst")))
+    sccStorePath(s, dir, "old78", flowEdges(s, dir,
+      col("l_quantity") <= 1 && col("l_orderkey") % 8 =!= 0))
 
   /** Standing SCC labels of the FULL flow graph, served from the
     * on-disk store. */
@@ -227,14 +279,11 @@ private[graft] object QueryHelpers {
     * does on the DuckDB side. Micros: take the column as read, cast to the
     * session-zone timestamp type so downstream comparisons against
     * `lit(...).cast("timestamp")` literals keep one type (UTC session →
-    * identical instants either way). */
-  private val eventsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * identical instants either way). Memoized like [[tbl]] (events is
+    * the most-read table in the suite); the nanosAsLong conf is set
+    * before the one real read. */
   def events(s: SparkSession, dir: String): DataFrame =
-    // memoized like [[tbl]] (events is the most-read table in the suite);
-    // the nanosAsLong conf is set before the one real read, so the
-    // memoized relation is the same one every call produced before
-    eventsCache.computeIfAbsent((s, dir), _ => {
+    memoized("events", dir, "events", Some(s)) { _ =>
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val df = s.read.parquet(s"$dir/events.parquet")
       df.schema("ts").dataType match {
@@ -243,7 +292,7 @@ private[graft] object QueryHelpers {
         case _ =>
           df.withColumn("ts", col("ts").cast("timestamp"))
       }
-    })
+    }
 
   /** Order-independent exact sum of a double expression: accumulate as
     * decimal (exact, commutative), return double. The DuckDB oracle does the
@@ -265,7 +314,7 @@ private[graft] object QueryHelpers {
           col("start_index").cast("string")).as("metadata"))
     val deduped = Dedup.exactDedup(chunks, "text", "id")
     val embedded = Embedder.embed(deduped, "text", Embedder.stubEmbed(dim))
-    val root = sys.props("java.io.tmpdir") + "/graft-stores"
+    val root = scratch("stores")
     val name = store.VectorStore.storeName("DOCS", "stub", "hash64", 200, 50, "COSINE", "HNSW")
     store.VectorStore.write(embedded, root, name,
       s"""{"alias": "DOCS", "embedding_model": {"provider": "stub", "id": "hash64"},
@@ -287,35 +336,25 @@ private[graft] object QueryHelpers {
     * scan-built [[graft.operators.Retrieval.bm25]] (q106 ≡ q98 pins it),
     * so every oracle is untouched. q97/q98/q104/q121 keep inline builds
     * BY DESIGN — they gate the build/scan/merge machinery itself. */
-  private val indexStorePaths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   def storedIndexPath(s: SparkSession, dir: String): String =
-    indexStorePaths.computeIfAbsent(dir, d => {
-      val idx = graft.operators.Retrieval.invertedIndex(
-        tbl(s, d, "documents"), "doc_id", "text")
-      val p = scratchPath("index-store", d)
-      graft.store.IndexStore.write(idx, p, nBuckets = 8)
-      p
-    })
+    storePath("index-store", dir, "documents") { p =>
+      graft.store.IndexStore.write(graft.operators.Retrieval.invertedIndex(
+        tbl(s, dir, "documents"), "doc_id", "text"), p, nBuckets = 8)
+    }
   /** Doc lengths memoized as a localCheckpointed |docs|-row frame: the
     * whole point of the standing index is NOT re-tokenizing the corpus
     * per query, and dl was the remaining tokenize pass (measured: the
-    * stored path LOST to the scan path until this was pinned). Keyed by
-    * (session, dir): a checkpointed frame is bound to the context that
-    * built it, so a new session in the same JVM must rebuild rather than
-    * inherit a frame backed by a dead SparkContext (the disk-backed
-    * knn/index/ann store twins need no such guard — parquet outlives the
-    * session). */
-  private val docLengthFrames = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
+    * stored path LOST to the scan path until this was pinned). Per
+    * session: a checkpointed frame is bound to the context that built
+    * it. */
   def docLengths(s: SparkSession, dir: String): DataFrame =
-    docLengthFrames.computeIfAbsent((s, dir), { case (sess, d) =>
+    memoized("doc-lengths", dir, "documents", Some(s)) { _ =>
       namedLocalCheckpoint(
-        tbl(sess, d, "documents").select(col("doc_id").cast("long").as("id"),
+        tbl(s, dir, "documents").select(col("doc_id").cast("long").as("id"),
           size(graft.operators.Retrieval.analyze(col("text")))
             .cast("long").as("dl")),
-        s"graft-standing:doc-lengths:${dirSlug(d)}")
-    })
+        s"graft-standing:doc-lengths:${dirSlug(dir)}")
+    }
   /** The standing index read back as a TERM-STATISTICS table (term, df,
     * cf) — the serving path for whole-vocabulary consumers (burstiness,
     * completions): all buckets are scanned (there is nothing to prune

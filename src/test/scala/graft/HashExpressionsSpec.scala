@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import graft.operators.Dedup
 import graft.plans.HashExpressions
@@ -130,6 +131,14 @@ class HashExpressionsSpec extends SparkSpec {
     assert(short.isEmpty)
   }
 
+  /** Native vs HOF on `edge`, both interpreted (a projection over a local
+    * relation is folded on the driver) and code-generated (after an
+    * exchange). */
+  private def parity(edge: DataFrame, native: Column, hof: Column)(
+      check: Row => Unit): Unit =
+    for (src <- Seq(edge, edge.repartition(2)))
+      src.select(native, hof).collect().foreach(check)
+
   test("graft_band_hashes equals the transform(sequence)/aggregate(slice) band fold") {
     for (bands <- Seq(8, 16)) {
       val rows = bands match { case b => 64 / b }
@@ -143,6 +152,19 @@ class HashExpressionsSpec extends SparkSpec {
           hof.as("hof")).collect()
       got.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"bands=$bands"))
     }
+    // a null element nulls its band (as it nulls that band's fold); an
+    // empty signature folds every band to 0
+    val hof = expr("transform(sequence(0, 3), b -> aggregate(slice(_sig, b * 2 + 1, 2), " +
+      "0L, (acc, v) -> (acc * 1000003L + v) % 2147483647L))")
+    val edge = Seq(Seq(Some(5L), None, Some(7L), Some(9L), None, None, Some(1L), Some(2L)),
+      Seq.empty[Option[Long]]).toDF("_sig")
+    parity(edge, call_function("graft_band_hashes", col("_sig"), lit(4)), hof) { r =>
+      assert(r.getSeq[java.lang.Long](0) == r.getSeq[java.lang.Long](1))
+    }
+    val banded = edge.select(call_function("graft_band_hashes", col("_sig"), lit(4)))
+      .collect().map(_.getSeq[java.lang.Long](0))
+    assert(banded(0).map(_ != null) == Seq(false, true, false, true))
+    assert(banded(1) == Seq(0L, 0L, 0L, 0L))
   }
 
   test("graft_sig_agree equals size(filter(zip_with(...))) position agreement") {
@@ -165,7 +187,26 @@ class HashExpressionsSpec extends SparkSpec {
       call_function("graft_minhash_sig",
         call_function("graft_shingle_polyhashes", col("text"), lit(5)), lit(64)))).collect()
     self.foreach(r => assert(r.getInt(0) == 64))
+    // null positions never agree (p = q is null, the filter drops it);
+    // empty arrays agree nowhere
+    val edge = Seq(
+      (Seq(Some(1L), None, Some(3L), None), Seq(Some(1L), None, Some(4L), Some(5L))),
+      (Seq.empty[Option[Long]], Seq.empty[Option[Long]])).toDF("sa", "sb")
+    parity(edge, call_function("graft_sig_agree", col("sa"), col("sb")),
+      expr("size(filter(zip_with(sa, sb, (p, q) -> p = q), v -> v))")) { r =>
+      assert(r.getInt(0) == r.getInt(1))
+    }
+    assert(edge.select(call_function("graft_sig_agree", col("sa"), col("sb")))
+      .collect().map(_.getInt(0)).toSeq == Seq(1, 0))
   }
+
+  private def ewmaHof = expr(
+    """aggregate(
+      |  zip_with(_hist, sequence(1, _L),
+      |    (v, i) -> CAST(v / CAST(shiftleft(1L, _L - i + 1) AS DOUBLE)
+      |                   AS DECIMAL(38,18))),
+      |  CAST(0 AS DECIMAL(38,18)),
+      |  (a, x) -> CAST(a + x AS DECIMAL(38,18)))""".stripMargin)
 
   test("graft_ewma_wsum equals the aggregate(zip_with(...)) decimal fold bit-for-bit") {
     val rnd = new scala.util.Random(13)
@@ -176,14 +217,17 @@ class HashExpressionsSpec extends SparkSpec {
     val adf = arrs.toDF("_hist").withColumn("_L", size(col("_hist")))
     val rows = adf.select(
       call_function("graft_ewma_wsum", col("_hist")).as("native"),
-      expr(
-        """aggregate(
-          |  zip_with(_hist, sequence(1, _L),
-          |    (v, i) -> CAST(v / CAST(shiftleft(1L, _L - i + 1) AS DOUBLE)
-          |                   AS DECIMAL(38,18))),
-          |  CAST(0 AS DECIMAL(38,18)),
-          |  (a, x) -> CAST(a + x AS DECIMAL(38,18)))""".stripMargin).as("hof")).collect()
+      ewmaHof.as("hof")).collect()
     rows.foreach(r => assert(r.getDecimal(0) == r.getDecimal(1)))
+    // a null element nulls the fold, and so does an empty history
+    // (sequence(1, 0) is [1, 0]: the fold adds two null terms) and a NaN
+    // or infinite element (its CAST to decimal is null)
+    val edge = Seq(Seq(Some(1.0), None, Some(2.0)), Seq.empty[Option[Double]],
+      Seq(Some(1.0), Some(Double.NaN)), Seq(Some(Double.NegativeInfinity)))
+      .toDF("_hist").withColumn("_L", size(col("_hist")))
+    parity(edge, call_function("graft_ewma_wsum", col("_hist")), ewmaHof) { r =>
+      assert(r.isNullAt(0) && r.isNullAt(1))
+    }
   }
 
   test("xxhash64-based shingle/token exprs stay available and consistent") {

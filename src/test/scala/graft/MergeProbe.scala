@@ -14,7 +14,7 @@ import graft.Measure.seconds
   * rebuild; ScaleProbeSpec pins its deterministic half (the merged
   * touched-cell contents are replication-invariant).
   *
-  * Usage: runMain graft.MergeProbe [sfDir] [maxRep]
+  * Usage: sbt "Test/runMain graft.MergeProbe [sfDir] [maxRep]"
   */
 object MergeProbe {
 

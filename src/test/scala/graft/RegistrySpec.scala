@@ -1,13 +1,11 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** Guards on the query-registry machinery itself: `Map ++` silently
   * last-wins on a duplicate key, so a mis-numbered new query would shadow
   * an old one and the correctness gate would shrink by one without
   * failing anywhere — this spec (and the matching `require` at registry
   * init) makes that a hard failure with the offending keys named. */
-class RegistrySpec extends AnyFunSuite {
+class RegistrySpec extends SparkSpec {
 
   test("query keys are unique across modules") {
     val keys = graft.queries.QueryRegistry.modules.flatMap(_.queries.keys)
@@ -117,13 +115,15 @@ class RegistrySpec extends AnyFunSuite {
   // and timing loop, and drifted apart from what Bench measures. Every
   // session now comes from Session and every probe mode lives in Probe.
 
-  private lazy val mainSources: Seq[(String, String)] = {
+  /** (file name, text) of every Scala source under `root`. */
+  private def sources(root: String): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
-    val w = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala"))
+    val w = java.nio.file.Files.walk(java.nio.file.Paths.get(root))
     try w.iterator.asScala.filter(_.toString.endsWith(".scala")).toSeq
       .map(p => p.getFileName.toString -> java.nio.file.Files.readString(p))
     finally w.close()
   }
+  private lazy val mainSources = sources("src/main/scala")
 
   test("only Session.scala builds a SparkSession in src/main") {
     val builders = mainSources.collect {
@@ -131,11 +131,10 @@ class RegistrySpec extends AnyFunSuite {
     assert(builders == Seq("Session.scala"), builders)
   }
 
-  test("the mains in src/main are exactly Bench, Verify, Probe and the two scale probes") {
+  test("the mains in src/main are exactly Bench, Verify and Probe") {
     val mains = mainSources.flatMap { case (f, text) =>
       "def main\\(".r.findAllIn(text).map(_ => f.stripSuffix(".scala")) }
-    assert(mains.sorted ==
-      Seq("Bench", "MergeProbe", "Probe", "ScaleProbe", "Verify"), mains)
+    assert(mains.sorted == Seq("Bench", "Probe", "Verify"), mains)
   }
 
   // --- one store-publish protocol ---------------------------------------
@@ -170,5 +169,45 @@ class RegistrySpec extends AnyFunSuite {
       assert(java.util.regex.Pattern.quote(idiom).r
         .findAllMatchIn(text).size == 1,
         s"$idiom should appear exactly once in GraphAnalytics.scala")
+  }
+
+  // --- one standing-state registry --------------------------------------
+  //
+  // Seven memo maps with four key shapes and two staleness rules, and
+  // eighteen hand-built scratch paths (one of them without the per-JVM
+  // token), were folded into QueryHelpers' one memo and one scratch
+  // helper. A second map or a hand-built tmpdir path shows up here.
+
+  test("only QueryHelpers roots scratch paths at java.io.tmpdir, in one place") {
+    val users = mainSources.collect {
+      case (f, text) if text.contains("java.io.tmpdir") => f }
+    assert(users == Seq("QueryHelpers.scala"), users)
+    val text = mainSources.collectFirst { case ("QueryHelpers.scala", t) => t }.get
+    assert("\"java.io.tmpdir\"".r.findAllMatchIn(text).size == 1)
+  }
+
+  test("the query modules hold one memo map, in QueryHelpers") {
+    val queries = sources("src/main/scala/graft/queries")
+    val concurrent = queries.collect { case (f, text)
+      if text.contains("ConcurrentHashMap") || text.contains("computeIfAbsent") => f }
+    assert(concurrent.isEmpty, concurrent)
+    val maps = queries.flatMap { case (f, text) =>
+      "new java\\.util\\.\\w*Map".r.findAllMatchIn(text).map(_ => f) }
+    assert(maps == Seq("QueryHelpers.scala"), maps)
+  }
+
+  test("tbl asserts its input is unchanged: a rewritten table throws naming the file") {
+    import spark.implicits._
+    val d = java.nio.file.Files.createTempDirectory("graft-stale").toString
+    Seq(0L, 1L).toDF("n_nationkey").write.parquet(s"$d/nation.parquet")
+    val first = graft.queries.QueryHelpers.tbl(spark, d, "nation")
+    assert(first.count() == 2)
+    assert(graft.queries.QueryHelpers.tbl(spark, d, "nation") eq first)
+    Seq(0L, 1L, 2L).toDF("n_nationkey")
+      .write.mode("overwrite").parquet(s"$d/nation.parquet")
+    val e = intercept[IllegalStateException](
+      graft.queries.QueryHelpers.tbl(spark, d, "nation"))
+    assert(e.getMessage.contains(s"$d/nation.parquet"), e.getMessage)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
   }
 }

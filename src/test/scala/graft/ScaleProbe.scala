@@ -18,7 +18,7 @@ import graft.Measure.seconds
   *   - q387 table checksum: one order-invariant digest scan of lineitem —
   *     map-side partials, one exchange, cost ~linear in rows.
   *
-  * Usage: runMain graft.ScaleProbe [sfDir] [maxRep]
+  * Usage: sbt "Test/runMain graft.ScaleProbe [sfDir] [maxRep]"
   * Prints one line per (probe, replication): seconds + the work metric
   * (edges / candidate pairs / rows) so linearity is checkable in both
   * time and work. ScaleProbeSpec pins the STRUCTURAL halves (pushed
