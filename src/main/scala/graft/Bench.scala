@@ -100,23 +100,13 @@ object Bench {
       }
       (out.toSeq, truncated)
     }
-    // force the standing stores (kNN graph, lexical index, IVF AnnStore,
-    // doc-lengths frame, flow-SCC labels) for the timed dir FIRST and
-    // time them separately: these are build-once/serve-many costs a
-    // standing corpus pays at ingest, and charging them to whichever
-    // consumer query happens to run first made q129-q136's first pass
-    // read as 9-20 s of "query cost" in r7
-    val buildT0 = System.nanoTime()
-    graft.queries.QueryHelpers.storedKnnGraphPath(spark, sfDir)
-    graft.queries.QueryHelpers.storedIndexPath(spark, sfDir)
-    graft.queries.QueryHelpers.storedAnnPath(spark, sfDir)
-    graft.queries.QueryHelpers.docLengths(spark, sfDir).count()
-    // SCC state is an on-disk store keyed by (dir, content stamp): the
-    // first-ever build on a box pays the corpus SCC run; every later
-    // JVM (e.g. this bench after a verify run) opens it read-only, so
+    // force the standing stores for the timed dir FIRST and time them
+    // separately: charging them to whichever consumer query happens to
+    // run first made q129-q136's first pass read as 9-20 s of "query
+    // cost" in r7. A later JVM only opens the on-disk SCC stores, so
     // steady-state store_build_s drops to the open cost
-    graft.queries.QueryHelpers.flowSccStorePath(spark, sfDir)
-    graft.queries.QueryHelpers.flowSccOldStorePath(spark, sfDir)
+    val buildT0 = System.nanoTime()
+    graft.queries.QueryHelpers.warmStandingStores(spark, sfDir)
     val storeBuildS = (System.nanoTime() - buildT0) / 1e9
     // per-pass box-contention telemetry: sample the 1-min load before the
     // first pass and after EVERY pass so each pass's line carries its own

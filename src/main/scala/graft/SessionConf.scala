@@ -20,8 +20,9 @@ import org.apache.spark.sql.SparkSession
   * Why the override exists at all:
   *   - BOUNDED graph frames (contracted gate graphs, frontier-sized BFS
   *     steps): fewer map tasks trim per-step scheduling overhead that
-  *     AQE's reduce-side coalescing cannot reach; corpus-scale frames
-  *     pass `None`.
+  *     AQE's reduce-side coalescing cannot reach; the count is derived
+  *     from the input ([[sizedPartitions]]), so corpus-scale frames get
+  *     the session default.
   *   - Streaming replays: a streaming query binds its STATE-STORE
   *     partition count to this setting at start, and the bounded replay
   *     instruments pay per-partition store setup/commit on EVERY
@@ -44,14 +45,6 @@ object SessionConf {
     * entries are removed on exit, so nothing pins a session. */
   private val holders = new ConcurrentHashMap[SparkSession, Thread]()
 
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n` (restored after, even on throw). `None` runs `body` unchanged. */
-  def withShufflePartitions[A](spark: SparkSession, n: Option[Int])(body: => A): A =
-    n match {
-      case None => body
-      case Some(p) => withShufflePartitions(spark, p)(body)
-    }
-
   /** Shuffle-partition count DERIVED FROM INPUT SIZE for the iterative
     * graph operators: ceil(plan-estimated bytes / `bytesPerPartition`),
     * clamped to [1, session default]. The estimate comes from the
@@ -67,7 +60,7 @@ object SessionConf {
     * exceed bytesPerPartition × partitions), i.e. the override is a
     * no-op exactly when the data is big. */
   def sizedPartitions(df: org.apache.spark.sql.DataFrame,
-                      bytesPerPartition: Long = 64L << 20): Option[Int] = {
+                      bytesPerPartition: Long = 64L << 20): Int = {
     val cur = math.max(df.sparkSession.conf.get(ShuffleKey).toInt, 1)
     val stats = df.queryExecution.optimizedPlan.stats
     val bytes = stats.sizeInBytes
@@ -86,9 +79,11 @@ object SessionConf {
     val rowFloor = stats.rowCount
       .map(r => (r / (1L << 22)) + 1).getOrElse(BigInt(1))
     val p = ((bytes / bytesPerPartition) + 1).max(rowFloor)
-    Some(p.max(BigInt(floor)).min(BigInt(cur)).toInt)
+    p.max(BigInt(floor)).min(BigInt(cur)).toInt
   }
 
+  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
+    * `n` (restored after, even on throw). */
   def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
     val me = Thread.currentThread()
     val prev = holders.putIfAbsent(spark, me)

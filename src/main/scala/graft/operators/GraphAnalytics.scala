@@ -1374,12 +1374,6 @@ object GraphAnalytics {
     val lastBfsSteps = new java.util.concurrent.atomic.AtomicInteger(0)
   }
 
-  /** Scoped shuffle-partition override for BOUNDED frames — contract and
-    * enforcement live in [[graft.SessionConf]] (the one definition). */
-  private def withShufflePartitions[A](spark: org.apache.spark.sql.SparkSession,
-      n: Option[Int])(body: => A): A =
-    graft.SessionConf.withShufflePartitions(spark, n)(body)
-
   /** Strongly connected components at SCALE: forward–backward pivot
     * decomposition with trimming — the directed twin of the q311
     * distributed WCC, closing the gap [[sccLabels]] (definition-exact
@@ -1419,22 +1413,16 @@ object GraphAnalytics {
     * with shallow SCC recursion); a 10⁶-link pure path graph would
     * exhaust `maxDepth` and raise rather than mislabel.
     *
-    * `shufflePartitions`: optional TEMPORARY session override for the
-    * per-step joins (restored after) — on a BOUNDED contracted graph
-    * (the q546/q549 gates) fewer map tasks trim per-step scheduling
-    * overhead; AQE already coalesces the reduce side, so the gain is
-    * modest. Leave None for corpus-scale edge frames (the
-    * [[bidirectionalBfsDistance]] convention). */
+    * The per-step joins run [[sized]] by `edges`. */
   def sccLabelsFwBw(edges: DataFrame, srcCol: String, dstCol: String,
                     maxRounds: Int = 48,
                     maxDepth: Int = 256,
-                    shufflePartitions: Option[Int] = None,
-                    stats: Option[FwBwStats] = None): DataFrame = {
-    val spark = edges.sparkSession
-    if (shufflePartitions.isDefined)
-      return withShufflePartitions(spark, shufflePartitions) {
-        sccLabelsFwBw(edges, srcCol, dstCol, maxRounds, maxDepth, None, stats)
-      }
+                    stats: Option[FwBwStats] = None): DataFrame =
+    sized(edges)(fwBwLabels(edges, srcCol, dstCol, maxRounds, maxDepth, stats))
+
+  private def fwBwLabels(edges: DataFrame, srcCol: String, dstCol: String,
+                         maxRounds: Int, maxDepth: Int,
+                         stats: Option[FwBwStats]): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
@@ -1597,32 +1585,27 @@ object GraphAnalytics {
     * re-point map is bounded by the touched components' super-node
     * count (contracted space), the same boundedness class as q554's
     * super-rep map. GraphAnalyticsSpec pins the two discovery paths
-    * label-identical. */
+    * label-identical. The eager steps run [[sized]] by `oldLabels`: the
+    * batch joins through the label frame, the largest input. */
   def incrementalScc(oldLabels: DataFrame, oldCondensation: DataFrame,
                      newEdges: DataFrame, srcCol: String, dstCol: String,
-                     shufflePartitions: Option[Int] = None,
-                     oldCondWcc: Option[DataFrame] = None): DataFrame = {
-    val spark = oldLabels.sparkSession
-    if (shufflePartitions.isDefined)
-      return withShufflePartitions(spark, shufflePartitions) {
-        incrementalScc(oldLabels, oldCondensation, newEdges, srcCol,
-          dstCol, None, oldCondWcc)
+                     oldCondWcc: Option[DataFrame] = None): DataFrame =
+    sized(oldLabels) {
+      val labels = oldLabels.select(col("node"), col("scc")).localCheckpoint()
+      def withSizes(lbl: DataFrame): DataFrame = {
+        val sizes = lbl.groupBy("scc").agg(count(lit(1)).as("scc_size"))
+        lbl.join(sizes, Seq("scc")).select("node", "scc", "scc_size")
       }
-    val labels = oldLabels.select(col("node"), col("scc")).localCheckpoint()
-    def withSizes(lbl: DataFrame): DataFrame = {
-      val sizes = lbl.groupBy("scc").agg(count(lit(1)).as("scc_size"))
-      lbl.join(sizes, Seq("scc")).select("node", "scc", "scc_size")
+      incrementalSccDelta(labels, oldCondensation, newEdges, srcCol, dstCol,
+          oldCondWcc) match {
+        case None => withSizes(labels)
+        case Some((repoint, newNodes, _)) =>
+          val relabeled = labels.unionByName(newNodes)
+            .join(broadcast(repoint), col("scc") === col("_osl"), "left")
+            .select(col("node"), coalesce(col("_nsl"), col("scc")).as("scc"))
+          withSizes(relabeled)
+      }
     }
-    incrementalSccDelta(labels, oldCondensation, newEdges, srcCol, dstCol,
-        oldCondWcc) match {
-      case None => withSizes(labels)
-      case Some((repoint, newNodes, _)) =>
-        val relabeled = labels.unionByName(newNodes)
-          .join(broadcast(repoint), col("scc") === col("_osl"), "left")
-          .select(col("node"), coalesce(col("_nsl"), col("scc")).as("scc"))
-        withSizes(relabeled)
-    }
-  }
 
   /** The label-CHANGE delta of [[incrementalScc]], exposed so a
     * bucketed on-disk label store ([[graft.store.SccStore]]) can merge
@@ -1766,81 +1749,68 @@ object GraphAnalytics {
     * one-sided BFS touches O(b^d) nodes, meeting in the middle touches
     * O(b^(d/2)) from each side — on a 100 TB graph the difference
     * between two pruned frontier scans and a full-component sweep.
+    * The per-step joins run [[sized]] by `edges`.
     *
     * Scale shape: per step, one frontier⋈static-edges join + an
     * anti-join + a bounded one-row meet aggregate — the audited linear
     * loop shape; driver state is three scalars. Depth-capped with a
-    * RAISE (never a silent wrong distance).
-    *
-    * `shufflePartitions`: optional TEMPORARY override of
-    * spark.sql.shuffle.partitions for the search's joins (restored
-    * after). The per-step frames here are frontier-sized, so on a
-    * BOUNDED standing graph (q553's kNN instrument) a handful of
-    * partitions trims map-task scheduling overhead; AQE already
-    * coalesces the reduce side, so the gain is modest (box-noise-sized
-    * in measurement) — it is set where the caller KNOWS the input is
-    * bounded, and left None for corpus-scale edge frames. */
+    * RAISE (never a silent wrong distance). */
   def bidirectionalBfsDistance(edges: DataFrame, srcCol: String,
-      dstCol: String, a: Long, b: Long, maxDepth: Int = 64,
-      shufflePartitions: Option[Int] = None): Long = {
-    if (a == b) return 0L
-    val spark = edges.sparkSession
-    if (shufflePartitions.isDefined)
-      return withShufflePartitions(spark, shufflePartitions) {
-        bidirectionalBfsDistance(edges, srcCol, dstCol, a, b, maxDepth, None)
+      dstCol: String, a: Long, b: Long, maxDepth: Int = 64): Long =
+    if (a == b) 0L else sized(edges) {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      val und0 = edges.select(col(srcCol).cast("long").as("u"),
+        col(dstCol).cast("long").as("v"))
+      val und = und0
+        .unionByName(und0.select(col("v").as("u"), col("u").as("v")))
+        .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+      var reachedA = Seq((a, 0L)).toDF("node", "d")
+      var frontA = reachedA
+      var reachedB = Seq((b, 0L)).toDF("node", "d")
+      var frontB = reachedB
+      var lA = 0L
+      var lB = 0L
+      var sizeA = 1L
+      var sizeB = 1L
+      var best = Long.MaxValue
+      var steps = 0
+      while (best > lA + lB && sizeA > 0 && sizeB > 0 &&
+          steps < 2 * maxDepth) {
+        steps += 1
+        // expand the smaller frontier (ties → A): the meet-in-the-middle
+        // work balance that keeps both balls at ~b^(d/2)
+        val expandA = sizeA <= sizeB
+        val (front, reached, other, l) =
+          if (expandA) (frontA, reachedA, reachedB, lA + 1)
+          else (frontB, reachedB, reachedA, lB + 1)
+        val nf = front.select(col("node").as("u")).join(und, Seq("u"))
+          .select(col("v").as("node")).distinct()
+          .join(reached, Seq("node"), "left_anti")
+          .select(col("node"), lit(l).as("d"))
+          .transform(checkpointDropStats)
+        // ONE aggregate job yields both the frontier size and the best
+        // meet through the other side (left join keeps non-meet rows for
+        // the count; min ignores their null distances)
+        val stats = nf
+          .join(other.select(col("node"), col("d").as("_od")),
+            Seq("node"), "left")
+          .agg(count(lit(1)), min(col("d") + col("_od"))).head()
+        val sz = stats.getLong(0)
+        if (!stats.isNullAt(1)) best = math.min(best, stats.getLong(1))
+        if (expandA) {
+          lA = l; sizeA = sz
+          if (sz > 0) { reachedA = reachedA.unionByName(nf); frontA = nf }
+        } else {
+          lB = l; sizeB = sz
+          if (sz > 0) { reachedB = reachedB.unionByName(nf); frontB = nf }
+        }
       }
-    import spark.implicits._
-    val und0 = edges.select(col(srcCol).cast("long").as("u"),
-      col(dstCol).cast("long").as("v"))
-    val und = und0
-      .unionByName(und0.select(col("v").as("u"), col("u").as("v")))
-      .filter(col("u") =!= col("v")).distinct().localCheckpoint()
-    var reachedA = Seq((a, 0L)).toDF("node", "d")
-    var frontA = reachedA
-    var reachedB = Seq((b, 0L)).toDF("node", "d")
-    var frontB = reachedB
-    var lA = 0L
-    var lB = 0L
-    var sizeA = 1L
-    var sizeB = 1L
-    var best = Long.MaxValue
-    var steps = 0
-    while (best > lA + lB && sizeA > 0 && sizeB > 0 &&
-        steps < 2 * maxDepth) {
-      steps += 1
-      // expand the smaller frontier (ties → A): the meet-in-the-middle
-      // work balance that keeps both balls at ~b^(d/2)
-      val expandA = sizeA <= sizeB
-      val (front, reached, other, l) =
-        if (expandA) (frontA, reachedA, reachedB, lA + 1)
-        else (frontB, reachedB, reachedA, lB + 1)
-      val nf = front.select(col("node").as("u")).join(und, Seq("u"))
-        .select(col("v").as("node")).distinct()
-        .join(reached, Seq("node"), "left_anti")
-        .select(col("node"), lit(l).as("d"))
-        .transform(checkpointDropStats)
-      // ONE aggregate job yields both the frontier size and the best
-      // meet through the other side (left join keeps non-meet rows for
-      // the count; min ignores their null distances)
-      val stats = nf
-        .join(other.select(col("node"), col("d").as("_od")),
-          Seq("node"), "left")
-        .agg(count(lit(1)), min(col("d") + col("_od"))).head()
-      val sz = stats.getLong(0)
-      if (!stats.isNullAt(1)) best = math.min(best, stats.getLong(1))
-      if (expandA) {
-        lA = l; sizeA = sz
-        if (sz > 0) { reachedA = reachedA.unionByName(nf); frontA = nf }
-      } else {
-        lB = l; sizeB = sz
-        if (sz > 0) { reachedB = reachedB.unionByName(nf); frontB = nf }
-      }
+      require(best <= lA + lB || sizeA == 0 || sizeB == 0,
+        s"bidirectionalBfsDistance: depth cap $maxDepth exceeded before " +
+          "the meet rule settled — raise maxDepth")
+      if (best == Long.MaxValue) -1L else best
     }
-    require(best <= lA + lB || sizeA == 0 || sizeB == 0,
-      s"bidirectionalBfsDistance: depth cap $maxDepth exceeded before " +
-        "the meet rule settled — raise maxDepth")
-    if (best == Long.MaxValue) -1L else best
-  }
 
   /** Longest-path levels of a DAG: level(v) = length of the longest
     * path from any source (in-degree-0 node) to v — the critical-path /

@@ -34,7 +34,7 @@ object HashExpressions {
   private val SEED = 42L
   /** 2^31-1 — the shared modulus of every polynomial/affine hash here. */
   val P2n31: Long = 2147483647L
-  private val P = P2n31 // matches Dedup.minhashFromHashes
+  private val P = P2n31 // matches HofTwins.minhashFromHashes (test scope)
   /** Rolling-polynomial bases (Rabin-Karp). Kept SQL-expressible on purpose:
     * the DuckDB correctness oracle recomputes the identical hash with
     * `list_reduce` over character codes, which xxhash64 cannot do. */
@@ -72,8 +72,8 @@ object HashExpressions {
   }
 
   /** The seeded permutation coefficients (a_i, b_i) shared by the native
-    * MinHashSigExpr, the declarative Dedup.minhashFromHashes, and the
-    * generated DuckDB oracle SQL — single source of truth. */
+    * MinHashSigExpr, the declarative test-scope
+    * HofTwins.minhashFromHashes, and the generated DuckDB oracle SQL — single source of truth. */
   def minhashCoeffs(numHashes: Int): (Array[Long], Array[Long]) = {
     val rnd = new scala.util.Random(42)
     val pairs = Array.fill(numHashes)((math.abs(rnd.nextInt()).toLong % (P - 1) + 1,
@@ -492,8 +492,8 @@ object HashExpressions {
   private val helper = "graft.plans.HashExpressions"
 
   /** Distinct XXH64 hashes of the n-byte windows of a string (the whole
-    * string if shorter than n) — native twin of Dedup.shingleHashes,
-    * already reduced mod 2^31-1. Codegen emits a direct static call, so the
+    * string if shorter than n) — native twin of the test-scope
+    * HofTwins.shingleHashes, already reduced mod 2^31-1. Codegen emits a direct static call, so the
     * surrounding projection stays in one whole-stage-codegen span. */
   case class ShingleHashesExpr(child: Expression, n: Int) extends UnaryExpression {
     override def prettyName: String = "graft_shingle_hashes"
@@ -640,8 +640,8 @@ object HashExpressions {
   }
 
   /** MinHash signature from pre-reduced hashes: same seeded (a_i, b_i)
-    * permutations as Dedup.minhashFromHashes, all minima in one pass. The
-    * coefficient arrays ride into generated code as reference objects. */
+    * permutations as the test-scope HofTwins.minhashFromHashes, all
+    * minima in one pass. The coefficient arrays ride into generated code as reference objects. */
   case class MinHashSigExpr(child: Expression, numHashes: Int) extends UnaryExpression {
     override def prettyName: String = "graft_minhash_sig"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -662,7 +662,7 @@ object HashExpressions {
   }
 
   /** 64-bit SimHash from token hashes: per-bit majority vote, native twin
-    * of Dedup.simhash's aggregate/zip_with form. */
+    * of the test-scope HofTwins.simhash's aggregate/zip_with form. */
   case class SimHash64Expr(child: Expression) extends UnaryExpression {
     override def prettyName: String = "graft_simhash64"
     override def dataType: DataType = LongType

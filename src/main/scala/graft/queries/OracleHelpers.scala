@@ -206,7 +206,7 @@ private[graft] object OracleHelpers {
 
   /** Full-corpus near-dup input: every document plus a 7-chars-shorter twin
     * (same construction as q20/q21's Spark side). */
-  val nearDupCorpus =
+  val nearDupCorpusSql: String =
     """SELECT doc_id, text FROM documents
       |UNION ALL
       |SELECT doc_id + 1000000 AS doc_id,
@@ -215,7 +215,7 @@ private[graft] object OracleHelpers {
 
   /** The corpus→signatures→bands→candidate-pairs CTE chain shared by the
     * minhash-pairs and cluster-dedup oracles. */
-  def minhashPairCtes: String = minhashPairCtesFor(nearDupCorpus)
+  def minhashPairCtes: String = minhashPairCtesFor(nearDupCorpusSql)
 
   /** [[minhashPairCtes]] over an arbitrary corpus SELECT — the q143
     * recall gate runs the same signature/band replay on a bounded
@@ -388,14 +388,8 @@ private[graft] object OracleHelpers {
   def ivfpqOracleSql: String = {
     val adc = pqAdcSql
     s"""WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 5),
-       |c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-       |  FROM embeddings WHERE vec_id < 8),
-       |assign AS (
-       |  SELECT vec_id, centroid_id FROM (
-       |    SELECT e.vec_id, c.cid AS centroid_id,
-       |      row_number() OVER (PARTITION BY e.vec_id
-       |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-       |    FROM embeddings e, c) WHERE rn = 1),
+       |$codebookCte,
+       |$assignCte,
        |probes AS (SELECT cid FROM c, q ORDER BY list_distance(cv, qv), cid LIMIT 2),
        |cell AS (
        |  SELECT e.vec_id, e.embedding, a.centroid_id FROM embeddings e
@@ -602,7 +596,7 @@ private[graft] object OracleHelpers {
     * first-element `list_reduce` init is made explicit with a prepended
     * 0 (0·31 + c₁ ≡ c₁). */
   def winnowingOracleSql: String =
-    s"""WITH corpus AS ($nearDupCorpus),
+    s"""WITH corpus AS ($nearDupCorpusSql),
        |codes AS (
        |  SELECT doc_id, list_transform(range(1, length(text) + 1),
        |    i -> CAST(unicode(substring(text, CAST(i AS INT), 1)) AS BIGINT)) AS cs
@@ -646,13 +640,8 @@ private[graft] object OracleHelpers {
     * rational-discount DCG (L = lcm(1..3) = 6, gain 4−rank, integer
     * weight 6//r) and one final division. */
   def ndcgOracleSql: String =
-    """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-      |  FROM embeddings WHERE vec_id < 8),
-      |a AS (SELECT vec_id, embedding, centroid_id FROM (
-      |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-      |    FROM embeddings e, c) WHERE rn = 1),
+    s"""WITH $codebookCte,
+      |$assignedCte,
       |q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
       |  FROM embeddings WHERE vec_id < 5),
       |probe AS (SELECT query_id, qv, cid FROM (
@@ -883,7 +872,7 @@ private[graft] object OracleHelpers {
         |  substring(text, 1, greatest(length(text) - 7, 1)) AS text
         |FROM documents WHERE doc_id < 300""".stripMargin
     s"""WITH RECURSIVE ${minhashPairCtesSfx(oldCorpus, "o")},
-       |${minhashPairCtesSfx(nearDupCorpus, "n")},
+       |${minhashPairCtesSfx(nearDupCorpusSql, "n")},
        |j AS (SELECT o.id, o.cluster_rep AS old_rep,
        |    coalesce(n.cluster_rep, o.id) AS new_rep
        |  FROM cl_o o LEFT JOIN cl_n n ON o.id = n.id),
@@ -988,7 +977,7 @@ private[graft] object OracleHelpers {
     val b1 = graft.plans.HashExpressions.PolyBase1
     val b2 = graft.plans.HashExpressions.PolyBase2
     val tokenHash = s"(${duckPoly("t", b1)} * 2147483648 + ${duckPoly("t", b2)}) % $HP"
-    s"""WITH corpus AS ($nearDupCorpus),
+    s"""WITH corpus AS ($nearDupCorpusSql),
        |ths AS (
        |  SELECT doc_id, list_transform(
        |    list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> ''),
@@ -1220,7 +1209,7 @@ private[graft] object OracleHelpers {
     val b2 = graft.plans.HashExpressions.PolyBase2
     val toks = "list_filter(regexp_split_to_array(text, '\\s+'), x -> x <> '')"
     val tokenHash = s"${duckPoly("t", b1)} * 2147483648 + ${duckPoly("t", b2)}"
-    s"""WITH corpus AS ($nearDupCorpus),
+    s"""WITH corpus AS ($nearDupCorpusSql),
        |ths AS (
        |  SELECT doc_id, list_transform($toks, t -> $tokenHash) AS th
        |  FROM corpus WHERE length(text) > 0),
@@ -2393,23 +2382,52 @@ private[graft] object OracleHelpers {
        |      / (n_gopher_only + n_cls_only), 6) END AS mcnemar_chi2
        |FROM ag""".stripMargin
 
+  /** The canonical 8-centroid codebook `c` (cid, cv): the first 8 vectors
+    * by id, the oracle twin of [[QueryHelpers.codebook]]. The CTE
+    * fragments below are stripped already, so a caller's stripMargin
+    * leaves them as they are. */
+  val codebookCte: String =
+    """c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
+      |  FROM embeddings WHERE vec_id < 8)""".stripMargin
+
+  /** Nearest-centroid assignment `a` (vec_id, embedding, centroid_id)
+    * over [[codebookCte]], distance ties to the smaller cid — the inline
+    * twin of Similarity.assignNearestCentroid. */
+  val assignedCte: String =
+    """a AS (SELECT vec_id, embedding, centroid_id FROM (
+      |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
+      |      row_number() OVER (PARTITION BY e.vec_id
+      |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
+      |    FROM embeddings e, c) WHERE rn = 1)""".stripMargin
+
+  /** [[assignedCte]] without the embedding, as `assign` (vec_id,
+    * centroid_id): the IVF-probe oracles' cell map. */
+  val assignCte: String =
+    """assign AS (
+      |  SELECT vec_id, centroid_id FROM (
+      |    SELECT e.vec_id, c.cid AS centroid_id,
+      |      row_number() OVER (PARTITION BY e.vec_id
+      |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
+      |    FROM embeddings e, c) WHERE rn = 1)""".stripMargin
+
+  /** Within-cell pairs `p` (id, nbr_id, cosine distance) over the
+    * assignment `a`: the candidate set of every bucket-local kNN
+    * oracle. */
+  val cellPairsCte: String =
+    """p AS (SELECT l.vec_id AS id, r.vec_id AS nbr_id,
+      |    1.0 - list_cosine_similarity(CAST(l.embedding AS DOUBLE[]),
+      |      CAST(r.embedding AS DOUBLE[])) AS distance
+      |  FROM a l JOIN a r ON l.centroid_id = r.centroid_id
+      |    AND l.vec_id <> r.vec_id)""".stripMargin
+
   /** Shared CTE prefix replaying the q101 kNN-graph build: `g0` is the
     * top-3-per-node edge list (id, nbr_id) over the 8-centroid map-side
     * assignment, plus `nodes`/`nn`/`dg` (node set, node count,
     * out-degrees) for the PageRank oracles. */
   def knnEdgesPrefixSql: String =
-    """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-      |  FROM embeddings WHERE vec_id < 8),
-      |a AS (SELECT vec_id, embedding, centroid_id FROM (
-      |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
-      |      row_number() OVER (PARTITION BY e.vec_id
-      |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-      |    FROM embeddings e, c) WHERE rn = 1),
-      |p AS (SELECT l.vec_id AS id, r.vec_id AS nbr_id,
-      |    1.0 - list_cosine_similarity(CAST(l.embedding AS DOUBLE[]),
-      |      CAST(r.embedding AS DOUBLE[])) AS distance
-      |  FROM a l JOIN a r ON l.centroid_id = r.centroid_id
-      |    AND l.vec_id <> r.vec_id),
+    s"""WITH $codebookCte,
+      |$assignedCte,
+      |$cellPairsCte,
       |g0 AS (SELECT id, nbr_id FROM (
       |    SELECT id, nbr_id,
       |      row_number() OVER (PARTITION BY id ORDER BY distance, nbr_id) AS rk
@@ -2801,9 +2819,7 @@ private[graft] object OracleHelpers {
     * exact max cosine + witness (highest cosine, ties to smaller eval
     * id); clean docs kept with zero hits. */
   def semanticContaminationOracleSql: String =
-    """WITH c AS (SELECT CAST(vec_id AS INT) AS cid,
-      |    CAST(embedding AS DOUBLE[]) AS cv
-      |  FROM embeddings WHERE vec_id < 8),
+    s"""WITH $codebookCte,
       |a0 AS (SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v,
       |    c.cid AS centroid_id,
       |    row_number() OVER (PARTITION BY e.vec_id
@@ -2864,9 +2880,7 @@ private[graft] object OracleHelpers {
     * (q36), and the loser of each >= 0.35 pair is the member closer to
     * its centroid (tie: larger id) — cap mirrored like the LSH oracles. */
   def semanticDedupOracleSql: String =
-    s"""WITH c AS (SELECT CAST(vec_id AS INT) AS cid,
-       |    CAST(embedding AS DOUBLE[]) AS cv
-       |  FROM embeddings WHERE vec_id < 8),
+    s"""WITH $codebookCte,
        |a0 AS (SELECT e.vec_id, CAST(e.embedding AS DOUBLE[]) AS v,
        |    c.cid AS centroid_id,
        |    list_distance(CAST(e.embedding AS DOUBLE[]), c.cv) AS centroid_dist,

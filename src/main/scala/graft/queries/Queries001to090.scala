@@ -247,20 +247,15 @@ private[graft] object Queries001to090 extends QueryModule {
     // ---- Deduplication family (beyond-reference) ------------------------
     "q20_minhash_pairs" -> ((s, dir) => {
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      Dedup.minhashLshPairs(corpus, "doc_id", "text",
-          shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
+      val corpus = nearDupCorpus(d)
+      nearDupPairs(corpus)
         .orderBy("doc_a", "doc_b")
     }),
 
 
     "q21_simhash_pairs" -> ((s, dir) => {
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
+      val corpus = nearDupCorpus(d)
       Dedup.simhashPairs(corpus, "doc_id", "text", maxHamming = 3)
         .orderBy("doc_a", "doc_b")
     }),
@@ -706,12 +701,9 @@ private[graft] object Queries001to090 extends QueryModule {
     "q56_dedup_clusters" -> ((s, dir) => {
       // cluster-level dedup: LSH pairs → connected components → min-id rep
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
-      Dedup.dedupClusters(pairs, "doc_a", "doc_b", edgePartitions = 8)
+      val corpus = nearDupCorpus(d)
+      val pairs = nearDupPairs(corpus)
+      Dedup.dedupClusters(pairs, "doc_a", "doc_b")
         .select(col("id").as("doc_id"), col("cluster_rep"))
         .orderBy("doc_id")
     }),
@@ -1140,9 +1132,7 @@ private[graft] object Queries001to090 extends QueryModule {
       // corpus — the substring-level step after pair/cluster detection:
       // WHICH ranges of a document are copies, not just which documents
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
+      val corpus = nearDupCorpus(d)
       Dedup.dupSpans(corpus, "doc_id", "text", n = 8)
         .orderBy("doc_id", "span_start")
     }),
@@ -1502,8 +1492,7 @@ private[graft] object Queries001to090 extends QueryModule {
 
 
       "q35_ivf_assign" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8)
+        s"""WITH $codebookCte
           |SELECT vec_id, centroid_id, round(centroid_dist, 6) AS centroid_dist FROM (
           |  SELECT e.vec_id, c.cid AS centroid_id,
           |    list_distance(CAST(e.embedding AS DOUBLE[]), c.cv) AS centroid_dist,
@@ -1713,15 +1702,9 @@ private[graft] object Queries001to090 extends QueryModule {
 
 
       "q54_ivf_search" ->
-        """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-          |c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |assign AS (
-          |  SELECT vec_id, centroid_id FROM (
-          |    SELECT e.vec_id, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
+        s"""WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
+          |$codebookCte,
+          |$assignCte,
           |probes AS (SELECT cid FROM c, q ORDER BY list_distance(cv, qv), cid LIMIT 2)
           |SELECT e.vec_id, a.centroid_id,
           |  round(1.0 - list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), qv), 6) AS distance

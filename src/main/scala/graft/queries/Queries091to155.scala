@@ -336,7 +336,7 @@ private[graft] object Queries091to155 extends QueryModule {
         shingleN = 5, numHashes = 64, bands = 8)
       val newBatch = d.filter(col("doc_id") < 50)
         .select((col("doc_id") + 1000000).as("doc_id"),
-          expr("substring(text, 1, greatest(length(text) - 7, 1))").as("text"))
+          shortTwinText.as("text"))
       val newSigs = Dedup.bandSignatures(newBatch, "doc_id", "text",
         shingleN = 5, numHashes = 64, bands = 8)
       Dedup.incrementalDedupProbe(stored, newSigs, 64, threshold = 0.8)
@@ -938,12 +938,9 @@ private[graft] object Queries091to155 extends QueryModule {
       // before a full-corpus run, precision what the est_jaccard cut
       // over-flags
       val d = tbl(s, dir, "documents").filter(col("doc_id") < 300)
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
+      val corpus = nearDupCorpus(d)
       // localCheckpoint (not cache): see q140 — no CacheManager residue
-      val lsh = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-          shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
+      val lsh = nearDupPairs(corpus)
         .select("doc_a", "doc_b").localCheckpoint()
       val toks = corpus.select(col("doc_id").as("id"),
         explode(Dedup.shingleExpr("text", 5)).as("tok"))
@@ -1118,12 +1115,9 @@ private[graft] object Queries091to155 extends QueryModule {
       // straddle splits (train/test leakage); the audit output pins
       // per-split doc/cluster/char counts and n_straddle = 0
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
-      val labels = Dedup.dedupClusters(pairs, "doc_a", "doc_b", edgePartitions = 8)
+      val corpus = nearDupCorpus(d)
+      val pairs = nearDupPairs(corpus)
+      val labels = Dedup.dedupClusters(pairs, "doc_a", "doc_b")
       val sp = Sampling.clusterSplit(corpus, "doc_id", labels, "id", "cluster_rep")
       val agg = sp.groupBy("split").agg(
         count(lit(1)).as("n_docs"),
@@ -1175,12 +1169,9 @@ private[graft] object Queries091to155 extends QueryModule {
       // chars reclaimable under keep-representative — the planning
       // number a dedup run is justified by
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
-      val labels = Dedup.dedupClusters(pairs, "doc_a", "doc_b", edgePartitions = 8)
+      val corpus = nearDupCorpus(d)
+      val pairs = nearDupPairs(corpus)
+      val labels = Dedup.dedupClusters(pairs, "doc_a", "doc_b")
       val j = corpus
         .join(labels.select(col("id").as("doc_id"), col("cluster_rep")),
           Seq("doc_id"), "left")
@@ -1315,18 +1306,9 @@ private[graft] object Queries091to155 extends QueryModule {
 
 
       "q101_knn_graph" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |a AS (SELECT vec_id, embedding, centroid_id FROM (
-          |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
-          |p AS (SELECT l.vec_id AS id, r.vec_id AS nbr_id,
-          |    1.0 - list_cosine_similarity(CAST(l.embedding AS DOUBLE[]),
-          |      CAST(r.embedding AS DOUBLE[])) AS distance
-          |  FROM a l JOIN a r ON l.centroid_id = r.centroid_id
-          |    AND l.vec_id <> r.vec_id),
+        s"""WITH $codebookCte,
+          |$assignedCte,
+          |$cellPairsCte,
           |rk AS (SELECT id, nbr_id, distance,
           |    CAST(row_number() OVER (PARTITION BY id ORDER BY distance, nbr_id) AS INT) AS rank
           |  FROM p)
@@ -1354,13 +1336,8 @@ private[graft] object Queries091to155 extends QueryModule {
 
 
       "q103_ann_recall" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |a AS (SELECT vec_id, embedding, centroid_id FROM (
-          |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
+        s"""WITH $codebookCte,
+          |$assignedCte,
           |q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
           |  FROM embeddings WHERE vec_id < 5),
           |probe AS (SELECT query_id, qv, cid FROM (
@@ -1526,8 +1503,7 @@ private[graft] object Queries091to155 extends QueryModule {
 
 
       "q115_negative_samples" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
+        s"""WITH $codebookCte,
           |a AS (SELECT vec_id, centroid_id FROM (
           |    SELECT e.vec_id, c.cid AS centroid_id,
           |      row_number() OVER (PARTITION BY e.vec_id
@@ -1590,18 +1566,9 @@ private[graft] object Queries091to155 extends QueryModule {
       // expansion → neighbor-of-neighbor candidates → cosine re-rank →
       // recall@3 of base vs refined on the sampled nodes
       "q119_nn_descent" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |a AS (SELECT vec_id, embedding, centroid_id FROM (
-          |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
-          |p AS (SELECT l.vec_id AS id, r.vec_id AS nbr_id,
-          |    1.0 - list_cosine_similarity(CAST(l.embedding AS DOUBLE[]),
-          |      CAST(r.embedding AS DOUBLE[])) AS distance
-          |  FROM a l JOIN a r ON l.centroid_id = r.centroid_id
-          |    AND l.vec_id <> r.vec_id),
+        s"""WITH $codebookCte,
+          |$assignedCte,
+          |$cellPairsCte,
           |g0 AS (SELECT id, nbr_id, distance FROM (
           |    SELECT id, nbr_id, distance,
           |      row_number() OVER (PARTITION BY id ORDER BY distance, nbr_id) AS rk
@@ -1648,15 +1615,9 @@ private[graft] object Queries091to155 extends QueryModule {
 
 
       "q120_ann_store" ->
-        """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 1),
-          |c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |assign AS (
-          |  SELECT vec_id, centroid_id FROM (
-          |    SELECT e.vec_id, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
+        s"""WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 1),
+          |$codebookCte,
+          |$assignCte,
           |probes AS (SELECT cid FROM c, q ORDER BY list_distance(cv, qv), cid LIMIT 2)
           |SELECT e.vec_id, a.centroid_id,
           |  round(1.0 - list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), qv), 6) AS distance
@@ -1775,18 +1736,9 @@ private[graft] object Queries091to155 extends QueryModule {
       // q101's graph replayed, then the beam rounds unrolled: each round
       // is expand-neighbors ∪ beam → score vs the query → keep 8
       "q129_graph_search" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |a AS (SELECT vec_id, embedding, centroid_id FROM (
-          |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
-          |p AS (SELECT l.vec_id AS id, r.vec_id AS nbr_id,
-          |    1.0 - list_cosine_similarity(CAST(l.embedding AS DOUBLE[]),
-          |      CAST(r.embedding AS DOUBLE[])) AS distance
-          |  FROM a l JOIN a r ON l.centroid_id = r.centroid_id
-          |    AND l.vec_id <> r.vec_id),
+        s"""WITH $codebookCte,
+          |$assignedCte,
+          |$cellPairsCte,
           |g AS (SELECT id, nbr_id FROM (
           |    SELECT id, nbr_id,
           |      row_number() OVER (PARTITION BY id ORDER BY distance, nbr_id) AS rk
@@ -1855,15 +1807,9 @@ private[graft] object Queries091to155 extends QueryModule {
       // merged store ≡ full rebuild: same oracle shape as q120, computed
       // over ALL embeddings (query vec 2)
       "q132_ann_merge" ->
-        """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 2),
-          |c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |assign AS (
-          |  SELECT vec_id, centroid_id FROM (
-          |    SELECT e.vec_id, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
+        s"""WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 2),
+          |$codebookCte,
+          |$assignCte,
           |probes AS (SELECT cid FROM c, q ORDER BY list_distance(cv, qv), cid LIMIT 2)
           |SELECT e.vec_id, a.centroid_id,
           |  round(1.0 - list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), qv), 6) AS distance
@@ -1929,9 +1875,7 @@ private[graft] object Queries091to155 extends QueryModule {
       // the q35 assignment, squared-distance inertia in exact decimal,
       // rollup total via UNION ALL (NULL cell id)
       "q141_cluster_quality" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid,
-          |    CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
+        s"""WITH $codebookCte,
           |a0 AS (SELECT e.vec_id, c.cid AS centroid_id,
           |    list_distance(CAST(e.embedding AS DOUBLE[]), c.cv) AS centroid_dist,
           |    row_number() OVER (PARTITION BY e.vec_id

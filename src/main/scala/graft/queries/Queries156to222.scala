@@ -124,9 +124,7 @@ private[graft] object Queries156to222 extends QueryModule {
       // LSH family can only approximate — each doc and its truncated twin
       // share every window outside the cut tail
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
+      val corpus = nearDupCorpus(d)
       Winnowing.sharedFingerprintPairs(corpus, "doc_id", "text",
           k = 8, w = 16, minShared = 4)
         .orderBy("doc_a", "doc_b")
@@ -137,9 +135,7 @@ private[graft] object Queries156to222 extends QueryModule {
       // two-stage near-dup: LSH proposes, exact Levenshtein confirms —
       // the O(len²) DP runs only on LSH survivors, never corpus-wide
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
+      val corpus = nearDupCorpus(d)
       Dedup.editVerifiedPairs(corpus, "doc_id", "text",
           shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8,
           minEditSim = 0.9)
@@ -871,11 +867,8 @@ private[graft] object Queries156to222 extends QueryModule {
       // sig) rides along so the query itself exhibits the estimator's
       // agreement with the 64-value estimate on true near-dups
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
+      val corpus = nearDupCorpus(d)
+      val pairs = nearDupPairs(corpus)
       val bs = Dedup.bbitSignatures(corpus, "doc_id", "text",
         shingleN = 5, numHashes = 64)
       pairs
@@ -905,13 +898,9 @@ private[graft] object Queries156to222 extends QueryModule {
       // "merge & survive" step an MDM/curation pipeline runs after
       // linkage; all mode picks are min_by hash aggregates, no windows
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
-      val clusters = Dedup.dedupClusters(pairs, "doc_a", "doc_b",
-        edgePartitions = 8)
+      val corpus = nearDupCorpus(d)
+      val pairs = nearDupPairs(corpus)
+      val clusters = Dedup.dedupClusters(pairs, "doc_a", "doc_b")
       val attrs = clusters
         .join(corpus, clusters("id") === corpus("doc_id"))
         .join(d.select(col("doc_id").as("_base"), col("lang"), col("source")),
@@ -1079,18 +1068,11 @@ private[graft] object Queries156to222 extends QueryModule {
       // grown (new-corpus joiners), or stable. The question every
       // incremental dedup ingest has to answer before promoting
       val d = tbl(s, dir, "documents")
-      def corpus(df: org.apache.spark.sql.DataFrame) =
-        df.select(col("doc_id"), col("text")).union(
-          df.select(col("doc_id") + 1000000,
-            expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      def clusters(c: org.apache.spark.sql.DataFrame) =
-        Dedup.dedupClusters(
-          Dedup.minhashLshPairs(c, "doc_id", "text",
-            shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8),
-          "doc_a", "doc_b", edgePartitions = 8)
+      def clusters(docs: org.apache.spark.sql.DataFrame) =
+        Dedup.dedupClusters(nearDupPairs(nearDupCorpus(docs)),
+          "doc_a", "doc_b")
       Dedup.clusterEvolution(
-          clusters(corpus(d.filter(col("doc_id") < 300))),
-          clusters(corpus(d)))
+          clusters(d.filter(col("doc_id") < 300)), clusters(d))
         .orderBy("old_rep")
     }),
 
@@ -1999,9 +1981,7 @@ private[graft] object Queries156to222 extends QueryModule {
       // q35's assignment subquery → one contingency → pair-count ARI;
       // every binomial is BIGINT, // 2, the ratio one fixed double tree
       "q216_clustering_ari" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid,
-          |    CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
+        s"""WITH $codebookCte,
           |a0 AS (SELECT e.vec_id, e.label, c.cid AS centroid_id,
           |    row_number() OVER (PARTITION BY e.vec_id
           |      ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv),

@@ -497,11 +497,8 @@ private[graft] object Queries273to319 extends QueryModule {
       // you whether near-dups cross provenance boundaries (they should
       // rarely: high cross-source agreement hints template contamination)
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
+      val corpus = nearDupCorpus(d)
+      val pairs = nearDupPairs(corpus)
       val meta = d.select(col("doc_id"), col("source"), col("lang"))
       val withMeta = pairs
         .withColumn("base_a", pmod(col("doc_a"), lit(1000000L)))
@@ -949,13 +946,9 @@ private[graft] object Queries273to319 extends QueryModule {
       // actually run on a billion-edge near-dup graph — same corpus,
       // same oracle as q56
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
-      Dedup.dedupClusters(pairs, "doc_a", "doc_b", edgePartitions = 8,
-          collectThreshold = 0L)
+      val corpus = nearDupCorpus(d)
+      val pairs = nearDupPairs(corpus)
+      Dedup.dedupClusters(pairs, "doc_a", "doc_b", collectThreshold = 0L)
         .select(col("id").as("doc_id"), col("cluster_rep"))
         .orderBy("doc_id")
     }),
@@ -1945,15 +1938,9 @@ private[graft] object Queries273to319 extends QueryModule {
       // q54's assign/probe replay with the label predicate applied to
       // the probed-cell scan (pre-filter semantics)
       "q312_filtered_ann" ->
-        """WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
-          |c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |assign AS (
-          |  SELECT vec_id, centroid_id FROM (
-          |    SELECT e.vec_id, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
+        s"""WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qv FROM embeddings WHERE vec_id = 0),
+          |$codebookCte,
+          |$assignCte,
           |probes AS (SELECT cid FROM c, q ORDER BY list_distance(cv, qv), cid LIMIT 2)
           |SELECT e.vec_id, e.label, a.centroid_id,
           |  round(1.0 - list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), qv), 6) AS distance

@@ -358,11 +358,8 @@ private[graft] object Queries320to368 extends QueryModule {
       // is splitting by cluster rep, and this query measures the blast
       // radius of not doing so
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
+      val corpus = nearDupCorpus(d)
+      val pairs = nearDupPairs(corpus)
       val clusters = Dedup.dedupClusters(pairs, "doc_a", "doc_b")
       Sampling.splitLeakageAudit(
           clusters.select(col("id"), col("cluster_rep")), "id", "cluster_rep")
@@ -868,18 +865,9 @@ private[graft] object Queries320to368 extends QueryModule {
       // q101's kNN graph replayed, then per-node neighbor label votes:
       // disagreement share + majority label, ties toward smaller label
       "q321_label_noise" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |a AS (SELECT vec_id, embedding, centroid_id FROM (
-          |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
-          |p AS (SELECT l.vec_id AS id, r.vec_id AS nbr_id,
-          |    1.0 - list_cosine_similarity(CAST(l.embedding AS DOUBLE[]),
-          |      CAST(r.embedding AS DOUBLE[])) AS distance
-          |  FROM a l JOIN a r ON l.centroid_id = r.centroid_id
-          |    AND l.vec_id <> r.vec_id),
+        s"""WITH $codebookCte,
+          |$assignedCte,
+          |$cellPairsCte,
           |g AS (SELECT id, nbr_id FROM (SELECT id, nbr_id,
           |    row_number() OVER (PARTITION BY id ORDER BY distance, nbr_id) AS rank
           |  FROM p) WHERE rank <= 3),
@@ -1721,15 +1709,8 @@ private[graft] object Queries320to368 extends QueryModule {
       // the q103 IVF/exact CTEs at k=10, then precision-at-hit-rank sums
       // and the decimal-exact MAP on every row
       "q353_map_eval" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid,
-          |    CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |a AS (SELECT vec_id, embedding, centroid_id FROM (
-          |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv),
-          |          c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
+        s"""WITH $codebookCte,
+          |$assignedCte,
           |q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
           |  FROM embeddings WHERE vec_id < 5),
           |probe AS (SELECT query_id, qv, cid FROM (
@@ -1776,9 +1757,7 @@ private[graft] object Queries320to368 extends QueryModule {
       // the q35 assignment with per-row rounded distances, k² centroid
       // separations, max-ratio per cell, decimal-mean DB
       "q354_davies_bouldin" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid,
-          |    CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
+        s"""WITH $codebookCte,
           |asg AS (SELECT vec_id, centroid_id, round(centroid_dist, 6) AS d
           |  FROM (
           |    SELECT e.vec_id, c.cid AS centroid_id,
@@ -1810,9 +1789,7 @@ private[graft] object Queries320to368 extends QueryModule {
       // per-point rounded distances to every centroid, argmin a /
       // second-min b, decimal-mean s per cell and globally
       "q355_silhouette" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid,
-          |    CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
+        s"""WITH $codebookCte,
           |d AS (SELECT e.vec_id AS id, c.cid,
           |    round(list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), 6)
           |      AS dist

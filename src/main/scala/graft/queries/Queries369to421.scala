@@ -32,11 +32,8 @@ private[graft] object Queries369to421 extends QueryModule {
       // over cluster sizes — the honest independent-example count the
       // raw row count overstates under duplication
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
+      val corpus = nearDupCorpus(d)
+      val pairs = nearDupPairs(corpus)
       val clusters = Dedup.dedupClusters(pairs, "doc_a", "doc_b")
       Dedup.effectiveSampleSize(clusters.select("cluster_rep"),
         "cluster_rep", 2L * d.count())
@@ -1001,13 +998,10 @@ private[graft] object Queries369to421 extends QueryModule {
       // TWO truncation depths per doc so wedges exist by construction:
       // d ~ cut7 and cut7 ~ cut14 match; whether d ~ cut14 closes the
       // triangle is exactly what the audit measures
-      val corpus = d.select(col("doc_id"), col("text"))
-        .union(d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
+      val corpus = nearDupCorpus(d)
         .union(d.select(col("doc_id") + 2000000,
           expr("substring(text, 1, greatest(length(text) - 14, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
+      val pairs = nearDupPairs(corpus)
       Dedup.matchTransitivityAudit(pairs, "doc_a", "doc_b")
     }),
 
@@ -1323,18 +1317,9 @@ private[graft] object Queries369to421 extends QueryModule {
       // stored-graph probe must be indistinguishable from the in-query
       // path, so the oracle never sees the store
       "q378_graph_store" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |a AS (SELECT vec_id, embedding, centroid_id FROM (
-          |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
-          |p AS (SELECT l.vec_id AS id, r.vec_id AS nbr_id,
-          |    1.0 - list_cosine_similarity(CAST(l.embedding AS DOUBLE[]),
-          |      CAST(r.embedding AS DOUBLE[])) AS distance
-          |  FROM a l JOIN a r ON l.centroid_id = r.centroid_id
-          |    AND l.vec_id <> r.vec_id),
+        s"""WITH $codebookCte,
+          |$assignedCte,
+          |$cellPairsCte,
           |g0 AS (SELECT id, nbr_id, distance FROM (
           |    SELECT id, nbr_id, distance,
           |      row_number() OVER (PARTITION BY id ORDER BY distance, nbr_id) AS rk
@@ -1474,19 +1459,14 @@ private[graft] object Queries369to421 extends QueryModule {
       // exact new→NN3 forward edges ∪ reverse links) per node, top-3 —
       // the insert rule the store merge must implement and nothing more
       "q382_graph_merge" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
+        s"""WITH $codebookCte,
           |o AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0),
           |a AS (SELECT vec_id, embedding, centroid_id FROM (
           |    SELECT o.vec_id, o.embedding, c.cid AS centroid_id,
           |      row_number() OVER (PARTITION BY o.vec_id
           |        ORDER BY list_distance(CAST(o.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
           |    FROM o, c) WHERE rn = 1),
-          |p AS (SELECT l.vec_id AS id, r.vec_id AS nbr_id,
-          |    1.0 - list_cosine_similarity(CAST(l.embedding AS DOUBLE[]),
-          |      CAST(r.embedding AS DOUBLE[])) AS distance
-          |  FROM a l JOIN a r ON l.centroid_id = r.centroid_id
-          |    AND l.vec_id <> r.vec_id),
+          |$cellPairsCte,
           |g0 AS (SELECT id, nbr_id, distance FROM (
           |    SELECT id, nbr_id, distance,
           |      row_number() OVER (PARTITION BY id ORDER BY distance, nbr_id) AS rk

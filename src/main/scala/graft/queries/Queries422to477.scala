@@ -626,9 +626,7 @@ private[graft] object Queries422to477 extends QueryModule {
       // bias / MAE / RMSE and the share within one hash-granule — the
       // signature-health gate before a corpus-scale re-signature
       val d = tbl(s, dir, "documents").filter(col("doc_id") < 300)
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
+      val corpus = nearDupCorpus(d)
       Dedup.minhashCalibration(corpus, "doc_id", "text", shingleN = 5,
         numHashes = 64, bands = 8, threshold = 0.5)
     }),
@@ -1370,20 +1368,9 @@ private[graft] object Queries422to477 extends QueryModule {
       // q101's kNN edges symmetrized; q111's decimal-moment Pearson
       // over endpoint degrees
       "q448_assortativity" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid,
-          |    CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
-          |a AS (SELECT vec_id, embedding, centroid_id FROM (
-          |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
-          |      row_number() OVER (PARTITION BY e.vec_id
-          |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]),
-          |          c.cv), c.cid) AS rn
-          |    FROM embeddings e, c) WHERE rn = 1),
-          |p AS (SELECT l.vec_id AS id, r.vec_id AS nbr_id,
-          |    1.0 - list_cosine_similarity(CAST(l.embedding AS DOUBLE[]),
-          |      CAST(r.embedding AS DOUBLE[])) AS distance
-          |  FROM a l JOIN a r ON l.centroid_id = r.centroid_id
-          |    AND l.vec_id <> r.vec_id),
+        s"""WITH $codebookCte,
+          |$assignedCte,
+          |$cellPairsCte,
           |g0 AS (SELECT id, nbr_id FROM (
           |    SELECT id, nbr_id, row_number() OVER (PARTITION BY id
           |      ORDER BY distance, nbr_id) AS rk FROM p) WHERE rk <= 3),
@@ -1840,9 +1827,7 @@ private[graft] object Queries422to477 extends QueryModule {
       // q443's JS pipeline over centroid-cell counts; the assignment
       // replays as the q418 rn=1 argmin
       "q463_semantic_divergence" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid,
-          |    CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
+        s"""WITH $codebookCte,
           |asn AS (SELECT label, centroid_id FROM (
           |    SELECT e.label, c.cid AS centroid_id,
           |      row_number() OVER (PARTITION BY e.vec_id

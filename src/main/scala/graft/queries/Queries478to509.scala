@@ -330,13 +330,10 @@ private[graft] object Queries478to509 extends QueryModule {
       // (singletons kept as their own cluster), pair-counting
       // precision/recall/F1/Rand/ARI — all exact BIGINT pair counts
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text"))
-        .union(d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
+      val corpus = nearDupCorpus(d)
         .union(d.select(col("doc_id") + 2000000,
           expr("substring(text, 1, greatest(length(text) - 14, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-        shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
+      val pairs = nearDupPairs(corpus)
       val cl = Dedup.dedupClusters(pairs, "doc_a", "doc_b")
         .withColumnRenamed("id", "doc_id")
       val assign = corpus.select("doc_id").join(cl, Seq("doc_id"), "left")
@@ -1709,9 +1706,7 @@ private[graft] object Queries478to509 extends QueryModule {
       // list_cosine_similarity expression trees Spark's native
       // expressions replay bit-for-bit
       "q506_hierarchical_entry" ->
-        """WITH c AS (SELECT CAST(vec_id AS INT) AS cid,
-          |    CAST(embedding AS DOUBLE[]) AS cv
-          |  FROM embeddings WHERE vec_id < 8),
+        s"""WITH $codebookCte,
           |ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
           |  FROM embeddings),
           |a AS (SELECT vec_id, centroid_id, adist FROM (

@@ -286,9 +286,7 @@ private[graft] object Queries522to532 extends QueryModule {
     // graphs (ce2/ce4/ce8), one greedy argmin per layer (d1/d2/d3),
     // then the q506 medoid + beam tail verbatim
     "q523_layered_entry" ->
-      """WITH c AS (SELECT CAST(vec_id AS INT) AS cid,
-        |    CAST(embedding AS DOUBLE[]) AS cv
-        |  FROM embeddings WHERE vec_id < 8),
+      s"""WITH $codebookCte,
         |ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
         |  FROM embeddings),
         |a AS (SELECT vec_id, centroid_id, adist FROM (
@@ -452,9 +450,7 @@ private[graft] object Queries522to532 extends QueryModule {
          |lex AS (SELECT id,
          |    CAST(row_number() OVER (ORDER BY score DESC, id) AS INT)
          |      AS rank FROM lexbase),
-         |c AS (SELECT CAST(vec_id AS INT) AS cid,
-         |    CAST(embedding AS DOUBLE[]) AS cv
-         |  FROM embeddings WHERE vec_id < 8),
+         |$codebookCte,
          |ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
          |  FROM embeddings),
          |a AS (SELECT vec_id, centroid_id, adist FROM (

@@ -30,9 +30,7 @@ private[graft] object Queries546to555 extends QueryModule {
       val li = tbl(s, dir, "lineitem").filter(col("l_quantity") <= 1)
         .select((col("l_partkey") % 512).as("src"),
           (col("l_suppkey") % 512).as("dst"))
-      GraphAnalytics.sccLabelsFwBw(li, "src", "dst",
-          shufflePartitions = Some(8))
-        .orderBy("node")
+      GraphAnalytics.sccLabelsFwBw(li, "src", "dst").orderBy("node")
     }),
 
     "q547_timeout_replay" -> ((s, dir) => {
@@ -233,7 +231,7 @@ private[graft] object Queries546to555 extends QueryModule {
         .select(col("id").as("src"), col("nbr_id").as("dst"))
       val rows = Seq(444L).map { b =>
         val d = GraphAnalytics.bidirectionalBfsDistance(
-          edges, "src", "dst", 23L, b, shufflePartitions = Some(4))
+          edges, "src", "dst", 23L, b)
         require(d >= 0 && d <= 12,
           s"q553: distance $d to $b outside the oracle's 12-level " +
             "unroll (bfsUnrollSql) — raise both in lockstep")
@@ -253,11 +251,8 @@ private[graft] object Queries546to555 extends QueryModule {
       // oracle is the SAME recursive-fixpoint SQL as q56/q311: the
       // incremental path must land on the identical labeling
       val d = tbl(s, dir, "documents")
-      val corpus = d.select(col("doc_id"), col("text")).union(
-        d.select(col("doc_id") + 1000000,
-          expr("substring(text, 1, greatest(length(text) - 7, 1))")))
-      val pairs = Dedup.minhashLshPairs(corpus, "doc_id", "text",
-          shingleN = 5, numHashes = 64, bands = 8, threshold = 0.8)
+      val corpus = nearDupCorpus(d)
+      val pairs = nearDupPairs(corpus)
         .localCheckpoint()
       def isOld(c: org.apache.spark.sql.Column) =
         pmod(c, lit(1000000L)) < 400

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators._
 import QueryHelpers._
+import OracleHelpers._
 
 /** Round-10 additions: the cell-scoped GraphStore merge and its
   * merged-vs-rebuilt recall gate (removing the standing-store family's
@@ -72,7 +73,7 @@ private[graft] object Queries556to565 extends QueryModule {
       GraphAnalytics.incrementalScc(
           store.SccStore.labels(s, root).select("node", "scc"),
           store.SccStore.condensation(s, root), newE,
-          "src", "dst", shufflePartitions = Some(8))
+          "src", "dst")
         .orderBy("node")
     }),
 
@@ -145,7 +146,7 @@ private[graft] object Queries556to565 extends QueryModule {
       val oldLabels = store.SccStore.labels(s, root).select("node", "scc")
       val oldCond = store.SccStore.condensation(s, root)
       val newLabels = GraphAnalytics.incrementalScc(oldLabels, oldCond,
-        newE, "src", "dst", shufflePartitions = Some(8))
+        newE, "src", "dst")
       GraphAnalytics.incrementalCondensation(newLabels, oldCond, newE,
           "src", "dst")
         .select(col("src_scc").cast("long").as("src_scc"),
@@ -173,8 +174,7 @@ private[graft] object Queries556to565 extends QueryModule {
       GraphAnalytics.incrementalScc(
           store.SccStore.labels(s, root).select("node", "scc"),
           store.SccStore.condensation(s, root), newE,
-          "src", "dst", shufflePartitions = Some(8),
-          oldCondWcc = Some(store.SccStore.condWcc(s, root)))
+          "src", "dst", oldCondWcc = Some(store.SccStore.condWcc(s, root)))
         .orderBy("node")
     }),
 
@@ -243,19 +243,14 @@ private[graft] object Queries556to565 extends QueryModule {
     // stored half (a/p/g0) and the landing half (rv/allx/rr) are
     // unchanged — only the candidate rule differs
     "q556_graph_merge_scoped" ->
-      """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-        |  FROM embeddings WHERE vec_id < 8),
+      s"""WITH $codebookCte,
         |o AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0),
         |a AS (SELECT vec_id, embedding, centroid_id FROM (
         |    SELECT o.vec_id, o.embedding, c.cid AS centroid_id,
         |      row_number() OVER (PARTITION BY o.vec_id
         |        ORDER BY list_distance(CAST(o.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
         |    FROM o, c) WHERE rn = 1),
-        |p AS (SELECT l.vec_id AS id, r.vec_id AS nbr_id,
-        |    1.0 - list_cosine_similarity(CAST(l.embedding AS DOUBLE[]),
-        |      CAST(r.embedding AS DOUBLE[])) AS distance
-        |  FROM a l JOIN a r ON l.centroid_id = r.centroid_id
-        |    AND l.vec_id <> r.vec_id),
+        |$cellPairsCte,
         |g0 AS (SELECT id, nbr_id, distance FROM (
         |    SELECT id, nbr_id, distance,
         |      row_number() OVER (PARTITION BY id ORDER BY distance, nbr_id) AS rk
@@ -301,8 +296,7 @@ private[graft] object Queries556to565 extends QueryModule {
     // (the q119/q103 replay fragments composed: probe-scoped fw for
     // the merge, cell-local pairs for the rebuild, exact over union)
     "q558_graph_merge_recall" ->
-      """WITH c AS (SELECT CAST(vec_id AS INT) AS cid, CAST(embedding AS DOUBLE[]) AS cv
-        |  FROM embeddings WHERE vec_id < 8),
+      s"""WITH $codebookCte,
         |o AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 2 = 0),
         |u AS (SELECT vec_id, embedding FROM embeddings
         |  WHERE vec_id % 2 = 0 OR (vec_id % 2 = 1 AND vec_id < 60)),
@@ -371,21 +365,13 @@ private[graft] object Queries556to565 extends QueryModule {
     // fragments verbatim; the n%7 node sample keeps the gated
     // adjacency bounded at any scale factor
     "q562_knn_graph_scaled" ->
-      """WITH nc AS (SELECT greatest(8, CAST(count(*) // 128 AS INT)) AS k
+      s"""WITH nc AS (SELECT greatest(8, CAST(count(*) // 128 AS INT)) AS k
         |  FROM embeddings),
         |c AS (SELECT CAST(vec_id AS INT) AS cid,
         |    CAST(embedding AS DOUBLE[]) AS cv
         |  FROM embeddings, nc WHERE vec_id < nc.k),
-        |a AS (SELECT vec_id, embedding, centroid_id FROM (
-        |    SELECT e.vec_id, e.embedding, c.cid AS centroid_id,
-        |      row_number() OVER (PARTITION BY e.vec_id
-        |        ORDER BY list_distance(CAST(e.embedding AS DOUBLE[]), c.cv), c.cid) AS rn
-        |    FROM embeddings e, c) WHERE rn = 1),
-        |p AS (SELECT l.vec_id AS id, r.vec_id AS nbr_id,
-        |    1.0 - list_cosine_similarity(CAST(l.embedding AS DOUBLE[]),
-        |      CAST(r.embedding AS DOUBLE[])) AS distance
-        |  FROM a l JOIN a r ON l.centroid_id = r.centroid_id
-        |    AND l.vec_id <> r.vec_id)
+        |$assignedCte,
+        |$cellPairsCte
         |SELECT CAST(id AS BIGINT) AS id, CAST(rk AS INT) AS rank,
         |  CAST(nbr_id AS BIGINT) AS nbr_id, round(distance, 6) AS distance
         |FROM (SELECT id, nbr_id, distance,

@@ -66,10 +66,8 @@ object SccStore {
     * from-scratch half is the ONE corpus-scale SCC run a standing
     * deployment ever pays; every later batch goes through [[merge]]. */
   def build(spark: SparkSession, root: String, edges: DataFrame,
-            srcCol: String, dstCol: String,
-            shufflePartitions: Option[Int] = None): Unit = {
-    val lbl = GraphAnalytics.sccLabelsFwBw(edges, srcCol, dstCol,
-      shufflePartitions = shufflePartitions)
+            srcCol: String, dstCol: String): Unit = {
+    val lbl = GraphAnalytics.sccLabelsFwBw(edges, srcCol, dstCol)
     val cond = GraphAnalytics.condensationEdges(edges, srcCol, dstCol, lbl)
     write(spark, root, lbl, cond)
   }
@@ -111,15 +109,7 @@ object SccStore {
     * three pieces: SccStoreSpec pins it against from-scratch builds,
     * and the q557/q559/q561 oracles gate the same delta machinery. */
   def merge(spark: SparkSession, root: String, newEdges: DataFrame,
-            srcCol: String, dstCol: String,
-            shufflePartitions: Option[Int] = None): Unit =
-    graft.SessionConf.withShufflePartitions(spark, shufflePartitions) {
-      mergeImpl(spark, root, newEdges, srcCol, dstCol)
-    }
-
-  private def mergeImpl(spark: SparkSession, root: String,
-                        newEdges: DataFrame, srcCol: String,
-                        dstCol: String): Unit = {
+            srcCol: String, dstCol: String): Unit = {
     require(exists(root), s"SccStore.merge: no store at $root")
     val oldLbl = labels(spark, root).select("node", "scc")
     val oldCond = condensation(spark, root).localCheckpoint()

@@ -78,14 +78,11 @@ object EventStreams {
 
   private val replayCounter = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Scoped shuffle-partition override: a streaming query binds its
-    * STATE-STORE partition count to this at start, and the bounded replay
-    * instruments pay per-partition store setup/commit on every
-    * micro-batch (q550: 33 s at 32 partitions → ~3 s at 4). Contract and
-    * enforcement live in [[graft.SessionConf]] (the one definition). */
-  private def withShufflePartitions[A](spark: SparkSession, n: Int)
-      (body: => A): A =
-    graft.SessionConf.withShufflePartitions(spark, n)(body)
+  /** Shuffle partitions the replays start under: a streaming query binds
+    * its STATE-STORE partition count to this at start, and the bounded
+    * replay instruments pay per-partition store setup/commit on every
+    * micro-batch (q550: 33 s at 32 partitions → ~3 s at 4). */
+  private val StatePartitions = 4
 
   /** A watermarked tumbling-window aggregate driven through a REAL
     * micro-batch execution with DETERMINISTIC batches — the machinery
@@ -127,7 +124,7 @@ object EventStreams {
       .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
       .select(col("window.start").cast("timestamp_ntz").as("window_start"),
         col("event_type"), col("n"), col("sum_cents"))
-    withShufflePartitions(spark, 4) {
+    graft.SessionConf.withShufflePartitions(spark, StatePartitions) {
       val q = agg.writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
       try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
@@ -175,7 +172,7 @@ object EventStreams {
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("k")
       .select(col("k"))
-    withShufflePartitions(spark, 4) {
+    graft.SessionConf.withShufflePartitions(spark, StatePartitions) {
       val q = dd.writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
       try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
@@ -223,7 +220,7 @@ object EventStreams {
     val name = s"graft_to_replay_${replayCounter.incrementAndGet()}"
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Event]
-    withShufflePartitions(spark, 4) {
+    graft.SessionConf.withShufflePartitions(spark, StatePartitions) {
       val q = sessionize(mem.toDS(), gapMs).toDF()
         .writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
@@ -284,7 +281,7 @@ object EventStreams {
     // commits them every micro-batch — at a 1,500-row replay the store
     // machinery IS the cost (33 s at 32 partitions, ~7 s at 4; 1 was no
     // better — past a handful the floor is per-micro-batch planning)
-    withShufflePartitions(spark, 4) {
+    graft.SessionConf.withShufflePartitions(spark, StatePartitions) {
       val q = joined.writeStream.format("memory").queryName(name)
         .outputMode(OutputMode.Append()).start()
       try impBatches.zip(clickBatches).foreach { case (ib, cb) =>

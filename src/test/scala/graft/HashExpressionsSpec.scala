@@ -2,14 +2,19 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
 import graft.plans.HashExpressions
 
 class HashExpressionsSpec extends SparkSpec {
   import spark.implicits._
 
-  private lazy val df = {
+  // every test calls graft_* by name, so register them before any runs
+  // (a test run alone must not depend on another having forced `df`)
+  override def beforeAll(): Unit = {
+    super.beforeAll()
     HashExpressions.register(spark)
+  }
+
+  private lazy val df = {
     val rnd = new scala.util.Random(11)
     val words = Seq("spark", "join", "merge", "batch", "window", "scan", "agg")
     (1 to 50).map { i =>
@@ -20,7 +25,7 @@ class HashExpressionsSpec extends SparkSpec {
   test("native polynomial shingle hashes equal the declarative form on ASCII input") {
     val rows = df.select(
       array_sort(call_function("graft_shingle_polyhashes", col("text"), lit(5))).as("native"),
-      array_sort(Dedup.shingleHashes("text", 5)).as("hof")).collect()
+      array_sort(HofTwins.shingleHashes("text", 5)).as("hof")).collect()
     rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
   }
 
@@ -66,7 +71,7 @@ class HashExpressionsSpec extends SparkSpec {
     val rows = df.select(
       call_function("graft_minhash_sig",
         call_function("graft_shingle_polyhashes", col("text"), lit(5)), lit(64)).as("native"),
-      Dedup.minhashSignature("text", 5, 64).as("hof")).collect()
+      HofTwins.minhashSignature("text", 5, 64).as("hof")).collect()
     rows.foreach(r => assert(r.getSeq[Long](0) == r.getSeq[Long](1)))
   }
 
@@ -74,7 +79,7 @@ class HashExpressionsSpec extends SparkSpec {
     val rows = df.select(
       call_function("graft_simhash64",
         call_function("graft_token_polyhashes", col("text"))).as("native"),
-      Dedup.simhash("text").as("hof")).collect()
+      HofTwins.simhash("text").as("hof")).collect()
     rows.foreach(r => assert(r.getLong(0) == r.getLong(1)))
   }
 
@@ -89,7 +94,7 @@ class HashExpressionsSpec extends SparkSpec {
   test("short text (< n) hashes the whole string, like the declarative branch") {
     val rows = Seq("ab").toDF("text").select(
       call_function("graft_shingle_polyhashes", col("text"), lit(5)).as("native"),
-      Dedup.shingleHashes("text", 5).as("hof")).head()
+      HofTwins.shingleHashes("text", 5).as("hof")).head()
     assert(rows.getSeq[Long](0) == rows.getSeq[Long](1))
     assert(rows.getSeq[Long](0).length == 1)
   }

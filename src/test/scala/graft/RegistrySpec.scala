@@ -210,4 +210,49 @@ class RegistrySpec extends SparkSpec {
     assert(e.getMessage.contains(s"$d/nation.parquet"), e.getMessage)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(d))
   }
+
+  // --- one definition per shared query input ----------------------------
+  //
+  // The oracles' codebook, assignment and cell-pair CTEs and the builders'
+  // near-dup corpus and canonical LSH call were once copied by hand into
+  // every query that used them. Each is now written once, in
+  // OracleHelpers or QueryHelpers; a new hand copy shows up here.
+
+  private lazy val querySources = sources("src/main/scala/graft/queries")
+
+  test("each shared oracle CTE is written once under queries/") {
+    // SQL text with string margins dropped and whitespace collapsed, so a
+    // copy re-wrapped over other lines still counts
+    def collapsed(text: String): String =
+      text.linesIterator.map(_.trim.stripPrefix("|")).mkString(" ")
+        .replaceAll("\\s+", " ")
+    val all = querySources.map { case (_, t) => collapsed(t) }.mkString(" ")
+    import graft.queries.OracleHelpers._
+    for (cte <- Seq(codebookCte, assignedCte, assignCte, cellPairsCte)) {
+      val n = ("(?<!\\w)" + java.util.regex.Pattern.quote(collapsed(cte))).r
+        .findAllMatchIn(all).size
+      assert(n == 1, s"${cte.take(40)}... written $n times")
+    }
+  }
+
+  test("the near-dup twin column is built only by QueryHelpers and q22") {
+    val twin = """expr("substring(text, 1, greatest(length(text) - 7, 1))")"""
+    val users = querySources.flatMap { case (f, text) =>
+      java.util.regex.Pattern.quote(twin).r.findAllMatchIn(text).map(_ => f) }
+    assert(users.sorted == Seq("Queries001to090.scala", "QueryHelpers.scala"), users)
+    assert(queryBlocks("q22_ngram_jaccard").contains(twin))
+  }
+
+  test("the canonical MinHash-LSH call is written once in the query builders") {
+    val call = """minhashLshPairs\([^)]*bands = 8, threshold = 0\.8\)""".r
+    val users = querySources.flatMap { case (f, text) =>
+      call.findAllMatchIn(text).map(_ => f) }
+    assert(users == Seq("QueryHelpers.scala"), users)
+  }
+
+  test("no caller-set partition knob is left in src/main") {
+    val knobs = mainSources.collect { case (f, text)
+      if text.contains("shufflePartitions") || text.contains("edgePartitions") => f }
+    assert(knobs.isEmpty, knobs)
+  }
 }

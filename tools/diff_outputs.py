@@ -2,6 +2,7 @@
 """Compare two `graft.Verify` output dirs query by query.
 
     python3 tools/diff_outputs.py <base_dir> <new_dir> [query...]
+    python3 tools/diff_outputs.py --oracle-sql <base.json> <new.json>
 
 For each query (default: every q* dir in either output dir) the two
 parquet outputs are read with DuckDB and compared: first the column
@@ -12,17 +13,48 @@ query and exits 1 if any query differs or is missing from either dir.
 Use it where the DuckDB oracle cannot judge (q503's oracle runs out of
 memory on a 15 GB box: compare against a parent-commit Verify instead)
 and to show a refactor leaves outputs row-identical.
+
+With --oracle-sql the two arguments are `oracle_sql.json` dumps (as
+written by `graft.Verify`; `runMain graft.Verify <sf> <out> __none__`
+writes only that file). Every key whose SQL differs once runs of
+whitespace are collapsed to one space is listed, as is every key missing
+from either side; the exit status is 1 on any difference. A refactor of
+how the oracle SQL is assembled should report every key identical.
 """
 import glob
+import json
 import os
+import re
 import sys
-
-import duckdb
 
 
 def parquet_glob(out_dir, query):
     files = glob.glob(os.path.join(out_dir, query, "*.parquet"))
     return os.path.join(out_dir, query, "*.parquet") if files else None
+
+
+def collapse(sql):
+    return re.sub(r"\s+", " ", sql).strip()
+
+
+def diff_oracle_sql(base_json, new_json):
+    with open(base_json) as f:
+        base = json.load(f)
+    with open(new_json) as f:
+        new = json.load(f)
+    keys = sorted(set(base) | set(new))
+    bad = 0
+    for k in keys:
+        if k not in base or k not in new:
+            side = base_json if k not in base else new_json
+            print(f"{k:36s} MISSING in {side}")
+        elif collapse(base[k]) != collapse(new[k]):
+            print(f"{k:36s} SQL differs")
+        else:
+            continue
+        bad += 1
+    print(f"\n{len(keys) - bad}/{len(keys)} identical")
+    return 1 if bad or not keys else 0
 
 
 def compare(con, base, new):
@@ -50,9 +82,12 @@ def compare(con, base, new):
 
 
 def main(argv):
-    if len(argv) < 3:
+    if len(argv) == 4 and argv[1] == "--oracle-sql":
+        return diff_oracle_sql(argv[2], argv[3])
+    if len(argv) < 3 or argv[1].startswith("--"):
         print(__doc__.strip(), file=sys.stderr)
         return 2
+    import duckdb
     base_dir, new_dir, queries = argv[1], argv[2], argv[3:]
     if not queries:
         names = {os.path.basename(d)
