@@ -1,6 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.concurrent.Await
+import scala.concurrent.duration.FiniteDuration
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -74,12 +77,19 @@ object GraphAnalytics {
       .filter(col("a") =!= col("b"))
       .distinct()
 
+  /** Directed (src, dst) edges cast to long, self-loops dropped,
+    * de-duplicated — not materialized, like [[canonical]]. */
+  private def directed(edges: DataFrame, srcCol: String,
+                       dstCol: String): DataFrame =
+    edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"))
+      .filter(col("src") =!= col("dst")).distinct()
+
   /** Level-synchronous BFS over `und` (an [[undirected]] edge set) from
-    * every seed row at once, capped at `maxHops`: per hop one join of
-    * the (shrinking) frontier against the edges and an anti-join on the
-    * visited set, the frontier localCheckpoint'd. The visited set is the
-    * union of those checkpointed frontiers and is read once per hop, so
-    * it is never re-materialized. `seeds` is (node) for one BFS or
+    * every seed row at once, on [[closure]]: per hop one join of the
+    * frontier against the edges, anti-joined on the visited set; it
+    * stops at the first empty frontier, or after `maxHops` hops on a
+    * graph deeper than that. `seeds` is (node) for one BFS or
     * (source, node) for one BFS per source, each source's rows exactly
     * its own single-source BFS. (A single BFS stays keyed by node alone:
     * a constant source key would cost hop 1 its reuse of the frontier's
@@ -88,17 +98,13 @@ object GraphAnalytics {
   private def bfs(und: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     val keys = seeds.columns.toSeq
     val carried = keys.filter(_ != "node").map(col)
-    var dist = seeds.withColumn("d", lit(0)).localCheckpoint()
-    var frontier = dist
-    for (h <- 1 to maxHops) {
-      frontier = frontier.join(und, frontier("node") === und("a"))
+    val (levels, _) = closure(seeds.withColumn("d", lit(0)).localCheckpoint(),
+        keys, maxHops) { (frontier, h) =>
+      frontier.join(und, frontier("node") === und("a"))
         .select(carried :+ col("b").as("node"): _*).distinct()
-        .join(dist.select(keys.map(col): _*), keys, "left_anti")
         .withColumn("d", lit(h))
-        .localCheckpoint()
-      dist = dist.union(frontier)
     }
-    dist
+    levels.reduce(_ unionByName _)
   }
 
   /** Fixed-point PageRank (Page et al. 1999, damping d = 0.85) over an
@@ -746,51 +752,43 @@ object GraphAnalytics {
     * per-source arithmetic (σ sums, δ decimal accumulation, level
     * structure) is IDENTICAL to running K independent passes (frames
     * partition by src by construction: a (src, node) row never mixes
-    * with another source's rows). Returns (src, node, dist, sigma,
-    * delta) for every (pivot, reached node) pair. */
+    * with another source's rows). The forward pass is a [[closure]]
+    * from the pivots, so it stops at the first empty level; the
+    * backward pass starts from the deepest non-empty level (a deeper,
+    * empty level would only contribute δ = 0). Returns (src, node,
+    * dist, sigma, delta) for every (pivot, reached node) pair. */
   private def brandesFromAll(und: DataFrame, sources: Seq[Long],
                              maxDepth: Int): DataFrame = {
     val d18 = (c: Column) => c.cast("decimal(38,18)")
     val spark = und.sparkSession
     import spark.implicits._
-    // forward: levels with path counts, keyed by (src, node). Each
-    // level's frontier is ALREADY an eagerly-checkpointed frame, so keep
-    // the per-level handles: the backward pass reads level h directly
-    // instead of filtering a consolidated info frame three times per
-    // level — which also lets `info` stay the cheap union of
-    // checkpointed leaves (read once per round, by the anti-join), the
-    // same read-pattern rule that keeps [[bfs]]'s visited set
-    // uncheckpointed: checkpoint policy follows the READ pattern
+    // forward: levels with path counts, keyed by (src, node). The
+    // closure hands back each level's checkpointed frame, so the
+    // backward pass reads level h directly instead of filtering a
+    // consolidated info frame three times per level
     val level0 = und.select(col("a").as("node")).distinct()
       .join(sources.toDF("src"), col("node") === col("src"))
       .select(col("src"), col("node"), lit(0).as("dist"),
         lit(1L).as("sigma"))
       .localCheckpoint()
-    val levels = scala.collection.mutable.ArrayBuffer(level0)
-    var info = level0
-    var frontier = level0
-    for (h <- 1 to maxDepth) {
-      frontier = frontier
+    val (levels, _) = closure(level0, Seq("src", "node"), maxDepth) {
+      (frontier, h) => frontier
         .join(und, frontier("node") === und("a"))
         .groupBy(col("src"), col("b").as("node"))
         .agg(sum("sigma").as("sigma"))
-        .join(info.select(col("src"), col("node")), Seq("src", "node"),
-          "left_anti")
         .select(col("src"), col("node"), lit(h).as("dist"), col("sigma"))
-        .localCheckpoint()
-      levels += frontier
-      info = info.union(frontier) // leaves checkpointed; anti-join only
     }
     // backward: dependencies level by level, still keyed by src. delta
-    // carries (dist, sigma) through, so the per-level "re-attach sigma"
-    // join onto info and the final info⋈acc join are both gone — acc IS
+    // carries (dist, sigma) through, so no per-level "re-attach sigma"
+    // join onto the reached set and no final reached⋈acc join — acc IS
     // the (src, node, dist, sigma, delta) result (each reached node has
-    // exactly one dist, so the level frames partition info)
-    var delta = levels(maxDepth)
+    // exactly one dist, so the level frames partition the reached set)
+    val deepest = levels.size - 1
+    var delta = levels(deepest)
       .select(col("src"), col("node"), col("dist"), col("sigma"),
         lit(0.0).as("delta"))
     var acc = delta
-    for (h <- (maxDepth - 1) to 0 by -1) {
+    for (h <- (deepest - 1) to 0 by -1) {
       val upper = delta.select(col("src"), col("node").as("b"),
         col("sigma").as("sv"), col("delta").as("dv"))
       val lvlNodes = levels(h)
@@ -1085,23 +1083,62 @@ object GraphAnalytics {
     * inside `BigInteger.multiply` during stats visits (measured on the
     * sf0.1 kNN graph: boruvkaMst round 4 actions 20-300 s each, round 5
     * edge-join 220 s, ALL driver-side stats arithmetic — the tasks
-    * themselves ran in milliseconds). Re-wrapping the materialized RDD
-    * in a fresh LogicalRDD resets the estimate to the constant default,
-    * keeping every stats visit O(1) regardless of loop depth; the price
-    * is that these tiny loop frames lose auto-broadcast (their joins
-    * stay shuffle joins — bounded, correct, and measured fast). */
+    * themselves ran in milliseconds). Re-wrapping the checkpoint's own
+    * LogicalRDD without its origin stats resets the estimate to the
+    * constant default, keeping every stats visit O(1) regardless of
+    * loop depth; the price is that these tiny loop frames lose
+    * auto-broadcast (their joins stay shuffle joins — bounded, correct,
+    * and measured fast). The re-wrap keeps the checkpoint's InternalRow
+    * blocks and output partitioning: rebuilding the frame from `ck.rdd`
+    * (a Row RDD) made every later scan convert each row twice, which
+    * put the BFS/Brandes levels — each re-read by every later hop's
+    * anti-join — 10–20% behind a plain localCheckpoint at sf0.1. */
   private def checkpointDropStats(df: DataFrame): DataFrame = {
     val ck = df.localCheckpoint()
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
+    val session = ck.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    ck.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        new org.apache.spark.sql.classic.Dataset(session,
+          r.copy()(session, None, None),
+          org.apache.spark.sql.Encoders.row(ck.schema))
+    }
   }
 
-  /** Semi-naive closure to fixpoint from `seed`: each step `expand`s the
-    * last delta, anti-joins it against everything reached on `keys` and
-    * checkpoints it with stats dropped; an empty delta is the fixpoint.
-    * A closure still moving after `maxSteps` steps RAISES (`what` names
-    * it) — never a silently truncated reach. Returns (reached, steps).
+  /** [[checkpointDropStats]] that also returns the number of rows
+    * matching `where` (every row by default), taken by the checkpoint's
+    * OWN job: the count rides it as an observed metric
+    * ([[Profiling.withObservedMetrics]]), so a loop's stop test costs no
+    * second `isEmpty`/`count()` job over the blocks just written. */
+  private[graft] def counted(df: DataFrame,
+                             where: Column = lit(true)): (DataFrame, Long) = {
+    val (observed, obs) = Profiling.withObservedMetrics(df, "counted",
+      Seq(count(when(where, true)).as("n")))
+    val ck = checkpointDropStats(observed)
+    (ck, awaitCount(obs))
+  }
+
+  /** The count a [[counted]] checkpoint observed. Spark hands observed
+    * metrics over through a query listener after the job ends; the wait
+    * is bounded, so a metric that never arrives throws instead of
+    * hanging the loop. */
+  private[graft] def awaitCount(obs: Observation,
+      wait: FiniteDuration = FiniteDuration(60, "s")): Long =
+    try Await.result(obs.future, wait).getLong(0)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"counted: observed metric '${obs.name}' not reported within $wait")
+    }
+
+  /** The one semi-naive frontier loop: from `seed`, each step `expand`s
+    * the last delta (the step number is its second argument),
+    * anti-joins it against everything reached on `keys` and
+    * [[counted]]-checkpoints it; the first empty delta is the fixpoint.
+    * Runs at most `maxSteps` steps. Returns the levels — `seed` then
+    * every non-empty delta, in step order — and whether it settled;
+    * callers that must not truncate (`sccLabels`, FwBw) `require` it.
     *
-    * `reached` stays a UNION TREE of checkpointed deltas, never
+    * The reached set stays a UNION TREE of checkpointed deltas, never
     * re-materialized per step (that would rewrite O(reached) rows every
     * step): plan width grows one LogicalRDD per step, bounded by
     * `maxSteps`, and the default-constant leaf stats SUM across a union
@@ -1109,23 +1146,22 @@ object GraphAnalytics {
     * redo: folding the fixpoint probe into a manual Row-rdd
     * persist+count saved one tiny job per step but paid Row↔InternalRow
     * conversion on every later step's scan of the delta blocks — net
-    * SLOWER than localCheckpoint + isEmpty. */
-  private def closure(seed: DataFrame, keys: Seq[String], maxSteps: Int,
-                      what: String)
-                     (expand: DataFrame => DataFrame): (DataFrame, Int) = {
+    * SLOWER than localCheckpoint + isEmpty. The observed count of
+    * [[counted]] saves the same job without that round trip: the delta
+    * is still the checkpoint's own block. */
+  private def closure(seed: DataFrame, keys: Seq[String], maxSteps: Int)
+                     (expand: (DataFrame, Int) => DataFrame)
+      : (IndexedSeq[DataFrame], Boolean) = {
+    val levels = scala.collection.mutable.ArrayBuffer(seed)
     var reached = seed
-    var frontier = seed
     var settled = false
-    var steps = 0
-    while (!settled && steps < maxSteps) {
-      steps += 1
-      val delta = expand(frontier).join(reached, keys, "left_anti")
-        .transform(checkpointDropStats)
-      if (delta.isEmpty) settled = true
-      else { reached = reached.unionByName(delta); frontier = delta }
+    while (!settled && levels.size <= maxSteps) {
+      val (delta, n) = counted(
+        expand(levels.last, levels.size).join(reached, keys, "left_anti"))
+      if (n == 0) settled = true
+      else { levels += delta; reached = reached.unionByName(delta) }
     }
-    require(settled, s"$what not settled within $maxSteps steps")
-    (reached, steps)
+    (levels.toIndexedSeq, settled)
   }
 
   /** Borůvka minimum spanning tree — the MST algorithm that is actually
@@ -1178,13 +1214,13 @@ object GraphAnalytics {
       .filter(col("lo") =!= col("hi"))
       .groupBy("lo", "hi").agg(min("w").as("w"))
       .transform(checkpointDropStats)
-    var labels = e.select(col("lo").as("v"))
-      .unionByName(e.select(col("hi").as("v"))).distinct()
-      .select(col("v"), col("v").as("lab")).transform(checkpointDropStats)
     // component count only gates the contraction path (the dual-path
     // switch of Dedup.dedupClusters); it shrinks by the merge count
-    // each round, so one initial action tracks it exactly thereafter
-    var nComponents = labels.count()
+    // each round, so the first labels checkpoint's count tracks it
+    // exactly thereafter
+    var (labels, nComponents) = counted(e.select(col("lo").as("v"))
+      .unionByName(e.select(col("hi").as("v"))).distinct()
+      .select(col("v"), col("v").as("lab")))
     var mst: DataFrame = null
     var converged = false
     var r = 0
@@ -1202,9 +1238,8 @@ object GraphAnalytics {
           col("w"), col("lo"), col("hi")))
       val wSel = Window.partitionBy("c")
         .orderBy(col("w"), col("lo"), col("hi"))
-      val sel = inc.withColumn("rn", row_number().over(wSel))
-        .filter(col("rn") === 1).select("c", "o", "w", "lo", "hi")
-        .transform(checkpointDropStats)
+      val (sel, nSel) = counted(inc.withColumn("rn", row_number().over(wSel))
+        .filter(col("rn") === 1).select("c", "o", "w", "lo", "hi"))
       if (nComponents <= maxDriverComponents) {
         // DRIVER contraction: sel has one row per component with an
         // outgoing edge (≤ nComponents, gated), and the pointer chase
@@ -1255,7 +1290,7 @@ object GraphAnalytics {
               coalesce(col("root"), col("lab")).as("lab"))
             .transform(checkpointDropStats)
         }
-      } else if (sel.isEmpty) converged = true // no inter-component edge
+      } else if (nSel == 0) converged = true // no inter-component edge
       else {
         val newEdges = sel
           .select(lit(r).as("round"), col("lo"), col("hi"), col("w"))
@@ -1271,32 +1306,36 @@ object GraphAnalytics {
         // pointer-double to the fixpoint (each step MUST checkpoint AND
         // drop stats — the self-join references p twice, and both an
         // untruncated plan and an inherited size estimate double per
-        // step: the q522 plan-reuse explosion and its stats twin)
-        var p = p0.as("a")
+        // step: the q522 plan-reuse explosion and its stats twin).
+        // Merges performed = components whose root is not themselves.
+        // The only cycles were the mutual 2-cycles broken here, so a
+        // component is a root iff it now points at itself: this
+        // checkpoint counts the merges
+        val (broken, merged) = counted(p0.as("a")
           .join(p0.select(col("c").as("pc"), col("p").as("pp")),
             col("a.p") === col("pc"))
           .select(col("a.c").as("c"),
             when(col("pp") === col("a.c"), least(col("a.c"), col("a.p")))
-              .otherwise(col("a.p")).as("p"))
-          .transform(checkpointDropStats)
+              .otherwise(col("a.p")).as("p")),
+          col("p") =!= col("c"))
+        var p = broken
         var settled = false
         var j = 0
         while (!settled && j < maxJumps) {
           j += 1
-          val p2 = p.as("x")
+          // x.p is c's pointer before this step: the step settles when
+          // no pointer moved
+          val (p2, moved) = counted(p.as("x")
             .join(p.select(col("c").as("yc"), col("p").as("yp")),
               col("x.p") === col("yc"))
-            .select(col("x.c").as("c"), col("yp").as("p"))
-            .transform(checkpointDropStats)
-          settled = p2.as("n")
-            .join(p.select(col("c"), col("p").as("_old")), Seq("c"))
-            .filter(col("p") =!= col("_old")).isEmpty
+            .select(col("x.c").as("c"), col("yp").as("p"),
+              col("x.p").as("_old")),
+            col("p") =!= col("_old"))
+          settled = moved == 0
           p = p2
         }
         require(settled,
           s"boruvkaMst: pointer doubling not settled in $maxJumps steps")
-        // merges performed = components that changed their root
-        val merged = p.filter(col("p") =!= col("c")).count()
         nComponents -= merged
         labels = labels
           .join(p.select(col("c").as("lab"), col("p")), Seq("lab"))
@@ -1330,9 +1369,7 @@ object GraphAnalytics {
     * both checkpoint-truncated with stats dropped. */
   def sccLabels(edges: DataFrame, srcCol: String, dstCol: String,
                 maxIters: Int): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+    val e = directed(edges, srcCol, dstCol).localCheckpoint()
     // SEMI-NAIVE closure: frontier ∘ base-edges, minus known. The
     // path-doubling alternative (R ← R ∪ R∘R, ⌈log₂ d⌉ rounds) was
     // MEASURED 6× SLOWER here (30.5 s vs 5.0 s steady at sf0.1, do not
@@ -1340,13 +1377,15 @@ object GraphAnalytics {
     // multiplies in/out degrees of every mid node — ~10⁸ intermediate
     // rows per round against the frontier form's |frontier|·outdeg.
     // Fewer barriers only wins when the per-round work stays bounded.
-    val (reach, _) = closure(e, Seq("src", "dst"), maxIters,
-        "sccLabels: closure") { frontier =>
-      frontier.select(col("src"), col("dst").as("mid"))
-        .join(e.select(col("src").as("mid"), col("dst")), Seq("mid"))
-        .select("src", "dst").filter(col("src") =!= col("dst"))
-        .distinct()
+    val (levels, settled) = closure(e, Seq("src", "dst"), maxIters) {
+      (frontier, _) =>
+        frontier.select(col("src"), col("dst").as("mid"))
+          .join(e.select(col("src").as("mid"), col("dst")), Seq("mid"))
+          .select("src", "dst").filter(col("src") =!= col("dst"))
+          .distinct()
     }
+    require(settled, s"sccLabels: closure not settled within $maxIters steps")
+    val reach = levels.reduce(_ unionByName _)
     val mutual = reach.as("a")
       .join(reach.select(col("src").as("dst"), col("dst").as("src")),
         Seq("src", "dst"))
@@ -1423,16 +1462,13 @@ object GraphAnalytics {
   private def fwBwLabels(edges: DataFrame, srcCol: String, dstCol: String,
                          maxRounds: Int, maxDepth: Int,
                          stats: Option[FwBwStats]): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct()
-      .transform(checkpointDropStats)
+    val e = directed(edges, srcCol, dstCol).localCheckpoint()
+    val (nodes, nNodes) = counted(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct())
     val empty = nodes.limit(0)
       .select(col("node"), col("node").as("scc"),
         lit(0L).as("scc_size")).limit(0)
-    if (nodes.isEmpty) return empty
+    if (nNodes == 0) return empty
     // initial partitions = WEAKLY connected components (the standard
     // FW-BW preprocessing): disjoint components must decompose in
     // PARALLEL from round 1 — a single shared start partition would
@@ -1445,11 +1481,15 @@ object GraphAnalytics {
     // three-way REST split can still bundle sub-components that then
     // peel pivot-by-pivot — bounded by the SCC-DAG's width, not by the
     // corpus, and `maxRounds` raises rather than mislabels.
-    var parts = Dedup.dedupClusters(
+    var parts: DataFrame = null
+    var nParts = 0L
+    def setParts(df: DataFrame): Unit = {
+      val (p, n) = counted(df); parts = p; nParts = n
+    }
+    setParts(Dedup.dedupClusters(
         e.select(col("src"), col("dst")), "src", "dst")
       .select(col("id").cast("long").as("node"),
-        col("cluster_rep").cast("long").as("part"))
-      .transform(checkpointDropStats)
+        col("cluster_rep").cast("long").as("part")))
     // labeled SCCs accumulate as a union tree of checkpointed deltas
     // (the sccLabels discipline — never re-materialized per round)
     var done: DataFrame = null
@@ -1474,18 +1514,16 @@ object GraphAnalytics {
         // partitions are disjoint node sets, so node alone keys them
         val keep = pe.select(col("src").as("node")).distinct()
           .intersect(pe.select(col("dst").as("node")).distinct())
-        val trim = parts.join(keep, Seq("node"), "left_anti")
-          .transform(checkpointDropStats)
-        if (trim.isEmpty) trimming = false
+        val (trim, nTrim) = counted(parts.join(keep, Seq("node"), "left_anti"))
+        if (nTrim == 0) trimming = false
         else {
           append(trim.select(col("node"), col("node").as("scc")))
-          parts = parts.join(trim.select("node"), Seq("node"), "left_anti")
-            .transform(checkpointDropStats)
+          setParts(parts.join(trim.select("node"), Seq("node"), "left_anti"))
         }
       }
       require(!trimming,
         s"sccLabelsFwBw: trim cascade not settled in $maxDepth passes")
-      if (parts.isEmpty) converged = true
+      if (nParts == 0) converged = true
       else {
         val piv = parts.groupBy("part").agg(min("node").as("pivot"))
           .transform(checkpointDropStats)
@@ -1493,16 +1531,19 @@ object GraphAnalytics {
         // pivot's own partition; one frontier⋈static-edges join +
         // one membership semi-join + one anti-join per step
         def fromPivots(dir: DataFrame): DataFrame = {
-          val (reached, steps) = closure(
+          val (levels, settled) = closure(
               piv.select(col("pivot").as("node"), col("part"))
                 .transform(checkpointDropStats),
-              Seq("node", "part"), maxDepth, "sccLabelsFwBw: BFS") {
-            _.join(dir.select(col("src").as("node"), col("dst")), Seq("node"))
+              Seq("node", "part"), maxDepth) { (frontier, _) =>
+            frontier
+              .join(dir.select(col("src").as("node"), col("dst")), Seq("node"))
               .select(col("dst").as("node"), col("part")).distinct()
               .join(parts, Seq("node", "part"), "left_semi")
           }
-          bfsSteps += steps
-          reached.transform(checkpointDropStats)
+          require(settled,
+            s"sccLabelsFwBw: BFS not settled within $maxDepth steps")
+          bfsSteps += levels.size // the non-empty steps + the settling one
+          levels.reduce(_ unionByName _).transform(checkpointDropStats)
         }
         val fw = fromPivots(e)
         val bw = fromPivots(e.select(col("dst").as("src"), col("src").as("dst")))
@@ -1519,12 +1560,11 @@ object GraphAnalytics {
             when(col("_f") === 1, lit(0))
               .when(col("_b") === 1, lit(1))
               .otherwise(lit(2)).as("branch"))
-        parts = tagged
+        setParts(tagged
           .withColumn("newpart",
             min("node").over(Window.partitionBy("part", "branch")))
-          .select(col("node"), col("newpart").as("part"))
-          .transform(checkpointDropStats)
-        if (parts.isEmpty) converged = true
+          .select(col("node"), col("newpart").as("part")))
+        if (nParts == 0) converged = true
       }
     }
     require(converged,
@@ -1627,20 +1667,18 @@ object GraphAnalytics {
       srcCol: String, dstCol: String,
       oldCondWcc: Option[DataFrame])
       : Option[(DataFrame, DataFrame, DataFrame)] = {
-    val ne = newEdges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+    val ne = directed(newEdges, srcCol, dstCol).localCheckpoint()
     // batch in super space: endpoints → their old SCC label; nodes the
     // old graph never saw are their own super-node
-    val sn = ne
+    val (sn, nSn) = counted(ne
       .join(labels.select(col("node").as("src"), col("scc").as("_ss")),
         Seq("src"), "left")
       .join(labels.select(col("node").as("dst"), col("scc").as("_sd")),
         Seq("dst"), "left")
       .select(coalesce(col("_ss"), col("src")).as("ss"),
         coalesce(col("_sd"), col("dst")).as("sd"))
-      .filter(col("ss") =!= col("sd")).distinct().localCheckpoint()
-    if (sn.isEmpty) return None
+      .filter(col("ss") =!= col("sd")).distinct())
+    if (nSn == 0) return None
     val cond = oldCondensation
       .select(col("src_scc").as("ss"), col("dst_scc").as("sd"))
     val superEdges = cond.unionByName(sn).localCheckpoint()
@@ -1725,10 +1763,7 @@ object GraphAnalytics {
       .join(lbl.select(col("node").as("_od"), col("scc").as("_nd")),
         Seq("_od"))
       .select(col("_ns").as("src_scc"), col("_nd").as("dst_scc"))
-    val ne = newEdges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-    val mapped = ne
+    val mapped = directed(newEdges, srcCol, dstCol)
       .join(lbl.select(col("node").as("src"), col("scc").as("_ns")),
         Seq("src"))
       .join(lbl.select(col("node").as("dst"), col("scc").as("_nd")),
@@ -1760,11 +1795,9 @@ object GraphAnalytics {
     if (a == b) 0L else sized(edges) {
       val spark = edges.sparkSession
       import spark.implicits._
-      val und0 = edges.select(col(srcCol).cast("long").as("u"),
-        col(dstCol).cast("long").as("v"))
-      val und = und0
-        .unionByName(und0.select(col("v").as("u"), col("u").as("v")))
-        .filter(col("u") =!= col("v")).distinct().localCheckpoint()
+      // a self-loop's far end is the node itself, already reached, so the
+      // anti-join below drops it
+      val und = undirected(edges, srcCol, dstCol)
       var reachedA = Seq((a, 0L)).toDF("node", "d")
       var frontA = reachedA
       var reachedB = Seq((b, 0L)).toDF("node", "d")
@@ -1784,8 +1817,8 @@ object GraphAnalytics {
         val (front, reached, other, l) =
           if (expandA) (frontA, reachedA, reachedB, lA + 1)
           else (frontB, reachedB, reachedA, lB + 1)
-        val nf = front.select(col("node").as("u")).join(und, Seq("u"))
-          .select(col("v").as("node")).distinct()
+        val nf = front.select(col("node").as("a")).join(und, Seq("a"))
+          .select(col("b").as("node")).distinct()
           .join(reached, Seq("node"), "left_anti")
           .select(col("node"), lit(l).as("d"))
           .transform(checkpointDropStats)
@@ -1830,9 +1863,7 @@ object GraphAnalytics {
     * = DAG depth. Returns (node, level). */
   def dagLevels(edges: DataFrame, srcCol: String, dstCol: String,
                 maxDepth: Int = 128): DataFrame = {
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct().localCheckpoint()
+    val e = directed(edges, srcCol, dstCol).localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
     var lvl = nodes.select(col("node"), lit(0L).as("level"))
@@ -1845,16 +1876,15 @@ object GraphAnalytics {
         .join(lvl.select(col("node").as("src"), col("level")), Seq("src"))
         .groupBy(col("dst").as("node"))
         .agg(max(col("level") + 1).as("_cand"))
-      val next = lvl.join(relaxed, Seq("node"), "left")
+      // the checkpoint carries each node's old level, so its own job
+      // counts the nodes whose level moved
+      val (next, moved) = counted(lvl.join(relaxed, Seq("node"), "left")
         .select(col("node"),
           greatest(col("level"), coalesce(col("_cand"), lit(0L)))
-            .as("level"))
-        .transform(checkpointDropStats)
-      converged = next.as("n")
-        .join(lvl.select(col("node"), col("level").as("_old")),
-          Seq("node"))
-        .filter(col("level") =!= col("_old")).isEmpty
-      lvl = next
+            .as("level"), col("level").as("_old")),
+        col("level") =!= col("_old"))
+      converged = moved == 0
+      lvl = next.select("node", "level")
     }
     require(converged,
       s"dagLevels: no fixpoint within $maxDepth rounds — the input has " +
@@ -1895,7 +1925,7 @@ object GraphAnalytics {
              k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1, "need k >= 3 and rounds >= 1")
     sized(edges) {
-    var und = canonical(edges, srcCol, dstCol).transform(checkpointDropStats)
+    var (und, entering) = counted(canonical(edges, srcCol, dstCol))
     var out: DataFrame = null
     (1 to rounds).foreach { r =>
       // oriented triangles a<b<c, each counted once
@@ -1907,22 +1937,19 @@ object GraphAnalytics {
         .unionByName(tri.select(col("b").as("a"), col("c").as("b")))
         .unionByName(tri.select(col("a"), col("c").as("b")))
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
-      out = und.join(support, Seq("a", "b"), "left")
+      val (kept, surviving) = counted(und.join(support, Seq("a", "b"), "left")
         .select(col("a"), col("b"),
           coalesce(col("support"), lit(0L)).as("support"))
-        .filter(col("support") >= k - 2)
-        .transform(checkpointDropStats)
-      if (r == rounds) {
-        // fixpoint assertion: both frames are checkpointed, so the two
-        // counts are cached-block scans, not recomputation
-        val entering = und.count()
-        val surviving = out.count()
+        .filter(col("support") >= k - 2))
+      out = kept
+      // fixpoint assertion: both counts come from the checkpoint jobs
+      // that wrote the entering and surviving edge sets
+      if (r == rounds)
         require(surviving == entering,
           s"kTruss: not at fixpoint after $rounds rounds — the last " +
             s"round deleted ${entering - surviving} edges; increase " +
             s"`rounds` (and the oracle's unroll) in lockstep")
-      }
-      if (r < rounds) und = out.select("a", "b")
+      else { und = out.select("a", "b"); entering = surviving }
     }
     out
     }

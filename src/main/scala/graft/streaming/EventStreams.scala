@@ -84,6 +84,30 @@ object EventStreams {
     * micro-batch (q550: 33 s at 32 partitions → ~3 s at 4). */
   private val StatePartitions = 4
 
+  /** The run every `replay*` instrument shares: start `stream` into a
+    * memory sink named `graft_<kind>_replay_<n>` under
+    * [[StatePartitions]], `add` each of `batches` as ONE micro-batch
+    * (`processAllAvailable` after each), stop, and return the sink's
+    * rows DETACHED — collected and re-created, temp view dropped — so
+    * repeated runs in one JVM never collide. */
+  private def replay[B](spark: SparkSession, kind: String,
+                        stream: => DataFrame, batches: Seq[B])
+                       (add: B => Unit): DataFrame = {
+    val name = s"graft_${kind}_replay_${replayCounter.incrementAndGet()}"
+    graft.SessionConf.withShufflePartitions(spark, StatePartitions) {
+      val q = stream.writeStream.format("memory").queryName(name)
+        .outputMode(OutputMode.Append()).start()
+      try batches.foreach { b => add(b); q.processAllAvailable() }
+      finally q.stop()
+    }
+    val out = spark.table(name)
+    val rows = out.collect().toSeq
+    val detached = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 1), out.schema)
+    spark.catalog.dropTempView(name)
+    detached
+  }
+
   /** A watermarked tumbling-window aggregate driven through a REAL
     * micro-batch execution with DETERMINISTIC batches — the machinery
     * that puts Structured Streaming's late-row semantics under the
@@ -115,7 +139,6 @@ object EventStreams {
       windowLen: String, delay: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val name = s"graft_wm_replay_${replayCounter.incrementAndGet()}"
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(java.sql.Timestamp, String, Long)]
     val agg = mem.toDF.toDF("ts", "event_type", "cents")
@@ -124,18 +147,7 @@ object EventStreams {
       .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
       .select(col("window.start").cast("timestamp_ntz").as("window_start"),
         col("event_type"), col("n"), col("sum_cents"))
-    graft.SessionConf.withShufflePartitions(spark, StatePartitions) {
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      finally q.stop()
-    }
-    val out = spark.table(name)
-    val rows = out.collect().toSeq
-    val detached = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), out.schema)
-    spark.catalog.dropTempView(name)
-    detached
+    replay(spark, "wm", agg, batches)(b => mem.addData(b: _*))
   }
 
   /** `dropDuplicatesWithinWatermark` driven through a REAL micro-batch
@@ -165,25 +177,13 @@ object EventStreams {
       delay: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val name = s"graft_dd_replay_${replayCounter.incrementAndGet()}"
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(java.sql.Timestamp, Long)]
     val dd = mem.toDF.toDF("ts", "k")
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("k")
       .select(col("k"))
-    graft.SessionConf.withShufflePartitions(spark, StatePartitions) {
-      val q = dd.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      finally q.stop()
-    }
-    val out = spark.table(name)
-    val rows = out.collect().toSeq
-    val detached = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), out.schema)
-    spark.catalog.dropTempView(name)
-    detached
+    replay(spark, "dd", dd, batches)(b => mem.addData(b: _*))
   }
 
   /** [[sessionize]] driven through a REAL micro-batch execution with
@@ -217,22 +217,10 @@ object EventStreams {
                            gapMs: Long): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val name = s"graft_to_replay_${replayCounter.incrementAndGet()}"
     val mem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Event]
-    graft.SessionConf.withShufflePartitions(spark, StatePartitions) {
-      val q = sessionize(mem.toDS(), gapMs).toDF()
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try batches.foreach { b => mem.addData(b: _*); q.processAllAvailable() }
-      finally q.stop()
-    }
-    val out = spark.table(name)
-    val rows = out.collect().toSeq
-    val detached = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), out.schema)
-    spark.catalog.dropTempView(name)
-    detached
+    replay(spark, "to", sessionize(mem.toDS(), gapMs).toDF(), batches)(
+      b => mem.addData(b: _*))
   }
 
   /** Watermarked stream-stream LEFT OUTER join driven through a REAL
@@ -263,7 +251,6 @@ object EventStreams {
     implicit val sqlCtx = spark.sqlContext
     require(impBatches.size == clickBatches.size,
       "impBatches and clickBatches must pair up 1:1")
-    val name = s"graft_oj_replay_${replayCounter.incrementAndGet()}"
     val impMem = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[(java.sql.Timestamp, Long)]
     val clkMem = org.apache.spark.sql.execution.streaming.runtime
@@ -281,21 +268,9 @@ object EventStreams {
     // commits them every micro-batch — at a 1,500-row replay the store
     // machinery IS the cost (33 s at 32 partitions, ~7 s at 4; 1 was no
     // better — past a handful the floor is per-micro-batch planning)
-    graft.SessionConf.withShufflePartitions(spark, StatePartitions) {
-      val q = joined.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append()).start()
-      try impBatches.zip(clickBatches).foreach { case (ib, cb) =>
-        impMem.addData(ib: _*)
-        clkMem.addData(cb: _*)
-        q.processAllAvailable()
-      } finally q.stop()
+    replay(spark, "oj", joined, impBatches.zip(clickBatches)) {
+      case (ib, cb) => impMem.addData(ib: _*); clkMem.addData(cb: _*)
     }
-    val out = spark.table(name)
-    val rows = out.collect().toSeq
-    val detached = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), out.schema)
-    spark.catalog.dropTempView(name)
-    detached
   }
 
   /** Watermarked stream-stream inner join (click attribution): pair each

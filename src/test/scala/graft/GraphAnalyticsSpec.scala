@@ -689,4 +689,68 @@ class GraphAnalyticsSpec extends SparkSpec {
         .count()
     }
   }
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  private def withJobCount[A](body: => A): (A, Long) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.GraftListenerBus.drain(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("BFS and Brandes stop at the first empty frontier: a 40-hop cap " +
+      "returns the rows and costs the jobs of an ecc + 1 cap") {
+    // path 0-1-…-9: the BFS from either end has eccentricity 9
+    val edges = (0L until 9L).map(i => (i, i + 1)).toDF("s", "d")
+    val runs = Seq[(String, Int => org.apache.spark.sql.DataFrame)](
+      "eccentricitySweep" ->
+        (h => GraphAnalytics.eccentricitySweep(edges, "s", "d", 0L, h)),
+      "harmonicCentrality" ->
+        (h => GraphAnalytics.harmonicCentrality(edges, "s", "d", Seq(0L), h)),
+      "brandesDependency" ->
+        (h => GraphAnalytics.brandesDependency(edges, "s", "d", 0L, h, 10)))
+    for ((name, run) <- runs) {
+      val (tight, tightJobs) = withJobCount(run(10).collect().toSeq)
+      val (loose, looseJobs) = withJobCount(run(40).collect().toSeq)
+      assert(loose == tight, name)
+      // one job or more per hop would put 30 idle hops at 30+ jobs
+      assert(looseJobs <= tightJobs + 3,
+        s"$name: $tightJobs jobs at a 10-hop cap, $looseJobs at 40")
+    }
+    val ecc = GraphAnalytics.eccentricitySweep(edges, "s", "d", 0L, 10)
+      .collect().map(_.getAs[Int]("ecc"))
+    assert(ecc.toSeq == Seq(9, 9))
+  }
+
+  test("counted: its checkpoint job returns the exact, empty and " +
+      "predicate counts; a metric that never arrives throws") {
+    val ids = spark.range(0, 1000).toDF("id")
+    val (all, n) = GraphAnalytics.counted(ids)
+    assert(n == 1000L && all.count() == 1000L)
+    val (none, n0) = GraphAnalytics.counted(ids.filter(col("id") < 0))
+    assert(n0 == 0L && none.isEmpty)
+    // dagLevels' stop test: the nodes whose level moved this round
+    val lv = Seq((1L, 2L, 1L), (2L, 0L, 0L), (3L, 3L, 1L), (4L, 1L, 1L))
+      .toDF("node", "level", "_old")
+    val ((kept, moved), jobs) = withJobCount(
+      GraphAnalytics.counted(lv, col("level") =!= col("_old")))
+    assert(moved == 2L && kept.count() == 4L)
+    assert(jobs == 1L, s"the count took $jobs jobs, not the checkpoint's one")
+    import scala.concurrent.duration._
+    val never = org.apache.spark.sql.Observation("never_reported")
+    val err = intercept[IllegalStateException] {
+      GraphAnalytics.awaitCount(never, 200.millis)
+    }
+    assert(err.getMessage.contains("never_reported"))
+  }
 }

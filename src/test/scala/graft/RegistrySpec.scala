@@ -165,10 +165,30 @@ class RegistrySpec extends SparkSpec {
     val text = mainSources.collectFirst {
       case ("GraphAnalytics.scala", t) => t }.get
     for (idiom <- Seq("""e0.union(e0.select(col("b").as("a")""",
+        """.filter(col("src") =!= col("dst")).distinct()""",
         "\"pr div deg\"", "decimal(27,15)"))
       assert(java.util.regex.Pattern.quote(idiom).r
         .findAllMatchIn(text).size == 1,
         s"$idiom should appear exactly once in GraphAnalytics.scala")
+  }
+
+  // --- one frontier loop for GraphAnalytics -----------------------------
+  //
+  // A loop's stop test used to be a second Spark job (isEmpty or count())
+  // over the checkpoint it had just written. `counted` takes the count in
+  // the checkpoint's own job; a separate action shows up here. Borůvka's
+  // `selRows` is a collected Array, not a Spark action.
+
+  test("GraphAnalytics runs no Spark isEmpty or count() outside counted") {
+    val text = mainSources.collectFirst {
+      case ("GraphAnalytics.scala", t) => t }.get
+    val actions = """\w*\.(?:isEmpty\b|count\(\))""".r.findAllMatchIn(text)
+      .map { m =>
+        val owner = "def (\\w+)".r.findAllMatchIn(text.take(m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("")
+        s"$owner:${m.matched}"
+      }.filterNot(_.startsWith("counted:")).toSeq
+    assert(actions == Seq("boruvkaMst:selRows.isEmpty"), actions)
   }
 
   // --- one standing-state registry --------------------------------------
