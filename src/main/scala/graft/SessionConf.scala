@@ -45,9 +45,15 @@ object SessionConf {
     * entries are removed on exit, so nothing pins a session. */
   private val holders = new ConcurrentHashMap[SparkSession, Thread]()
 
+  /** Input bytes per derived shuffle partition in [[sizedPartitions]]. */
+  private val BytesPerPartition = 64L << 20
+
   /** Shuffle-partition count DERIVED FROM INPUT SIZE for the iterative
-    * graph operators: ceil(plan-estimated bytes / `bytesPerPartition`),
-    * clamped to [1, session default]. The estimate comes from the
+    * graph operators: plan-estimated bytes / [[BytesPerPartition]] + 1
+    * (and at least one partition per ~4M estimated rows), clamped to
+    * [min(session default, 4), session default]. On a session whose
+    * default is 4 or less (e.g. `local[4]`) it therefore always returns
+    * the session default. The estimate comes from the
     * input's optimized plan (a parquet/LogicalRDD scan reports real
     * bytes; a join-derived frame over-estimates, which only clamps back
     * to the session default — the safe direction). Guide §2: per-round
@@ -57,10 +63,9 @@ object SessionConf {
     * paying 32-task rounds at local[32] (measured r11: q418 3.0 -> 1.9 s,
     * q458 1.9 -> 1.1 s, q136 2.6 -> 1.1 s at derived≈4). At production
     * scale the same derivation yields the session default (inputs far
-    * exceed bytesPerPartition × partitions), i.e. the override is a
+    * exceed BytesPerPartition × partitions), i.e. the override is a
     * no-op exactly when the data is big. */
-  def sizedPartitions(df: org.apache.spark.sql.DataFrame,
-                      bytesPerPartition: Long = 64L << 20): Int = {
+  def sizedPartitions(df: org.apache.spark.sql.DataFrame): Int = {
     val cur = math.max(df.sparkSession.conf.get(ShuffleKey).toInt, 1)
     val stats = df.queryExecution.optimizedPlan.stats
     val bytes = stats.sizeInBytes
@@ -78,7 +83,7 @@ object SessionConf {
     // from the leaf-scan call sites remain the (trustworthy) source.
     val rowFloor = stats.rowCount
       .map(r => (r / (1L << 22)) + 1).getOrElse(BigInt(1))
-    val p = ((bytes / bytesPerPartition) + 1).max(rowFloor)
+    val p = ((bytes / BytesPerPartition) + 1).max(rowFloor)
     p.max(BigInt(floor)).min(BigInt(cur)).toInt
   }
 

@@ -106,7 +106,6 @@ object Clustering {
   def kCenterGreedy(corpus: DataFrame, vecCol: String, idCol: String,
                     k: Int): DataFrame = {
     val spark = corpus.sparkSession
-    graft.plans.VectorExpressions.register(spark)
     val cand = corpus
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v")).cache()
     try {
@@ -192,7 +191,6 @@ object Clustering {
                     centroids: DataFrame, cidCol: String,
                     cvCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.VectorExpressions.register(assigned.sparkSession)
     val sig = assigned.groupBy(col(cellCol).as("i"))
       .agg(count(lit(1)).as("n"),
         (sum(round(col(distCol), 6).cast("decimal(38,18)")).cast("double") /
@@ -229,7 +227,6 @@ object Clustering {
                            centroids: DataFrame, cidCol: String,
                            cvCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.VectorExpressions.register(corpus.sparkSession)
     val d = corpus.select(col(idCol).as("id"), col(vecCol).as("_v"))
       .crossJoin(broadcast(centroids.select(col(cidCol).as("cid"),
         col(cvCol).as("_cv"))))

@@ -62,8 +62,6 @@ object Dedup {
     * scan stage (measured r11: explode over the corpus 1.84 s -> 0.22 s,
     * same 1,021,477 rows). HashExpressionsSpec pins equality. */
   def shingleExpr(textCol: String, n: Int): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.HashExpressions.register)
     call_function("graft_shingles", col(textCol), lit(n))
   }
 
@@ -180,7 +178,6 @@ object Dedup {
                      bands: Int = 16): DataFrame = {
     val rows = numHashes / bands
     require(rows * bands == numHashes, "bands must divide numHashes")
-    graft.plans.HashExpressions.register(df.sparkSession)
     val sig = df
       .filter(length(col(textCol)) > 0)
       .select(col(idCol).as("id"),
@@ -221,7 +218,6 @@ object Dedup {
                             numHashes: Int = 64,
                             threshold: Double = 0.5,
                             maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    graft.plans.HashExpressions.register(storedSigs.sparkSession)
     val n = broadcast(newSigs.select(col("band_idx"), col("band_hash"),
       col("id").as("new_id"), col("sig").as("_nsig")))
     val keys = broadcast(newSigs.select(col("band_idx"), col("band_hash")).distinct())
@@ -265,7 +261,6 @@ object Dedup {
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
                    maxHamming: Int = 3,
                    maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val sh = df.filter(length(col(textCol)) > 0)
       .select(col(idCol).as("id"),
         call_function("graft_simhash64",
@@ -339,7 +334,6 @@ object Dedup {
   def contaminationCheck(train: DataFrame, trainId: String, trainText: String,
                          eval: DataFrame, evalId: String, evalText: String,
                          n: Int, threshold: Double): DataFrame = {
-    graft.plans.HashExpressions.register(train.sparkSession)
     // native distinct-window-polyhash expr, not the HOF SQL twin: the
     // train side hashes EVERY corpus document, and the interpreted
     // transform/aggregate chain was ~10× the whole operator's runtime
@@ -391,7 +385,6 @@ object Dedup {
     * n_grams), token positions 0-based inclusive. */
   def dupSpans(df: DataFrame, idCol: String, textCol: String, n: Int,
                minDup: Int = 2): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val grams = df.select(col(idCol),
       posexplode(call_function("graft_gram_polyhashes", col(textCol), lit(n)))
         .as(Seq("pos", "gh")))
@@ -587,7 +580,6 @@ object Dedup {
   def embeddingNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                             block: Column, minCosine: Double,
                             maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
-    graft.plans.VectorExpressions.register(df.sparkSession)
     // blocking expression (e.g. an LSH sign bucket) evaluates ONCE per row;
     // pairs expand bucket-locally like the text-LSH path above
     val banded = df.select(lit(0).as("band_idx"), block.as("band_hash"),
@@ -621,7 +613,6 @@ object Dedup {
                     centroids: DataFrame, cidCol: String, cvCol: String,
                     minCosine: Double,
                     maxCellSize: Int = DefaultMaxBucketSize): DataFrame = {
-    graft.plans.VectorExpressions.register(df.sparkSession)
     val assigned = graft.operators.Similarity
       .assignNearestCentroid(df, vecCol, idCol, centroids, cidCol, cvCol)
       .select(col(idCol).as("id"), col(vecCol).as("vec"),
@@ -733,7 +724,6 @@ object Dedup {
     // IDENTICAL intersection count with two array lookups per pair and
     // no per-token shuffle. docsigs is |docs| rows (bounded-slice
     // contract), checkpointed once for its two join references.
-    graft.plans.HashExpressions.register(tokens.sparkSession)
     val docsigs = toks.groupBy("id")
       .agg(sort_array(collect_list(col("tok"))).as("_sig"))
       .localCheckpoint()
@@ -820,7 +810,6 @@ object Dedup {
   def bbitSignatures(df: DataFrame, idCol: String, textCol: String,
                      shingleN: Int = 5, numHashes: Int = 64): DataFrame = {
     val nBits = math.min(numHashes, 63)
-    graft.plans.HashExpressions.register(df.sparkSession)
     df.filter(length(col(textCol)) > 0)
       .select(col(idCol).as("id"),
         call_function("graft_minhash_sig",
@@ -885,7 +874,6 @@ object Dedup {
     // verify via per-doc sorted arrays + native merge — identical
     // intersection count, no per-token verify shuffle (see
     // [[prefixFilterJoin]]'s verify stage, r12)
-    graft.plans.HashExpressions.register(tokens.sparkSession)
     val docsigs = toks.groupBy("id")
       .agg(sort_array(collect_list(col("tok"))).as("_sig"))
       .localCheckpoint()
@@ -921,7 +909,6 @@ object Dedup {
                             evalIdCol: String, evalVecCol: String,
                             centroids: DataFrame, cidCol: String,
                             cvCol: String, minCosine: Double): DataFrame = {
-    graft.plans.VectorExpressions.register(train.sparkSession)
     val ta = graft.operators.Similarity
       .assignNearestCentroid(train, trainVecCol, trainIdCol,
         centroids, cidCol, cvCol)

@@ -31,7 +31,6 @@ object Joins {
   def bloomPrefilter(fact: DataFrame, factKeyCol: String,
                      dim: DataFrame, dimKeyCol: String,
                      m: Int = 131072, k: Int = 3): DataFrame = {
-    graft.plans.HashExpressions.register(fact.sparkSession)
     val dimKeys = dim.select(col(dimKeyCol).as("key")).distinct()
     val words = Sketches.packBits(Sketches.bloomBits(dimKeys, "key", m, k), m)
     fact.filter(call_function("graft_bloom_probe",

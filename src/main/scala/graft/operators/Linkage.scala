@@ -30,7 +30,6 @@ object Linkage {
                 right: DataFrame, rightId: String,
                 blockCol: String, nameCol: String,
                 threshold: Double): DataFrame = {
-    graft.plans.HashExpressions.register(left.sparkSession)
     // Arrays are sorted ONCE per row here so the per-pair intersection is
     // a zero-allocation two-pointer merge: a block of size s scores s²
     // pairs but holds only 2s rows, so any per-pair set/collection build
@@ -257,7 +256,6 @@ object Linkage {
     * so the rank window never sees more than a block. */
   def diceBestMatch(left: DataFrame, leftId: String, leftWord: String,
                     right: DataFrame, rightWord: String): DataFrame = {
-    graft.plans.StringExpressions.register(left.sparkSession)
     val l = left.select(col(leftId).as("l_id"), col(leftWord).as("lw"),
       substring(col(leftWord), 1, 1).as("_blk"))
     val r = right.select(col(rightWord).as("rw"),
@@ -283,7 +281,6 @@ object Linkage {
                            leftWord: String, right: DataFrame,
                            rightWord: String,
                            minJw: Double = 0.0): DataFrame = {
-    graft.plans.StringExpressions.register(left.sparkSession)
     val l = left.select(col(leftId).as("l_id"), col(leftWord).as("lw"),
       substring(col(leftWord), 1, 1).as("_blk"))
     val r = right.select(col(rightWord).as("rw"),

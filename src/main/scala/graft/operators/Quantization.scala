@@ -106,7 +106,6 @@ object Quantization {
     * shortlist. Ties break to the smaller id at both stages. */
   def bqSearch(corpus: DataFrame, idCol: String, vecCol: String,
                query: Seq[Float], k: Int, shortlistK: Int): DataFrame = {
-    graft.plans.VectorExpressions.register(corpus.sparkSession)
     val qbq = bqPack(query)
     binaryQuantize(corpus, vecCol, query.length)
       .withColumn("hamming", expr(s"bit_count(bq ^ ${qbq}L)"))

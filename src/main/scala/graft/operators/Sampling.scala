@@ -205,7 +205,6 @@ object Sampling {
                  selectPct: Int = 25): DataFrame = {
     require(buckets >= 1 && selectPct >= 0 && selectPct <= 100,
       "need buckets >= 1 and selectPct in [0, 100]")
-    graft.plans.HashExpressions.register(df.sparkSession)
     val feats = call_function("graft_gram_polyhashes", col(textCol), lit(2))
     def bucketOf(h: Column): Column =
       pmod(Sketches.keyHash(h), lit(buckets.toLong))

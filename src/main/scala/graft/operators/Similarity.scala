@@ -28,12 +28,9 @@ import graft.functions.VectorFunctions._
 object Similarity {
 
   /** Distance column using the codegen'd native expression
-    * ([[graft.plans.VectorExpressions]]) — registered on demand; falls back
-    * to the HOF composition only if registration is impossible. Both forms
-    * produce bit-identical values (same fold order). */
-  private def distCol(spark: org.apache.spark.sql.SparkSession,
-                      a: Column, b: Column, strategy: String): Column = {
-    graft.plans.VectorExpressions.register(spark)
+    * ([[graft.plans.VectorExpressions]]), bit-identical to the HOF
+    * composition (same fold order). */
+  private def distCol(a: Column, b: Column, strategy: String): Column = {
     strategy.toUpperCase match {
       case "COSINE" => call_function("graft_cosine_distance", a, b)
       case "DOT"    => -call_function("graft_dot_product", a, b) // larger dot = closer
@@ -47,7 +44,7 @@ object Similarity {
   def topK(corpus: DataFrame, vecCol: String, query: Seq[Float], k: Int,
            strategy: String = "COSINE", tieCol: String = "vec_id"): DataFrame = {
     val q = typedLit(query)
-    val dist = distCol(corpus.sparkSession, col(vecCol), q, strategy)
+    val dist = distCol(col(vecCol), q, strategy)
     corpus
       .withColumn("distance", dist)
       .withColumn("score", normalizeScoreCol(col("distance"), strategy))
@@ -187,8 +184,6 @@ object Similarity {
   def mmrDistributed(corpus: DataFrame, vecCol: String, idCol: String,
                      query: Seq[Float], k: Int, fetchK: Int = 20,
                      lambdaMult: Double = 0.5): Seq[(Long, Double)] = {
-    val spark = corpus.sparkSession
-    graft.plans.VectorExpressions.register(spark)
     val cand = topK(corpus, vecCol, query, fetchK, "COSINE", idCol)
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"),
         (lit(1.0) - col("distance")).as("rel"))
@@ -313,7 +308,7 @@ object Similarity {
       .withColumn("bucket", hyperplaneBucket(vecCol, dim, nBits))
       .filter(col("bucket").isin(probes: _*))
       .withColumn("distance",
-        distCol(corpus.sparkSession, col(vecCol), qArr, "COSINE"))
+        distCol(col(vecCol), qArr, "COSINE"))
       .orderBy(col("distance").asc, col(idCol).asc)
       .limit(k)
       .select(col(idCol), col("bucket"), col("distance"))
@@ -344,7 +339,6 @@ object Similarity {
                             centroids: DataFrame, cidCol: String,
                             cvecCol: String,
                             maxFoldCentroids: Int = 256): DataFrame = {
-    graft.plans.VectorExpressions.register(corpus.sparkSession)
     val cents = centroids
       .select(col(cidCol).cast("int"), col(cvecCol).cast("array<float>"))
       .collect()
@@ -433,7 +427,6 @@ object Similarity {
                      centroids: DataFrame, cidCol: String, cvecCol: String,
                      queries: DataFrame, queryVecCol: String, queryIdCol: String,
                      k: Int, nProbe: Int): DataFrame = {
-    graft.plans.VectorExpressions.register(assigned.sparkSession)
     val wProbe = Window.partitionBy(col("query_id"))
       .orderBy(col("_cdist").asc, col("centroid_id").asc)
     val probes = queries
@@ -517,8 +510,6 @@ object Similarity {
     * Returns (id, rank, nbr_id, distance), ties broken by neighbor id. */
   def knnGraph(assigned: DataFrame, vecCol: String, idCol: String,
                k: Int): DataFrame = {
-    val spark = assigned.sparkSession
-    graft.plans.VectorExpressions.register(spark)
     val left = assigned.select(col("centroid_id"), col(idCol).as("id"),
       col(vecCol).as("_lv"))
     val right = assigned.select(col("centroid_id"), col(idCol).as("nbr_id"),
@@ -549,7 +540,6 @@ object Similarity {
   def truncatedRerank(corpus: DataFrame, vecCol: String, idCol: String,
                       query: Seq[Float], k: Int, dPrime: Int,
                       shortlistK: Int): DataFrame = {
-    graft.plans.VectorExpressions.register(corpus.sparkSession)
     val qt = typedLit(query.take(dPrime))
     val qf = typedLit(query)
     corpus
@@ -586,7 +576,6 @@ object Similarity {
                       beam: Int, iters: Int, k: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    graft.plans.VectorExpressions.register(spark)
     val vecs = corpus.select(col(idCol).cast("long").as("_vid"),
       col(vecCol).as("_vv"))
     val qv = broadcast(vecs.filter(col("_vid") === queryId)
@@ -634,7 +623,6 @@ object Similarity {
     * distance), cosine, ties by neighbor id. */
   def nnDescentRefine(graph: DataFrame, corpus: DataFrame, vecCol: String,
                       idCol: String, k: Int, iters: Int = 1): DataFrame = {
-    graft.plans.VectorExpressions.register(corpus.sparkSession)
     val vecs = corpus.select(col(idCol).as("_vid"), col(vecCol).as("_vv"))
     var edges = graph.select(col("id"), col("nbr_id"))
     var scored: DataFrame = graph.select(col("id"), col("nbr_id"), col("distance"))

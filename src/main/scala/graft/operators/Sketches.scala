@@ -90,7 +90,6 @@ object Sketches {
     * in the bytecode interpreter. */
   def bloomProbePacked(df: DataFrame, keyCol: String, words: Array[Long],
                        m: Int, k: Int): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     df.select(col(keyCol)).distinct()
       .filter(call_function("graft_bloom_probe",
         col(keyCol), typedLit(words.toSeq), lit(m), lit(k)))

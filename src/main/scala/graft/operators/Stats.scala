@@ -143,7 +143,6 @@ object Stats {
     // per-term CAST-to-DECIMAL(38,18) + exact decimal accumulation as
     // the aggregate(zip_with(...)) lambda it replaces (spec-pinned),
     // without the interpreted per-element HOF cost on every row
-    graft.plans.HashExpressions.register(df.sparkSession)
     val hist = collect_list(col(valueCol).cast("double")).over(w)
     df.withColumn("_hist", hist)
       .withColumn("_L", size(col("_hist")))

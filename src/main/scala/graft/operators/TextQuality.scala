@@ -270,7 +270,6 @@ object TextQuality {
   def rareBigramStats(df: DataFrame, idCol: String, textCol: String,
                       rareMax: Long = 2L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.HashExpressions.register(df.sparkSession)
     df.select(col(idCol),
         explode(call_function("graft_gram_polyhashes", col(textCol), lit(2)))
           .as("gh"))
@@ -418,8 +417,6 @@ object TextQuality {
     * Output is identical to `tokenLines(tokens(text), width)` —
     * TextQualitySpec pins it. */
   def tokenLinesFromText(textCol: Column, width: Int): Column = {
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(graft.plans.HashExpressions.register)
     call_function("graft_token_lines", textCol, lit(width))
   }
 
@@ -435,7 +432,6 @@ object TextQuality {
     * against a broadcast weight table. Returns (id, n_feats, raw_margin,
     * margin, label). */
   def classifierScore(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     // retains the input columns (a gate should carry its payload through —
     // the training-export composite q117 filters on `label` and keeps going)
     df.withColumn("_fh",
@@ -660,7 +656,6 @@ object TextQuality {
   def extractiveSummary(df: DataFrame, idCol: String, textCol: String,
                         lineTokens: Int = 12, buckets: Int = 64,
                         topK: Int = 2): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     val lines = df.select(col(idCol).as("id"),
         posexplode(tokenLinesFromText(col(textCol), lineTokens))
           .as(Seq("line_idx", "line")))

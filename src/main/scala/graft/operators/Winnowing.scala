@@ -53,7 +53,6 @@ object Winnowing {
     * code point for k ≤ 9), exactly the oracle's fold. */
   def fingerprints(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 8, w: Int = 16): DataFrame = {
-    graft.plans.HashExpressions.register(df.sparkSession)
     df.filter(length(col(textCol)) >= k + w - 1)
       .select(col(idCol),
         explode(call_function("graft_winnow_fps",

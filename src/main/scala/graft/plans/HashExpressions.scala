@@ -1,10 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -491,17 +489,40 @@ object HashExpressions {
 
   private val helper = "graft.plans.HashExpressions"
 
-  /** Distinct XXH64 hashes of the n-byte windows of a string (the whole
-    * string if shorter than n) — native twin of the test-scope
-    * HofTwins.shingleHashes, already reduced mod 2^31-1. Codegen emits a direct static call, so the
-    * surrounding projection stays in one whole-stage-codegen span. */
-  case class ShingleHashesExpr(child: Expression, n: Int) extends UnaryExpression {
-    override def prettyName: String = "graft_shingle_hashes"
-    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  /** Input check of every one-STRING-argument expression. */
+  sealed trait StringInput extends UnaryExpression {
     override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
       case StringType => TypeCheckResult.TypeCheckSuccess
       case t => TypeCheckResult.TypeCheckFailure(s"expected STRING, got ${t.simpleString}")
     }
+  }
+
+  /** Input check of every one-ARRAY<BIGINT>-argument expression. */
+  sealed trait LongArrayInput extends UnaryExpression {
+    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+      case t => TypeCheckResult.TypeCheckFailure(s"expected ARRAY<BIGINT>, got ${t.simpleString}")
+    }
+  }
+
+  /** Input check of every two-ARRAY<BIGINT>-argument expression. */
+  sealed trait LongArrayPair extends BinaryExpression {
+    override def checkInputDataTypes(): TypeCheckResult =
+      (left.dataType, right.dataType) match {
+        case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+          TypeCheckResult.TypeCheckSuccess
+        case (l, r) => TypeCheckResult.TypeCheckFailure(
+          s"expected two ARRAY<BIGINT>, got ${l.simpleString} / ${r.simpleString}")
+      }
+  }
+
+  /** Distinct XXH64 hashes of the n-byte windows of a string (the whole
+    * string if shorter than n) — native twin of the test-scope
+    * HofTwins.shingleHashes, already reduced mod 2^31-1. Codegen emits a direct static call, so the
+    * surrounding projection stays in one whole-stage-codegen span. */
+  case class ShingleHashesExpr(child: Expression, n: Int) extends StringInput {
+    override def prettyName: String = "graft_shingle_hashes"
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
     override protected def nullSafeEval(input: Any): Any =
       shingleEval(input.asInstanceOf[UTF8String], n)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -511,13 +532,9 @@ object HashExpressions {
 
   /** Distinct character n-gram shingle STRINGS (first-occurrence order) —
     * the native twin of Dedup.shingleExpr. See [[shinglesEval]]. */
-  case class ShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
+  case class ShinglesExpr(child: Expression, n: Int) extends StringInput {
     override def prettyName: String = "graft_shingles"
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected STRING, got ${t.simpleString}")
-    }
     override protected def nullSafeEval(input: Any): Any =
       shinglesEval(input.asInstanceOf[UTF8String], n)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -526,14 +543,10 @@ object HashExpressions {
   }
 
   /** Non-overlapping token pseudo-lines — see [[tokenLinesEval]]. */
-  case class TokenLinesExpr(child: Expression, width: Int) extends UnaryExpression {
+  case class TokenLinesExpr(child: Expression, width: Int) extends StringInput {
     require(width >= 1, "graft_token_lines: need width >= 1")
     override def prettyName: String = "graft_token_lines"
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected STRING, got ${t.simpleString}")
-    }
     override protected def nullSafeEval(input: Any): Any =
       tokenLinesEval(input.asInstanceOf[UTF8String], width)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -542,14 +555,10 @@ object HashExpressions {
   }
 
   /** Consecutive word n-gram strings — see [[wordNgramsEval]]. */
-  case class WordNgramsExpr(child: Expression, n: Int) extends UnaryExpression {
+  case class WordNgramsExpr(child: Expression, n: Int) extends StringInput {
     require(n >= 1, "graft_word_ngrams: need n >= 1")
     override def prettyName: String = "graft_word_ngrams"
     override def dataType: DataType = ArrayType(StringType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected STRING, got ${t.simpleString}")
-    }
     override protected def nullSafeEval(input: Any): Any =
       wordNgramsEval(input.asInstanceOf[UTF8String], n)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -559,13 +568,9 @@ object HashExpressions {
 
   /** XXH64 hashes of whitespace-delimited tokens (ASCII whitespace runs) —
     * native twin of `transform(filter(split(text,'\s+'), _ != ''), xxhash64)`. */
-  case class TokenHashesExpr(child: Expression) extends UnaryExpression {
+  case class TokenHashesExpr(child: Expression) extends StringInput {
     override def prettyName: String = "graft_token_hashes"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected STRING, got ${t.simpleString}")
-    }
     override protected def nullSafeEval(input: Any): Any =
       tokenEval(input.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -575,13 +580,9 @@ object HashExpressions {
 
   /** Distinct rolling-polynomial shingle hashes — the oracle-checkable twin
     * of [[ShingleHashesExpr]] (see [[shinglePolyEval]]). */
-  case class ShinglePolyHashesExpr(child: Expression, n: Int) extends UnaryExpression {
+  case class ShinglePolyHashesExpr(child: Expression, n: Int) extends StringInput {
     override def prettyName: String = "graft_shingle_polyhashes"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected STRING, got ${t.simpleString}")
-    }
     override protected def nullSafeEval(input: Any): Any =
       shinglePolyEval(input.asInstanceOf[UTF8String], n)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -591,13 +592,9 @@ object HashExpressions {
 
   /** 62-bit two-polynomial token hashes — the oracle-checkable twin of
     * [[TokenHashesExpr]] (see [[tokenPolyEval]]). */
-  case class TokenPolyHashesExpr(child: Expression) extends UnaryExpression {
+  case class TokenPolyHashesExpr(child: Expression) extends StringInput {
     override def prettyName: String = "graft_token_polyhashes"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected STRING, got ${t.simpleString}")
-    }
     override protected def nullSafeEval(input: Any): Any =
       tokenPolyEval(input.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -606,13 +603,9 @@ object HashExpressions {
   }
 
   /** Positional token-n-gram window hashes — see [[gramPolyEval]]. */
-  case class GramPolyHashesExpr(child: Expression, n: Int) extends UnaryExpression {
+  case class GramPolyHashesExpr(child: Expression, n: Int) extends StringInput {
     override def prettyName: String = "graft_gram_polyhashes"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected STRING, got ${t.simpleString}")
-    }
     override protected def nullSafeEval(input: Any): Any =
       gramPolyEval(input.asInstanceOf[UTF8String], n)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -623,15 +616,11 @@ object HashExpressions {
   /** Distinct winnowed fingerprints (Schleimer et al. 2003) — see
     * [[winnowEval]]. */
   case class WinnowFpsExpr(child: Expression, k: Int, w: Int, p: Long)
-      extends UnaryExpression {
+      extends StringInput {
     require(k >= 1 && k <= 9 && w >= 1,
       "graft_winnow_fps: need 1 <= k <= 9 (unreduced polynomial sum must fit a long) and w >= 1")
     override def prettyName: String = "graft_winnow_fps"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected STRING, got ${t.simpleString}")
-    }
     override protected def nullSafeEval(input: Any): Any =
       winnowEval(input.asInstanceOf[UTF8String], k, w, p)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -642,13 +631,9 @@ object HashExpressions {
   /** MinHash signature from pre-reduced hashes: same seeded (a_i, b_i)
     * permutations as the test-scope HofTwins.minhashFromHashes, all
     * minima in one pass. The coefficient arrays ride into generated code as reference objects. */
-  case class MinHashSigExpr(child: Expression, numHashes: Int) extends UnaryExpression {
+  case class MinHashSigExpr(child: Expression, numHashes: Int) extends LongArrayInput {
     override def prettyName: String = "graft_minhash_sig"
     override def dataType: DataType = ArrayType(LongType, containsNull = false)
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected ARRAY<BIGINT>, got ${t.simpleString}")
-    }
     private lazy val (as, bs) = minhashCoeffs(numHashes)
     override protected def nullSafeEval(input: Any): Any =
       minhashEval(input.asInstanceOf[ArrayData], as, bs)
@@ -663,13 +648,9 @@ object HashExpressions {
 
   /** 64-bit SimHash from token hashes: per-bit majority vote, native twin
     * of the test-scope HofTwins.simhash's aggregate/zip_with form. */
-  case class SimHash64Expr(child: Expression) extends UnaryExpression {
+  case class SimHash64Expr(child: Expression) extends LongArrayInput {
     override def prettyName: String = "graft_simhash64"
     override def dataType: DataType = LongType
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected ARRAY<BIGINT>, got ${t.simpleString}")
-    }
     override protected def nullSafeEval(input: Any): Any =
       simhashEval(input.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -696,17 +677,13 @@ object HashExpressions {
   }
 
   /** LSH band hashes of a minhash signature (see [[bandHashesEval]]). */
-  case class BandHashesExpr(child: Expression, bands: Int) extends UnaryExpression {
+  case class BandHashesExpr(child: Expression, bands: Int) extends LongArrayInput {
     require(bands >= 1, "graft_band_hashes: need bands >= 1")
     override def prettyName: String = "graft_band_hashes"
     override def dataType: DataType = ArrayType(LongType, child.dataType match {
       case ArrayType(_, containsNull) => containsNull
       case _ => true
     })
-    override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-      case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-      case t => TypeCheckResult.TypeCheckFailure(s"expected ARRAY<BIGINT>, got ${t.simpleString}")
-    }
     override protected def nullSafeEval(input: Any): Any =
       bandHashesEval(input.asInstanceOf[ArrayData], bands)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -715,16 +692,9 @@ object HashExpressions {
   }
 
   /** Signature agreement count (see [[sigAgreeEval]]). */
-  case class SigAgreeExpr(left: Expression, right: Expression) extends BinaryExpression {
+  case class SigAgreeExpr(left: Expression, right: Expression) extends LongArrayPair {
     override def prettyName: String = "graft_sig_agree"
     override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"expected two ARRAY<BIGINT>, got ${l.simpleString} / ${r.simpleString}")
-      }
     override protected def nullSafeEval(a: Any, b: Any): Any =
       sigAgreeEval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -734,16 +704,9 @@ object HashExpressions {
   }
 
   /** Intersection size of two distinct-element ARRAY<BIGINT> columns. */
-  case class InterSizeExpr(left: Expression, right: Expression) extends BinaryExpression {
+  case class InterSizeExpr(left: Expression, right: Expression) extends LongArrayPair {
     override def prettyName: String = "graft_inter_size"
     override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"expected two ARRAY<BIGINT>, got ${l.simpleString} / ${r.simpleString}")
-      }
     override protected def nullSafeEval(a: Any, b: Any): Any =
       interSizeEval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -757,16 +720,9 @@ object HashExpressions {
     * `sort_array` both inputs — done once per row before a pair join,
     * versus per-pair set building inside it. */
   case class InterSizeSortedExpr(left: Expression, right: Expression)
-      extends BinaryExpression {
+      extends LongArrayPair {
     override def prettyName: String = "graft_inter_size_sorted"
     override def dataType: DataType = IntegerType
-    override def checkInputDataTypes(): TypeCheckResult =
-      (left.dataType, right.dataType) match {
-        case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-          TypeCheckResult.TypeCheckSuccess
-        case (l, r) => TypeCheckResult.TypeCheckFailure(
-          s"expected two ARRAY<BIGINT>, got ${l.simpleString} / ${r.simpleString}")
-      }
     override protected def nullSafeEval(a: Any, b: Any): Any =
       interSizeSortedEval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -798,47 +754,30 @@ object HashExpressions {
     override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   }
 
-  /** Name → builder for every hash-family function, shared by the
-    * per-session [[register]] and the `spark.sql.extensions` plugin
-    * ([[GraftExtensions]]). */
+  /** Argument `i` of a builder call, evaluated as a literal. */
+  private def literal[T](args: Seq[Expression], i: Int): T =
+    args(i).eval(null).asInstanceOf[T]
+
+  /** Name → builder for every hash-family function, injected into every
+    * session by [[GraftExtensions]]. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    "graft_shingle_hashes" -> (args => ShingleHashesExpr(args(0),
-      args(1).eval(null).asInstanceOf[Int])),
-    "graft_shingles" -> (args => ShinglesExpr(args(0),
-      args(1).eval(null).asInstanceOf[Int])),
+    "graft_shingle_hashes" -> (args => ShingleHashesExpr(args(0), literal[Int](args, 1))),
+    "graft_shingles" -> (args => ShinglesExpr(args(0), literal[Int](args, 1))),
     "graft_token_hashes" -> (args => TokenHashesExpr(args(0))),
-    "graft_word_ngrams" -> (args => WordNgramsExpr(args(0),
-      args(1).eval(null).asInstanceOf[Int])),
-    "graft_token_lines" -> (args => TokenLinesExpr(args(0),
-      args(1).eval(null).asInstanceOf[Int])),
-    "graft_shingle_polyhashes" -> (args => ShinglePolyHashesExpr(args(0),
-      args(1).eval(null).asInstanceOf[Int])),
+    "graft_word_ngrams" -> (args => WordNgramsExpr(args(0), literal[Int](args, 1))),
+    "graft_token_lines" -> (args => TokenLinesExpr(args(0), literal[Int](args, 1))),
+    "graft_shingle_polyhashes" -> (args => ShinglePolyHashesExpr(args(0), literal[Int](args, 1))),
     "graft_token_polyhashes" -> (args => TokenPolyHashesExpr(args(0))),
-    "graft_gram_polyhashes" -> (args => GramPolyHashesExpr(args(0),
-      args(1).eval(null).asInstanceOf[Int])),
+    "graft_gram_polyhashes" -> (args => GramPolyHashesExpr(args(0), literal[Int](args, 1))),
     "graft_winnow_fps" -> (args => WinnowFpsExpr(args(0),
-      args(1).eval(null).asInstanceOf[Int],
-      args(2).eval(null).asInstanceOf[Int],
-      args(3).eval(null).asInstanceOf[Long])),
-    "graft_minhash_sig" -> (args => MinHashSigExpr(args(0),
-      args(1).eval(null).asInstanceOf[Int])),
+      literal[Int](args, 1), literal[Int](args, 2), literal[Long](args, 3))),
+    "graft_minhash_sig" -> (args => MinHashSigExpr(args(0), literal[Int](args, 1))),
     "graft_simhash64" -> (args => SimHash64Expr(args(0))),
     "graft_ewma_wsum" -> (args => EwmaWsumExpr(args(0))),
-    "graft_band_hashes" -> (args => BandHashesExpr(args(0),
-      args(1).eval(null).asInstanceOf[Int])),
+    "graft_band_hashes" -> (args => BandHashesExpr(args(0), literal[Int](args, 1))),
     "graft_sig_agree" -> (args => SigAgreeExpr(args(0), args(1))),
     "graft_inter_size" -> (args => InterSizeExpr(args(0), args(1))),
     "graft_inter_size_sorted" -> (args => InterSizeSortedExpr(args(0), args(1))),
     "graft_bloom_probe" -> (args => BloomProbeExpr(args(0),
-      args(1).eval(null).asInstanceOf[ArrayData].toLongArray(),
-      args(2).eval(null).asInstanceOf[Int],
-      args(3).eval(null).asInstanceOf[Int])))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo(getClass.getName, name), builder)
-    }
-  }
+      literal[ArrayData](args, 1).toLongArray(), literal[Int](args, 2), literal[Int](args, 3))))
 }

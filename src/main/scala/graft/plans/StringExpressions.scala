@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -153,12 +151,4 @@ object StringExpressions {
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_bigram_dice" -> (args => BigramDiceExpr(args(0), args(1))),
     "graft_jaro_winkler" -> (args => JaroWinklerExpr(args(0), args(1))))
-
-  /** Register on an existing session (idempotent). */
-  def register(spark: SparkSession): Unit = builders.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(StringExpressions.getClass.getName, name),
-      builder)
-  }
 }

@@ -3,10 +3,8 @@ package graft.plans
 import java.io.{ByteArrayOutputStream, DataOutputStream}
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, ExpressionInfo, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, TypeUtils}
 import org.apache.spark.sql.types._
@@ -140,7 +138,6 @@ object TopKAggregate {
                payload: Seq[org.apache.spark.sql.Column],
                k: Int): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions._
-    register(df.sparkSession)
     val packed = struct((orderAsc ++ payload): _*)
     df.groupBy(groupCols.map(col): _*)
       .agg(call_function("graft_top_k", packed, lit(k)).as("_topk"))
@@ -151,12 +148,4 @@ object TopKAggregate {
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
     "graft_top_k" -> (args => BoundedTopK(args(0),
       args(1).eval(null).asInstanceOf[Int])))
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    builders.foreach { case (name, builder) =>
-      reg.registerFunction(FunctionIdentifier(name),
-        new ExpressionInfo(getClass.getName, name), builder)
-    }
-  }
 }

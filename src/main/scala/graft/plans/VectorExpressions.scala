@@ -1,12 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 
 /** Native codegen'd vector-distance expressions over `ARRAY<FLOAT>`.
   *
@@ -223,8 +222,8 @@ object VectorExpressions {
       copy(child = newChild)
   }
 
-  /** Name → builder for the vector-math functions, shared by the
-    * per-session [[register]] and [[GraftExtensions]].
+  /** Name → builder for the vector-math functions, injected into every
+    * session by [[GraftExtensions]].
     * `graft_nearest_centroid(vec, cids, cvs)` requires FOLDABLE codebook
     * arguments — the codebook is a plan constant by design. */
   val builders: Seq[(String, Seq[Expression] => Expression)] = Seq(
@@ -240,30 +239,17 @@ object VectorExpressions {
         cvsData.getArray(i).toFloatArray().toSeq)
       NearestCentroidExpr(args(0), cids, cvs)
     }))
-  private def functions = builders
-
-  /** Register on an existing session (idempotent). */
-  def register(spark: SparkSession): Unit = functions.foreach { case (name, builder) =>
-    spark.sessionState.functionRegistry.registerFunction(
-      FunctionIdentifier(name),
-      new ExpressionInfo(VectorExpressions.getClass.getName, name),
-      builder)
-  }
-
-  def isRegistered(spark: SparkSession): Boolean =
-    spark.sessionState.functionRegistry.functionExists(
-      FunctionIdentifier("graft_cosine_distance"))
 }
 
-/** `spark.sql.extensions` plugin: injects the ENTIRE graft function
-  * surface — vector math plus the hash/LSH family — into every session
-  * built with
-  * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`.
-  * This is the library's standard entry point for SQL-only users (and
-  * for Thrift/Connect servers where per-session `register` calls are
-  * not an option); programmatic users can still call
-  * `VectorExpressions.register` / `HashExpressions.register`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+/** The one registration point of the 24 `graft_*` functions (vector
+  * math, hash/LSH family, top-k aggregate, string similarity). Named in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's `ServiceLoader` injects the functions into every session
+  * built with this library on its classpath, and into each
+  * `newSession()` of it; no call site registers anything.
+  * `spark.sql.extensions=graft.plans.GraftExtensions` names it explicitly
+  * for a classpath without the service file. */
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit =
     (VectorExpressions.builders ++ HashExpressions.builders ++
         TopKAggregate.builders ++ StringExpressions.builders).foreach {

@@ -479,7 +479,6 @@ private[graft] object Queries091to155 extends QueryModule {
           centroids, "cid", "cv")
         .select(col("vec_id"), col("embedding"), col("centroid_id"))
       val base = Similarity.knnGraph(assigned, "embedding", "vec_id", 3)
-      graft.plans.VectorExpressions.register(s)
       val ring = e.select(col("vec_id").as("id"), col("embedding").as("_lv"))
         .join(e.select((col("vec_id") - 1).as("id"), col("vec_id").as("nbr_id"),
           col("embedding").as("_rv")), Seq("id"))

@@ -391,7 +391,6 @@ private[graft] object Queries156to222 extends QueryModule {
       val probeIds = Similarity.nearestCentroidIds(cents, qv, 2)
       val shortlist = operators.Quantization.pqSearch(
         encoded.filter(col("centroid_id").isin(probeIds: _*)), "vec_id", qv, cb, 12)
-      graft.plans.VectorExpressions.register(s)
       shortlist
         .withColumn("distance", call_function("graft_cosine_distance",
           col("embedding"), typedLit(qv)))

@@ -537,7 +537,6 @@ private[graft] object Queries223to272 extends QueryModule {
       // candidates joined with dense (query cosine distance), prior
       // (quality score) and shape (length) features — the feature-join
       // step between first-stage retrieval and a reranker
-      graft.plans.VectorExpressions.register(s)
       val d = tbl(s, dir, "documents")
       val q0 = Seq("spark", "join", "vector", "window")
       val cands = storedBm25(s, dir, q0, 20)

@@ -130,7 +130,6 @@ private[graft] object Queries273to319 extends QueryModule {
       // redundancy audit of a result list: mean pairwise cosine distance
       // of the q17 top-8 — the number MMR (q19) exists to raise; k·(k−1)/2
       // literal-free pairs over a broadcast-sized list, decimal-summed
-      graft.plans.VectorExpressions.register(s)
       val e = tbl(s, dir, "embeddings")
       val qv = e.filter(col("vec_id") === 0).select("embedding")
         .head().getSeq[Float](0)
@@ -1079,7 +1078,6 @@ private[graft] object Queries273to319 extends QueryModule {
       // model (the shape a trained LTR model serves as) rescores the
       // BM25 top-20; output carries both ranks so rank movement is
       // auditable. All feature weights literal, one round at the end
-      graft.plans.VectorExpressions.register(s)
       val d = tbl(s, dir, "documents")
       val q0 = Seq("spark", "join", "vector", "window")
       val cands = storedBm25(s, dir, q0, 20)

@@ -352,7 +352,6 @@ private[graft] object Queries478to509 extends QueryModule {
       // strings/order to the transform(sequence(...)) lambda it
       // replaces (HashExpressionsSpec pins it) with the interpreted
       // per-element HOF cost gone from the corpus scan
-      graft.plans.HashExpressions.register(s)
       val bg = tbl(s, dir, "documents")
         .select(col("source"), explode(call_function(
           "graft_word_ngrams", col("text"), lit(2))).as("token"))

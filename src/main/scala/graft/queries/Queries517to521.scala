@@ -46,7 +46,6 @@ private[graft] object Queries517to521 extends QueryModule {
       // the clean vocabulary and its transposition typos — first-letter
       // blocking bounds candidates, the codegen'd scalar scores inside
       // the join's fused loop, minJw = 0.85 is the reject band
-      graft.plans.StringExpressions.register(s)
       val words = tbl(s, dir, "documents").filter(col("doc_id") < 400)
         .select(col("doc_id"),
           upper(element_at(TextQuality.tokens(col("text")), 1)).as("w"))
@@ -66,7 +65,6 @@ private[graft] object Queries517to521 extends QueryModule {
       // on): per doc, the lead word vs its classic adjacent-transposition
       // typo and vs its reversal — the typo must score far above the
       // reversal, and both replay via DuckDB's jaro_winkler_similarity
-      graft.plans.StringExpressions.register(s)
       val words = tbl(s, dir, "documents")
         .filter(col("doc_id") < 300)
         .select(col("doc_id"),

@@ -69,7 +69,6 @@ object GraphStore {
                  queryId: Long, entryIds: Seq[Long], beam: Int, iters: Int,
                  k: Int): DataFrame = {
     import spark.implicits._
-    graft.plans.VectorExpressions.register(spark)
     val vecs = corpus.select(col(idCol).cast("long").as("_vid"),
       col(vecCol).as("_vv"))
     val qv = broadcast(vecs.filter(col("_vid") === queryId)
@@ -135,7 +134,6 @@ object GraphStore {
       centroids: DataFrame, cidCol: String, cvecCol: String,
       queryId: Long, startCid: Int, coarseK: Int, descentHops: Int,
       beam: Int, iters: Int, k: Int): DataFrame = {
-    graft.plans.VectorExpressions.register(spark)
     val cents = centroids.select(col(cidCol).cast("int").as("_cid"),
       col(cvecCol).as("_cv")).localCheckpoint()
     val qv = broadcast(assigned.filter(col(idCol) === queryId)
@@ -305,7 +303,6 @@ object GraphStore {
                   cidCol: String, cvecCol: String, nProbe: Int,
                   batch: DataFrame, vecCol: String, idCol: String,
                   k: Int): Unit = {
-    graft.plans.VectorExpressions.register(spark)
     // the batch's probed-cell union: ≤ |centroids| ids by construction
     // (the engine enforces ≤256 centroids), collected so the assigned
     // corpus can be filtered by LITERALS — on a partitionBy(centroid_id)

@@ -24,8 +24,7 @@ object IndexStore {
     * 62-bit token hash is reduced mod 2^31-1 BEFORE the scramble — keyHash
     * multiplies by PolyBase1, which would overflow a long on 62-bit input
     * under ANSI arithmetic. */
-  def termBucket(termCol: String, nBuckets: Int)(implicit spark: SparkSession): org.apache.spark.sql.Column = {
-    graft.plans.HashExpressions.register(spark)
+  def termBucket(termCol: String, nBuckets: Int): org.apache.spark.sql.Column = {
     val th = pmod(
       element_at(call_function("graft_token_polyhashes", col(termCol)), 1),
       lit(graft.plans.HashExpressions.P2n31))
@@ -35,7 +34,6 @@ object IndexStore {
   /** Write an inverted index (term, df, cf, postings) bucketed by term
     * hash. Overwrites the store path. */
   def write(index: DataFrame, path: String, nBuckets: Int): Unit = {
-    implicit val spark: SparkSession = index.sparkSession
     StoreFiles.writePartitioned(
       index.withColumn("bucket", termBucket("term", nBuckets)), "bucket", path)
   }
@@ -51,7 +49,6 @@ object IndexStore {
     * empty batch is a no-op. */
   def merge(spark: SparkSession, path: String, newIndex: DataFrame,
             nBuckets: Int): Unit = {
-    implicit val s: SparkSession = spark
     StoreFiles.mergeTouched(spark, path, "bucket",
         newIndex.withColumn("bucket", termBucket("term", nBuckets))) {
       (existing, added) => existing.unionByName(added)
@@ -67,7 +64,6 @@ object IndexStore {
     * scan's PartitionFilters prove it; pinned by IndexStoreSpec). */
   def lookup(spark: SparkSession, path: String, terms: Seq[String],
              nBuckets: Int): DataFrame = {
-    implicit val s: SparkSession = spark
     import spark.implicits._
     val buckets = terms.toDF("term")
       .select(termBucket("term", nBuckets).as("b"))

@@ -7,13 +7,6 @@ import graft.plans.HashExpressions
 class HashExpressionsSpec extends SparkSpec {
   import spark.implicits._
 
-  // every test calls graft_* by name, so register them before any runs
-  // (a test run alone must not depend on another having forced `df`)
-  override def beforeAll(): Unit = {
-    super.beforeAll()
-    HashExpressions.register(spark)
-  }
-
   private lazy val df = {
     val rnd = new scala.util.Random(11)
     val words = Seq("spark", "join", "merge", "batch", "window", "scan", "agg")

@@ -109,7 +109,6 @@ class PropertySpec extends SparkSpec {
     } yield vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
     passes(Prop.forAll(corpus) { rows =>
       val df = rows.map { case (id, v) => (id, v.toSeq) }.toDF("vec_id", "embedding")
-      graft.plans.VectorExpressions.register(spark)
       // seed: ring i → i+1
       val ring = rows.indices.dropRight(1)
         .map(i => (rows(i)._1, rows(i + 1)._1)).toDF("id", "nbr_id")

@@ -275,4 +275,25 @@ class RegistrySpec extends SparkSpec {
       if text.contains("shufflePartitions") || text.contains("edgePartitions") => f }
     assert(knobs.isEmpty, knobs)
   }
+
+  // --- one registration point for the graft_* functions -----------------
+  //
+  // Twenty files used to register a function family before building a
+  // column by name, two of them only through the active session (skipped
+  // without a word on a thread that has none). The service file now has
+  // Spark install GraftExtensions in every session; a per-call hook shows
+  // up here.
+
+  test("graft_* functions are installed by the service file alone") {
+    val hooks = Seq("Expressions.register", "TopKAggregate.register",
+      "registerFunction", "getActiveSession")
+    val users = mainSources.collect {
+      case (f, text) if hooks.exists(text.contains) => f }.sorted
+    assert(users.isEmpty, s"per-call registration in src/main: $users")
+    val service = java.nio.file.Paths.get("src/main/resources/META-INF/services",
+      "org.apache.spark.sql.SparkSessionExtensionsProvider")
+    val named = java.nio.file.Files.readString(service).linesIterator
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
+    assert(named == Seq("graft.plans.GraftExtensions"), named)
+  }
 }

@@ -108,7 +108,6 @@ class RetrievalSpec extends SparkSpec {
       (2L, Array(0.9f, 0.1f)), (3L, Array(0.1f, 0.9f))).toDF("vec_id", "embedding")
     // seed chain 0→1→2→3: 0's TRUE nearest (2) is two hops away — only the
     // neighbor-of-neighbor expansion can surface it as a candidate
-    graft.plans.VectorExpressions.register(spark)
     val ring = Seq((0L, 1L), (1L, 2L), (2L, 3L)).toDF("id", "nbr_id")
     val seed = ring
       .join(e.select(col("vec_id").as("id"), col("embedding").as("_l")), "id")

@@ -24,7 +24,6 @@ class StringExpressionsSpec extends SparkSpec {
   }
 
   test("registered SQL function matches the static method (codegen path)") {
-    StringExpressions.register(spark)
     val pairs = Seq(("night", "nacht"), ("widget", "wdget"),
       ("stream", "spark"), ("aaa", "aa"))
     val got = pairs.toDF("a", "b")
@@ -44,7 +43,6 @@ class StringExpressionsSpec extends SparkSpec {
     assert(jw("abc", "abc") == 1.0 && jw("", "abc") == 0.0 && jw("", "") == 1.0)
     assert(jw("abc", "xyz") == 0.0)
     // registered expression evaluates identically inside a plan
-    graft.plans.StringExpressions.register(spark)
     val out = Seq(("MARTHA", "MARHTA"), ("WINDOW", "WODNIW"))
       .toDF("a", "b")
       .selectExpr("graft_jaro_winkler(a, b) AS jw")

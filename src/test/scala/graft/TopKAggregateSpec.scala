@@ -47,7 +47,6 @@ class TopKAggregateSpec extends SparkSpec {
       // null-out the whole struct when score is null so the aggregate skips it
       .withColumn("packed", when(col("score").isNotNull,
         struct((-col("score")).as("ns"), col("id").as("id"))))
-    graft.plans.TopKAggregate.register(spark)
     val out = df.groupBy("g")
       .agg(call_function("graft_top_k", col("packed"), lit(2)).as("t"))
       .select(col("g"), size(col("t")).as("n"))

@@ -14,14 +14,46 @@ class VectorExpressionsSpec extends SparkSpec {
     }.toDF("id", "a", "b")
   }
 
-  test("native expressions register idempotently") {
-    VectorExpressions.register(spark)
-    VectorExpressions.register(spark)
-    assert(VectorExpressions.isRegistered(spark))
+  private val allBuilders = VectorExpressions.builders ++
+    graft.plans.HashExpressions.builders ++ graft.plans.TopKAggregate.builders ++
+    graft.plans.StringExpressions.builders
+
+  test("every graft_* function resolves in a new session with no register call") {
+    val fresh = spark.newSession()
+    val missing = allBuilders.map(_._1).filterNot(name => fresh.catalog.functionExists(name))
+    assert(missing.isEmpty, s"not in newSession()'s function registry: $missing")
+  }
+
+  test("ServiceLoader finds GraftExtensions as a SparkSessionExtensionsProvider") {
+    import scala.jdk.CollectionConverters._
+    val providers = java.util.ServiceLoader
+      .load(classOf[org.apache.spark.sql.SparkSessionExtensionsProvider])
+      .iterator().asScala.toSeq
+    assert(providers.exists(_.isInstanceOf[graft.plans.GraftExtensions]),
+      providers.map(_.getClass.getName))
+  }
+
+  test("graft_* columns built on a thread with no active session resolve when used") {
+    import org.apache.spark.sql.{Column, SparkSession}
+    var built: Option[(Option[SparkSession], Column, Column)] = None
+    val t = new Thread(() => {
+      SparkSession.clearActiveSession()
+      built = Some((SparkSession.getActiveSession,
+        graft.operators.Dedup.shingleExpr("text", 3),
+        graft.operators.TextQuality.tokenLinesFromText(col("text"), 2)))
+    })
+    t.start(); t.join()
+    val (active, shingles, lines) = built.get
+    assert(active.isEmpty)
+    val fresh = spark.newSession()
+    val row = fresh.createDataFrame(Seq(Tuple1("abcab d e f")))
+      .toDF("text").select(shingles, lines).head()
+    assert(row.getSeq[String](0) == Seq("abc", "bca", "cab", "ab ", "b d", " d ",
+      "d e", " e ", "e f"))
+    assert(row.getSeq[String](1) == Seq("abcab d", "e f"))
   }
 
   test("native codegen results are bit-identical to the HOF reference forms") {
-    VectorExpressions.register(spark)
     val rows = df.select(
       call_function("graft_dot_product", col("a"), col("b")).as("n_dot"),
       dotProduct(col("a"), col("b")).as("h_dot"),
@@ -37,7 +69,6 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("zero-norm vector → cosine distance 1 (cos treated as 0), no NaN") {
-    VectorExpressions.register(spark)
     val out = Seq((Seq(0.0f, 0.0f), Seq(1.0f, 2.0f))).toDF("a", "b")
       .select(call_function("graft_cosine_distance", col("a"), col("b")))
       .head().getDouble(0)
@@ -45,14 +76,12 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("null input → null output") {
-    VectorExpressions.register(spark)
     val out = Seq((Option.empty[Seq[Float]], Seq(1.0f))).toDF("a", "b")
       .select(call_function("graft_dot_product", col("a"), col("b"))).head()
     assert(out.isNullAt(0))
   }
 
   test("functions are SQL-visible after registration") {
-    VectorExpressions.register(spark)
     val v = spark.sql("SELECT graft_dot_product(array(cast(1.0 as float), cast(2.0 as float)), " +
       "array(cast(3.0 as float), cast(4.0 as float))) AS d").head().getDouble(0)
     assert(v == 11.0)
@@ -60,10 +89,8 @@ class VectorExpressionsSpec extends SparkSpec {
 
   test("extensions plugin injects the full function surface (vector + hash families)") {
     new graft.plans.GraftExtensions().apply(new org.apache.spark.sql.SparkSessionExtensions)
-    // the plugin and register() share one builder list per family, so the
-    // SQL-name surface is identical by construction; pin its breadth here
-    val names = (graft.plans.VectorExpressions.builders
-      ++ graft.plans.HashExpressions.builders).map(_._1)
+    // the plugin injects one builder list per family; pin its breadth here
+    val names = allBuilders.map(_._1)
     assert(names.size == names.distinct.size)
     assert(names.toSet.contains("graft_cosine_distance")
       && names.toSet.contains("graft_minhash_sig")
