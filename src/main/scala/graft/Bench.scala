@@ -224,11 +224,11 @@ object Bench {
       f"(${elapsedS}%.0f s > ${budgetS}%.0f s) — skipping steady pass 2")
 
     // leak audit BEFORE the final line so its verdict rides in it:
-    // after clearCache + GC (ContextCleaner drains localCheckpoint
-    // blocks), the only pinned RDDs left must be the REGISTERED standing
-    // frames (QueryHelpers.standingFrames names each intentional
-    // localCheckpoint at creation) — a residual the registry doesn't
-    // know is a leak, reported by name and flagged loudly
+    // after clearCache + GC (ContextCleaner drains Lineage.cut blocks),
+    // the only pinned RDDs left must be the REGISTERED standing frames
+    // (QueryHelpers.standingFrames) — a residual the registry doesn't
+    // know is a leak, reported by name (every cut names its RDD by its
+    // call site's label) and flagged loudly
     spark.catalog.clearCache()
     val registered = graft.queries.QueryHelpers.standingFrames
     def residuals(): Seq[String] = spark.sparkContext.getPersistentRDDs

@@ -10,11 +10,13 @@ import org.apache.spark.sql.execution.QueryExecution
   * timed action (what Bench sums); `buildS` is the builder alone, eager
   * driver jobs included; `analysisS` and `planS` (optimization + physical
   * planning) come from the tracker of the QueryExecution that ran. Jobs,
-  * stages, tasks and task-seconds cover everything the run executed. */
+  * stages, tasks and task-seconds cover everything the run executed;
+  * `jobsByLabel` splits the jobs by their job description — the label of
+  * the [[Lineage]] cut that ran them, "" for an unlabelled job. */
 final case class Measurement(seconds: Double, buildS: Double,
     analysisS: Double, planS: Double, jobs: Long, stages: Long,
-    tasks: Long, taskS: Double, failure: Option[Throwable],
-    executed: Option[QueryExecution]) {
+    tasks: Long, taskS: Double, jobsByLabel: Map[String, Long],
+    failure: Option[Throwable], executed: Option[QueryExecution]) {
   def failed: Boolean = failure.isDefined
   /** The executed plan of the timed action; after a run under AQE it is
     * the final adaptive plan. */
@@ -63,12 +65,18 @@ object Measure {
     Measurement(wall, buildS, phase(QueryPlanningTracker.ANALYSIS),
       phase(QueryPlanningTracker.OPTIMIZATION) +
         phase(QueryPlanningTracker.PLANNING),
-      c.jobs, c.stages, c.tasks, c.taskMs / 1e3, failure, qe)
+      c.jobs, c.stages, c.tasks, c.taskMs / 1e3, c.byLabel.toMap, failure, qe)
   }
 
   private final class Counters extends SparkListener {
     @volatile var jobs, stages, tasks, taskMs = 0L
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs += 1
+    val byLabel = scala.collection.mutable.Map.empty[String, Long]
+    override def onJobStart(e: SparkListenerJobStart): Unit = {
+      jobs += 1
+      val label = Option(e.properties)
+        .flatMap(p => Option(p.getProperty(Lineage.JobDescription))).getOrElse("")
+      byLabel(label) = byLabel.getOrElse(label, 0L) + 1
+    }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
       stages += 1
     override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {

@@ -8,7 +8,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *     [[Measure.run]] and prints first and min seconds, the layers of the
   *     fastest run (build, analysis, optimization+planning, task-seconds),
   *     jobs, stages and tasks as `min-max` over the runs when they differ,
-  *     and every run's seconds;
+  *     and every run's seconds; then, for the fastest run, the three
+  *     [[Lineage]] labels that ran the most jobs, the jobs of the other
+  *     labels, and the unlabelled jobs;
   *   - `plan`: prints the formatted plan Bench would time, unexecuted;
   *   - `final`: runs the query (`reps` times, default 1) and prints the
   *     executed plan of that same QueryExecution (the final AQE plan).
@@ -55,12 +57,18 @@ object Probe {
           val (lo, hi) = (runs.map(count).min, runs.map(count).max)
           if (lo == hi) s"$lo" else s"$lo-$hi"
         }
-        if (mode == "time")
+        if (mode == "time") {
           println(f"$name%-30s ${runs.head.seconds}%7.3f ${best.seconds}%7.3f " +
             f"${best.buildS}%7.3f ${best.analysisS}%7.3f ${best.planS}%7.3f " +
             f"${spread(_.jobs)}%7s ${spread(_.stages)}%7s ${spread(_.tasks)}%7s " +
             f"${best.taskS}%8.3f  " + runs.map(r => f"${r.seconds}%.3f").mkString(" "))
-        else {
+          val (top, rest) = (best.jobsByLabel - "").toSeq
+            .sortBy { case (l, n) => (-n, l) }.splitAt(3)
+          println(f"${""}%-30s top labels: " +
+            top.map { case (l, n) => s"$l=$n" }.mkString(" ") +
+            (if (rest.isEmpty) "" else s" + ${rest.size} more=${rest.map(_._2).sum}") +
+            s" (unlabelled ${best.jobsByLabel.getOrElse("", 0L)} of ${best.jobs} jobs)")
+        } else {
           println(f"\n========== $name (final plan, ${runs.last.seconds}%.3f s) ==========")
           println(runs.last.plan)
         }

@@ -10,13 +10,16 @@ object Verify {
     val only = args.drop(2).toSet
     val spark = Session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
+    val selected = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+    val failed = selected.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -35,5 +38,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    System.err.println(s"verify: ${failed.size} of ${selected.size} queries " +
+      s"failed: ${failed.sorted.mkString("[", ", ", "]")}")
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -399,7 +400,7 @@ object DataLayout {
       .withColumn("pos", row_number().over(wPos))
       .withColumn("prev", lag("pos", 1).over(wKey))
       .withColumn("nxt", lead("pos", 1).over(wKey))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "DataLayout.lruStackDistance.acc"))
     val reuses = acc.filter(col("prev").isNotNull)
       .select(col("g"), col("prev"), col("pos"))
     val dists = reuses
@@ -553,7 +554,7 @@ object DataLayout {
     val stats = binned.groupBy("bin")
       .agg(count(lit(1)).as("nb"), sum(d38(col("v"))).cast("long").as("sb"),
         sum(d38(col("v")) * col("v")).cast("long").as("ssb"))
-      .coalesce(1).localCheckpoint()
+      .coalesce(1).transform(Lineage.cut(_, "DataLayout.vOptimalCurve.stats"))
     // re-index the non-empty bins 1..m_bins; DP runs over that sequence
     val w = Window.orderBy("bin")
     val pfx = stats
@@ -576,7 +577,7 @@ object DataLayout {
         (dd(col("b.css") - col("a.css")) -
           dd(col("b.cs") - col("a.cs")) * dd(col("b.cs") - col("a.cs")) /
             (col("b.cn") - col("a.cn"))).as("sse"))
-      .coalesce(1).localCheckpoint()
+      .coalesce(1).transform(Lineage.cut(_, "DataLayout.vOptimalCurve.sse"))
     val mRow = pfx.agg(max("i").as("_m"), sum("nb").as("_n"))
     val e1 = sse.filter(col("j") === 0).select(col("i"), col("sse").as("cost"))
     val curves = (1 to maxB).scanLeft(e1) { (prev, _) =>

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -545,9 +546,9 @@ object Dedup {
   def incrementalClusters(oldLabels: DataFrame, newPairs: DataFrame,
                           aCol: String, bCol: String): DataFrame = {
     val labels = oldLabels.select(col("id"), col("cluster_rep"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Dedup.incrementalClusters.labels"))
     val np = newPairs.select(col(aCol).as("a"), col(bCol).as("b"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Dedup.incrementalClusters.np"))
     val superEdges = np
       .join(labels.select(col("id").as("a"), col("cluster_rep").as("ra")),
         Seq("a"), "left")
@@ -557,7 +558,7 @@ object Dedup {
         coalesce(col("rb"), col("b")).as("sb"))
     val superReps = dedupClusters(superEdges, "sa", "sb")
       .select(col("id").as("_sn"), col("cluster_rep").as("_nr"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Dedup.incrementalClusters.superReps"))
     val newNodes = np.select(col("a").as("id"))
       .unionByName(np.select(col("b").as("id"))).distinct()
       .join(labels.select("id"), Seq("id"), "left_anti")
@@ -683,7 +684,7 @@ object Dedup {
     // open-corpus path
     val toks = tokens
       .select(col(idCol).as("id"), xxhash64(col(tokCol)).as("tok")).distinct()
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Dedup.prefixFilterJoin.toks"))
     val sizes = toks.groupBy("id").agg(count(lit(1)).as("sz"))
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
     val prefix = toks.join(dfreq, "tok")
@@ -726,7 +727,7 @@ object Dedup {
     // contract), checkpointed once for its two join references.
     val docsigs = toks.groupBy("id")
       .agg(sort_array(collect_list(col("tok"))).as("_sig"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Dedup.prefixFilterJoin.docsigs"))
     cand
       .join(docsigs.select(col("id").as("doc_a"), col("_sig").as("_siga")),
         Seq("doc_a"))
@@ -855,7 +856,7 @@ object Dedup {
     // toks (r12): five references, bounded-slice contract
     val toks = tokens
       .select(col(idCol).as("id"), xxhash64(col(tokCol)).as("tok")).distinct()
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Dedup.containmentJoin.toks"))
     val sizes = toks.groupBy("id").agg(count(lit(1)).as("sz"))
     val dfreq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
     val prefixA = toks.join(dfreq, "tok")
@@ -876,7 +877,7 @@ object Dedup {
     // [[prefixFilterJoin]]'s verify stage, r12)
     val docsigs = toks.groupBy("id")
       .agg(sort_array(collect_list(col("tok"))).as("_sig"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Dedup.containmentJoin.docsigs"))
     cand
       .join(docsigs.select(col("id").as("doc_a"), col("_sig").as("_siga")),
         Seq("doc_a"))
@@ -1093,7 +1094,8 @@ object Dedup {
   def matchTransitivityAudit(pairs: DataFrame, aCol: String,
                              bCol: String): DataFrame = {
     val e = pairs.select(col(aCol).cast("long").as("lo"),
-      col(bCol).cast("long").as("hi")).distinct().localCheckpoint()
+      col(bCol).cast("long").as("hi")).distinct()
+        .transform(Lineage.cut(_, "Dedup.matchTransitivityAudit.edges"))
     val adj = e.select(col("lo").as("m"), col("hi").as("x"))
       .union(e.select(col("hi").as("m"), col("lo").as("x")))
     val wedges = adj.select(col("m"), col("x"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -557,7 +558,8 @@ object Evaluation {
     // expensive upstream build (a corpus window) runs once, not ~2·iters
     // times (the pageRank e.cache() precedent; 2.9 s → sub-second at
     // sf0.1)
-    val pairs = pairs0.select(col(winCol), col(loseCol)).localCheckpoint()
+    val pairs = Lineage.cut(pairs0.select(col(winCol), col(loseCol)),
+      "Evaluation.bradleyTerry.pairs")
     val wins = pairs.groupBy(col(winCol).as("item"))
       .agg(count(lit(1)).as("wins"))
     // symmetric match counts m(i,j): duels between i and j in either order
@@ -826,7 +828,7 @@ object Evaluation {
     val b0 = bins.select(col(xCol).cast("double").as("x"),
       col(nCol).cast("long").as("n"),
       (col(posCol).cast("double") / col(nCol)).as("pi"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Evaluation.sigmoidCalibration.bins"))
     def sig(a: Column, b: Column): Column = {
       val z = a * col("x") + b
       lit(0.5) + lit(0.5) * z / (lit(1.0) + abs(z))

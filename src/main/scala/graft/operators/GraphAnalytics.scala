@@ -1,9 +1,8 @@
 package graft.operators
 
-import scala.concurrent.Await
-import scala.concurrent.duration.FiniteDuration
+import graft.Lineage
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,17 +16,19 @@ import org.apache.spark.sql.functions._
   *
   * Superstep materialization: an iterative op whose next round reads
   * the round's state more than once ends every round with an EAGER
-  * `localCheckpoint` — without truncation the logical plan (and even its
-  * description string) grows exponentially in the round count; caching
-  * dedups execution but not the plan tree. The Markov value iterations
-  * ([[valueIteration]]) read the previous value vector once per round,
-  * so their lineage grows linearly and they do not checkpoint.
-  * Trade-off, on purpose: localCheckpoint blocks are unreplicated
-  * executor state, so an executor lost mid-iteration fails the job
-  * instead of recomputing (use reliable `checkpoint()` to durable
-  * storage — one-line swap — when running with preemptible executors
-  * or dynamic deallocation), and superseded round blocks are freed by
-  * the ContextCleaner when their RDDs are GC'd rather than eagerly —
+  * [[graft.Lineage.cut]] — without truncation the logical plan (and even
+  * its description string) grows exponentially in the round count;
+  * caching dedups execution but not the plan tree. The Markov value
+  * iterations ([[valueIteration]]) read the previous value vector once
+  * per round, so their lineage grows linearly and they do not
+  * checkpoint. The frontier and pointer-doubling loops, which join
+  * their own cut output, cut with `dropStats = true`. Trade-off, on
+  * purpose: the cut's blocks are unreplicated executor state, so an
+  * executor lost mid-iteration fails the job instead of recomputing
+  * (swap `Lineage.cut` to a reliable `checkpoint()` when running with
+  * preemptible executors or dynamic deallocation), and superseded round
+  * blocks are freed by the ContextCleaner when their RDDs are GC'd
+  * rather than eagerly —
   * bounded by one round's state times the GC lag, negligible for the
   * node/edge tables these loops carry.
   *
@@ -63,7 +64,7 @@ object GraphAnalytics {
     val e0 = edges.select(col(srcCol).cast("long").as("a"),
       col(dstCol).cast("long").as("b"))
     e0.union(e0.select(col("b").as("a"), col("a").as("b")))
-      .distinct().localCheckpoint()
+      .distinct().transform(Lineage.cut(_, "GraphAnalytics.undirected"))
   }
 
   /** Canonical undirected edges (a < b), self-loops dropped,
@@ -98,7 +99,8 @@ object GraphAnalytics {
   private def bfs(und: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     val keys = seeds.columns.toSeq
     val carried = keys.filter(_ != "node").map(col)
-    val (levels, _) = closure(seeds.withColumn("d", lit(0)).localCheckpoint(),
+    val (levels, _) = closure(seeds.withColumn("d", lit(0))
+      .transform(Lineage.cut(_, "GraphAnalytics.bfs.seeds")),
         keys, maxHops) { (frontier, h) =>
       frontier.join(und, frontier("node") === und("a"))
         .select(carried :+ col("b").as("node"): _*).distinct()
@@ -199,7 +201,7 @@ object GraphAnalytics {
           .join(sums, col("id") === col("dst"), "left")
           .select(col("id"), col("base"),
             (teleport + expr("(85L * coalesce(insum, 0L)) div 100L")).as("pr"))
-          .localCheckpoint()
+          .transform(Lineage.cut(_, "GraphAnalytics.rankIteration.ranks"))
       }
       ranks
     } finally e.unpersist()
@@ -232,10 +234,8 @@ object GraphAnalytics {
     * n_triangles, transitivity). */
   def triangleStats(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
     val und = canonical(edges, srcCol, dstCol)
-      // referenced three times by the triangle join — localCheckpoint
-      // (not cache) so the materialized blocks free with the RDD via
-      // ContextCleaner instead of pinning CacheManager storage forever
-      .localCheckpoint()
+      // referenced three times by the triangle join
+      .transform(Lineage.cut(_, "GraphAnalytics.triangleStats.und"))
     val counts = und.agg(count(lit(1)).as("n_edges"))
     val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).as("deg"))
@@ -305,12 +305,14 @@ object GraphAnalytics {
                 k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1, "need k >= 1 and rounds >= 1")
     sized(edges) {
-    var und = canonical(edges, srcCol, dstCol).localCheckpoint()
+    var und = Lineage.cut(canonical(edges, srcCol, dstCol),
+      "GraphAnalytics.kCorePeel.edges")
     var keep: DataFrame = null
     (1 to rounds).foreach { r =>
       val deg = und.select(col("a").as("v")).union(und.select(col("b").as("v")))
         .groupBy("v").agg(count(lit(1)).as("deg"))
-      keep = deg.localCheckpoint() // materialized once, read by 2 joins + output
+      // materialized once, read by 2 joins + output
+      keep = Lineage.cut(deg, "GraphAnalytics.kCorePeel.degrees")
         .filter(col("deg") >= k)
       // the final round's survivor set is the result — don't pay two
       // joins + a materialization for an edge set nobody reads
@@ -318,7 +320,7 @@ object GraphAnalytics {
         und = und
           .join(keep.select(col("v").as("a")), Seq("a"), "left_semi")
           .join(keep.select(col("v").as("b")), Seq("b"), "left_semi")
-          .localCheckpoint()
+          .transform(Lineage.cut(_, "GraphAnalytics.kCorePeel.round"))
     }
     keep.select(col("v").as("id"), col("deg"))
     }
@@ -353,7 +355,7 @@ object GraphAnalytics {
         col(labCol).cast("int").as("_seed")).distinct()
       var labels = nodes.join(seeds, Seq("id"), "left")
         .select(col("id"), col("_seed"), col("_seed").as("label"))
-        .localCheckpoint()
+        .transform(Lineage.cut(_, "GraphAnalytics.labelPropagation.seeded"))
       (1 to iters).foreach { _ =>
         val votes = e
           .join(labels.select(col("id").as("src"), col("label")), "src")
@@ -368,7 +370,7 @@ object GraphAnalytics {
           .join(votes, col("id") === col("dst"), "left")
           .select(col("id"), col("_seed"),
             coalesce(col("_seed"), col("_vote"), col("label")).as("label"))
-          .localCheckpoint()
+          .transform(Lineage.cut(_, "GraphAnalytics.labelPropagation.round"))
       }
       labels.select(col("id"), col("label"),
         when(col("_seed").isNotNull, lit("seed"))
@@ -452,7 +454,7 @@ object GraphAnalytics {
       .distinct()
       // vocabulary-bounded; feeds dict, edges AND the final term join —
       // materialize once so the corpus window never re-runs per branch
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "GraphAnalytics.textRankKeywords.pairs"))
     val dict = up.select(col("w1").as("term"))
       .union(up.select(col("w2").as("term"))).distinct()
       .withColumn("wid",
@@ -645,7 +647,8 @@ object GraphAnalytics {
     // the pageRank/bradleyTerry localCheckpoint discipline
     sized(edges) {
     val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")).distinct().localCheckpoint()
+      col(dstCol).cast("long").as("dst")).distinct()
+        .transform(Lineage.cut(_, "GraphAnalytics.hits.edges"))
     var hub: DataFrame = null
     var auth: DataFrame = null
     for (it <- 1 to iters) {
@@ -660,7 +663,8 @@ object GraphAnalytics {
           e.join(hub, e("src") === hub("id"))
             .groupBy(col("dst").as("aid"))
             .agg(sum(d38(col("h"))).cast("double").as("a")))
-        .localCheckpoint() // read twice (norm + scale) per round
+        // read twice (norm + scale) per round
+        .transform(Lineage.cut(_, "GraphAnalytics.hits.authority"))
       val anorm = araw.agg(
         sqrt(sum(d38(col("a") * col("a"))).cast("double")).as("nrm"))
       auth = araw.crossJoin(broadcast(anorm))
@@ -668,7 +672,7 @@ object GraphAnalytics {
       val hraw = e.join(auth, e("dst") === auth("id"))
         .groupBy(col("src").as("hid"))
         .agg(sum(d38(col("a"))).cast("double").as("h"))
-        .localCheckpoint()
+        .transform(Lineage.cut(_, "GraphAnalytics.hits.hub"))
       val hnorm = hraw.agg(
         sqrt(sum(d38(col("h") * col("h"))).cast("double")).as("nrm"))
       hub = hraw.crossJoin(broadcast(hnorm))
@@ -770,7 +774,7 @@ object GraphAnalytics {
       .join(sources.toDF("src"), col("node") === col("src"))
       .select(col("src"), col("node"), lit(0).as("dist"),
         lit(1L).as("sigma"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "GraphAnalytics.brandesFromAll.level0"))
     val (levels, _) = closure(level0, Seq("src", "node"), maxDepth) {
       (frontier, h) => frontier
         .join(und, frontier("node") === und("a"))
@@ -802,7 +806,7 @@ object GraphAnalytics {
         .join(lvl, Seq("src", "node"), "left")
         .select(col("src"), col("node"), col("dist"), col("sigma"),
           coalesce(col("delta"), lit(0.0)).as("delta"))
-        .localCheckpoint()
+        .transform(Lineage.cut(_, "GraphAnalytics.brandesFromAll.level"))
       delta = lvlFull
       acc = acc.union(lvlFull) // leaves checkpointed; read once at the end
     }
@@ -834,7 +838,8 @@ object GraphAnalytics {
     sized(edges) {
     val und = undirected(edges, srcCol, dstCol)
     var colors = und.groupBy(col("a").as("id"))
-      .agg(count(lit(1)).as("color")).localCheckpoint()
+      .agg(count(lit(1)).as("color"))
+      .transform(Lineage.cut(_, "GraphAnalytics.wlRefinement.colors0"))
     def summary(r: Int, c: DataFrame): DataFrame =
       c.groupBy("color").agg(count(lit(1)).as("n"))
         .agg(count(lit(1)).as("n_colors"), max("n").as("largest_class"),
@@ -852,7 +857,7 @@ object GraphAnalytics {
         .select(col("id"),
           aggregate(concat(array(col("color")), col("ns")), lit(0L),
             (acc, x) => (acc * b1 + x) % p).as("color"))
-        .localCheckpoint()
+        .transform(Lineage.cut(_, "GraphAnalytics.wlRefinement.round"))
       out = out.unionByName(summary(r, colors))
     }
     out.orderBy("round")
@@ -888,7 +893,8 @@ object GraphAnalytics {
           col("n_reached"))
     val d1 = bfs(und, und.select(col("a").as("node"))
       .filter(col("node") === startId).distinct(), maxHops)
-    val s1 = summarize(d1, 1, lit(startId)).localCheckpoint()
+    val s1 = Lineage.cut(summarize(d1, 1, lit(startId)),
+      "GraphAnalytics.eccentricitySweep.sweep1")
     val d2 = bfs(und, s1.select(col("farthest").as("node")), maxHops)
     s1.unionByName(summarize(d2, 2, max(when(col("d") === 0, col("node")))))
       .orderBy("sweep")
@@ -922,8 +928,9 @@ object GraphAnalytics {
     // free and report near-zero effects). Hence tot is frozen on the
     // UNFILTERED chain: each channel filters m0 after `transitions`
     // computed it, and every chain iterates over the full state set.
-    val m0 = transitions(trans, fromCol, toCol, nCol).localCheckpoint()
-    val st = states(m0).localCheckpoint()
+    val m0 = Lineage.cut(transitions(trans, fromCol, toCol, nCol),
+      "GraphAnalytics.removalAttribution.transitions")
+    val st = Lineage.cut(states(m0), "GraphAnalytics.removalAttribution.states")
     def reach(m: DataFrame): DataFrame =
       valueIteration(m, st, target, rounds, 1.0)(identity)
         .select(col("s").as("state"), round(col("v"), 6).as("p_reach"))
@@ -1059,10 +1066,10 @@ object GraphAnalytics {
             Seq("node"), "left")
           .filter(col("_old").isNull || col("cost") < col("_old"))
           .select("node", "cost")
-          .localCheckpoint()
+          .transform(Lineage.cut(_, "GraphAnalytics.bellmanFord.improved"))
         dist = dist.union(improved).groupBy("node")
           .agg(min("cost").as("cost"))
-          .localCheckpoint()
+          .transform(Lineage.cut(_, "GraphAnalytics.bellmanFord.dist"))
         frontier = improved
       }
       dist.select(col("node"), col("cost").as("min_cost"))
@@ -1070,70 +1077,11 @@ object GraphAnalytics {
     }
   }
 
-  /** localCheckpoint that also DROPS inherited plan statistics.
-    *
-    * `Dataset.localCheckpoint` truncates lineage but deliberately
-    * preserves the checkpointed plan's ESTIMATED statistics on the
-    * resulting `LogicalRDD` (so broadcast decisions survive the
-    * truncation). Catalyst's size-only estimator multiplies child sizes
-    * at every inner join, so an iterative operator that SELF-JOINS its
-    * own checkpointed output — pointer doubling is the canonical case —
-    * SQUARES the inherited estimate each step: after r rounds the
-    * sizeInBytes BigInt has ~2^r bits and the driver burns minutes
-    * inside `BigInteger.multiply` during stats visits (measured on the
-    * sf0.1 kNN graph: boruvkaMst round 4 actions 20-300 s each, round 5
-    * edge-join 220 s, ALL driver-side stats arithmetic — the tasks
-    * themselves ran in milliseconds). Re-wrapping the checkpoint's own
-    * LogicalRDD without its origin stats resets the estimate to the
-    * constant default, keeping every stats visit O(1) regardless of
-    * loop depth; the price is that these tiny loop frames lose
-    * auto-broadcast (their joins stay shuffle joins — bounded, correct,
-    * and measured fast). The re-wrap keeps the checkpoint's InternalRow
-    * blocks and output partitioning: rebuilding the frame from `ck.rdd`
-    * (a Row RDD) made every later scan convert each row twice, which
-    * put the BFS/Brandes levels — each re-read by every later hop's
-    * anti-join — 10–20% behind a plain localCheckpoint at sf0.1. */
-  private def checkpointDropStats(df: DataFrame): DataFrame = {
-    val ck = df.localCheckpoint()
-    val session = ck.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    ck.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        new org.apache.spark.sql.classic.Dataset(session,
-          r.copy()(session, None, None),
-          org.apache.spark.sql.Encoders.row(ck.schema))
-    }
-  }
-
-  /** [[checkpointDropStats]] that also returns the number of rows
-    * matching `where` (every row by default), taken by the checkpoint's
-    * OWN job: the count rides it as an observed metric
-    * ([[Profiling.withObservedMetrics]]), so a loop's stop test costs no
-    * second `isEmpty`/`count()` job over the blocks just written. */
-  private[graft] def counted(df: DataFrame,
-                             where: Column = lit(true)): (DataFrame, Long) = {
-    val (observed, obs) = Profiling.withObservedMetrics(df, "counted",
-      Seq(count(when(where, true)).as("n")))
-    val ck = checkpointDropStats(observed)
-    (ck, awaitCount(obs))
-  }
-
-  /** The count a [[counted]] checkpoint observed. Spark hands observed
-    * metrics over through a query listener after the job ends; the wait
-    * is bounded, so a metric that never arrives throws instead of
-    * hanging the loop. */
-  private[graft] def awaitCount(obs: Observation,
-      wait: FiniteDuration = FiniteDuration(60, "s")): Long =
-    try Await.result(obs.future, wait).getLong(0)
-    catch {
-      case _: java.util.concurrent.TimeoutException =>
-        throw new IllegalStateException(
-          s"counted: observed metric '${obs.name}' not reported within $wait")
-    }
-
   /** The one semi-naive frontier loop: from `seed`, each step `expand`s
     * the last delta (the step number is its second argument),
     * anti-joins it against everything reached on `keys` and
-    * [[counted]]-checkpoints it; the first empty delta is the fixpoint.
+    * [[Lineage.counted]]-checkpoints it; the first empty delta is the
+    * fixpoint.
     * Runs at most `maxSteps` steps. Returns the levels — `seed` then
     * every non-empty delta, in step order — and whether it settled;
     * callers that must not truncate (`sccLabels`, FwBw) `require` it.
@@ -1147,8 +1095,8 @@ object GraphAnalytics {
     * persist+count saved one tiny job per step but paid Row↔InternalRow
     * conversion on every later step's scan of the delta blocks — net
     * SLOWER than localCheckpoint + isEmpty. The observed count of
-    * [[counted]] saves the same job without that round trip: the delta
-    * is still the checkpoint's own block. */
+    * [[Lineage.counted]] saves the same job without that round trip: the
+    * delta is still the checkpoint's own block. */
   private def closure(seed: DataFrame, keys: Seq[String], maxSteps: Int)
                      (expand: (DataFrame, Int) => DataFrame)
       : (IndexedSeq[DataFrame], Boolean) = {
@@ -1156,8 +1104,9 @@ object GraphAnalytics {
     var reached = seed
     var settled = false
     while (!settled && levels.size <= maxSteps) {
-      val (delta, n) = counted(
-        expand(levels.last, levels.size).join(reached, keys, "left_anti"))
+      val (delta, n) = Lineage.counted(
+        expand(levels.last, levels.size).join(reached, keys, "left_anti"),
+        "GraphAnalytics.closure.delta")
       if (n == 0) settled = true
       else { levels += delta; reached = reached.unionByName(delta) }
     }
@@ -1213,14 +1162,16 @@ object GraphAnalytics {
         col(wCol).cast("double").as("w"))
       .filter(col("lo") =!= col("hi"))
       .groupBy("lo", "hi").agg(min("w").as("w"))
-      .transform(checkpointDropStats)
+      .transform(Lineage.cut(_, "GraphAnalytics.boruvkaMst.edges",
+        dropStats = true))
     // component count only gates the contraction path (the dual-path
     // switch of Dedup.dedupClusters); it shrinks by the merge count
     // each round, so the first labels checkpoint's count tracks it
     // exactly thereafter
-    var (labels, nComponents) = counted(e.select(col("lo").as("v"))
+    var (labels, nComponents) = Lineage.counted(e.select(col("lo").as("v"))
       .unionByName(e.select(col("hi").as("v"))).distinct()
-      .select(col("v"), col("v").as("lab")))
+      .select(col("v"), col("v").as("lab")),
+      "GraphAnalytics.boruvkaMst.labels0")
     var mst: DataFrame = null
     var converged = false
     var r = 0
@@ -1238,8 +1189,10 @@ object GraphAnalytics {
           col("w"), col("lo"), col("hi")))
       val wSel = Window.partitionBy("c")
         .orderBy(col("w"), col("lo"), col("hi"))
-      val (sel, nSel) = counted(inc.withColumn("rn", row_number().over(wSel))
-        .filter(col("rn") === 1).select("c", "o", "w", "lo", "hi"))
+      val (sel, nSel) = Lineage.counted(
+        inc.withColumn("rn", row_number().over(wSel))
+          .filter(col("rn") === 1).select("c", "o", "w", "lo", "hi"),
+        "GraphAnalytics.boruvkaMst.selected")
       if (nComponents <= maxDriverComponents) {
         // DRIVER contraction: sel has one row per component with an
         // outgoing edge (≤ nComponents, gated), and the pointer chase
@@ -1274,7 +1227,8 @@ object GraphAnalytics {
             .select(lit(r).as("round"), col("lo"), col("hi"), col("w"))
             .distinct()
           mst = (if (mst == null) newEdges else mst.unionByName(newEdges))
-            .transform(checkpointDropStats)
+            .transform(Lineage.cut(_, "GraphAnalytics.boruvkaMst.unionFindMst",
+              dropStats = true))
           import scala.jdk.CollectionConverters._
           val rootDf = spark.createDataFrame(
             rootRows.toSeq.map(t => org.apache.spark.sql.Row(t._1, t._2))
@@ -1288,7 +1242,8 @@ object GraphAnalytics {
             .join(broadcast(rootDf), Seq("lab"), "left")
             .select(col("v"),
               coalesce(col("root"), col("lab")).as("lab"))
-            .transform(checkpointDropStats)
+            .transform(Lineage.cut(_, "GraphAnalytics.boruvkaMst.unionFindLabels",
+              dropStats = true))
         }
       } else if (nSel == 0) converged = true // no inter-component edge
       else {
@@ -1296,7 +1251,8 @@ object GraphAnalytics {
           .select(lit(r).as("round"), col("lo"), col("hi"), col("w"))
           .distinct()
         mst = (if (mst == null) newEdges else mst.unionByName(newEdges))
-          .transform(checkpointDropStats)
+          .transform(Lineage.cut(_, "GraphAnalytics.boruvkaMst.mst",
+            dropStats = true))
         val p0 = labels.select(col("lab")).distinct()
           .join(sel.select(col("c").as("lab"), col("o")),
             Seq("lab"), "left")
@@ -1311,13 +1267,13 @@ object GraphAnalytics {
         // The only cycles were the mutual 2-cycles broken here, so a
         // component is a root iff it now points at itself: this
         // checkpoint counts the merges
-        val (broken, merged) = counted(p0.as("a")
+        val (broken, merged) = Lineage.counted(p0.as("a")
           .join(p0.select(col("c").as("pc"), col("p").as("pp")),
             col("a.p") === col("pc"))
           .select(col("a.c").as("c"),
             when(col("pp") === col("a.c"), least(col("a.c"), col("a.p")))
               .otherwise(col("a.p")).as("p")),
-          col("p") =!= col("c"))
+          "GraphAnalytics.boruvkaMst.broken", col("p") =!= col("c"))
         var p = broken
         var settled = false
         var j = 0
@@ -1325,11 +1281,11 @@ object GraphAnalytics {
           j += 1
           // x.p is c's pointer before this step: the step settles when
           // no pointer moved
-          val (p2, moved) = counted(p.as("x")
+          val (p2, moved) = Lineage.counted(p.as("x")
             .join(p.select(col("c").as("yc"), col("p").as("yp")),
               col("x.p") === col("yc"))
             .select(col("x.c").as("c"), col("yp").as("p"),
-              col("x.p").as("_old")),
+              col("x.p").as("_old")), "GraphAnalytics.boruvkaMst.jump",
             col("p") =!= col("_old"))
           settled = moved == 0
           p = p2
@@ -1339,7 +1295,9 @@ object GraphAnalytics {
         nComponents -= merged
         labels = labels
           .join(p.select(col("c").as("lab"), col("p")), Seq("lab"))
-          .select(col("v"), col("p").as("lab")).transform(checkpointDropStats)
+          .select(col("v"), col("p").as("lab"))
+          .transform(Lineage.cut(_, "GraphAnalytics.boruvkaMst.labels",
+            dropStats = true))
       }
     }
     require(converged,
@@ -1369,7 +1327,8 @@ object GraphAnalytics {
     * both checkpoint-truncated with stats dropped. */
   def sccLabels(edges: DataFrame, srcCol: String, dstCol: String,
                 maxIters: Int): DataFrame = {
-    val e = directed(edges, srcCol, dstCol).localCheckpoint()
+    val e = Lineage.cut(directed(edges, srcCol, dstCol),
+      "GraphAnalytics.sccLabels.edges")
     // SEMI-NAIVE closure: frontier ∘ base-edges, minus known. The
     // path-doubling alternative (R ← R ∪ R∘R, ⌈log₂ d⌉ rounds) was
     // MEASURED 6× SLOWER here (30.5 s vs 5.0 s steady at sf0.1, do not
@@ -1462,9 +1421,11 @@ object GraphAnalytics {
   private def fwBwLabels(edges: DataFrame, srcCol: String, dstCol: String,
                          maxRounds: Int, maxDepth: Int,
                          stats: Option[FwBwStats]): DataFrame = {
-    val e = directed(edges, srcCol, dstCol).localCheckpoint()
-    val (nodes, nNodes) = counted(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node"))).distinct())
+    val e = Lineage.cut(directed(edges, srcCol, dstCol),
+      "GraphAnalytics.fwBwLabels.edges")
+    val (nodes, nNodes) = Lineage.counted(e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).distinct(),
+      "GraphAnalytics.fwBwLabels.nodes")
     val empty = nodes.limit(0)
       .select(col("node"), col("node").as("scc"),
         lit(0L).as("scc_size")).limit(0)
@@ -1484,7 +1445,8 @@ object GraphAnalytics {
     var parts: DataFrame = null
     var nParts = 0L
     def setParts(df: DataFrame): Unit = {
-      val (p, n) = counted(df); parts = p; nParts = n
+      val (p, n) = Lineage.counted(df, "GraphAnalytics.fwBwLabels.parts")
+      parts = p; nParts = n
     }
     setParts(Dedup.dedupClusters(
         e.select(col("src"), col("dst")), "src", "dst")
@@ -1514,7 +1476,9 @@ object GraphAnalytics {
         // partitions are disjoint node sets, so node alone keys them
         val keep = pe.select(col("src").as("node")).distinct()
           .intersect(pe.select(col("dst").as("node")).distinct())
-        val (trim, nTrim) = counted(parts.join(keep, Seq("node"), "left_anti"))
+        val (trim, nTrim) = Lineage.counted(
+          parts.join(keep, Seq("node"), "left_anti"),
+          "GraphAnalytics.fwBwLabels.trim")
         if (nTrim == 0) trimming = false
         else {
           append(trim.select(col("node"), col("node").as("scc")))
@@ -1526,14 +1490,16 @@ object GraphAnalytics {
       if (nParts == 0) converged = true
       else {
         val piv = parts.groupBy("part").agg(min("node").as("pivot"))
-          .transform(checkpointDropStats)
+          .transform(Lineage.cut(_, "GraphAnalytics.fwBwLabels.pivots",
+            dropStats = true))
         // BFS closure from every pivot at once, restricted to each
         // pivot's own partition; one frontier⋈static-edges join +
         // one membership semi-join + one anti-join per step
         def fromPivots(dir: DataFrame): DataFrame = {
           val (levels, settled) = closure(
               piv.select(col("pivot").as("node"), col("part"))
-                .transform(checkpointDropStats),
+                .transform(Lineage.cut(_, "GraphAnalytics.fwBwLabels.pivotSeeds",
+                  dropStats = true)),
               Seq("node", "part"), maxDepth) { (frontier, _) =>
             frontier
               .join(dir.select(col("src").as("node"), col("dst")), Seq("node"))
@@ -1543,12 +1509,15 @@ object GraphAnalytics {
           require(settled,
             s"sccLabelsFwBw: BFS not settled within $maxDepth steps")
           bfsSteps += levels.size // the non-empty steps + the settling one
-          levels.reduce(_ unionByName _).transform(checkpointDropStats)
+          levels.reduce(_ unionByName _)
+            .transform(Lineage.cut(_, "GraphAnalytics.fwBwLabels.reached",
+              dropStats = true))
         }
         val fw = fromPivots(e)
         val bw = fromPivots(e.select(col("dst").as("src"), col("src").as("dst")))
         val scc = fw.join(bw, Seq("node", "part"), "left_semi")
-          .transform(checkpointDropStats)
+          .transform(Lineage.cut(_, "GraphAnalytics.fwBwLabels.scc",
+            dropStats = true))
         append(scc.join(piv, Seq("part"))
           .select(col("node"), col("pivot").as("scc")))
         // SCC-closed three-way split; new partition id = subset min
@@ -1631,7 +1600,8 @@ object GraphAnalytics {
                      newEdges: DataFrame, srcCol: String, dstCol: String,
                      oldCondWcc: Option[DataFrame] = None): DataFrame =
     sized(oldLabels) {
-      val labels = oldLabels.select(col("node"), col("scc")).localCheckpoint()
+      val labels = Lineage.cut(oldLabels.select(col("node"), col("scc")),
+        "GraphAnalytics.incrementalScc.labels")
       def withSizes(lbl: DataFrame): DataFrame = {
         val sizes = lbl.groupBy("scc").agg(count(lit(1)).as("scc_size"))
         lbl.join(sizes, Seq("scc")).select("node", "scc", "scc_size")
@@ -1667,21 +1637,24 @@ object GraphAnalytics {
       srcCol: String, dstCol: String,
       oldCondWcc: Option[DataFrame])
       : Option[(DataFrame, DataFrame, DataFrame)] = {
-    val ne = directed(newEdges, srcCol, dstCol).localCheckpoint()
+    val ne = Lineage.cut(directed(newEdges, srcCol, dstCol),
+      "GraphAnalytics.incrementalSccDelta.newEdges")
     // batch in super space: endpoints → their old SCC label; nodes the
     // old graph never saw are their own super-node
-    val (sn, nSn) = counted(ne
+    val (sn, nSn) = Lineage.counted(ne
       .join(labels.select(col("node").as("src"), col("scc").as("_ss")),
         Seq("src"), "left")
       .join(labels.select(col("node").as("dst"), col("scc").as("_sd")),
         Seq("dst"), "left")
       .select(coalesce(col("_ss"), col("src")).as("ss"),
         coalesce(col("_sd"), col("dst")).as("sd"))
-      .filter(col("ss") =!= col("sd")).distinct())
+      .filter(col("ss") =!= col("sd")).distinct(),
+      "GraphAnalytics.incrementalSccDelta.superNew")
     if (nSn == 0) return None
     val cond = oldCondensation
       .select(col("src_scc").as("ss"), col("dst_scc").as("sd"))
-    val superEdges = cond.unionByName(sn).localCheckpoint()
+    val superEdges = Lineage.cut(cond.unionByName(sn),
+      "GraphAnalytics.incrementalSccDelta.superEdges")
     // touched weak components: the only places SCCs can merge. With the
     // condensation's own WCC labels passed as standing state
     // ([[condensationWcc]], maintained per batch by the q554 merge),
@@ -1699,7 +1672,8 @@ object GraphAnalytics {
       .select(explode(array(col("ss"), col("sd"))).as("id")).distinct()
       .join(wcc, Seq("id")).select("cluster_rep").distinct()
     val touched = wcc.join(broadcast(touchedComps), Seq("cluster_rep"))
-      .select("id").localCheckpoint()
+      .select("id")
+      .transform(Lineage.cut(_, "GraphAnalytics.incrementalSccDelta.touched"))
     val touchedEdges = superEdges
       .join(touched.select(col("id").as("ss")), Seq("ss"), "left_semi")
     val superLabels = sccLabelsFwBw(touchedEdges, "ss", "sd")
@@ -1752,7 +1726,8 @@ object GraphAnalytics {
     // output) is consumed FOUR times below; without a lineage cut the
     // repeated self-joins trip Catalyst's attribute dedup ("key not
     // found: scc#N") on the shared subplan
-    val lbl = newLabels.select(col("node"), col("scc")).localCheckpoint()
+    val lbl = Lineage.cut(newLabels.select(col("node"), col("scc")),
+      "GraphAnalytics.incrementalCondensation.labels")
     // old condensation nodes ARE node ids (an SCC label is its min
     // node), so the re-point map is the label frame restricted to them
     val oc = oldCondensation
@@ -1821,7 +1796,9 @@ object GraphAnalytics {
           .select(col("b").as("node")).distinct()
           .join(reached, Seq("node"), "left_anti")
           .select(col("node"), lit(l).as("d"))
-          .transform(checkpointDropStats)
+          .transform(Lineage.cut(_,
+            "GraphAnalytics.bidirectionalBfsDistance.frontier",
+            dropStats = true))
         // ONE aggregate job yields both the frontier size and the best
         // meet through the other side (left join keeps non-meet rows for
         // the count; min ignores their null distances)
@@ -1863,11 +1840,13 @@ object GraphAnalytics {
     * = DAG depth. Returns (node, level). */
   def dagLevels(edges: DataFrame, srcCol: String, dstCol: String,
                 maxDepth: Int = 128): DataFrame = {
-    val e = directed(edges, srcCol, dstCol).localCheckpoint()
+    val e = Lineage.cut(directed(edges, srcCol, dstCol),
+      "GraphAnalytics.dagLevels.edges")
     val nodes = e.select(col("src").as("node"))
       .unionByName(e.select(col("dst").as("node"))).distinct()
     var lvl = nodes.select(col("node"), lit(0L).as("level"))
-      .transform(checkpointDropStats)
+      .transform(Lineage.cut(_, "GraphAnalytics.dagLevels.level0",
+        dropStats = true))
     var converged = false
     var d = 0
     while (!converged && d < maxDepth) {
@@ -1878,11 +1857,12 @@ object GraphAnalytics {
         .agg(max(col("level") + 1).as("_cand"))
       // the checkpoint carries each node's old level, so its own job
       // counts the nodes whose level moved
-      val (next, moved) = counted(lvl.join(relaxed, Seq("node"), "left")
-        .select(col("node"),
-          greatest(col("level"), coalesce(col("_cand"), lit(0L)))
-            .as("level"), col("level").as("_old")),
-        col("level") =!= col("_old"))
+      val (next, moved) = Lineage.counted(
+        lvl.join(relaxed, Seq("node"), "left")
+          .select(col("node"),
+            greatest(col("level"), coalesce(col("_cand"), lit(0L)))
+              .as("level"), col("level").as("_old")),
+        "GraphAnalytics.dagLevels.round", col("level") =!= col("_old"))
       converged = moved == 0
       lvl = next.select("node", "level")
     }
@@ -1925,7 +1905,8 @@ object GraphAnalytics {
              k: Int, rounds: Int): DataFrame = {
     require(k >= 3 && rounds >= 1, "need k >= 3 and rounds >= 1")
     sized(edges) {
-    var (und, entering) = counted(canonical(edges, srcCol, dstCol))
+    var (und, entering) = Lineage.counted(canonical(edges, srcCol, dstCol),
+      "GraphAnalytics.kTruss.edges")
     var out: DataFrame = null
     (1 to rounds).foreach { r =>
       // oriented triangles a<b<c, each counted once
@@ -1937,10 +1918,11 @@ object GraphAnalytics {
         .unionByName(tri.select(col("b").as("a"), col("c").as("b")))
         .unionByName(tri.select(col("a"), col("c").as("b")))
         .groupBy("a", "b").agg(count(lit(1)).as("support"))
-      val (kept, surviving) = counted(und.join(support, Seq("a", "b"), "left")
-        .select(col("a"), col("b"),
-          coalesce(col("support"), lit(0L)).as("support"))
-        .filter(col("support") >= k - 2))
+      val (kept, surviving) = Lineage.counted(
+        und.join(support, Seq("a", "b"), "left")
+          .select(col("a"), col("b"),
+            coalesce(col("support"), lit(0L)).as("support"))
+          .filter(col("support") >= k - 2), "GraphAnalytics.kTruss.round")
       out = kept
       // fixpoint assertion: both counts come from the checkpoint jobs
       // that wrote the entering and surviving edge sets

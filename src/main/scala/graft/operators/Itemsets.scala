@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -64,7 +65,7 @@ object Itemsets {
     // of a deterministic recompute is a non-issue in one JVM), and the
     // support filter keeps tf's width at two ints.
     val tf = t.join(dict, Seq("item")).select(col("id"), col("iid"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Itemsets.keepFrequent.tf"))
     // Candidate levels expand through codegen'd id self-joins. MEASURED
     // ALTERNATIVE (do not redo): per-doc sorted baskets via collect_set
     // with map-side HOF combination expansion halves the shuffles but ran

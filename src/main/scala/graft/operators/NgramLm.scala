@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -282,7 +283,7 @@ object NgramLm {
     val tc = df.select(col(srcCol).as("src"),
         explode(TextQuality.tokens(lower(col(textCol)))).as("tok"))
       .groupBy("src", "tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "NgramLm.burrowsDelta.tc"))
     val vocab = tc.groupBy("tok").agg(sum("c").as("cf"))
       .orderBy(col("cf").desc, col("tok")).limit(topK)
       .select("tok")
@@ -346,7 +347,7 @@ object NgramLm {
     val tc = df.select(col(srcCol).as("src"),
         explode(TextQuality.tokens(lower(col(textCol)))).as("tok"))
       .groupBy("src", "tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "NgramLm.jensenShannonBySource.tc"))
     val tot = tc.groupBy("src").agg(sum("c").as("nt"))
     val a = tc.join(tot, Seq("src"))
       .select(col("src").as("sa"), col("tok"), col("c").as("ca"),
@@ -385,7 +386,8 @@ object NgramLm {
                           itemCol: String, nCol: String): DataFrame = {
     val d18 = (c: Column) => c.cast("decimal(38,18)")
     val tc = counts.select(col(grpCol).as("src"), col(itemCol).as("tok"),
-      col(nCol).cast("long").as("c")).localCheckpoint()
+      col(nCol).cast("long").as("c"))
+        .transform(Lineage.cut(_, "NgramLm.jensenShannonCounts.tc"))
     val tot = tc.groupBy("src").agg(sum("c").as("nt"))
     val a = tc.join(tot, Seq("src"))
       .select(col("src").as("sa"), col("tok"), col("c").as("ca"),

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -408,7 +409,7 @@ object Profiling {
     val d18 = (c: Column) => c.cast("decimal(38,18)")
     val cube = df.groupBy(cols.map(col): _*)
       .agg(count(lit(1)).as("_n"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Profiling.cramersVMatrix.cube"))
     val pairs = for {
       i <- cols.indices; j <- cols.indices if i < j
     } yield (cols(i), cols(j))
@@ -495,7 +496,7 @@ object Profiling {
     val hist = df.select(col(shardCol).as("sh"),
         col(valueCol).cast("long").as("v"))
       .groupBy("sh", "v").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Profiling.shardMedianBias.hist"))
     val wCum = Window.partitionBy("sh").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy("sh")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -286,11 +287,9 @@ object Retrieval {
                     k: Int, k1: Double = 1.2, b: Double = 0.75,
                     maxBroadcastPairs: Long = 4000000L): DataFrame = {
     // |terms| rows, materialized once (the pre-count below and the
-    // scoring plan both read the pruned buckets exactly once);
-    // localCheckpoint so the blocks free with the RDD instead of
-    // pinning CacheManager for the life of the session
+    // scoring plan both read the pruned buckets exactly once)
     val postings = graft.store.IndexStore.lookup(spark, indexPath, queryTerms, nBuckets)
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Retrieval.bm25FromIndex.postings"))
     val tf = postings
       .select(col("term"), col("df").as("term_df"), explode(col("postings")).as("p"))
       .select(col("term"), col("term_df"), col("p.id").as("id"), col("p.tf").as("tf"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -457,7 +458,7 @@ object Sketches {
     }
     val posSet = members
       .select(explode(positions(col(keyCol))).as("pos")).distinct()
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Sketches.bloomFprAudit.positions"))
     val mStats = members.agg(countDistinct(col(keyCol)).as("n_members"))
       .crossJoin(broadcast(posSet.agg(count(lit(1)).as("bits_set"))))
     val probed = probes

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -948,7 +949,7 @@ object Stats {
     val steps = atRisk.filter(col("d1") + col("d2") > 0)
       .withColumn("f", (col("n_at_risk") - col("d1") - col("d2"))
         .cast("double") / col("n_at_risk"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.competingRisks.steps"))
     val sentinel = steps.sparkSession.range(1)
       .select(lit(-1L).as("u"), lit(1.0).as("f"))
     val factors = steps.select(col("t").as("u"), col("f"))
@@ -996,7 +997,7 @@ object Stats {
       sum(when(col("r") > 0, lit(t.toLong) * col("r"))
         .otherwise(lit((t - 10).toLong) * col("r"))).as(s"l$t"))
     val losses = g.groupBy("b").agg(aggs.head, aggs.tail: _*)
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.quantileRegressionGrid.losses"))
     taus10.map { t =>
       losses
         .withColumn("_rk", row_number().over(
@@ -1803,7 +1804,7 @@ object Stats {
                   vCol: String): DataFrame = {
     val base = daily.select(col(groupCol).as("g"),
       col(orderCol).cast("long").as("t"), col(vCol).cast("long").as("v"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.mannKendall.base"))
     val s = base.select(col("g"), col("t"), col("v").as("va"))
       .join(base.select(col("g"), col("t").as("t2"), col("v").as("vb")),
         Seq("g"))
@@ -2176,7 +2177,7 @@ object Stats {
     val d0 = (c: Column) => c.cast("decimal(38,0)")
     val base = daily.select(col(groupCol).as("g"),
       col(orderCol).cast("long").as("t"), col(vCol).cast("long").as("v"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.acfTable.base"))
     (1 to maxLag).map { lag =>
       val j = base.select(col("g"), col("t"), col("v").as("x"))
         .join(base.select(col("g"), (col("t") - lag).as("t"),
@@ -2268,7 +2269,7 @@ object Stats {
     val e = base0.join(broadcast(tot), Seq("g"))
       .select(col("g"), col("t"), (col("n") * col("v") - col("s")).as("e"),
         col("n"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.pacf.e"))
     val c0 = e.groupBy("g").agg(max("n").as("n"),
       sum(d0(col("e")) * col("e")).as("c0"))
     def ck(k: Int) = e.select(col("g"), col("t"), col("e").as("ex"))
@@ -2361,7 +2362,7 @@ object Stats {
       .withColumn("_rn", row_number().over(
         Window.orderBy(col("v"), col("id"))).cast("long"))
       .crossJoin(broadcast(vals.agg(count(lit(1)).as("_n"))))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.meanExcessTable.ranked"))
     pcts.map { p =>
       val thr = ranked.filter(col("_rn") === expr(s"($p * _n + 99) div 100"))
         .select(col("v").as("u"))
@@ -3438,7 +3439,7 @@ object Stats {
     // which is the operator's two-scan contract.
     val rng = v.groupBy("g").agg(min("v").as("mn"), max("v").as("mx"),
       count(lit(1)).as("nn"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.groupedTwoPassQuantiles.rng"))
     def binned = v.join(rng, Seq("g"))
       .withColumn("bin", expr(
         s"least($coarseBins - 1, ((v - mn) * $coarseBins) div (mx - mn + 1))"))
@@ -3447,7 +3448,7 @@ object Stats {
       .withColumn("cum", sum("f").over(
         W.partitionBy("g").orderBy("bin").rowsBetween(Long.MinValue, 0)))
       .join(rng.select("g", "nn"), Seq("g"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.groupedTwoPassQuantiles.hist"))
     // 1-based ranks of the two order statistics around h = p·(n−1) per
     // quantile; fn = 0 collapses both to the same rank (exact hit)
     def target(kExpr: String, tag: String) = hist
@@ -3502,14 +3503,15 @@ object Stats {
     // med/mad are |g|-row frames referenced from several branches —
     // checkpoint them so the MAD leg and the final fence pass re-read a
     // bounded materialization instead of re-running the median plan
-    val med = groupedTwoPassMedian(v, coarseBins).localCheckpoint()
+    val med = Lineage.cut(groupedTwoPassMedian(v, coarseBins),
+      "Stats.hampelGateScalable.med")
     val dev = v.join(med, Seq("g"))
       .withColumn("med2", (col("med") * 2).cast("long"))
       .withColumn("adev2", abs(col("v") * 2 - col("med2")))
     val mad = groupedTwoPassMedian(
         dev.select(col("g"), col("adev2").as("v")), coarseBins)
       .select(col("g"), (col("med") / 2).as("mad"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.hampelGateScalable.mad"))
     dev.withColumn("adev", col("adev2").cast("double") / 2)
       .join(mad, Seq("g"))
       .withColumn("fence", lit(k.toDouble) * col("mad"))
@@ -3545,7 +3547,7 @@ object Stats {
     // scans instead of four
     val fences = groupedTwoPassQuantiles(v, Seq((1, 4), (3, 4)), coarseBins)
       .select(col("g"), col("n"), col("q0").as("q25"), col("q1").as("q75"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.trimmedMeanScalable.fences"))
     v.join(fences, Seq("g"))
       .filter(col("v").cast("double") >= col("q25") &&
         col("v").cast("double") <= col("q75"))
@@ -3734,7 +3736,8 @@ object Stats {
   def cramersV(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val d18 = (c: Column) => c.cast("decimal(38,18)")
     val joint = df.groupBy(col(aCol).as("x"), col(bCol).as("y"))
-      .agg(count(lit(1)).as("o")).localCheckpoint()
+      .agg(count(lit(1)).as("o"))
+      .transform(Lineage.cut(_, "Stats.cramersV.joint"))
     val ma = joint.groupBy("x").agg(sum("o").as("cx"))
     val mb = joint.groupBy("y").agg(sum("o").as("cy"))
     val tot = joint.agg(sum("o").as("n"))
@@ -3775,7 +3778,8 @@ object Stats {
                         bCol: String): DataFrame = {
     val d18 = (c: Column) => c.cast("decimal(38,18)")
     val joint = df.groupBy(col(aCol).as("x"), col(bCol).as("y"))
-      .agg(count(lit(1)).as("cxy")).localCheckpoint()
+      .agg(count(lit(1)).as("cxy"))
+      .transform(Lineage.cut(_, "Stats.mutualInformation.joint"))
     val ma = joint.groupBy("x").agg(sum("cxy").as("cx"))
     val mb = joint.groupBy("y").agg(sum("cxy").as("cy"))
     val nRow = joint.agg(sum("cxy").as("nn"))
@@ -3822,7 +3826,8 @@ object Stats {
                     vCol: String): DataFrame = {
     val d0 = (c: Column) => c.cast("decimal(38,0)")
     val base = daily.select(col(orderCol).cast("long").as("t"),
-      col(vCol).cast("long").as("v")).localCheckpoint()
+      col(vCol).cast("long").as("v"))
+        .transform(Lineage.cut(_, "Stats.yuleWalkerAr2.base"))
     // r_k from the lag-k pair frame: exact n/sx/sy/sxx/syy/sxy blocks
     def lagR(k: Int) = {
       val j = base.select(col("t"), col("v").as("x"))
@@ -3982,7 +3987,7 @@ object Stats {
       .groupBy("g").agg(count(lit(1)).as("n_g"),
         sum(d0(col("v"))).as("s_g"),
         sum(d0(col("v")) * col("v")).as("ss_g"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.tukeyHsd.gs"))
     val mse = gs
       .withColumn("term",
         (d0(col("s_g")) * col("s_g")).cast("double") / col("n_g"))
@@ -4028,7 +4033,7 @@ object Stats {
     val d0 = (c: Column) => c.cast("decimal(38,0)")
     val base = daily.select(col(orderCol).cast("long").as("t"),
       col(xCol).cast("long").as("x"), col(yCol).cast("long").as("y"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.ccfTable.base"))
     // y at t+lag keyed back to x's clock: join key = t_y − lag
     val right = base.select(col("t"), col("y"))
       .withColumn("lag", explode(sequence(lit(-maxLag), lit(maxLag))))
@@ -4079,7 +4084,7 @@ object Stats {
     val base = df.select(col(groupCol).cast("long").as("g"),
       col(valueCol).cast("long").as("v"))
     val gv = base.groupBy("g", "v").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.jonckheereTerpstra.gv"))
     val gvb = gv.select(col("g").as("gb"), col("v").as("vb"),
       col("c").as("cb"))
     val j = gv
@@ -4135,12 +4140,12 @@ object Stats {
     val ranked = perV
       .withColumn("below", coalesce(sum("t").over(wOrd), lit(0L)))
       .withColumn("r2", lit(2L) * col("below") + col("t") + 1)
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.conoverIman.ranked"))
     val gs = base.groupBy("g", "v").agg(count(lit(1)).as("n_gv"))
       .join(ranked.select("v", "r2"), Seq("v"))
       .groupBy("g")
       .agg(sum(col("n_gv") * col("r2")).as("s2"), sum("n_gv").as("n_g"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "Stats.conoverIman.gs"))
     val tot = ranked.agg(sum("t").as("nn"),
       sum(col("t") * col("t") * col("t") - col("t")).as("tie"),
       sum(d0(col("t")) * col("r2") * col("r2")).as("q4"))

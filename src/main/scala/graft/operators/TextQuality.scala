@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -51,7 +52,7 @@ object TextQuality {
     val tc = df.select(col(srcCol).as("src"),
         explode(tokens(lower(col(textCol)))).as("tok"))
       .groupBy("src", "tok").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .transform(Lineage.cut(_, "TextQuality.oovRate.tc"))
     val vocab = tc.groupBy("tok").agg(sum("c").as("cf"))
       .orderBy(col("cf").desc, col("tok").asc).limit(vocabSize)
       .select(col("tok"), lit(true).as("in_vocab"))

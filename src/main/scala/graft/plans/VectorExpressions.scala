@@ -15,8 +15,11 @@ import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvi
   * Spark — every element crosses an interpreted lambda. These expressions
   * generate a tight primitive loop instead (one pass, no allocation), which
   * is what the 100 TB hot path needs. Accumulation order and formulas are
-  * IDENTICAL to the HOF forms (sequential left-to-right double adds), so
-  * swapping one for the other never changes a result bit.
+  * IDENTICAL to the HOF forms (sequential left-to-right double adds), and
+  * a length mismatch or a null element gives null in both, so swapping
+  * one form for the other changes no result bit — except a cosine
+  * distance over arrays of different lengths where one side has zero
+  * norm (see [[CosineDistanceExpr]]).
   *
   * Distance semantics mirror the reference's strategies
   * (reference: src/server/app/embed/schemas.py:12;
@@ -24,8 +27,15 @@ import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvi
   */
 object VectorExpressions {
 
+  /** A pair of `ARRAY<FLOAT>` folded left to right in double precision.
+    * Null on a length mismatch or a null element, as the `zip_with` twin
+    * is (it pads the shorter side with nulls, and a null term nulls the
+    * fold). The null-element test is decided at codegen time from the
+    * input types' `containsNull`: a non-null embedding column pays no
+    * per-element check. */
   abstract class FloatVecBinary extends BinaryExpression {
     override def dataType: DataType = DoubleType
+    override def nullable: Boolean = true
     override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
       def ok(t: DataType) = t match {
         case ArrayType(FloatType, _) => true
@@ -37,42 +47,75 @@ object VectorExpressions {
         s"$prettyName requires two ARRAY<FLOAT> arguments, got " +
           s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
     }
+
+    private lazy val elementNulls = Seq(left, right).exists(_.dataType match {
+      case ArrayType(_, containsNull) => containsNull
+      case _ => true
+    })
+
+    /** The fold over `n` element pairs, neither array holding a null. */
+    protected def fold(x: ArrayData, y: ArrayData, n: Int): Double
+    /** Java for the fold: accumulator declarations, the step over locals
+      * `x` and `y`, and the statements that assign the result to `value`. */
+    protected def genFold(ctx: CodegenContext, value: String): (String, String, String)
+
+    override protected def nullSafeEval(a: Any, b: Any): Any = {
+      val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
+      val n = x.numElements()
+      def hasNull = (0 until n).exists(i => x.isNullAt(i) || y.isNullAt(i))
+      if (n != y.numElements() || (elementNulls && hasNull)) null
+      else fold(x, y, n)
+    }
+
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+      nullSafeCodeGen(ctx, ev, (a, b) => {
+        val i = ctx.freshName("i"); val n = ctx.freshName("n")
+        val (declare, step, finish) = genFold(ctx, ev.value)
+        val nullCheck =
+          if (!elementNulls) ""
+          else s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
+        s"""
+           |int $n = $a.numElements();
+           |if ($n != $b.numElements()) {
+           |  ${ev.isNull} = true;
+           |} else {
+           |  $declare
+           |  for (int $i = 0; $i < $n; $i++) {
+           |    $nullCheck
+           |    double x = (double) $a.getFloat($i);
+           |    double y = (double) $b.getFloat($i);
+           |    $step
+           |  }
+           |  $finish
+           |}
+         """.stripMargin
+      })
   }
 
   /** dot(a, b) — sequential double accumulation. */
   case class DotProductExpr(left: Expression, right: Expression) extends FloatVecBinary {
     override def prettyName: String = "graft_dot_product"
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
+    override protected def fold(x: ArrayData, y: ArrayData, n: Int): Double = {
       var dot = 0.0; var i = 0
       while (i < n) { dot += x.getFloat(i).toDouble * y.getFloat(i).toDouble; i += 1 }
       dot
     }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i"); val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  $acc += ((double) $a.getFloat($i)) * ((double) $b.getFloat($i));
-           |}
-           |${ev.value} = $acc;
-         """.stripMargin
-      })
+    override protected def genFold(ctx: CodegenContext, value: String) = {
+      val acc = ctx.freshName("acc")
+      (s"double $acc = 0.0;", s"$acc += x * y;", s"$value = $acc;")
+    }
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }
 
   /** cosine distance 1 - cos(a,b); zero-norm input → distance 1 (cos 0),
     * matching VectorFunctions.cosineSimilarity's zero guard. Denominator is
-    * sqrt(na)*sqrt(nb) — same association as the HOF form. */
+    * sqrt(na)*sqrt(nb) — same association as the HOF form. The twin
+    * takes each norm over its own array, so on a length mismatch with a
+    * zero-norm side it returns 1 where this returns null. */
   case class CosineDistanceExpr(left: Expression, right: Expression) extends FloatVecBinary {
     override def prettyName: String = "graft_cosine_distance"
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
+    override protected def fold(x: ArrayData, y: ArrayData, n: Int): Double = {
       var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
       while (i < n) {
         val xv = x.getFloat(i).toDouble; val yv = y.getFloat(i).toDouble
@@ -81,23 +124,14 @@ object VectorExpressions {
       val denom = math.sqrt(na) * math.sqrt(nb)
       if (denom == 0.0) 1.0 else 1.0 - dot / denom
     }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i"); val n = ctx.freshName("n")
-        val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-        val den = ctx.freshName("den")
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double x = (double) $a.getFloat($i);
-           |  double y = (double) $b.getFloat($i);
-           |  $dot += x * y; $na += x * x; $nb += y * y;
-           |}
-           |double $den = Math.sqrt($na) * Math.sqrt($nb);
-           |${ev.value} = ($den == 0.0) ? 1.0 : 1.0 - $dot / $den;
-         """.stripMargin
-      })
+    override protected def genFold(ctx: CodegenContext, value: String) = {
+      val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
+      val den = ctx.freshName("den")
+      (s"double $dot = 0.0; double $na = 0.0; double $nb = 0.0;",
+        s"$dot += x * y; $na += x * x; $nb += y * y;",
+        s"""double $den = Math.sqrt($na) * Math.sqrt($nb);
+           |$value = ($den == 0.0) ? 1.0 : 1.0 - $dot / $den;""".stripMargin)
+    }
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }
@@ -105,9 +139,7 @@ object VectorExpressions {
   /** Euclidean distance ||a-b||. */
   case class L2DistanceExpr(left: Expression, right: Expression) extends FloatVecBinary {
     override def prettyName: String = "graft_l2_distance"
-    override protected def nullSafeEval(a: Any, b: Any): Any = {
-      val x = a.asInstanceOf[ArrayData]; val y = b.asInstanceOf[ArrayData]
-      val n = math.min(x.numElements(), y.numElements())
+    override protected def fold(x: ArrayData, y: ArrayData, n: Int): Double = {
       var acc = 0.0; var i = 0
       while (i < n) {
         val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
@@ -115,19 +147,11 @@ object VectorExpressions {
       }
       math.sqrt(acc)
     }
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val i = ctx.freshName("i"); val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
-        s"""
-           |int $n = Math.min($a.numElements(), $b.numElements());
-           |double $acc = 0.0;
-           |for (int $i = 0; $i < $n; $i++) {
-           |  double d = ((double) $a.getFloat($i)) - ((double) $b.getFloat($i));
-           |  $acc += d * d;
-           |}
-           |${ev.value} = Math.sqrt($acc);
-         """.stripMargin
-      })
+    override protected def genFold(ctx: CodegenContext, value: String) = {
+      val acc = ctx.freshName("acc")
+      (s"double $acc = 0.0;", s"double d = x - y; $acc += d * d;",
+        s"$value = Math.sqrt($acc);")
+    }
     override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
       copy(left = l, right = r)
   }

@@ -861,10 +861,10 @@ private[graft] object Queries001to090 extends QueryModule {
       val m = 131072; val k = 3
       // build is read three times (bit packing, FP anti-join, n_build) —
       // materialize the ~|build| keys once instead of rescanning lineitem
-      // each time; localCheckpoint (not cache) so the blocks free with
-      // the RDD instead of pinning CacheManager across the whole suite
+      // each time
       val build = tbl(s, dir, "lineitem").filter(col("l_quantity") > 45)
-        .select(col("l_orderkey").as("key")).distinct().localCheckpoint()
+        .select(col("l_orderkey").as("key")).distinct()
+        .transform(Lineage.cut(_, "q67.build"))
       val words = Sketches.packBits(Sketches.bloomBits(build, "key", m, k), m)
       val probe = tbl(s, dir, "orders").select(col("o_orderkey").as("key"))
       val flagged = Sketches.bloomProbePacked(probe, "key", words, m, k)

@@ -885,14 +885,13 @@ private[graft] object Queries091to155 extends QueryModule {
       // join ≡ plain join; n_false_pass is the bounded Bloom overshoot
       // that the join then discards
       val m = 131072; val k = 3
-      // localCheckpoint (not cache): reused frames free with the RDD
-      // rather than accumulating in CacheManager over the bench suite
       val dim = tbl(s, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
-        .select(col("o_orderkey").as("key")).distinct().localCheckpoint()
+        .select(col("o_orderkey").as("key")).distinct()
+        .transform(Lineage.cut(_, "q140.dim"))
       val fact = tbl(s, dir, "lineitem").select(col("l_orderkey"))
       val pruned = Joins.bloomPrefilter(fact, "l_orderkey", dim, "key", m, k)
-        .localCheckpoint()
+        .transform(Lineage.cut(_, "q140.pruned"))
       val joined = pruned.join(dim, pruned("l_orderkey") === dim("key"))
       fact.agg(count(lit(1)).as("n_fact"))
         .crossJoin(pruned.agg(count(lit(1)).as("n_pass")))
@@ -938,13 +937,12 @@ private[graft] object Queries091to155 extends QueryModule {
       // over-flags
       val d = tbl(s, dir, "documents").filter(col("doc_id") < 300)
       val corpus = nearDupCorpus(d)
-      // localCheckpoint (not cache): see q140 — no CacheManager residue
       val lsh = nearDupPairs(corpus)
-        .select("doc_a", "doc_b").localCheckpoint()
+        .select("doc_a", "doc_b").transform(Lineage.cut(_, "q143.lsh"))
       val toks = corpus.select(col("doc_id").as("id"),
         explode(Dedup.shingleExpr("text", 5)).as("tok"))
       val exact = Dedup.prefixFilterJoin(toks, "id", "tok", tau = 0.8)
-        .select("doc_a", "doc_b").localCheckpoint()
+        .select("doc_a", "doc_b").transform(Lineage.cut(_, "q143.exact"))
       val hit = exact.join(lsh, Seq("doc_a", "doc_b"), "left_semi")
       exact.agg(count(lit(1)).as("n_exact"))
         .crossJoin(lsh.agg(count(lit(1)).as("n_lsh")))

@@ -448,7 +448,7 @@ private[graft] object Queries273to319 extends QueryModule {
           .select(col("p_partkey"), col("p_brand"))),
           col("l_partkey") === col("p_partkey"))
         .select(col("l_orderkey").as("ok"), col("p_brand")).distinct()
-        .localCheckpoint()
+        .transform(Lineage.cut(_, "q291.basket"))
       val nOrders = basket.select("ok").distinct()
         .agg(count(lit(1)).as("_N"))
       val single = basket.groupBy("p_brand").agg(count(lit(1)).as("n_one"))

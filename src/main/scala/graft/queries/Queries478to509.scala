@@ -368,7 +368,7 @@ private[graft] object Queries478to509 extends QueryModule {
       // the corpus; at cluster scale this frame would persist to the
       // store instead of executor blocks (the Itemsets.tf note)
       val ts = bg.groupBy("token", "source").agg(count(lit(1)).as("_n"))
-        .localCheckpoint()
+        .transform(Lineage.cut(_, "q503.ts"))
       val univ = ts.groupBy("token").agg(sum("_n").cast("long").as("c"))
         .orderBy(col("c").asc, col("token")).limit(200)
       val members = ts

@@ -26,7 +26,7 @@ private[graft] object Queries510to516 extends QueryModule {
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey").as("k"))
       val gf = Sketches.amsCounters(fact, "k", depth = 5, width = 1024)
-        .localCheckpoint()
+        .transform(Lineage.cut(_, "q510.gf"))
       val gd = Sketches.amsCounters(dim, "k", depth = 5, width = 1024)
       Sketches.amsF2(gf, depth = 5)
         .crossJoin(Sketches.amsJoinSize(gf, gd, depth = 5))

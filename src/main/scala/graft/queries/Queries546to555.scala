@@ -152,7 +152,7 @@ private[graft] object Queries546to555 extends QueryModule {
         .select((col("l_partkey") % 512).as("src"),
           (col("l_suppkey") % 512).as("dst"))
       val e = li.filter(col("src") =!= col("dst")).distinct()
-        .localCheckpoint()
+        .transform(Lineage.cut(_, "q549.e"))
       val scc = flowScc(s, dir).select("node", "scc")
       val ce = e
         .join(scc.select(col("node").as("src"), col("scc").as("su")),
@@ -185,7 +185,7 @@ private[graft] object Queries546to555 extends QueryModule {
         .select(col("event_id"), col("event_type"),
           expr("timestamp_millis(unix_millis(ts))").as("ts"),
           col("user_id"), col("value"))
-        .localCheckpoint()
+        .transform(Lineage.cut(_, "q550.sl"))
       val imp = sl.filter(col("event_type") === "view")
         .select(col("ts"), col("user_id"))
         .as[(java.sql.Timestamp, Long)].collect()
@@ -253,7 +253,7 @@ private[graft] object Queries546to555 extends QueryModule {
       val d = tbl(s, dir, "documents")
       val corpus = nearDupCorpus(d)
       val pairs = nearDupPairs(corpus)
-        .localCheckpoint()
+        .transform(Lineage.cut(_, "q554.pairs"))
       def isOld(c: org.apache.spark.sql.Column) =
         pmod(c, lit(1000000L)) < 400
       val oldPairs = pairs.filter(

@@ -139,21 +139,13 @@ private[graft] object QueryHelpers {
   val standingFrames: java.util.Set[String] =
     java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
 
-  /** localCheckpoint + register: names the checkpoint RDD so the leak
-    * audit can tell it from an accidental pin. Synchronized: the
-    * before/after persistent-RDD diff that finds the new checkpoint
-    * block must not interleave with another named checkpoint. */
-  def namedLocalCheckpoint(df: DataFrame, label: String): DataFrame =
-    standingFrames.synchronized {
-      val sc = df.sparkSession.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val out = df.localCheckpoint()
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!before.contains(id)) rdd.setName(label)
-      }
-      standingFrames.add(label)
-      out
-    }
+  /** A [[graft.Lineage.cut]] registered as a standing frame, so the leak
+    * audit can tell it from an accidental pin. */
+  def namedLocalCheckpoint(df: DataFrame, label: String): DataFrame = {
+    val out = Lineage.cut(df, label)
+    standingFrames.add(label)
+    out
+  }
 
   /** Build-once/serve-many kNN graph: the q101 bucket-local kNN edge set
     * (8-centroid IVF assignment, k = 3 — the exact frame every

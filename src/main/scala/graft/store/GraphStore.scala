@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.Lineage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -135,7 +136,8 @@ object GraphStore {
       queryId: Long, startCid: Int, coarseK: Int, descentHops: Int,
       beam: Int, iters: Int, k: Int): DataFrame = {
     val cents = centroids.select(col(cidCol).cast("int").as("_cid"),
-      col(cvecCol).as("_cv")).localCheckpoint()
+      col(cvecCol).as("_cv"))
+        .transform(Lineage.cut(_, "GraphStore.hierarchicalBeamSearch.cents"))
     val qv = broadcast(assigned.filter(col(idCol) === queryId)
       .select(col(vecCol).as("_qv")))
     // codebook-sized frames, collected once for the sequential descent

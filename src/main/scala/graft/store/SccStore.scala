@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.Lineage
 import java.nio.file.{Files, Paths}
 
 import org.apache.commons.io.FileUtils
@@ -112,20 +113,20 @@ object SccStore {
             srcCol: String, dstCol: String): Unit = {
     require(exists(root), s"SccStore.merge: no store at $root")
     val oldLbl = labels(spark, root).select("node", "scc")
-    val oldCond = condensation(spark, root).localCheckpoint()
-    val oldWcc = condWcc(spark, root).localCheckpoint()
+    val oldCond = Lineage.cut(condensation(spark, root), "SccStore.merge.oldCond")
+    val oldWcc = Lineage.cut(condWcc(spark, root), "SccStore.merge.oldWcc")
     GraphAnalytics.incrementalSccDelta(oldLbl, oldCond, newEdges,
         srcCol, dstCol, oldCondWcc = Some(oldWcc)) match {
       case None => () // every batch edge intra-SCC: store already exact
       case Some((repointDf, newNodesRaw, snRaw)) =>
-        val repoint = repointDf.localCheckpoint()
+        val repoint = Lineage.cut(repointDf, "SccStore.merge.repoint")
         // new nodes re-pointed like everything else (an unseen node can
         // merge straight into an existing SCC through a batch cycle)
         val newNodes = newNodesRaw
           .join(broadcast(repoint), col("scc") === col("_osl"), "left")
           .select(col("node"),
             coalesce(col("_nsl"), col("scc")).as("scc"))
-          .localCheckpoint()
+          .transform(Lineage.cut(_, "SccStore.merge.newNodes"))
         // touched buckets: sources and targets of the re-point plus the
         // new nodes' final labels — bounded by the touched super space,
         // NEVER by the corpus
@@ -146,7 +147,8 @@ object SccStore {
         // all share its bucket, so every group here is complete
         val sizes = updated.groupBy("scc").agg(count(lit(1)).as("scc_size"))
         val sizedUp = updated.join(sizes, Seq("scc"))
-          .select("node", "scc", "scc_size").localCheckpoint()
+          .select("node", "scc", "scc_size")
+          .transform(Lineage.cut(_, "SccStore.merge.sizedUp"))
         // condensation maintained ENTIRELY in contracted space — the
         // old condensation and the batch's super edges re-pointed
         // through the bounded map, fused endpoints drop as self-loops;
@@ -164,7 +166,7 @@ object SccStore {
             snRaw.select(col("ss").as("src_scc"), col("sd").as("dst_scc")),
             "src_scc", "dst_scc"))
           .filter(col("src_scc") =!= col("dst_scc")).distinct()
-          .localCheckpoint()
+          .transform(Lineage.cut(_, "SccStore.merge.newCond"))
         // stage: touched label buckets + the two contracted frames
         val staging = stagingDir(root)
         writeLabelBuckets(sizedUp, s"$staging/labels")

@@ -735,21 +735,21 @@ class GraphAnalyticsSpec extends SparkSpec {
   test("counted: its checkpoint job returns the exact, empty and " +
       "predicate counts; a metric that never arrives throws") {
     val ids = spark.range(0, 1000).toDF("id")
-    val (all, n) = GraphAnalytics.counted(ids)
+    val (all, n) = Lineage.counted(ids, "all")
     assert(n == 1000L && all.count() == 1000L)
-    val (none, n0) = GraphAnalytics.counted(ids.filter(col("id") < 0))
+    val (none, n0) = Lineage.counted(ids.filter(col("id") < 0), "none")
     assert(n0 == 0L && none.isEmpty)
     // dagLevels' stop test: the nodes whose level moved this round
     val lv = Seq((1L, 2L, 1L), (2L, 0L, 0L), (3L, 3L, 1L), (4L, 1L, 1L))
       .toDF("node", "level", "_old")
     val ((kept, moved), jobs) = withJobCount(
-      GraphAnalytics.counted(lv, col("level") =!= col("_old")))
+      Lineage.counted(lv, "moved", col("level") =!= col("_old")))
     assert(moved == 2L && kept.count() == 4L)
     assert(jobs == 1L, s"the count took $jobs jobs, not the checkpoint's one")
     import scala.concurrent.duration._
     val never = org.apache.spark.sql.Observation("never_reported")
     val err = intercept[IllegalStateException] {
-      GraphAnalytics.awaitCount(never, 200.millis)
+      Lineage.awaitCount(never, 200.millis)
     }
     assert(err.getMessage.contains("never_reported"))
   }

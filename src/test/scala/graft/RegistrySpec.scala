@@ -175,9 +175,9 @@ class RegistrySpec extends SparkSpec {
   // --- one frontier loop for GraphAnalytics -----------------------------
   //
   // A loop's stop test used to be a second Spark job (isEmpty or count())
-  // over the checkpoint it had just written. `counted` takes the count in
-  // the checkpoint's own job; a separate action shows up here. Borůvka's
-  // `selRows` is a collected Array, not a Spark action.
+  // over the checkpoint it had just written. `Lineage.counted` takes the
+  // count in the checkpoint's own job; a separate action shows up here.
+  // Borůvka's `selRows` is a collected Array, not a Spark action.
 
   test("GraphAnalytics runs no Spark isEmpty or count() outside counted") {
     val text = mainSources.collectFirst {
@@ -187,7 +187,7 @@ class RegistrySpec extends SparkSpec {
         val owner = "def (\\w+)".r.findAllMatchIn(text.take(m.start))
           .map(_.group(1)).toSeq.lastOption.getOrElse("")
         s"$owner:${m.matched}"
-      }.filterNot(_.startsWith("counted:")).toSeq
+      }.toSeq
     assert(actions == Seq("boruvkaMst:selRows.isEmpty"), actions)
   }
 
@@ -295,5 +295,72 @@ class RegistrySpec extends SparkSpec {
     val named = java.nio.file.Files.readString(service).linesIterator
       .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#")).toSeq
     assert(named == Seq("graft.plans.GraftExtensions"), named)
+  }
+
+  // --- one lineage-cut primitive -----------------------------------------
+  //
+  // Ninety-one call sites in twenty files picked their own checkpoint, and
+  // two private variants re-wrapped stats or diffed the persistent-RDD map
+  // to name a block. Every cut now goes through graft.Lineage, which names
+  // the checkpoint RDD and the jobs it runs by the call site's label; a
+  // direct checkpoint, a second variant or a shared or computed label
+  // shows up here.
+
+  test("every lineage cut in src/main goes through graft.Lineage") {
+    val direct = mainSources.collect { case (f, text) if f != "Lineage.scala" &&
+      (text.contains(".localCheckpoint(") || text.contains("checkpointDropStats") ||
+        (f != "Bench.scala" && text.contains("getPersistentRDDs"))) => f }.sorted
+    assert(direct.isEmpty, s"checkpoints outside Lineage.scala: $direct")
+  }
+
+  test("every Lineage cut and counted label is a string literal of its own") {
+    // (file, enclosing def, callee, label argument) of every cut and
+    // counted call and every standing-frame registration
+    val calls = mainSources.filter(_._1 != "Lineage.scala").flatMap { case (f, text) =>
+      """(?<![\w.]|def )(?:Lineage\.)?(cut|counted|namedLocalCheckpoint)\(""".r
+        .findAllMatchIn(text).map { m =>
+          val owner = "def (\\w+)".r.findAllMatchIn(text.take(m.start))
+            .map(_.group(1)).toSeq.lastOption.getOrElse("")
+          (f, owner, m.group(1), RegistrySpec.secondArgument(text, m.end))
+        }
+    }
+    assert(calls.size > 100, s"only ${calls.size} calls found")
+    // the registration forwards its caller's label to one cut
+    val forwarded = calls.filter { case (f, owner, _, _) =>
+      f == "QueryHelpers.scala" && owner == "namedLocalCheckpoint" }
+    assert(forwarded.map(_._4) == Seq("label"), forwarded)
+    val sites = calls.diff(forwarded)
+    // a standing frame's label carries its input directory's slug
+    val nonLiteral = sites.filterNot { case (_, _, callee, label) =>
+      label.matches("\"[^\"$]+\"") || callee == "namedLocalCheckpoint" &&
+        label.matches("s\"graft-standing:[^\"]+\"") }
+    assert(nonLiteral.isEmpty, s"labels that are not string literals: $nonLiteral")
+    val shared = sites.groupBy(_._4).collect { case (l, ls) if ls.size > 1 => l }
+    assert(shared.isEmpty, s"labels shared by several call sites: $shared")
+  }
+}
+
+object RegistrySpec {
+  /** The source text of the second top-level argument of the call whose
+    * argument list starts at `from` (just past its `(`), trimmed; string
+    * literals and nested brackets are skipped whole. */
+  def secondArgument(text: String, from: Int): String = {
+    var depth = 0; var i = from; var start = -1
+    var inString = false
+    while (i < text.length && !(depth == 0 && !inString && text(i) == ')')) {
+      val c = text(i)
+      if (inString) { if (c == '\\') i += 1 else if (c == '"') inString = false }
+      else c match {
+        case '"' => inString = true
+        case '(' | '[' | '{' => depth += 1
+        case ')' | ']' | '}' => depth -= 1
+        case ',' if depth == 0 =>
+          if (start >= 0) return text.substring(start, i).trim
+          start = i + 1
+        case _ =>
+      }
+      i += 1
+    }
+    if (start >= 0) text.substring(start, i).trim else ""
   }
 }

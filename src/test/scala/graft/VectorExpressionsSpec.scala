@@ -68,6 +68,41 @@ class VectorExpressionsSpec extends SparkSpec {
     }
   }
 
+  test("a length mismatch or a null element gives null, as in the HOF twins " +
+      "(interpreted and code-generated)") {
+    val rows = Seq(
+      (Seq(Some(1f), Some(2f), Some(3f)), Seq(Some(1f), Some(1f))),
+      (Seq(Some(1f), None, Some(3f)), Seq(Some(1f), Some(1f), Some(1f))),
+      (Seq(Some(1f), Some(2f), Some(3f)), Seq(Some(1f), Some(1f), Some(1f))))
+      .toDF("a", "b")
+    val pairs = Seq(
+      "graft_dot_product" -> dotProduct(col("a"), col("b")),
+      "graft_cosine_distance" -> cosineDistance(col("a"), col("b")),
+      "graft_l2_distance" -> l2Distance(col("a"), col("b")))
+    val conf = spark.conf
+    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val before = keys.map(conf.getOption)
+    for ((wholeStage, factory) <- Seq("false" -> "NO_CODEGEN", "true" -> "CODEGEN_ONLY")) {
+      conf.set(keys(0), wholeStage)
+      conf.set(keys(1), factory)
+      try {
+        // after an exchange, so the projection is not folded into a local relation
+        val got = rows.repartition(1).select(pairs.flatMap { case (name, twin) =>
+          Seq(call_function(name, col("a"), col("b")), twin) }: _*).collect()
+        def value(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
+          if (r.isNullAt(i)) None else Some(r.getDouble(i))
+        for ((r, row) <- got.zipWithIndex; ((name, _), i) <- pairs.zipWithIndex)
+          assert(value(r, 2 * i) == value(r, 2 * i + 1), s"$name row $row ($factory)")
+        assert(got.take(2).forall(r => (0 until 6).forall(r.isNullAt)), factory)
+        assert(value(got(2), 0).contains(6.0) &&
+          value(got(2), 4).contains(math.sqrt(5.0)), factory)
+      } finally keys.zip(before).foreach {
+        case (k, Some(v)) => conf.set(k, v)
+        case (k, None) => conf.unset(k)
+      }
+    }
+  }
+
   test("zero-norm vector → cosine distance 1 (cos treated as 0), no NaN") {
     val out = Seq((Seq(0.0f, 0.0f), Seq(1.0f, 2.0f))).toDF("a", "b")
       .select(call_function("graft_cosine_distance", col("a"), col("b")))
