@@ -15,6 +15,12 @@ package graft
   * records the truncation ("final_<pass>_partial") — r10 overshot its
   * own budget 23% because the check was only pass-granular.
   *
+  * Each query runs through [[Measure.run]] with its default action, a
+  * `noop` write that computes every row and column of the query's own
+  * plan; every summary line says so in "action":"noop_write". Totals
+  * from before that field timed a global row count, whose plan Catalyst
+  * prunes to the columns the count needs, and are not comparable.
+  *
   * Pass structure (the r1-r8 4-pass design, dieted):
   *   - no sf0.001 warm pass anymore: its job (don't attribute Janino/
   *     HotSpot compile to the engine) is covered by cold_min =
@@ -143,7 +149,7 @@ object Bench {
       val loadJson = loads.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
         .mkString("{", ",", "}")
       println(s"""{"metric":"total","value":${total(cold)},"unit":"sec","sf":"$sfDir",""" +
-        s""""pass":"$pass","wall_s":${fmt(elapsedS)},"budget_s":${fmt(budgetS)},""" +
+        s""""pass":"$pass","action":"noop_write","wall_s":${fmt(elapsedS)},"budget_s":${fmt(budgetS)},""" +
         s""""n_queries":${cold.size},"n_failed":${failed.size},"failed_s":${fmt(failedS)},""" +
         s""""cold_min_total":${total(coldMin)},""" +
         s""""steady_total":${total(steady)},""" +

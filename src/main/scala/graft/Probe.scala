@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.execution.ExplainMode
 
-/** Local probe over Bench's own session and measurement core:
+/** Local probe over Bench's own session and run core, [[Measure.run]]:
   *
   *   - `time`: runs each query `reps` times (default 3) through
   *     [[Measure.run]] and prints first and min seconds, the layers of the
@@ -11,9 +11,10 @@ import org.apache.spark.sql.execution.ExplainMode
   *     and every run's seconds; then, for the fastest run, the three
   *     [[Lineage]] labels that ran the most jobs, the jobs of the other
   *     labels, and the unlabelled jobs;
-  *   - `plan`: prints the formatted plan Bench would time, unexecuted;
-  *   - `final`: runs the query (`reps` times, default 1) and prints the
-  *     executed plan of that same QueryExecution (the final AQE plan).
+  *   - `plan`: prints the query's own formatted plan, unexecuted;
+  *   - `final`: runs the query (`reps` times, default 1) through Bench's
+  *     action, the `noop` write, and prints the plan that write executed
+  *     (the final AQE plan).
   *
   * `time` and `final` first build the standing stores, as Bench does, so
   * a query's first run does not include a store build.
@@ -44,10 +45,9 @@ object Probe {
       val fn = SparkEntry.queries(name)
       if (mode == "plan") {
         println(s"\n========== $name (plan) ==========")
-        try println(Measure.timed(fn(spark, sfDir)).queryExecution
-          .explainString(ExplainMode.fromString("formatted")))
-        catch { case t: Throwable => println(s"(failed: $t)") }
-        spark.catalog.clearCache()
+        Measure.run(spark, fn, sfDir, df => println(df.queryExecution
+          .explainString(ExplainMode.fromString("formatted"))))
+          .failure.foreach(t => println(s"(failed: $t)"))
       } else {
         val runs = (1 to reps).map(_ => Measure.run(spark, fn, sfDir))
         val best = runs.minBy(_.seconds)

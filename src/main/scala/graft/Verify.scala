@@ -1,7 +1,9 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. Each query runs
+  * through [[Measure.run]], the run core Bench times, with the parquet
+  * write as its action. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0); val outDir = args(1)
@@ -12,16 +14,18 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     val selected = SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only.contains(name) }
-    val failed = selected.toSeq.flatMap { case (name, fn) =>
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        None
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        Some(name)
-      }
+    if (selected.nonEmpty) {
+      Session.warm(spark, sfDir)
+      graft.queries.QueryHelpers.warmStandingStores(spark, sfDir)
     }
+    val runs = selected.toSeq.map { case (name, fn) =>
+      val m = Measure.run(spark, fn, sfDir,
+        _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+      m.failure.foreach(e =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}"))
+      name -> m
+    }
+    val failed = runs.collect { case (name, m) if m.failed => name }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -40,5 +44,7 @@ object Verify {
     spark.stop()
     System.err.println(s"verify: ${failed.size} of ${selected.size} queries " +
       s"failed: ${failed.sorted.mkString("[", ", ", "]")}")
+    System.err.println(f"verify: ${runs.map(_._2.seconds).sum}%.3f s and " +
+      s"${runs.map(_._2.jobs).sum} jobs over ${runs.size} queries")
   }
 }

@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-/** The session factory's conf hook and the per-query measurement core
-  * that Bench and Probe share. */
+/** The session factory's conf hook and the one run core that Bench,
+  * Verify and Probe share. */
 class MeasureSpec extends SparkSpec {
 
   test("conf hook: 'k=v;k=v' is parsed and applied to the session") {
@@ -50,6 +50,27 @@ class MeasureSpec extends SparkSpec {
       assert(m.planS > 0, m)
       assert(m.buildS + m.analysisS + m.planS <= m.seconds, m)
     }
+  }
+
+  test("the action computes every column: one that throws fails the run") {
+    // groupBy().count() prunes the column and never evaluates it
+    val m = Measure.run(spark,
+      (s, _) => s.range(10).select(col("id"), raise_error(lit("boom")).as("x")), "")
+    assert(m.failure.exists(_.getMessage.contains("boom")), m)
+    assert(m.plan.contains("raise_error"), m.plan)
+  }
+
+  test("executed is the action's own execution; none for a sink that only plans") {
+    val eager: (SparkSession, String) => DataFrame = (s, _) => {
+      val df = s.range(10).toDF("x"); df.count(); df }
+    val planned = Measure.run(spark, eager, "", _.queryExecution.executedPlan)
+    assert(!planned.failed && planned.jobs >= 1 && planned.executed.isEmpty, planned)
+    val out = java.nio.file.Files.createTempDirectory("graft-measure").toString
+    val written = Measure.run(spark, eager, "",
+      _.write.mode("overwrite").parquet(s"$out/q"))
+    assert(written.plan.contains("InsertIntoHadoopFsRelationCommand"), written.plan)
+    assert(spark.read.parquet(s"$out/q").count() == 10)
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
   }
 
   test("a builder that throws returns a failed record and clears the cache") {

@@ -137,6 +137,33 @@ class RegistrySpec extends SparkSpec {
     assert(mains.sorted == Seq("Bench", "Probe", "Verify"), mains)
   }
 
+  // --- one run path -----------------------------------------------------
+  //
+  // Bench and Probe used to time `groupBy().count()`, a second plan that
+  // Catalyst prunes, and Verify wrote its own copy of the query through a
+  // loop of its own. Every run now goes through Measure.run, whose `sink`
+  // is the one action; a builder applied elsewhere, or a count plan in a
+  // runner, shows up here.
+
+  test("query builders are applied only inside Measure.run") {
+    val runners = mainSources.filter { case (f, text) =>
+      f == "Measure.scala" || text.contains("SparkEntry.queries") }
+    assert(runners.map(_._1).sorted ==
+      Seq("Bench.scala", "Measure.scala", "Probe.scala", "Verify.scala"), runners.map(_._1))
+    // an unqualified call whose first argument is the session: `fn(spark, dir)`
+    val applied = runners.flatMap { case (f, text) =>
+      """(?<![\w.])\w+(?:\.apply)?\(spark\s*,""".r.findAllMatchIn(text).map { m =>
+        val owner = "def (\\w+)".r.findAllMatchIn(text.take(m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse("")
+        s"$f:$owner"
+      }
+    }
+    assert(applied == Seq("Measure.scala:run"), applied)
+    val counted = runners.collect {
+      case (f, text) if text.contains("groupBy().count()") => f }.sorted
+    assert(counted.isEmpty, s"count-only plans in the runners: $counted")
+  }
+
   // --- one store-publish protocol ---------------------------------------
   //
   // The staged dir swap was once written out by hand in every store and
