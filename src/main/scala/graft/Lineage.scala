@@ -3,7 +3,8 @@ package graft
 import scala.concurrent.Await
 import scala.concurrent.duration.FiniteDuration
 
-import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{classic, Column, DataFrame, Encoders, Observation, Row,
+  SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit, when}
 
@@ -74,20 +75,21 @@ object Lineage {
               where: Column = lit(true)): (DataFrame, Long) = {
     val (observed, obs) = graft.operators.Profiling.withObservedMetrics(df,
       label, Seq(count(when(where, true)).as("n")))
-    (cut(observed, label, dropStats = true), awaitCount(obs))
+    (cut(observed, label, dropStats = true), awaitObserved(obs).getLong(0))
   }
 
-  /** The count a [[counted]] checkpoint observed. Spark hands observed
+  /** The metrics row an observed checkpoint's job reported ([[counted]],
+    * and the standing doc lengths' corpus totals). Spark hands observed
     * metrics over through a query listener after the job ends; the wait
     * is bounded, so a metric that never arrives throws instead of
-    * hanging the loop. */
-  private[graft] def awaitCount(obs: Observation,
-      wait: FiniteDuration = FiniteDuration(60, "s")): Long =
-    try Await.result(obs.future, wait).getLong(0)
+    * hanging the caller. */
+  private[graft] def awaitObserved(obs: Observation,
+      wait: FiniteDuration = FiniteDuration(60, "s")): Row =
+    try Await.result(obs.future, wait)
     catch {
       case _: java.util.concurrent.TimeoutException =>
         throw new IllegalStateException(
-          s"counted: observed metric '${obs.name}' not reported within $wait")
+          s"observed metrics '${obs.name}' not reported within $wait")
     }
 
   /** Runs `body` with `label` as the job description of the jobs it

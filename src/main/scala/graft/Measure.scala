@@ -9,9 +9,12 @@ import org.apache.spark.sql.util.QueryExecutionListener
 
 /** One measured query run. `seconds` is the wall time of build plus the
   * action (what Bench sums); `buildS` is the builder alone, eager
-  * driver jobs and the query's own analysis included; `analysisS` and
-  * `planS` (optimization + physical planning) come from the tracker of
-  * the QueryExecution the action ran. Jobs, stages, tasks and
+  * driver jobs and the query's own analysis included; `analysisS` is
+  * that analysis, read from the tracker of the built frame's own
+  * QueryExecution (Spark analyses a frame when the builder makes it, so
+  * the action's execution records none); `planS` (optimization +
+  * physical planning) comes from the tracker of the QueryExecution the
+  * action ran. Jobs, stages, tasks and
   * task-seconds cover everything the run executed; `jobsByLabel` splits
   * the jobs by their job description — the label of the [[Lineage]] cut
   * that ran them, "" for an unlabelled job. */
@@ -50,10 +53,12 @@ object Measure {
     org.apache.spark.GraftListenerBus.drain(sc)
     sc.addSparkListener(c)
     var buildS, drainS = 0.0
+    var built: Option[QueryExecution] = None
     val (failure, wall) = seconds {
       try {
         val (df, b) = seconds(fn(spark, dir))
         buildS = b
+        built = Some(df.queryExecution)
         // the builder's own SQL executions are delivered before the
         // action's listener is in place, so `executed` can only be the
         // action's; the wait is not charged to the query
@@ -69,11 +74,11 @@ object Measure {
     org.apache.spark.GraftListenerBus.drain(sc)
     sc.removeSparkListener(c)
     spark.listenerManager.unregister(c)
-    def phase(p: String): Double =
-      c.executed.flatMap(_.tracker.phases.get(p)).fold(0.0)(_.durationMs / 1e3)
-    Measurement(wall - drainS, buildS, phase(QueryPlanningTracker.ANALYSIS),
-      phase(QueryPlanningTracker.OPTIMIZATION) +
-        phase(QueryPlanningTracker.PLANNING),
+    def phase(qe: Option[QueryExecution], p: String): Double =
+      qe.flatMap(_.tracker.phases.get(p)).fold(0.0)(_.durationMs / 1e3)
+    Measurement(wall - drainS, buildS, phase(built, QueryPlanningTracker.ANALYSIS),
+      phase(c.executed, QueryPlanningTracker.OPTIMIZATION) +
+        phase(c.executed, QueryPlanningTracker.PLANNING),
       c.jobs, c.stages, c.tasks, c.taskMs / 1e3, c.byLabel.toMap, failure, c.executed)
   }
 

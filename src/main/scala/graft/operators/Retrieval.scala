@@ -1,7 +1,6 @@
 package graft.operators
 
-import graft.Lineage
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -81,9 +80,7 @@ object Retrieval {
       .select(col("id"), col("dl"), explode(col("t")).as("term"))
       .filter(col("term").isin(queryTerms: _*))
       .groupBy("id", "dl", "term").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("term_df"))
-    scoreBm25(tf, dfreq, docLengthStats(docs.select(col("id"), col("dl"))),
-      k, k1, b)
+    scoreScanned(tf, tf, docs, k, k1, b)
   }
 
   /** Fielded BM25 (BM25F-lite, Robertson et al. 2004): per-field integer
@@ -109,9 +106,7 @@ object Retrieval {
     }.reduce(_ unionByName _)
       .filter(col("term").isin(queryTerms: _*))
       .groupBy("id", "dl", "term").agg(sum("w").as("tf"))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("term_df"))
-    scoreBm25(tf, dfreq, docLengthStats(docs.select(col("id"), col("dl"))),
-      k, k1, b)
+    scoreScanned(tf, tf, docs, k, k1, b)
   }
 
   /** Static impact pruning (Anh & Moffat 2006; the first tier of a tiered
@@ -135,12 +130,10 @@ object Retrieval {
       .select(col("id"), col("dl"), explode(col("t")).as("term"))
       .filter(col("term").isin(queryTerms: _*))
       .groupBy("id", "dl", "term").agg(count(lit(1)).as("tf"))
-    val dfreq = tf.groupBy("term").agg(count(lit(1)).as("term_df"))
     val w = Window.partitionBy("term").orderBy(col("tf").desc, col("id").asc)
     val kept = tf.withColumn("_ir", row_number().over(w))
       .filter(col("_ir") <= keepPerTerm).drop("_ir")
-    scoreBm25(kept, dfreq, docLengthStats(docs.select(col("id"), col("dl"))),
-      k, k1, b)
+    scoreScanned(kept, tf, docs, k, k1, b)
   }
 
   /** Pseudo-relevance feedback term selection (the RM3-lite first half
@@ -182,20 +175,49 @@ object Retrieval {
     dl.agg(count(lit(1)).as("n_docs"),
       (sum("dl").cast("double") / count(lit(1))).as("avgdl"))
 
-  /** Shared BM25 finish over a per-(id, dl, term) tf frame + per-term df
-    * frame + 1-row stats frame: idf · tf-norm summed in exact decimal,
-    * rounded to 6, top-k. Used by both the scan path ([[bm25]]) and the
-    * index-serving path ([[bm25FromIndex]]) — identical arithmetic, so
-    * both replay against the same oracle. */
-  private def scoreBm25(tf: DataFrame, dfreq: DataFrame, stats: DataFrame,
+  /** The corpus totals BM25 normalizes by: the number of documents and
+    * their summed length. A standing index keeps them with its doc-length
+    * table, so serving a query never re-aggregates every length. */
+  final case class CorpusTotals(nDocs: Long, sumDl: Long) {
+    /** avgdl exactly as [[docLengthStats]] computes it: one double
+      * division of the exact sum by the exact count. */
+    def avgdl: Double = sumDl.toDouble / nDocs
+  }
+
+  object CorpusTotals {
+    /** The aggregate over a (id, dl) frame whose one row `apply` reads
+      * back. Observable, so a checkpoint can take it in its own job. */
+    val metrics: Seq[Column] =
+      Seq(count(lit(1)).as("n_docs"), coalesce(sum("dl"), lit(0L)).as("sum_dl"))
+    def apply(row: Row): CorpusTotals = CorpusTotals(row.getLong(0), row.getLong(1))
+    /** The totals of `dl` in one aggregate job. */
+    def of(dl: DataFrame): CorpusTotals =
+      apply(dl.agg(metrics.head, metrics.tail: _*).head())
+  }
+
+  /** The scan paths' finish: per-term df counted from `dfreqOf`, the
+    * corpus stats aggregated over `docs`, both broadcast into
+    * [[scoreBm25]]. */
+  private def scoreScanned(tf: DataFrame, dfreqOf: DataFrame, docs: DataFrame,
+                           k: Int, k1: Double, b: Double): DataFrame = {
+    val dfreq = dfreqOf.groupBy("term").agg(count(lit(1)).as("term_df"))
+    scoreBm25(tf.join(broadcast(dfreq), "term")
+        .crossJoin(broadcast(docLengthStats(docs.select(col("id"), col("dl"))))),
+      col("n_docs"), col("avgdl"), k, k1, b)
+  }
+
+  /** Shared BM25 finish over a per-(id, dl, term) frame that carries the
+    * term's `term_df`: idf · tf-norm summed in exact decimal, rounded to
+    * 6, top-k. Used by both the scan paths ([[bm25]]: stats columns) and
+    * the index-serving path ([[bm25FromIndex]]: literals) — identical
+    * arithmetic, so both replay against the same oracle. */
+  private def scoreBm25(tf: DataFrame, nDocs: Column, avgdl: Column,
                         k: Int, k1: Double, b: Double): DataFrame = {
     val idf = log(
-      (col("n_docs") - col("term_df") + lit(0.5)) / (col("term_df") + lit(0.5)) + lit(1.0))
+      (nDocs - col("term_df") + lit(0.5)) / (col("term_df") + lit(0.5)) + lit(1.0))
     val tfNorm = (col("tf") * (lit(k1) + 1.0)).cast("double") /
-      (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / col("avgdl")))
-    tf.join(broadcast(dfreq), "term")
-      .crossJoin(broadcast(stats))
-      .withColumn("contrib", idf * tfNorm)
+      (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / avgdl))
+    tf.withColumn("contrib", idf * tfNorm)
       .groupBy("id")
       .agg(
         round(sum(col("contrib").cast("decimal(27,15)")).cast("double"), 6).as("score"),
@@ -271,37 +293,25 @@ object Retrieval {
 
   /** BM25 served from a PERSISTED index ([[graft.store.IndexStore]]):
     * posting lists for the query's terms come from a partition-pruned
-    * lookup (|terms| buckets read, not the corpus), document lengths from
-    * a precomputed (id, dl) side table.
+    * lookup (|terms| buckets read, not the corpus), each with its term's
+    * `df`; document lengths from a precomputed (id, dl) side table; the
+    * corpus totals from the caller, who keeps them with that table
+    * ([[CorpusTotals]]), and they enter the scorer as literals.
     *
-    * Join strategy is SIZE-AWARE, not assumed: the index already knows how
-    * many (term, doc) pairs the query matches — the sum of the per-term
-    * `df` column, read here from the same pruned buckets before planning.
-    * Only when that count is at most `maxBroadcastPairs` does the matched
-    * frame get a broadcast hint (rare terms: the dl side never shuffles);
-    * a stopword-grade term over a 100 TB corpus instead leaves the choice
-    * to Catalyst/AQE rather than failing on the broadcast limit.
+    * ONE plan: building the frame runs no job. The exploded postings join
+    * the doc lengths with no hint — Catalyst/AQE choose the strategy from
+    * the scan's and the table's statistics, so a stopword-grade term over
+    * a 100 TB corpus is never forced into a broadcast.
     * Output and arithmetic are identical to [[bm25]] (same oracle). */
   def bm25FromIndex(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                    nBuckets: Int, docLengths: DataFrame, queryTerms: Seq[String],
-                    k: Int, k1: Double = 1.2, b: Double = 0.75,
-                    maxBroadcastPairs: Long = 4000000L): DataFrame = {
-    // |terms| rows, materialized once (the pre-count below and the
-    // scoring plan both read the pruned buckets exactly once)
-    val postings = graft.store.IndexStore.lookup(spark, indexPath, queryTerms, nBuckets)
-      .transform(Lineage.cut(_, "Retrieval.bm25FromIndex.postings"))
-    val tf = postings
+                    nBuckets: Int, docLengths: DataFrame, totals: CorpusTotals,
+                    queryTerms: Seq[String], k: Int, k1: Double = 1.2,
+                    b: Double = 0.75): DataFrame = {
+    val tf = graft.store.IndexStore.lookup(spark, indexPath, queryTerms, nBuckets)
       .select(col("term"), col("df").as("term_df"), explode(col("postings")).as("p"))
       .select(col("term"), col("term_df"), col("p.id").as("id"), col("p.tf").as("tf"))
-    val dfreq = tf.select(col("term"), col("term_df")).distinct()
-    // |terms| rows from pruned buckets — a driver-cheap pre-count that
-    // decides the plan, the same way AQE would but before the first stage
-    val matchedPairs = postings.agg(coalesce(sum("df"), lit(0L))).head().getLong(0)
-    val slim = tf.select(col("term"), col("id"), col("tf"))
-    val probe = if (matchedPairs <= maxBroadcastPairs) broadcast(slim) else slim
-    val matched = probe.join(docLengths.select(col("id"), col("dl")), "id")
-    scoreBm25(matched, dfreq, docLengthStats(docLengths.select(col("id"), col("dl"))),
-      k, k1, b)
+    scoreBm25(tf.join(docLengths.select(col("id"), col("dl")), "id"),
+      lit(totals.nDocs), lit(totals.avgdl), k, k1, b)
   }
 
   /** Sparse TF-IDF cosine similarity self-join via posting-list joins —

@@ -257,16 +257,17 @@ private[graft] object Queries091to155 extends QueryModule {
 
     "q106_index_bm25" -> ((s, dir) => {
       // BM25 served FROM the persisted bucketed index (q104's store):
-      // posting lookup partition-prunes to |terms| buckets, the matched
-      // postings broadcast into the doc-length join — the corpus-sized
-      // side never shuffles. Arithmetic-identical to q98 (same oracle)
+      // posting lookup partition-prunes to |terms| buckets, each posting
+      // carries its term's df, and the corpus totals enter as literals;
+      // Catalyst/AQE pick the doc-length join from statistics.
+      // Arithmetic-identical to q98 (same oracle)
       val d = tbl(s, dir, "documents")
       val idx = Retrieval.invertedIndex(d, "doc_id", "text")
       val root = scratch("index-store-bm25")
       store.IndexStore.write(idx, root, nBuckets = 8)
       val dl = d.select(col("doc_id").cast("long").as("id"),
         size(Retrieval.analyze(col("text"))).cast("long").as("dl"))
-      Retrieval.bm25FromIndex(s, root, 8, dl,
+      Retrieval.bm25FromIndex(s, root, 8, dl, Retrieval.CorpusTotals.of(dl),
         Seq("spark", "join", "vector", "window"), 20)
     }),
 

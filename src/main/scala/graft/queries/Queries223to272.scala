@@ -172,7 +172,9 @@ private[graft] object Queries223to272 extends QueryModule {
       def ranked(df: org.apache.spark.sql.DataFrame) = df.withColumn("rank",
         row_number().over(Window.orderBy(col("score").desc, col("id"))))
       val a = ranked(storedBm25(s, dir, q0, 10))
-      val top5 = storedBm25(s, dir, q0, 5).select("id")
+      // (score desc, id asc) is a total order: the top-10's first five
+      // ranks are the top-5
+      val top5 = a.filter(col("rank") <= 5).select("id")
       val expTerms = d
         .join(top5, d("doc_id") === top5("id"), "left_semi")
         .select(explode(Retrieval.analyze(col("text"))).as("term"))

@@ -355,14 +355,27 @@ private[graft] object QueryHelpers {
     * per query, and dl was the remaining tokenize pass (measured: the
     * stored path LOST to the scan path until this was pinned). Per
     * session: a checkpointed frame is bound to the context that built
-    * it. */
+    * it. Its corpus totals ([[corpusTotals]]) are taken by the same
+    * checkpoint job. */
   def docLengths(s: SparkSession, dir: String): DataFrame =
+    standingDocLengths(s, dir)._1
+
+  /** The corpus totals (`n_docs`, `sum(dl)`) of [[docLengths]], kept with
+    * it: observed in its checkpoint's own job, so they cost no job of
+    * their own and a BM25 request never re-aggregates the lengths. */
+  def corpusTotals(s: SparkSession, dir: String): Retrieval.CorpusTotals =
+    standingDocLengths(s, dir)._2
+
+  private def standingDocLengths(s: SparkSession,
+      dir: String): (DataFrame, Retrieval.CorpusTotals) =
     memoized("doc-lengths", dir, "documents", Some(s)) { _ =>
-      namedLocalCheckpoint(
+      val (lengths, totals) = Profiling.withObservedMetrics(
         tbl(s, dir, "documents").select(col("doc_id").cast("long").as("id"),
-          size(graft.operators.Retrieval.analyze(col("text")))
-            .cast("long").as("dl")),
+          size(Retrieval.analyze(col("text"))).cast("long").as("dl")),
+        "doc-length totals", Retrieval.CorpusTotals.metrics)
+      val frame = namedLocalCheckpoint(lengths,
         s"graft-standing:doc-lengths:${dirSlug(dir)}")
+      (frame, Retrieval.CorpusTotals(Lineage.awaitObserved(totals)))
     }
   /** The standing index read back as a TERM-STATISTICS table (term, df,
     * cf) — the serving path for whole-vocabulary consumers (burstiness,
@@ -376,11 +389,13 @@ private[graft] object QueryHelpers {
   def storedIndexTerms(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(storedIndexPath(s, dir)).select("term", "df", "cf")
 
-  /** [[graft.operators.Retrieval.bm25]] served from the standing index. */
+  /** [[graft.operators.Retrieval.bm25]] served from the standing index,
+    * the standing [[docLengths]] and their [[corpusTotals]]: one plan,
+    * whose action is the only thing that runs jobs. */
   def storedBm25(s: SparkSession, dir: String, terms: Seq[String],
                  k: Int): DataFrame =
-    graft.operators.Retrieval.bm25FromIndex(s, storedIndexPath(s, dir), 8,
-      docLengths(s, dir), terms, k)
+    Retrieval.bm25FromIndex(s, storedIndexPath(s, dir), 8,
+      docLengths(s, dir), corpusTotals(s, dir), terms, k)
 
   /** Build (or open) every standing store for `dir`: the kNN graph,
     * lexical index, IVF AnnStore, doc-lengths frame and the two flow-SCC

@@ -690,24 +690,6 @@ class GraphAnalyticsSpec extends SparkSpec {
     }
   }
 
-  /** `body`'s result and the number of Spark jobs it started. */
-  private def withJobCount[A](body: => A): (A, Long) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftListenerBus.drain(sc)
-    sc.addSparkListener(listener)
-    try {
-      val a = body
-      org.apache.spark.GraftListenerBus.drain(sc)
-      (a, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("BFS and Brandes stop at the first empty frontier: a 40-hop cap " +
       "returns the rows and costs the jobs of an ecc + 1 cap") {
     // path 0-1-…-9: the BFS from either end has eccentricity 9
@@ -749,7 +731,7 @@ class GraphAnalyticsSpec extends SparkSpec {
     import scala.concurrent.duration._
     val never = org.apache.spark.sql.Observation("never_reported")
     val err = intercept[IllegalStateException] {
-      Lineage.awaitCount(never, 200.millis)
+      Lineage.awaitObserved(never, 200.millis)
     }
     assert(err.getMessage.contains("never_reported"))
   }

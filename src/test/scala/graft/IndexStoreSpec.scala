@@ -39,6 +39,30 @@ class IndexStoreSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
+  test("lookup plans its bucket filter: building the frame runs no job") {
+    val docs = (0 until 16).map(i => (i.toLong, s"w$i w${i % 3}")).toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_plan").toFile
+    val path = s"${dir.getAbsolutePath}/idx"
+    IndexStore.write(Retrieval.invertedIndex(docs, "doc_id", "text"), path, 8)
+    // no bucket-id collect and no footer schema inference
+    val (look, jobs) = withJobCount(IndexStore.lookup(spark, path, Seq("w1", "w5"), 8))
+    assert(jobs == 0L, s"building the lookup ran $jobs jobs")
+    assert(look.select("term").as[String].collect().sorted.toSeq == Seq("w1", "w5"))
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  test("the schema lookup declares is the one write and merge produce") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idx_schema").toFile
+    val path = s"${dir.getAbsolutePath}/idx"
+    IndexStore.write(Retrieval.invertedIndex(
+      Seq((1L, "a b a"), (2L, "b c")).toDF("doc_id", "text"), "doc_id", "text"), path, 4)
+    IndexStore.merge(spark, path, Retrieval.invertedIndex(
+      Seq((3L, "a d"), (4L, "e")).toDF("doc_id", "text"), "doc_id", "text"), 4)
+    def fields(t: org.apache.spark.sql.types.StructType) = t.fields.map(f => f.name -> f.dataType).toSeq
+    assert(fields(spark.read.parquet(path).schema) == fields(IndexStore.Schema))
+    org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
   test("incremental merge equals a full rebuild; untouched buckets stay put") {
     val c1 = (0 until 32).map(i => (i.toLong, s"alpha t$i shared"))
       .toDF("doc_id", "text")
@@ -49,7 +73,7 @@ class IndexStoreSpec extends SparkSpec {
     IndexStore.write(Retrieval.invertedIndex(c1, "doc_id", "text"), path, 8)
     implicit val s: org.apache.spark.sql.SparkSession = spark
     val touched = Seq("alpha", "beta", "shared").toDF("term")
-      .select(IndexStore.termBucket("term", 8).as("b")).as[Int].collect().toSet
+      .select(IndexStore.termBucket(col("term"), 8).as("b")).as[Int].collect().toSet
     def listing(b: Int): Set[String] = {
       val d = new java.io.File(s"$path/bucket=$b")
       if (d.exists()) d.list().toSet else Set.empty

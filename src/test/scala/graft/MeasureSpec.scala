@@ -52,6 +52,17 @@ class MeasureSpec extends SparkSpec {
     }
   }
 
+  test("analysis: read from the built frame, where Spark records it") {
+    // a wide SQL query, so its analysis takes measurable time
+    val sql = (0 until 60).map(i =>
+      s"SELECT id + $i AS x, concat('v', CAST(id * $i AS STRING)) AS y FROM range(10)")
+      .mkString(" UNION ALL ")
+    val m = Measure.run(spark, (s, _) => s.sql(sql), "")
+    assert(!m.failed, m.failure)
+    assert(m.analysisS > 0, m)
+    assert(m.analysisS <= m.buildS, m)
+  }
+
   test("the action computes every column: one that throws fails the run") {
     // groupBy().count() prunes the column and never evaluates it
     val m = Measure.run(spark,

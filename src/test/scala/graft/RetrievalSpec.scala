@@ -68,17 +68,30 @@ class RetrievalSpec extends SparkSpec {
       Retrieval.invertedIndex(df, "doc_id", "text"), path, nBuckets = 4)
     val dl = df.select(col("doc_id").cast("long").as("id"),
       size(Retrieval.analyze(col("text"))).cast("long").as("dl"))
-    val served = Retrieval.bm25FromIndex(spark, path, 4, dl, terms, 10)
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
-    assert(served == scan) // same arithmetic, same order, bit-identical
-    // hot-term path: a df-sum over the broadcast cap must drop the hint
-    // (AQE/planner picks the strategy) with bit-identical output — the
-    // 100 TB stopword case where a forced broadcast would kill the job
-    val servedHot = Retrieval.bm25FromIndex(spark, path, 4, dl, terms, 10,
-        maxBroadcastPairs = 0L)
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
-    assert(servedHot == scan)
+    val totals = Retrieval.CorpusTotals.of(dl)
+    def served() = Retrieval.bm25FromIndex(spark, path, 4, dl, totals, terms, 10)
+    def rows(f: org.apache.spark.sql.DataFrame) =
+      f.collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2))).toSeq
+    // one plan: no bucket collect, checkpoint or pre-count while building
+    val (frame, jobs) = withJobCount(served())
+    assert(jobs == 0L, s"building the frame ran $jobs jobs")
+    assert(rows(frame) == scan) // same arithmetic, same order, bit-identical
+    // no broadcast allowed: the planner must pick a shuffled join, as for
+    // a stopword-grade term over a 100 TB corpus, with bit-identical output
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(threshold)
+    spark.conf.set(threshold, "-1")
+    try assert(rows(served()) == scan)
+    finally prev.fold(spark.conf.unset(threshold))(spark.conf.set(threshold, _))
     org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  test("corpus totals: one aggregate, avgdl exactly as the scan path's") {
+    val dl = Seq((1L, 3L), (2L, 4L), (3L, 4L)).toDF("id", "dl")
+    val t = Retrieval.CorpusTotals.of(dl)
+    assert(t == Retrieval.CorpusTotals(3L, 11L))
+    val stats = Retrieval.docLengthStats(dl).head()
+    assert(stats.getLong(0) == t.nDocs && stats.getDouble(1) == t.avgdl)
   }
 
   test("knn graph: neighbors stay within the IVF cell, ranks deterministic") {

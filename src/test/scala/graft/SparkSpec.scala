@@ -8,6 +8,24 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   override def afterAll(): Unit = {} // shared session; do not stop per-suite
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  protected def withJobCount[A](body: => A): (A, Long) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicLong
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBus.drain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val a = body
+      org.apache.spark.GraftListenerBus.drain(sc)
+      (a, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
